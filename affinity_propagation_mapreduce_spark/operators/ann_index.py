@@ -593,20 +593,14 @@ def _read_model_arrays_arrow(path: str, meta: dict):
     driver/planning work; the tables are O(sqrt(N)) bytes).  Returns
     None when the tables are not locally readable parquet (the caller
     falls back to the Spark collect path)."""
-    import glob as _glob
+    from ..sources.tables import parquet_data_files
 
     try:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
         def _read(table_path: str):
-            if os.path.isfile(table_path):
-                return pq.read_table(table_path)
-            files = sorted(
-                _glob.glob(
-                    os.path.join(table_path, "**", "*.parquet"), recursive=True
-                )
-            )
+            files = parquet_data_files(table_path)
             if not files:
                 return None
             return pa.concat_tables(pq.read_table(f) for f in files)

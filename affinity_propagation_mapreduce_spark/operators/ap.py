@@ -41,8 +41,6 @@ Float-parity engineering (for the DuckDB value-hash gate):
 
 from __future__ import annotations
 
-import functools
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -72,6 +70,23 @@ def _ckpt(df: DataFrame, eager: bool = True) -> DataFrame:
     if _RELIABLE[0]:
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)
+
+
+def _release_ckpt(df: DataFrame) -> None:
+    """Unpersist a checkpointed chain state through the JVM
+    persistent-RDD registry.  ``df.rdd`` is a freshly DERIVED RDD, not
+    the internally persisted localCheckpoint RDD, so
+    ``df.rdd.unpersist()`` is a no-op that silently pins every state
+    (round-1 review finding).  The real checkpoint RDD is the one inside
+    the post-checkpoint LogicalRDD plan node — released by exact id, so
+    co-materialized neighbors (e.g. a lazily-checkpointed S matrix) are
+    never touched."""
+    jsc = df.sparkSession.sparkContext._jsc
+    rdd = jsc.getPersistentRDDs().get(
+        df._jdf.queryExecution().analyzed().rdd().id()
+    )
+    if rdd is not None:
+        rdd.unpersist()
 
 
 class reliable_checkpoints:
@@ -511,28 +526,9 @@ def iterate(
     round-trip — SURVEY.md §3.2).  Eager checkpoints + unpersisting the
     previous iteration's blocks keep exactly ONE message-state copy
     pinned in storage memory: with T states resident the later
-    iterations slow 2-4× from eviction/GC pressure at sf0.1.
-
-    The previous state is released through the JVM persistent-RDD
-    registry: ``df.rdd`` is a freshly DERIVED RDD, not the internally
-    persisted localCheckpoint RDD, so ``df.rdd.unpersist()`` is a no-op
-    that silently pins all T states (round-1 review finding).  The real
-    checkpoint RDD is the one inside the post-checkpoint LogicalRDD
-    plan node — released by exact id, so co-materialized neighbors
-    (e.g. a lazily-checkpointed S matrix) are never touched."""
-    jsc = state.sparkSession.sparkContext._jsc
-
-    def _release(rdd_id: int | None) -> None:
-        if rdd_id is not None:
-            prev = jsc.getPersistentRDDs().get(rdd_id)
-            if prev is not None:
-                prev.unpersist()
-
-    def _ckpt_id(df: DataFrame) -> int:
-        # the LogicalRDD the checkpoint produced IS the persisted RDD
-        return df._jdf.queryExecution().analyzed().rdd().id()
-
-    prev_id: int | None = None
+    iterations slow 2-4× from eviction/GC pressure at sf0.1 (the
+    previous state is released by ``_release_ckpt``)."""
+    prev: DataFrame | None = None
     for _ in range(iterations):
         # the R state is deliberately NOT checkpointed mid-iteration: its
         # two consumers (col_stats aggregation, final A projection) each
@@ -543,8 +539,9 @@ def iterate(
         state = availability_pass(responsibility_pass(state, lam), lam)
         if checkpoint:
             state = _ckpt(state, eager=True)
-            _release(prev_id)
-            prev_id = _ckpt_id(state)
+            if prev is not None:
+                _release_ckpt(prev)
+            prev = state
     return state
 
 
@@ -1391,18 +1388,11 @@ def cluster_converged(
 # correctness budget (round 1: 27 queries never got a CORRECTNESS row).
 # The cache holds lazily-checkpointed DataFrames keyed by
 # (applicationId, sf_dir): the kernel materializes once, and every A-row
-# reuses the same RDD blocks.
-#
-# Retaining the full T-state chain pins T × O(N²)-row states, which at
-# bench scale (sf0.1, 25M pairs/state) measurably slows later iterations
-# (round-1 finding) — so the chain is only retained at small N; above the
-# gate, queries fall back to the unpersisting ``iterate()`` which keeps
-# exactly one state resident.
+# reuses the same RDD blocks.  The multi-iteration A-rows all read the
+# blocked engine's fused chain (one resident state per (pref, lam, T))
+# and the exemplar set and convergence deltas it records.
 
 _cache: dict[tuple, object] = {}
-_CHAIN_RETAIN_MAX_N = 1000  # chain = T states × N² rows; 1000 → ≤5M total
-# (sf0.01/sf0.001 have N=500 → chain cached for the correctness gate;
-# sf0.1 has N=2000 → bench-scale queries use the unpersisting iterate())
 
 
 def clear_cache() -> None:
@@ -1534,18 +1524,22 @@ def cached_smat(spark: SparkSession, sf_dir: str, pref: str = "median") -> DataF
 
 
 def _dense(spark: SparkSession, sf_dir: str):
-    """Blocked dense engine instance (operators/ap_dense.py) for the
-    multi-iteration queries, or None above its size gate (the coordinate
-    engine below remains both the semantic reference and the large-N
-    dense fallback; the 100 TB path is ``cluster_sparse``)."""
+    """Blocked dense engine instance (operators/ap_dense.py) behind every
+    multi-iteration dense query.  Refused above its size gate: the dense
+    N² loop is the wrong tool there, and the coordinate engine is no
+    fallback (661 s at N=12k — PLANS.md "blocked-gate probe")."""
     key = _ckey(spark, sf_dir, "dense")
     if key not in _cache:
         from . import ap_dense
 
-        if _n_points(spark, sf_dir) <= ap_dense.BLOCKED_MAX_N:
-            _cache[key] = ap_dense.DenseAP(spark, sf_dir)
-        else:
-            _cache[key] = None
+        n = _n_points(spark, sf_dir)
+        if n > ap_dense.BLOCKED_MAX_N:
+            raise ValueError(
+                f"dense AP refused at N={n} > BLOCKED_MAX_N="
+                f"{ap_dense.BLOCKED_MAX_N}: use ap.cluster_sparse (the "
+                "scale path) or ap.cluster (the coordinate reference)"
+            )
+        _cache[key] = ap_dense.DenseAP(spark, sf_dir)
     return _cache[key]
 
 
@@ -1555,97 +1549,41 @@ def _dense_chain(
     pref: str = "median",
     lam: float = DAMPING,
     T: int = T_DEFAULT,
-    retain: bool = True,
-) -> list[DataFrame]:
-    """Blocked-state chain, cached per (pref, lam, T, retain).  Callers
-    must gate on ``_dense(...) is not None`` — raise a clear error here
-    rather than an AttributeError if one forgets."""
-    key = _ckey(spark, sf_dir, "dchain", pref, lam, T, retain)
-    if key not in _cache:
-        d = _dense(spark, sf_dir)
-        if d is None:
-            from . import ap_dense
-
-            raise RuntimeError(
-                "blocked dense engine unavailable above "
-                f"N={ap_dense.BLOCKED_MAX_N} — use the coordinate "
-                "iterate() fallback"
-            )
-        _cache[key] = d.chain(T, lam=lam, pref=pref, retain=retain)
-    return _cache[key]
-
-
-def _retain(spark: SparkSession, sf_dir: str) -> bool:
-    return _n_points(spark, sf_dir) <= _CHAIN_RETAIN_MAX_N
-
-
-def cached_chain(
-    spark: SparkSession, sf_dir: str, pref: str = "median", T: int = T_DEFAULT
-) -> list[DataFrame]:
-    """States after iterations 1..T, each checkpointed, ALL retained
-    (A9 convergence reads every step).  Only call at small N — see the
-    retention gate above.  Runs on the blocked engine when available
-    (coordinate views keep every consumer unchanged); the coordinate
-    loop is the gated fallback."""
-    key = _ckey(spark, sf_dir, "chain", pref, T)
-    if key not in _cache:
-        d = _dense(spark, sf_dir)
-        if d is not None:
-            blocked = _dense_chain(spark, sf_dir, pref=pref, T=T, retain=True)
-            _cache[key] = [
-                d.coordinate_view(st).localCheckpoint(eager=False)
-                for st in blocked
-            ]
-        else:
-            st = init_state(cached_smat(spark, sf_dir, pref))
-            states = []
-            for _ in range(T):
-                st = availability_pass(responsibility_pass(st)).localCheckpoint(
-                    eager=False
-                )
-                states.append(st)
-            _cache[key] = states
-    return _cache[key]
-
-
-def _final_state(
-    spark: SparkSession, sf_dir: str, pref: str = "median"
 ) -> DataFrame:
-    """Message state after T_DEFAULT iterations, shared across queries
-    (coordinate format — blocked-engine states are exposed as views)."""
-    if _retain(spark, sf_dir):
-        return cached_chain(spark, sf_dir, pref)[-1]
-    key = _ckey(spark, sf_dir, "final", pref)
+    """Final blocked state of the fused chain, cached per (pref, lam, T);
+    the chain's exemplar set and convergence deltas are recorded on the
+    ``_dense`` instance."""
+    key = _ckey(spark, sf_dir, "dchain", pref, lam, T)
     if key not in _cache:
         d = _dense(spark, sf_dir)
-        if d is not None:
-            st = _dense_chain(spark, sf_dir, pref=pref, retain=False)[-1]
-            _cache[key] = d.coordinate_view(st).localCheckpoint(eager=False)
-        else:
-            _cache[key] = iterate(
-                init_state(cached_smat(spark, sf_dir, pref)), T_DEFAULT
-            )
+        _cache[key] = d.chain(T, lam=lam, pref=pref, retain=False)[-1]
     return _cache[key]
+
+
+def _exemplar_ids(
+    spark: SparkSession, sf_dir: str, pref: str = "median", lam: float = DAMPING
+):
+    """Sorted exemplar ids after T_DEFAULT iterations (the chain's
+    record — no state scan)."""
+    _dense_chain(spark, sf_dir, pref=pref, lam=lam)
+    return _dense(spark, sf_dir).ex_hint(pref, lam, T_DEFAULT)
+
+
+def _exemplar_df(spark: SparkSession, ex) -> DataFrame:
+    return spark.createDataFrame([(int(e),) for e in ex], "exemplar long")
 
 
 def _labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Final (vec_id, exemplar) assignment, shared by A7/A8.  On the
-    blocked engine the argmax runs row-local over the final state — no
-    coordinate N² relation or window is rebuilt for the assignment."""
+    """Final (vec_id, exemplar) assignment, shared by A7/A8: the argmax
+    runs row-local over the final blocked state — no coordinate N²
+    relation or window is rebuilt for the assignment."""
     key = _ckey(spark, sf_dir, "labels")
     if key not in _cache:
-        d = _dense(spark, sf_dir)
-        if d is not None:
-            st = _dense_chain(
-                spark, sf_dir, retain=_retain(spark, sf_dir)
-            )[-1]
-            hint = d.ex_hint("median", DAMPING, T_DEFAULT)
-            _cache[key] = d.assign(st, ex=hint).localCheckpoint(eager=False)
-        else:
-            ex = exemplars_from_state(_final_state(spark, sf_dir))
-            _cache[key] = assign(
-                cached_off(spark, sf_dir), ex
-            ).localCheckpoint(eager=False)
+        st = _dense_chain(spark, sf_dir)
+        ex = _exemplar_ids(spark, sf_dir)
+        _cache[key] = (
+            _dense(spark, sf_dir).assign(st, ex=ex).localCheckpoint(eager=False)
+        )
     return _cache[key]
 
 
@@ -1676,11 +1614,9 @@ def q_ap_availability(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _one_iteration_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    if _n_points(spark, sf_dir) <= _CHAIN_RETAIN_MAX_N:
-        return cached_chain(spark, sf_dir)[0]
-    return availability_pass(
-        responsibility_pass(init_state(cached_smat(spark, sf_dir)))
-    )
+    """Coordinate view (i, k, s, r, a) of the T=1 fused chain."""
+    d = _dense(spark, sf_dir)
+    return d.coordinate_view(_dense_chain(spark, sf_dir, T=1))
 
 
 def q_ap_iterate_once(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1695,11 +1631,7 @@ def q_ap_iterate_once(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_ap_exemplars(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _dense(spark, sf_dir)
-    if d is not None:
-        st = _dense_chain(spark, sf_dir, retain=_retain(spark, sf_dir))[-1]
-        return d.exemplars(st, ex=d.ex_hint("median", DAMPING, T_DEFAULT))
-    return exemplars_from_state(_final_state(spark, sf_dir))
+    return _exemplar_df(spark, _exemplar_ids(spark, sf_dir))
 
 
 def q_ap_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1725,45 +1657,26 @@ def q_ap_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_ap_convergence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A9: max |r_t - r_{t-1}| per iteration t = 1..T."""
-    smat = cached_smat(spark, sf_dir)
-    if _n_points(spark, sf_dir) <= _CHAIN_RETAIN_MAX_N:
-        states = [init_state(smat)] + cached_chain(spark, sf_dir)
-    else:
-        states = [init_state(smat)]
-        for _ in range(T_DEFAULT):
-            states.append(
-                availability_pass(
-                    responsibility_pass(states[-1])
-                ).localCheckpoint(eager=False)
-            )
-    deltas = []
-    for t in range(1, len(states)):
-        cur, prev = states[t], states[t - 1]
-        deltas.append(
-            cur.select("i", "k", "r")
-            .join(prev.select("i", "k", F.col("r").alias("r_prev")), ["i", "k"])
-            .agg(
-                F.round(
-                    F.max(F.abs(F.col("r") - F.col("r_prev"))), 3
-                ).alias("max_delta_r")
-            )
-            .select(F.lit(t).alias("iter"), "max_delta_r")
-        )
-    return functools.reduce(lambda x, y: x.unionByName(y), deltas)
+    """A9: max |r_t - r_{t-1}| per iteration t = 1..T — the deltas the
+    fused chain's kernels recorded (a max is exact and order-free, so
+    they are bitwise the coordinate join's), rounded by Spark."""
+    _dense_chain(spark, sf_dir)
+    deltas = _dense(spark, sf_dir).deltas("median", DAMPING, T_DEFAULT)
+    return spark.createDataFrame(
+        [(t, float(x)) for t, x in enumerate(deltas, 1)],
+        "iter int, max_delta_r double",
+    ).select("iter", F.round("max_delta_r", 3).alias("max_delta_r"))
 
 
 def q_ap_pref_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A10: exemplar count under median vs min preference (T=5)."""
-    out = []
-    for kind in ("median", "min"):
-        state = _final_state(spark, sf_dir, pref=kind)
-        out.append(
-            exemplars_from_state(state).agg(
-                F.count("*").alias("n_exemplars")
-            ).select(F.lit(kind).alias("pref_kind"), "n_exemplars")
-        )
-    return out[0].unionByName(out[1])
+    return spark.createDataFrame(
+        [
+            (kind, len(_exemplar_ids(spark, sf_dir, pref=kind)))
+            for kind in ("median", "min")
+        ],
+        "pref_kind string, n_exemplars long",
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1988,7 +1901,7 @@ def q_ap_soft_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared cached kernel → bitwise parity; the exemplar set is broadcast
     and the per-point rank uses the same WindowGroupLimit-pushed top-k
     shape as the hard assignment."""
-    ex = exemplars_from_state(_final_state(spark, sf_dir))
+    ex = _exemplar_df(spark, _exemplar_ids(spark, sf_dir))
     off = cached_off(spark, sf_dir)
     cand = off.join(F.broadcast(ex), off["k"] == ex["exemplar"]).select(
         "i", "k", "s"
@@ -2066,22 +1979,15 @@ def q_ap_damping_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(⊕ r4) Exemplar count under damping 0.5 vs 0.9 (T=5) — the other
     AP hyperparameter knob next to the preference (A10).  Heavier
     damping slows message movement, so fewer self-elected exemplars
-    emerge within a fixed unrolled T.  The 0.5 chain is the shared
-    cached one; the 0.9 chain runs fresh (identical plan shape)."""
-    out = []
-    for lam in (DAMPING, DAMPING_SWEEP_ALT):
-        if lam == DAMPING:
-            state = _final_state(spark, sf_dir)
-        else:
-            state = iterate(
-                init_state(cached_smat(spark, sf_dir)), T_DEFAULT, lam=lam
-            )
-        out.append(
-            exemplars_from_state(state)
-            .agg(F.count("*").alias("n_exemplars"))
-            .select(F.lit(lam).alias("damping"), "n_exemplars")
-        )
-    return out[0].unionByName(out[1])
+    emerge within a fixed unrolled T.  Both counts are the fused chains'
+    recorded exemplar sets."""
+    return spark.createDataFrame(
+        [
+            (lam, len(_exemplar_ids(spark, sf_dir, lam=lam)))
+            for lam in (DAMPING, DAMPING_SWEEP_ALT)
+        ],
+        "damping double, n_exemplars long",
+    )
 
 
 def oracle_ap_damping_sweep(T: int = T_DEFAULT) -> str:

@@ -22,10 +22,12 @@ with the matrix stored as row blocks:
   coordinate passes in tests/test_ap_numpy.py);
 * the availability update needs only two N-vectors of column statistics:
   per-partition partials (rows sorted by i → deterministic numpy pairwise
-  sums) are collected (O(blocks·N) bytes), combined on the driver in
-  block order, and broadcast back — the classic MR column job;
-* one iteration = ONE tiny stats-collect job + ONE update/checkpoint job,
-  both 100% Arrow-vectorized numpy, ~0.3 s instead of ~3 s.
+  sums) ride an accumulator (O(blocks·N) bytes), are combined on the
+  driver in block order, and broadcast back — the classic MR column job;
+* one iteration = ONE Arrow-vectorized update/checkpoint job
+  (``DenseAP.chain``): the kernel applies the update and side-channels
+  the next iteration's column stats, the exemplar set of the state it
+  produced and the iteration's convergence delta max|r_t − r_{t−1}|.
 
 Float parity: s is computed with the same sequential per-dimension
 accumulation as ``ap.similarity_off_diagonal`` (bitwise equal to DuckDB's
@@ -36,20 +38,20 @@ decimals on both sides (ap.py module docstring).  The median preference
 reuses the interpolation formula proven bitwise-equal to
 ``percentile(s, 0.5)`` (ap._median_preference_fast).
 
-Scale gate: ``BLOCKED_MAX_N`` bounds the dense N² regime.  Since round
-8's continuation the gate is NOT driver-memory-bound — above
-ap._FAST_MEDIAN_MAX_N the preference is a distributed aggregate /
-rank-narrowing median and the driver only ever sees O(blocks·N)
+Scale gate: ``BLOCKED_MAX_N`` bounds the dense N² regime.  Below it
+every dense AP query iterates with the one fused loop of
+``DenseAP.chain``.  The gate is NOT driver-memory-bound — above
+ap._FAST_MEDIAN_MAX_N the preference is a rank-narrowing median and the
+bootstrap column stats a job, so the driver only ever sees O(blocks·N)
 accumulator payloads.  The binding costs are the N² kernel work per
 iteration and the two resident 3·N²·8 B checkpointed states (measured:
 N=12k blocked exceeds 10 min while the coordinate loop takes 661 s —
-PLANS.md "blocked-gate probe"); above the gate the coordinate engine
-and the sparse/IVF path (``ap.cluster_sparse``) take over.
+PLANS.md "blocked-gate probe").  Above the gate the dense queries are
+refused (``ap._dense`` raises): ``ap.cluster_sparse`` is the scale path
+and ``ap.cluster`` the coordinate reference.
 """
 
 from __future__ import annotations
-
-import os
 
 import numpy as np
 from pyspark.accumulators import AccumulatorParam
@@ -57,7 +59,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources import table
-from .ap import _ckpt
+from ..sources.tables import parquet_data_files
+from .ap import _ckpt, _release_ckpt
 
 DAMPING = 0.5
 BLOCKED_MAX_N = 10_000  # N² kernel work + 2 resident N² states bound this
@@ -75,8 +78,7 @@ SPARSE_FUSED_MAX_N = 4_000
 # whole distributed fused loop (bench reading with the branch: 8.5 s).
 # Unlike the sparse ragged state (~3 MB at the SPARSE_FUSED_MAX_N gate),
 # the dense N² state is big enough that per-task parallelism still pays
-# at every N where retain=False runs (N > _CHAIN_RETAIN_MAX_N).  The
-# surviving piece is the masked-max _r_block below, which the fused
+# at the N it was measured at.  The surviving piece is the masked-max _r_block below, which the fused
 # experiment surfaced.
 _TARGET_BLOCK_BYTES = 64 << 20  # per-task state footprint bound (3 N-arrays/row)
 # Work floor per block: the JVM↔Python handshake is paid per TASK, so
@@ -99,27 +101,16 @@ def _load_embeddings_arrow(sf_dir: str):
     whole).  Only ever called below BLOCKED_MAX_N (≤10k rows).  Returns
     None when the source is not a locally readable parquet file/dir, and
     the caller falls back to the Spark collect."""
-    import glob as _glob
-
     try:
+        import pyarrow as pa
         import pyarrow.parquet as pq
 
-        path = f"{sf_dir}/embeddings.parquet"
-        if os.path.isdir(path):
-            files = sorted(
-                _glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-            )
-            if not files:
-                return None
-            import pyarrow as pa
-
-            tbl = pa.concat_tables(
-                [pq.read_table(f, columns=["vec_id", "embedding"]) for f in files]
-            )
-        elif os.path.isfile(path):
-            tbl = pq.read_table(path, columns=["vec_id", "embedding"])
-        else:
+        files = parquet_data_files(f"{sf_dir}/embeddings.parquet")
+        if not files:
             return None
+        tbl = pa.concat_tables(
+            [pq.read_table(f, columns=["vec_id", "embedding"]) for f in files]
+        )
         ids = tbl.column("vec_id").to_numpy()
         col = tbl.column("embedding").combine_chunks()
         n = len(ids)
@@ -217,8 +208,36 @@ def _r_block(s: np.ndarray, r: np.ndarray, a: np.ndarray, lam: float) -> np.ndar
     return lam * r + (1 - lam) * (s - excl)
 
 
-def _stack(col) -> np.ndarray:
-    return np.stack(col.to_numpy())
+def _sorted_block(batches, ids_b: np.ndarray, pref: float):
+    """One partition's state with rows in ascending id (deterministic
+    partial sums) and the s diagonal patched to the preference →
+    (iv, s, r, a, rows, di), or None for an empty partition.  The
+    fancy-indexed matrices are fresh writable copies of the immutable
+    Arrow buffers."""
+    got = _decode_state(batches)
+    if got is None:
+        return None
+    iv, (s, r, a) = got
+    order = np.argsort(iv)
+    iv, s, r, a = iv[order], s[order], r[order], a[order]
+    rows = np.arange(len(iv))
+    di = np.searchsorted(ids_b, iv)
+    s[rows, di] = pref
+    return iv, s, r, a, rows, di
+
+
+def _stats_partial(s, r, a, rows, di, lam: float):
+    """A block's column-stats partial of the NEXT responsibilities
+    r_new = ``_r_block(s, r, a)``: (clipped column sum Σ_i max(0, r_new)
+    with the diagonal excluded — pairwise over the id-sorted rows — and
+    the diagonal r_new).  The one implementation behind the driver
+    bootstrap, the bootstrap job and the fused kernel, so their stats
+    agree bitwise."""
+    r_new = _r_block(s, r, a, lam)
+    diag_r = r_new[rows, di].copy()
+    rp = np.maximum(r_new, 0.0)
+    rp[rows, di] = 0.0
+    return rp.sum(0), diag_r
 
 
 class _PartialsAcc(AccumulatorParam):
@@ -255,7 +274,7 @@ def _combine_partials(parts: dict, ids: np.ndarray):
     ex: list[np.ndarray] = []
     cover: list[np.ndarray] = []
     for k in keys:
-        _, diag_i, diag_r, ex_ids = parts[k]
+        diag_i, diag_r, ex_ids = parts[k][1:4]  # [4]: the fused delta
         di = np.asarray(diag_i, dtype="i8")
         cover.append(di)
         rkk[np.searchsorted(ids, di)] = np.asarray(diag_r, dtype="f8")
@@ -277,8 +296,6 @@ class DenseAP:
     scalars; iteration chains are built on demand."""
 
     def __init__(self, spark: SparkSession, sf_dir: str):
-        import pandas as pd  # noqa: F401  (Arrow path)
-
         self.spark = spark
         self.sf_dir = sf_dir
         loaded = _load_embeddings_arrow(sf_dir)
@@ -301,8 +318,10 @@ class DenseAP:
         self.nb = _n_blocks(spark, self.n)
         self._state0: DataFrame | None = None
         self._prefs: dict[str, float] = {}
-        # exemplar sets accumulated by fused chains, keyed (pref, lam, T)
+        # per chain run, keyed (pref, lam, T): the final state's exemplar
+        # set and the T convergence deltas max|r_t − r_{t−1}|
         self._ex_hint: dict[tuple, np.ndarray] = {}
+        self._deltas: dict[tuple, np.ndarray] = {}
 
     def destroy(self) -> None:
         """Release executor-side state when this instance is evicted from
@@ -508,18 +527,16 @@ class DenseAP:
         """Column stats of r_1 computed ON THE DRIVER from the held s
         matrix — bitwise the ``_col_stats(state0, ...)`` job (r16, guide
         §4.1/§5: the bootstrap is a planning-sized computation — at the
-        small-N gate the driver already holds every input, so the
-        mapInPandas job + collect bought nothing but a task handshake).
+        small-N gate the driver already holds every input, so the job +
+        collect bought nothing but a task handshake).
 
         Bitwise argument: state0's partition p is exactly the contiguous
         ids slice [bounds[p], bounds[p+1]) in ascending-i order, so the
-        per-partition kernel ran the identical numpy ops (diag patch →
-        ``_r_block`` with r=a=0 → clipped pairwise column sum over the
-        block's rows) on the identical C-contiguous arrays; the partials
-        feed the SAME ``_combine_partials``.  Pinned by
-        tests/test_round16_opt.py against the job path.  Returns None
-        above the preference-collect gate (then the job runs, as
-        before)."""
+        per-partition kernel ran the identical ``_stats_partial`` on the
+        identical C-contiguous arrays; the partials feed the SAME
+        ``_combine_partials``.  Pinned by tests/test_round16_opt.py
+        against the job path.  Returns None above the preference-collect
+        gate (then the job runs)."""
         from .ap import _FAST_MEDIAN_MAX_N
 
         if self.n > _FAST_MEDIAN_MAX_N:
@@ -537,145 +554,79 @@ class DenseAP:
             di = np.arange(lo, hi)
             s[rows, di] = pref
             z = np.zeros_like(s)
-            r_new = _r_block(s, z, z, lam)
-            diag_r = r_new[rows, di].copy()
-            rp = np.maximum(r_new, 0.0)
-            rp[rows, di] = 0.0
-            parts[int(iv.min())] = (rp.sum(0), iv, diag_r, [])
+            colsum, diag_r = _stats_partial(s, z, z, rows, di, lam)
+            parts[int(iv.min())] = (colsum, iv, diag_r, [])
         colsum, rkk, _ = _combine_partials(parts, self.ids)
         return self.spark.sparkContext.broadcast((colsum, rkk))
 
     def _col_stats(self, state: DataFrame, pref: float, lam: float):
-        """The MR column job: per-partition partial column sums of
-        max(0, r_new) (diagonal excluded) plus the new diagonal
-        responsibilities, combined on the driver in deterministic block
-        order.  O(blocks·N) bytes collected — the N² state never moves."""
+        """The MR column job, run only as the bootstrap above
+        ap._FAST_MEDIAN_MAX_N, where the driver must never hold the N² s
+        values: per-partition partials of r_1 collected (O(blocks·N)
+        bytes) and combined on the driver in deterministic block order."""
         bc = self.bc
 
         def stats_kernel(batches):
-            import pandas as pd
+            import pyarrow as pa
 
-            ids_b, _ = bc.value
-            frames = list(batches)
-            if not frames:
+            blk = _sorted_block(batches, bc.value[0], pref)
+            if blk is None:
                 return
-            pdf = pd.concat(frames)
-            if not len(pdf):
-                return
-            iv = pdf["i"].to_numpy(dtype="i8")
-            order = np.argsort(iv)  # deterministic row order per block
-            iv = iv[order]
-            s = _stack(pdf["s"])[order]
-            r = _stack(pdf["r"])[order]
-            a = _stack(pdf["a"])[order]
-            rows = np.arange(len(iv))
-            di = np.searchsorted(ids_b, iv)
-            s[rows, di] = pref
-            r_new = _r_block(s, r, a, lam)
-            diag_r = r_new[rows, di].copy()
-            rp = np.maximum(r_new, 0.0)
-            rp[rows, di] = 0.0
-            yield pd.DataFrame(
-                {
-                    "min_i": [int(iv.min())],
-                    "colsum": [rp.sum(0)],  # pairwise over sorted rows
-                    "diag_i": [iv],
-                    "diag_r": [diag_r],
-                }
+            iv, s, r, a, rows, di = blk
+            colsum, diag_r = _stats_partial(s, r, a, rows, di, lam)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array([int(iv.min())], pa.int64()),
+                    pa.array([colsum]),
+                    pa.array([iv]),
+                    pa.array([diag_r]),
+                ],
+                names=["min_i", "colsum", "diag_i", "diag_r"],
             )
 
-        parts = state.mapInPandas(
+        parts = state.mapInArrow(
             stats_kernel,
             schema="min_i long, colsum array<double>, "
             "diag_i array<long>, diag_r array<double>",
         ).collect()
-        # same combine as the fused path — one implementation to keep
-        # the bitwise guarantee between the two-job and fused loops
         colsum, rkk, _ = _combine_partials(
             {p.min_i: (p.colsum, p.diag_i, p.diag_r, []) for p in parts},
             self.ids,
         )
         return self.spark.sparkContext.broadcast((colsum, rkk))
 
-    def _update(
-        self, state: DataFrame, stats_bc, pref: float, lam: float
-    ) -> DataFrame:
-        """One full damped iteration given the broadcast column stats:
-        recompute r_new (identical ``_r_block`` call as the stats kernel —
-        cheaper than a second O(N²) materialization), apply the
-        availability update, emit the next state with the diagonal s
-        patched to the preference."""
-        bc = self.bc
-
-        def update_kernel(batches):
-            ids_b, _ = bc.value
-            colsum, rkk = stats_bc.value
-            for b in batches:
-                got = _decode_state([b])
-                if got is None:
-                    continue
-                iv, (s, r, a) = got
-                s = s.copy()  # the Arrow buffer is immutable; the old
-                # np.stack decode copied too — same values either way
-                rows = np.arange(len(iv))
-                di = np.searchsorted(ids_b, iv)
-                s[rows, di] = pref
-                r_new = _r_block(s, r, a, lam)
-                rp = np.maximum(r_new, 0.0)
-                rp[rows, di] = 0.0
-                a_hat = np.minimum(0.0, rkk[None, :] + colsum[None, :] - rp)
-                a_hat[rows, di] = colsum[di]
-                a_new = lam * a + (1 - lam) * a_hat
-                yield _encode_state(iv, s, r_new, a_new)
-
-        return state.mapInArrow(update_kernel, schema=_STATE_SCHEMA)
-
-    def _update_fused(
+    def _step(
         self, state: DataFrame, stats_bc, pref: float, lam: float, acc
     ) -> DataFrame:
-        """The fused iteration kernel: apply the (r, a) update like
-        ``_update``, AND side-channel the NEXT iteration's column-stat
-        partials (plus the exemplar candidates of the state just
-        produced) through ``acc`` — so the per-iteration stats job
-        disappears and each damped iteration is exactly ONE job.  The
-        extra ``_r_block`` call costs microseconds per block; the next
-        update job recomputes the same r bitwise from the checkpointed
-        state, so values are unchanged from the two-job path."""
+        """One damped iteration given the broadcast column stats: the
+        (r, a) update, plus — through ``acc`` — the NEXT iteration's
+        column-stat partials, the exemplar candidates of the state just
+        produced and the block's max|r_new − r| (max is exact and
+        order-free, so the combined delta is bitwise the coordinate
+        join's).  Emits the next state with the diagonal s patched to
+        the preference."""
         bc = self.bc
 
-        def fused_kernel(batches):
+        def step_kernel(batches):
             ids_b, _ = bc.value
             colsum, rkk = stats_bc.value
-            got = _decode_state(batches)
-            if got is None:
+            blk = _sorted_block(batches, ids_b, pref)
+            if blk is None:
                 return
-            iv, (s, r, a) = got
-            order = np.argsort(iv)  # deterministic partial sums
-            iv = iv[order]
-            s = s[order]  # fancy index = fresh writable copy, same as
-            r = r[order]  # the old np.stack(...)[order]
-            a = a[order]
-            rows = np.arange(len(iv))
-            di = np.searchsorted(ids_b, iv)
-            s[rows, di] = pref
+            iv, s, r, a, rows, di = blk
             r_new = _r_block(s, r, a, lam)
             rp = np.maximum(r_new, 0.0)
             rp[rows, di] = 0.0
             a_hat = np.minimum(0.0, rkk[None, :] + colsum[None, :] - rp)
             a_hat[rows, di] = colsum[di]
             a_new = lam * a + (1 - lam) * a_hat
-            # next iteration's column stats from the state just produced
-            r_next = _r_block(s, r_new, a_new, lam)
-            diag_rn = r_next[rows, di].copy()
-            rpn = np.maximum(r_next, 0.0)
-            rpn[rows, di] = 0.0
+            colsum_n, diag_rn = _stats_partial(s, r_new, a_new, rows, di, lam)
             ex_ids = iv[(a_new[rows, di] + r_new[rows, di]) > 0]
-            acc.add(
-                {int(iv.min()): (rpn.sum(0), iv, diag_rn, ex_ids)}
-            )
+            delta = float(np.abs(r_new - r).max())
+            acc.add({int(iv.min()): (colsum_n, iv, diag_rn, ex_ids, delta)})
             yield _encode_state(iv, s, r_new, a_new)
 
-        return state.mapInArrow(fused_kernel, schema=_STATE_SCHEMA)
+        return state.mapInArrow(step_kernel, schema=_STATE_SCHEMA)
 
     def chain(
         self,
@@ -684,48 +635,29 @@ class DenseAP:
         pref: str = "median",
         retain: bool = True,
     ) -> list[DataFrame]:
-        """States after iterations 1..T.  ``retain=True`` checkpoints each
-        lazily and keeps all (A9 reads every step — small-N only), two
-        jobs per iteration.  ``retain=False`` runs the FUSED loop: after
-        the one bootstrap stats job, every iteration is a single eager
-        update job whose accumulator side-channel carries the next
-        iteration's column stats (and, on the last iteration, the
-        exemplar set — cached as a hint so the assignment needs no
-        exemplar job); the previous iteration's blocks are released (the
-        ap.iterate() discipline) and only the final state returns."""
+        """States after iterations 1..T.  After the bootstrap column stats
+        (driver-side below ap._FAST_MEDIAN_MAX_N, one job above), every
+        iteration is ONE eager update job whose accumulator side-channel
+        carries the next iteration's column stats, the exemplar set and
+        the convergence delta.  The final exemplar set and the T deltas
+        are recorded (``ex_hint``/``deltas``), so no consumer scans a
+        state for them.  ``retain=False`` releases each previous state's
+        blocks (the ap.iterate() discipline) and returns only the final
+        state; ``retain=True`` keeps and returns every state."""
         p = self.pref_value(pref)
-        jsc = self.spark.sparkContext._jsc
-
-        def _ckpt_id(df: DataFrame) -> int:
-            return df._jdf.queryExecution().analyzed().rdd().id()
-
-        state = self.state0()
-        if retain:
-            states: list[DataFrame] = []
-            for it in range(iterations):
-                stats_bc = (
-                    self._bootstrap_stats(p, lam) if it == 0 else None
-                ) or self._col_stats(state, p, lam)
-                state = _ckpt(
-                    self._update(state, stats_bc, p, lam), eager=False
-                )
-                states.append(state)
-            return states
-
         sc = self.spark.sparkContext
-        # bootstrap: stats of r_1 — driver-side below the small-N gate
-        # (zero jobs), the _col_stats job above it
+        state = self.state0()
         stats_bc = self._bootstrap_stats(p, lam) or self._col_stats(
             state, p, lam
         )
-        prev_id: int | None = None
-        ex_hint: np.ndarray | None = None
+        states: list[DataFrame] = []
+        deltas: list[float] = []
+        ex: np.ndarray | None = None
         spent: list = []  # consumed stats broadcasts, destroyed after the loop
         for it in range(iterations):
             acc = sc.accumulator({}, _PartialsAcc())
-            state = _ckpt(
-                self._update_fused(state, stats_bc, p, lam, acc), eager=True
-            )
+            prev = state
+            state = _ckpt(self._step(state, stats_bc, p, lam, acc), eager=True)
             # the eager job consumed the stats; the checkpoint's truncated
             # lineage can never recompute.  Destroy AFTER the loop, not
             # here: a mid-loop RemoveBroadcast RPC contends with the next
@@ -733,74 +665,43 @@ class DenseAP:
             # iterations), while T pinned stats broadcasts are only
             # 2·N·8 B each — ≤160 KB at the BLOCKED_MAX_N gate.
             spent.append(stats_bc)
-            if prev_id is not None:
-                rdd = jsc.getPersistentRDDs().get(prev_id)
-                if rdd is not None:
-                    rdd.unpersist()
-            prev_id = _ckpt_id(state)
-            colsum, rkk, ex_hint = _combine_partials(acc.value, self.ids)
-            if it < iterations - 1:  # the final combine only feeds ex_hint
+            if not retain and it > 0:
+                _release_ckpt(prev)
+            states.append(state)
+            colsum, rkk, ex = _combine_partials(acc.value, self.ids)
+            deltas.append(max(part[4] for part in acc.value.values()))
+            if it < iterations - 1:  # the final combine only feeds ex
                 stats_bc = sc.broadcast((colsum, rkk))
         for bc in spent:
             try:
                 bc.destroy()
             except Exception:
                 pass
-        self._ex_hint[(pref, lam, iterations)] = ex_hint
-        return [state]
+        self._ex_hint[(pref, lam, iterations)] = ex
+        self._deltas[(pref, lam, iterations)] = np.array(deltas, dtype="f8")
+        return states if retain else [state]
 
     # -- consumers -----------------------------------------------------
 
     def ex_hint(
         self, pref: str = "median", lam: float = DAMPING, T: int | None = None
     ) -> np.ndarray | None:
-        """Exemplar set accumulated by a fused chain run, if any."""
+        """Exemplar set {k : a(k,k) + r(k,k) > 0} of the final state of
+        the chain run with (pref, lam, T), sorted; None if none ran."""
         return self._ex_hint.get((pref, lam, T))
 
-    def exemplars(
-        self, state: DataFrame, ex: np.ndarray | None = None
-    ) -> DataFrame:
-        """{k : a(k,k) + r(k,k) > 0} as a (exemplar long) DataFrame.
-        ``ex`` (a fused-chain hint) skips the scan job — the hint was
-        computed from the same diagonal comparison inside the last
-        update kernel."""
-        if ex is not None:
-            return self.spark.createDataFrame(
-                [(int(e),) for e in ex], "exemplar long"
-            )
-        bc = self.bc
+    def deltas(
+        self, pref: str = "median", lam: float = DAMPING, T: int | None = None
+    ) -> np.ndarray | None:
+        """max|r_t − r_{t−1}| over all (i, k) for t = 1..T of that chain
+        run (unrounded); None if none ran."""
+        return self._deltas.get((pref, lam, T))
 
-        def ex_kernel(batches):
-            import pyarrow as pa
-
-            ids_b, _ = bc.value
-            for b in batches:
-                got = _decode_state([b], cols=(2, 3))
-                if got is None:
-                    continue
-                iv, (r, a) = got
-                rows = np.arange(len(iv))
-                di = np.searchsorted(ids_b, iv)
-                keep = (a[rows, di] + r[rows, di]) > 0
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(iv[keep])], names=["exemplar"]
-                )
-
-        return state.mapInArrow(ex_kernel, schema="exemplar long")
-
-    def assign(self, state: DataFrame, ex: np.ndarray | None = None) -> DataFrame:
+    def assign(self, state: DataFrame, ex: np.ndarray) -> DataFrame:
         """label(i) = argmax over exemplars k of s(i,k), ties to lowest k,
         exemplars labeled as themselves (the ap.assign semantics).  The
-        exemplar set (or the fused-chain hint) is broadcast into a
-        row-local kernel — no N² relation is rebuilt for the final
-        argmax."""
-        if ex is None:
-            ex = np.sort(
-                np.array(
-                    [r.exemplar for r in self.exemplars(state).collect()],
-                    dtype="i8",
-                )
-            )
+        chain's exemplar set ``ex`` is broadcast into a row-local kernel —
+        no N² relation is rebuilt for the final argmax."""
         bc = self.bc
         ex_bc = self.spark.sparkContext.broadcast(ex)
 
@@ -833,40 +734,32 @@ class DenseAP:
     def coordinate_view(self, state: DataFrame) -> DataFrame:
         """Explode a blocked state to the coordinate relation
         (i, k, s, r, a) for consumers written against the reference
-        engine (A4/A5/A9 at chain scale)."""
+        engine (A4/A5 and the parity pins)."""
         bc = self.bc
 
         def explode_kernel(batches):
-            import pandas as pd
+            import pyarrow as pa
 
             ids_b, _ = bc.value
-            nn = len(ids_b)
-            for pdf in batches:
-                if not len(pdf):
+            for b in batches:
+                got = _decode_state([b])
+                if got is None:
                     continue
-                iv = pdf["i"].to_numpy(dtype="i8")
-                s = _stack(pdf["s"])
-                r = _stack(pdf["r"])
-                a = _stack(pdf["a"])
-                yield pd.DataFrame(
-                    {
-                        "i": np.repeat(iv, nn),
-                        "k": np.tile(ids_b, len(iv)),
-                        "s": s.ravel(),
-                        "r": r.ravel(),
-                        "a": a.ravel(),
-                    }
+                iv, (s, r, a) = got
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        pa.array(np.repeat(iv, len(ids_b))),
+                        pa.array(np.tile(ids_b, len(iv))),
+                        pa.array(s.ravel()),
+                        pa.array(r.ravel()),
+                        pa.array(a.ravel()),
+                    ],
+                    names=["i", "k", "s", "r", "a"],
                 )
 
-        return state.mapInPandas(
+        return state.mapInArrow(
             explode_kernel, schema="i long, k long, s double, r double, a double"
         )
-
-    def off_diagonal(self) -> DataFrame:
-        """Coordinate off-diagonal similarity (i, k, s) from the blocked
-        zero state — same values as ap.similarity_off_diagonal."""
-        view = self.coordinate_view(self.state0())
-        return view.where(F.col("i") != F.col("k")).select("i", "k", "s")
 
 
 # ---------------------------------------------------------------------------
@@ -896,6 +789,90 @@ def _sparse_r_row(s, r, a, lam):
     return lam * r + (1 - lam) * (s - excl)
 
 
+def _sparse_build_row(i_val, nbrs, pref: float):
+    """One point's ragged row (ks, s): its candidates in ascending k
+    (ties → lowest k downstream) with the preference inserted at its own
+    id; a point without candidates gets the diagonal alone."""
+    if nbrs is None or len(nbrs) == 0:
+        return np.array([i_val], dtype="i8"), np.array([pref], dtype="f8")
+    kk = np.array([x["k"] for x in nbrs], dtype="i8")
+    vv = np.array([x["s"] for x in nbrs], dtype="f8")
+    order = np.argsort(kk)
+    pos = np.searchsorted(kk[order], i_val)
+    return np.insert(kk[order], pos, i_val), np.insert(vv[order], pos, pref)
+
+
+def _sparse_partial(iv, ksc, sc, rc, ac, ids_b, lam):
+    """Deterministic column-stat partial of a set of ragged rows: the
+    NEXT responsibilities' clipped column sum (diagonal excluded) and
+    diagonal, rows processed in ascending-i order → (colsum, diag_i,
+    diag_r)."""
+    order = np.argsort(iv)
+    colsum = np.zeros(len(ids_b), dtype="f8")
+    diag_i, diag_r = [], []
+    for j in order:
+        ks = np.asarray(ksc[j], dtype="i8")
+        r_next = _sparse_r_row(
+            np.asarray(sc[j], dtype="f8"),
+            np.asarray(rc[j], dtype="f8"),
+            np.asarray(ac[j], dtype="f8"),
+            lam,
+        )
+        own = ks == iv[j]
+        diag_i.append(iv[j])
+        diag_r.append(float(r_next[own][0]))
+        rp = np.maximum(r_next, 0.0)
+        rp[own] = 0.0
+        np.add.at(colsum, np.searchsorted(ids_b, ks), rp)
+    return (
+        colsum,
+        np.array(diag_i, dtype="i8"),
+        np.array(diag_r, dtype="f8"),
+    )
+
+
+def _sparse_step(iv, ksc, sc, rc, ac, colsum, rkk, ids_b, lam):
+    """One damped iteration of a set of ragged rows given the column
+    stats → (r rows, a rows, elected exemplar ids, the next iteration's
+    ``_sparse_partial``) — the row update both loop branches run."""
+    out_r, out_a, ex_ids = [], [], []
+    for j in range(len(iv)):
+        ks = np.asarray(ksc[j], dtype="i8")
+        av = np.asarray(ac[j], dtype="f8")
+        r_new = _sparse_r_row(
+            np.asarray(sc[j], dtype="f8"), np.asarray(rc[j], dtype="f8"), av, lam
+        )
+        idx = np.searchsorted(ids_b, ks)
+        own = ks == iv[j]
+        rp = np.maximum(r_new, 0.0)
+        rp[own] = 0.0
+        a_hat = np.minimum(0.0, rkk[idx] + colsum[idx] - rp)
+        a_hat[own] = colsum[idx[own]]
+        a_new = lam * av + (1 - lam) * a_hat
+        out_r.append(r_new)
+        out_a.append(a_new)
+        if (a_new[own][0] + r_new[own][0]) > 0:
+            ex_ids.append(iv[j])
+    nxt = _sparse_partial(iv, ksc, sc, out_r, out_a, ids_b, lam)
+    return out_r, out_a, np.array(ex_ids, dtype="i8"), nxt
+
+
+def _sparse_labels(iv, ksc, sc, exb: np.ndarray) -> np.ndarray:
+    """Row-local assignment over ragged rows: exemplars label
+    themselves, every other point its most similar exemplar among its
+    candidates (ks ascending: ties → lowest k), or -1 with none."""
+    lab = np.empty(len(iv), dtype="i8")
+    for j in range(len(iv)):
+        if len(exb) and iv[j] in exb:
+            lab[j] = iv[j]
+            continue
+        ks = np.asarray(ksc[j], dtype="i8")
+        sv = np.asarray(sc[j], dtype="f8")
+        mask = np.isin(ks, exb) & (ks != iv[j])
+        lab[j] = ks[mask][int(sv[mask].argmax())] if mask.any() else -1
+    return lab
+
+
 def cluster_sparse_blocked(
     spark: SparkSession,
     cand: DataFrame,
@@ -918,6 +895,9 @@ def cluster_sparse_blocked(
     Emits (vec_id, exemplar) for EVERY point; points with no elected
     exemplar among their candidates get -1 (the honest sparse
     semantics, same as the coordinate ``ap.cluster_sparse``).
+
+    Both branches — fused-small (one task) and distributed (one job per
+    iteration) — run the same row construction, row update and labeller.
 
     ``pref=None`` (fused-small branch only, r16): the median preference
     is computed INSIDE the fused kernel from the candidate s values it
@@ -942,52 +922,20 @@ def cluster_sparse_blocked(
         "left",
     )
 
-    def _sparse_partial(iv, ksc, sc, rc, ac, ids_b, lam_):
-        """Deterministic per-partition column-stat partial (+ new diag r
-        and exemplar candidates) from already-updated ragged rows —
-        shared by the bootstrap build kernel and the fused update
-        kernel.  Rows are processed in ascending-i order."""
-        order = np.argsort(iv)
-        colsum = np.zeros(len(ids_b), dtype="f8")
-        diag_i, diag_r = [], []
-        for j in order:
-            ks = np.asarray(ksc[j], dtype="i8")
-            r_next = _sparse_r_row(
-                np.asarray(sc[j], dtype="f8"),
-                np.asarray(rc[j], dtype="f8"),
-                np.asarray(ac[j], dtype="f8"),
-                lam_,
-            )
-            own = ks == iv[j]
-            diag_i.append(iv[j])
-            diag_r.append(float(r_next[own][0]))
-            rp = np.maximum(r_next, 0.0)
-            rp[own] = 0.0
-            np.add.at(colsum, np.searchsorted(ids_b, ks), rp)
-        return (
-            colsum,
-            np.array(diag_i, dtype="i8"),
-            np.array(diag_r, dtype="f8"),
-        )
-
     if n <= SPARSE_FUSED_MAX_N:
         # -- fused-small path: ONE job for build + T iterations + assign.
         # At this size the ragged state is a single AQE-coalesced
         # partition anyway, so the distributed loop's per-iteration
         # accumulator is a single partial — the arithmetic below is the
-        # SAME code (row-local _sparse_r_row updates, _sparse_partial
-        # column stats in ascending-i order) on the same single block,
-        # so labels are identical while T eager-checkpoint jobs, T
-        # broadcasts, and the separate build/assign jobs collapse into
-        # one task (bench sf0.1: the blocked phase drops ~2.6 s → ~0.4 s;
-        # pinned against the coordinate engine by the same round-6
-        # equality tests that pin the distributed loop).
+        # SAME code on the same single block, so labels are identical
+        # while T eager-checkpoint jobs, T broadcasts, and the separate
+        # build/assign jobs collapse into one task (bench sf0.1: the
+        # blocked phase drops ~2.6 s → ~0.4 s).
         def fused_kernel(batches):
             frames = [p for p in batches if len(p)]
             if not frames:
                 return
             pdf = pd.concat(frames).sort_values("i", ignore_index=True)
-            ids_b = ids
             iv = pdf["i"].to_numpy(dtype="i8")
             pref_ = pref
             if pref_ is None:
@@ -1020,65 +968,27 @@ def cluster_sparse_blocked(
                 )
                 lower, upper = part[lo_r], part[min(lo_r + 1, m - 1)]
                 pref_ = float(lower + (upper - lower) * (ppos - lo_r))
-            ksc, sc, rc, ac = [], [], [], []
-            for i_val, nbrs in zip(pdf["i"], pdf["nbrs"]):
-                if nbrs is None or len(nbrs) == 0:
-                    ks = np.array([i_val], dtype="i8")
-                    sv = np.array([pref_], dtype="f8")
-                else:
-                    kk = np.array([x["k"] for x in nbrs], dtype="i8")
-                    vv = np.array([x["s"] for x in nbrs], dtype="f8")
-                    order = np.argsort(kk)  # ascending k: ties → lowest k
-                    pos = np.searchsorted(kk[order], i_val)
-                    ks = np.insert(kk[order], pos, i_val)
-                    sv = np.insert(vv[order], pos, pref_)
-                z = np.zeros(len(ks), dtype="f8")
-                ksc.append(ks)
-                sc.append(sv)
-                rc.append(z)
-                ac.append(z)
+            rows = [
+                _sparse_build_row(i_val, nbrs, pref_)
+                for i_val, nbrs in zip(pdf["i"], pdf["nbrs"])
+            ]
+            ksc = [ks for ks, _ in rows]
+            sc = [sv for _, sv in rows]
+            rc = [np.zeros(len(ks), dtype="f8") for ks in ksc]
+            ac = rc
             # bootstrap: stats of r_1 (identical to acc0 in the loop path)
-            colsum, diag_i, diag_r = _sparse_partial(
-                iv, ksc, sc, rc, ac, ids_b, lam
-            )
-            rkk = np.zeros(len(ids_b), dtype="f8")
-            rkk[np.searchsorted(ids_b, diag_i)] = diag_r
-            ex_ids: list[int] = []
+            nxt = _sparse_partial(iv, ksc, sc, rc, ac, ids, lam)
+            exb = np.array([], dtype="i8")
             for _ in range(iterations):
-                ex_ids = []
-                for j in range(len(iv)):
-                    ks = ksc[j]
-                    r_new = _sparse_r_row(sc[j], rc[j], ac[j], lam)
-                    idx = np.searchsorted(ids_b, ks)
-                    own = ks == iv[j]
-                    rp = np.maximum(r_new, 0.0)
-                    rp[own] = 0.0
-                    a_hat = np.minimum(0.0, rkk[idx] + colsum[idx] - rp)
-                    a_hat[own] = colsum[idx[own]]
-                    a_new = lam * ac[j] + (1 - lam) * a_hat
-                    rc[j], ac[j] = r_new, a_new
-                    if (a_new[own][0] + r_new[own][0]) > 0:
-                        ex_ids.append(iv[j])
-                colsum, diag_i, diag_r = _sparse_partial(
-                    iv, ksc, sc, rc, ac, ids_b, lam
+                colsum, diag_i, diag_r = nxt
+                rkk = np.zeros(len(ids), dtype="f8")
+                rkk[np.searchsorted(ids, diag_i)] = diag_r
+                rc, ac, exb, nxt = _sparse_step(
+                    iv, ksc, sc, rc, ac, colsum, rkk, ids, lam
                 )
-                rkk = np.zeros(len(ids_b), dtype="f8")
-                rkk[np.searchsorted(ids_b, diag_i)] = diag_r
-            exb = np.sort(np.array(ex_ids, dtype="i8"))
-            lab = np.empty(len(iv), dtype="i8")
-            for j in range(len(iv)):
-                if len(exb) and iv[j] in exb:
-                    lab[j] = iv[j]
-                    continue
-                ks = ksc[j]
-                sv = sc[j]
-                mask = np.isin(ks, exb) & (ks != iv[j])
-                if mask.any():
-                    sub = sv[mask]
-                    lab[j] = ks[mask][int(sub.argmax())]  # ks sorted: ties → lowest
-                else:
-                    lab[j] = -1
-            yield pd.DataFrame({"vec_id": iv, "exemplar": lab})
+            yield pd.DataFrame(
+                {"vec_id": iv, "exemplar": _sparse_labels(iv, ksc, sc, exb)}
+            )
 
         return ragged.coalesce(1).mapInPandas(
             fused_kernel, schema="vec_id long, exemplar long"
@@ -1098,33 +1008,20 @@ def cluster_sparse_blocked(
         if not frames:
             return
         pdf = pd.concat(frames)
-        out = {"i": [], "ks": [], "s": [], "r": [], "a": []}
-        for i_val, nbrs in zip(pdf["i"], pdf["nbrs"]):
-            if nbrs is None or len(nbrs) == 0:
-                ks = np.array([i_val], dtype="i8")
-                sv = np.array([pref], dtype="f8")
-            else:
-                kk = np.array([x["k"] for x in nbrs], dtype="i8")
-                vv = np.array([x["s"] for x in nbrs], dtype="f8")
-                order = np.argsort(kk)  # ascending k: ties → lowest k
-                pos = np.searchsorted(kk[order], i_val)
-                ks = np.insert(kk[order], pos, i_val)
-                sv = np.insert(vv[order], pos, pref)
-            z = np.zeros(len(ks), dtype="f8")
-            out["i"].append(i_val)
-            out["ks"].append(ks)
-            out["s"].append(sv)
-            out["r"].append(z)
-            out["a"].append(z)
-        iv = np.array(out["i"], dtype="i8")
+        iv = pdf["i"].to_numpy(dtype="i8")
+        rows = [
+            _sparse_build_row(i_val, nbrs, pref)
+            for i_val, nbrs in zip(pdf["i"], pdf["nbrs"])
+        ]
+        ksc = [ks for ks, _ in rows]
+        sc = [sv for _, sv in rows]
+        z = [np.zeros(len(ks), dtype="f8") for ks in ksc]
         # bootstrap: stats of r_1 ride the build job's accumulator
-        colsum, diag_i, diag_r = _sparse_partial(
-            iv, out["ks"], out["s"], out["r"], out["a"], ids_b, lam
-        )
+        colsum, diag_i, diag_r = _sparse_partial(iv, ksc, sc, z, z, ids_b, lam)
         acc0.add(
             {int(iv.min()): (colsum, diag_i, diag_r, np.array([], dtype="i8"))}
         )
-        yield pd.DataFrame(out)
+        yield pd.DataFrame({"i": iv, "ks": ksc, "s": sc, "r": z, "a": z})
 
     # eager checkpoint runs the build job synchronously → acc0 populated
     state = _ckpt(
@@ -1132,82 +1029,46 @@ def cluster_sparse_blocked(
     )
 
     def _rows(pdf):
-        iv = pdf["i"].to_numpy(dtype="i8")
         return (
-            iv,
+            pdf["i"].to_numpy(dtype="i8"),
             pdf["ks"].to_numpy(),
             pdf["s"].to_numpy(),
             pdf["r"].to_numpy(),
             pdf["a"].to_numpy(),
         )
 
-    def update_kernel_factory(stats_bc, acc, lam_):
+    def update_kernel_factory(stats_bc, acc):
         def update_kernel(batches):
             ids_b = ids_bc.value
             colsum, rkk = stats_bc.value
             frames = [p for p in batches if len(p)]
             if not frames:
                 return
-            pdf = pd.concat(frames)
-            iv, ksc, sc, rc, ac = _rows(pdf)
-            out_r, out_a = [], []
-            ex_ids = []
-            for j in range(len(iv)):
-                ks = np.asarray(ksc[j], dtype="i8")
-                sv = np.asarray(sc[j], dtype="f8")
-                rv = np.asarray(rc[j], dtype="f8")
-                av = np.asarray(ac[j], dtype="f8")
-                r_new = _sparse_r_row(sv, rv, av, lam_)
-                idx = np.searchsorted(ids_b, ks)
-                own = ks == iv[j]
-                rp = np.maximum(r_new, 0.0)
-                rp[own] = 0.0
-                a_hat = np.minimum(0.0, rkk[idx] + colsum[idx] - rp)
-                a_hat[own] = colsum[idx[own]]
-                a_new = lam_ * av + (1 - lam_) * a_hat
-                out_r.append(r_new)
-                out_a.append(a_new)
-                if (a_new[own][0] + r_new[own][0]) > 0:
-                    ex_ids.append(iv[j])
+            iv, ksc, sc, rc, ac = _rows(pd.concat(frames))
+            out_r, out_a, ex_ids, (colsum_n, diag_i, diag_r) = _sparse_step(
+                iv, ksc, sc, rc, ac, colsum, rkk, ids_b, lam
+            )
             # next iteration's stats ride this job's accumulator
-            colsum_n, diag_i, diag_r = _sparse_partial(
-                iv, ksc, sc, out_r, out_a, ids_b, lam_
-            )
-            acc.add(
-                {
-                    int(iv.min()): (
-                        colsum_n,
-                        diag_i,
-                        diag_r,
-                        np.array(ex_ids, dtype="i8"),
-                    )
-                }
-            )
+            acc.add({int(iv.min()): (colsum_n, diag_i, diag_r, ex_ids)})
             yield pd.DataFrame(
-                {
-                    "i": iv,
-                    "ks": list(ksc),
-                    "s": list(sc),
-                    "r": out_r,
-                    "a": out_a,
-                }
+                {"i": iv, "ks": list(ksc), "s": list(sc), "r": out_r, "a": out_a}
             )
 
         return update_kernel
 
-    jsc = spark.sparkContext._jsc
-    # seed the release chain with the build checkpoint so only ONE state
-    # copy stays pinned across the loop (the ap.iterate() discipline);
-    # the final state must stay — the assignment result reads it lazily
-    prev_id = state._jdf.queryExecution().analyzed().rdd().id()
+    # the build checkpoint is released by the first iteration so only ONE
+    # state copy stays pinned across the loop (the ap.iterate()
+    # discipline); the final state must stay — the assignment result
+    # reads it lazily
     colsum, rkk, ex = _combine_partials(acc0.value, ids)
     spent: list = []  # consumed stats broadcasts, destroyed after the loop
     for _ in range(iterations):
         stats_bc = sc_ctx.broadcast((colsum, rkk))
         acc = sc_ctx.accumulator({}, _PartialsAcc())
+        prev = state
         state = _ckpt(
             state.mapInPandas(
-                update_kernel_factory(stats_bc, acc, lam), schema=_SPARSE_SCHEMA
+                update_kernel_factory(stats_bc, acc), schema=_SPARSE_SCHEMA
             ),
             eager=True,
         )
@@ -1216,11 +1077,7 @@ def cluster_sparse_blocked(
         # with the next iteration's task launches (warm A/B ~0.2 s), and T
         # pinned stats broadcasts are ≤160 KB each at the gate.
         spent.append(stats_bc)
-        if prev_id is not None:
-            rdd = jsc.getPersistentRDDs().get(prev_id)
-            if rdd is not None:
-                rdd.unpersist()
-        prev_id = state._jdf.queryExecution().analyzed().rdd().id()
+        _release_ckpt(prev)
         colsum, rkk, ex = _combine_partials(acc.value, ids)
     for bc in spent:
         try:
@@ -1233,24 +1090,12 @@ def cluster_sparse_blocked(
     ex_bc = sc_ctx.broadcast(ex)
 
     def assign_kernel(batches):
-        exb = ex_bc.value
         for pdf in batches:
             if not len(pdf):
                 continue
             iv, ksc, sc, _, _ = _rows(pdf)
-            lab = np.empty(len(iv), dtype="i8")
-            for j in range(len(iv)):
-                if len(exb) and iv[j] in exb:
-                    lab[j] = iv[j]
-                    continue
-                ks = np.asarray(ksc[j], dtype="i8")
-                sv = np.asarray(sc[j], dtype="f8")
-                mask = np.isin(ks, exb) & (ks != iv[j])
-                if mask.any():
-                    sub = sv[mask]
-                    lab[j] = ks[mask][int(sub.argmax())]  # ks sorted: ties → lowest
-                else:
-                    lab[j] = -1
-            yield pd.DataFrame({"vec_id": iv, "exemplar": lab})
+            yield pd.DataFrame(
+                {"vec_id": iv, "exemplar": _sparse_labels(iv, ksc, sc, ex_bc.value)}
+            )
 
     return state.mapInPandas(assign_kernel, schema="vec_id long, exemplar long")

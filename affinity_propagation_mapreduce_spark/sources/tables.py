@@ -8,7 +8,6 @@ handles partitioned layouts and object storage without code changes.
 
 from __future__ import annotations
 
-import glob
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -122,6 +121,30 @@ def dup_cut(df: DataFrame, src_rows: int | None) -> DataFrame:
     return df
 
 
+def parquet_data_files(path: str) -> list[str]:
+    """The parquet files Spark reads for ``path``, sorted: the path itself
+    unless it is a directory, else every ``*.parquet`` below it except
+    under a path segment Spark treats as hidden — a ``.`` prefix, or a
+    ``_`` prefix without ``=`` (``_temporary/`` attempt dirs of an
+    uncommitted write, ``_SUCCESS``-style markers; ``_k=v`` partition dirs
+    stay)."""
+
+    def hidden(name: str) -> bool:
+        return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+    if not os.path.isdir(path):
+        return [path]
+    out = []
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not hidden(d)]
+        out += [
+            os.path.join(root, f)
+            for f in files
+            if f.endswith(".parquet") and not hidden(f)
+        ]
+    return sorted(out)
+
+
 def table_rows(sf_dir: str, name: str) -> int:
     """Exact row count from the parquet FOOTER metadata — the same number
     a metadata-only ``df.count()`` returns, without a Spark job (r15,
@@ -132,12 +155,7 @@ def table_rows(sf_dir: str, name: str) -> int:
 
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
-    path = f"{sf_dir}/{name}.parquet"
-    if os.path.isdir(path):
-        return sum(
-            pq.ParquetFile(f).metadata.num_rows
-            for f in glob.glob(
-                os.path.join(path, "**", "*.parquet"), recursive=True
-            )
-        )
-    return pq.ParquetFile(path).metadata.num_rows
+    return sum(
+        pq.ParquetFile(f).metadata.num_rows
+        for f in parquet_data_files(f"{sf_dir}/{name}.parquet")
+    )

@@ -29,6 +29,20 @@ _SLOW_LIST = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                           "slow_tests.txt")
 
 
+_SLOW_COLLECTED = pytest.StashKey[int]()
+
+
+def pytest_terminal_summary(terminalreporter, exitstatus, config):
+    """Say what the default tier left out: selection itself is
+    pytest.ini's ``-m "not slow"``; this only reports it."""
+    n = config.stash.get(_SLOW_COLLECTED, 0)
+    if n and config.getoption("markexpr") == "not slow":
+        terminalreporter.write_line(
+            f'{n} slow tests deselected by the default tier (-m "not slow"); '
+            'full tier: python -m pytest tests/ -m "slow or not slow"'
+        )
+
+
 def pytest_collection_modifyitems(config, items):
     try:
         with open(_SLOW_LIST) as fh:
@@ -41,6 +55,9 @@ def pytest_collection_modifyitems(config, items):
             nodeid = "tests/" + nodeid.split("tests/")[-1]
         if nodeid in slow:
             item.add_marker(pytest.mark.slow)
+    config.stash[_SLOW_COLLECTED] = sum(
+        1 for item in items if item.get_closest_marker("slow") is not None
+    )
 
 
 @pytest.fixture(scope="session")

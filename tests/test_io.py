@@ -341,3 +341,46 @@ def test_bloom_point_lookup_prunes_files(spark, tmp_path):
     assert st0["files_kept"] <= 1 and df0.count() == 0  # FP tolerance
     with _pytest.raises(ValueError, match="no bloom"):
         scan_clustered_point(spark, path, "l_quantity", 1)
+
+
+def test_parquet_listers_skip_uncommitted_files(spark, tmp_path):
+    """A stray `_temporary/` attempt file and a hidden `.`-file hold rows
+    Spark never reads: the footer count and the driver-side embeddings
+    load must see only the committed part files, like spark.read."""
+    import os
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from affinity_propagation_mapreduce_spark.operators.ap_dense import (
+        _load_embeddings_arrow,
+    )
+    from affinity_propagation_mapreduce_spark.sources.tables import table_rows
+
+    def part(path, ids):
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        pq.write_table(
+            pa.table(
+                {
+                    "vec_id": pa.array(ids, pa.int64()),
+                    "embedding": pa.array(
+                        [[float(i), 1.0] for i in ids], pa.list_(pa.float32())
+                    ),
+                    "label": pa.array([0] * len(ids), pa.int32()),
+                }
+            ),
+            path,
+        )
+
+    root = tmp_path / "embeddings.parquet"
+    part(str(root / "part-00000.parquet"), [3, 1, 2])
+    part(str(root / "_temporary" / "0" / "part-00000.parquet"), [7, 8])
+    part(str(root / ".part-00001.parquet"), [9])
+    assert table_rows(str(tmp_path), "embeddings") == 3
+    assert table_rows(str(tmp_path), "embeddings") == (
+        spark.read.parquet(str(root)).count()
+    )
+    ids, mat = _load_embeddings_arrow(str(tmp_path))
+    assert ids.tolist() == [1, 2, 3]
+    assert np.array_equal(mat[:, 0], [1.0, 2.0, 3.0])

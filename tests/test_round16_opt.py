@@ -166,13 +166,17 @@ def test_dup_cut_gate(spark):
         dup_cut,
     )
 
+    def analyzed(d):
+        return d._jdf.queryExecution().analyzed().toString()
+
     df = spark.range(10)
     cut = dup_cut(df, 100)
-    assert cut.rdd.is_checkpointed or "ExistingRDD" in cut._jdf.queryExecution().optimizedPlan().toString() or cut is not df
-    assert cut is not df
     uncut = dup_cut(df, DUP_CUT_MAX_SRC_ROWS + 1)
+    # the checkpoint replaces the plan by a LogicalRDD over its blocks
+    assert "LogicalRDD" in analyzed(cut)
+    assert "LogicalRDD" not in analyzed(uncut)
     assert uncut is df
-    assert dup_cut(df, None) is not df
+    assert "LogicalRDD" in analyzed(dup_cut(df, None))
 
 
 def test_sparse_in_kernel_median_equals_percentile_job(spark):

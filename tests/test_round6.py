@@ -86,14 +86,14 @@ def test_stream_batch_equiv_gate_raises_on_divergence(spark, monkeypatch):
 
 
 def test_blocked_first_iteration_bitwise_equals_coordinate(spark):
-    """chain[0]'s coordinate view must be BITWISE equal to one coordinate
+    """The T=1 chain's coordinate view must be BITWISE equal to one coordinate
     responsibility+availability pass: the blocked row kernel is selection
     arithmetic and the column-stat combine reproduces the same values, so
     the engine swap may never move a number at iteration 1 (where the
     driver's unrounded r hash bites)."""
     from affinity_propagation_mapreduce_spark.operators import ap
 
-    view = ap.cached_chain(spark, SF_SMALL)[0]
+    view = ap._one_iteration_state(spark, SF_SMALL)
     coord = ap.availability_pass(
         ap.responsibility_pass(ap.init_state(ap.cached_smat(spark, SF_SMALL)))
     )
@@ -129,19 +129,21 @@ def test_blocked_labels_equal_coordinate_cluster(spark):
     assert blocked == coord and len(blocked) == 500
 
 
-def test_blocked_gate_falls_back_to_coordinate(spark, monkeypatch):
-    """Forcing the size gate to 0 must route _labels through the
-    coordinate engine and produce the same labels — the cliff changes
-    cost, never results (same contract as the median gate)."""
+def test_blocked_gate_refuses_dense_above_gate(spark, monkeypatch):
+    """Above BLOCKED_MAX_N the dense queries are refused loudly, naming
+    the scale path and the coordinate reference — there is no silent
+    coordinate fallback (661 s at N=12k)."""
     from affinity_propagation_mapreduce_spark.operators import ap, ap_dense
 
-    fast = {r.vec_id: r.exemplar for r in ap._labels(spark, SF_SMALL).collect()}
     ap.clear_cache()
     monkeypatch.setattr(ap_dense, "BLOCKED_MAX_N", 0)
-    assert ap._dense(spark, SF_SMALL) is None
-    fall = {r.vec_id: r.exemplar for r in ap._labels(spark, SF_SMALL).collect()}
-    ap.clear_cache()  # drop coordinate-path cache entries built under the gate
-    assert fast == fall
+    try:
+        with pytest.raises(ValueError, match="cluster_sparse.*cluster"):
+            ap._dense(spark, SF_SMALL)
+        with pytest.raises(ValueError, match="BLOCKED_MAX_N"):
+            ap.q_ap_assign(spark, SF_SMALL)
+    finally:
+        ap.clear_cache()
 
 
 def test_blocked_pref_matches_oracle_formula(spark):
@@ -158,7 +160,7 @@ def test_blocked_pref_matches_oracle_formula(spark):
     assert d.pref_value("min") == dist.mn
 
 
-def test_fused_dense_loop_equals_coordinate(spark, monkeypatch):
+def test_fused_dense_loop_equals_coordinate(spark):
     """The fused single-job-per-iteration dense loop (retain=False, the
     bench-scale path) must produce the same labels as the coordinate
     reference pipeline, and its accumulator-carried exemplar hint must
@@ -166,7 +168,6 @@ def test_fused_dense_loop_equals_coordinate(spark, monkeypatch):
     from affinity_propagation_mapreduce_spark.operators import ap
 
     ap.clear_cache()
-    monkeypatch.setattr(ap, "_CHAIN_RETAIN_MAX_N", 0)  # force fused path
     fused = {r.vec_id: r.exemplar for r in ap._labels(spark, SF_SMALL).collect()}
     ex_hint = {r.exemplar for r in ap.q_ap_exemplars(spark, SF_SMALL).collect()}
     coord = {r.vec_id: r.exemplar for r in ap.cluster(spark, SF_SMALL).collect()}
@@ -194,7 +195,7 @@ def test_blocked_sparse_loop_equals_coordinate(spark, monkeypatch):
     assert blocked == coord and len(blocked) == 500
 
 
-def test_fused_loop_is_run_deterministic(spark, monkeypatch):
+def test_fused_loop_is_run_deterministic(spark):
     """Two independent fused-chain runs must agree BITWISE on the final
     availability values: partials are keyed and combined in sorted block
     order over id-sorted rows, so the floating-point sum order cannot
@@ -202,12 +203,10 @@ def test_fused_loop_is_run_deterministic(spark, monkeypatch):
     exemplar thresholds (a+r>0) stable across reruns."""
     from affinity_propagation_mapreduce_spark.operators import ap
 
-    monkeypatch.setattr(ap, "_CHAIN_RETAIN_MAX_N", 0)  # force fused path
-
     def final_view():
         ap.clear_cache()
         d = ap._dense(spark, SF_SMALL)
-        st = ap._dense_chain(spark, SF_SMALL, retain=False)[-1]
+        st = ap._dense_chain(spark, SF_SMALL)
         return d.coordinate_view(st).localCheckpoint(eager=True)
 
     v1, v2 = final_view(), final_view()

@@ -168,9 +168,9 @@ def test_ap_parity_values_clear_of_knife_edges(spark):
 
     from affinity_propagation_mapreduce_spark.operators import ap
 
-    states = ap.cached_chain(spark, SF_T2)
+    first = ap._one_iteration_state(spark, SF_T2)
     # election margin: diagonal a+r on the final state
-    final = states[-1]
+    final = ap._dense(spark, SF_T2).coordinate_view(ap._dense_chain(spark, SF_T2))
     elect = (
         final.where(F.col("i") == F.col("k"))
         .select(F.min(F.abs(F.col("a") + F.col("r"))).alias("m"))
@@ -181,7 +181,7 @@ def test_ap_parity_values_clear_of_knife_edges(spark):
     # rounding margin: every hashed-rounded availability (iteration 1 and
     # final — the states ap_availability / ap_iterate_once hash) must sit
     # clear of the nearest 0.0005 round-at-3 boundary
-    for state in (states[0], final):
+    for state in (first, final):
         d = (
             state.select(
                 F.min(

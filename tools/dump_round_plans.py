@@ -1,8 +1,8 @@
 """Dump `.explain("formatted")` for every headline bench query into
-plans/r16/<query>_<tag>.txt (tag = before/after — the optimization-round
-evidence files).
+plans/r<round>/<query>_<tag>.txt (tag = before/after — the
+optimization-round evidence files).
 
-Usage: python tools/dump_r16_plans.py before|after [name ...]
+Usage: python tools/dump_round_plans.py <round> before|after [name ...]
        SPARK_GRAFT_SF_DIR overrides the sf dir (default sf0.1, the bench sf).
 """
 
@@ -17,8 +17,8 @@ from affinity_propagation_mapreduce_spark import registry
 from affinity_propagation_mapreduce_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-OUT_DIR = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r16"
+PLANS_DIR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans"
 )
 
 
@@ -60,12 +60,13 @@ def bench_queries():
 
 
 def main() -> None:
-    tag = sys.argv[1]
+    rnd, tag = int(sys.argv[1]), sys.argv[2]
     assert tag in ("before", "after"), "tag must be before|after"
     import bench
-    names = sys.argv[2:] or list(bench.HEADLINE)
-    os.makedirs(OUT_DIR, exist_ok=True)
-    spark = get_spark("dump-r16-plans")
+    names = sys.argv[3:] or list(bench.HEADLINE)
+    out_dir = os.path.join(PLANS_DIR, f"r{rnd}")
+    os.makedirs(out_dir, exist_ok=True)
+    spark = get_spark(f"dump-r{rnd}-plans")
     spark.sparkContext.setLogLevel("ERROR")
     for name, fn in bench_queries().items():
         if names and name not in names:
@@ -76,7 +77,7 @@ def main() -> None:
                 "formatted"
             )
         )
-        path = os.path.join(OUT_DIR, f"{name}_{tag}.txt")
+        path = os.path.join(out_dir, f"{name}_{tag}.txt")
         with open(path, "w") as fh:
             fh.write(f"# {name} @ {SF_DIR} ({tag})\n\n{plan}")
         print(f"wrote {path}")
