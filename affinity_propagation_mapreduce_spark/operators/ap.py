@@ -642,6 +642,68 @@ def _sparse_nlist(n: int, nprobe: int = SPARSE_NPROBE) -> int:
     return cost_balanced_nlist(n, nprobe)
 
 
+def _coarse_probes(pts, c_mat, nprobe, sup_ch=None):
+    """Each point's ``nprobe`` nearest centroids (row positions into
+    ``c_mat``, unordered) and its home: the true argmin among them.
+    ``sup_ch`` switches to the two-level assignment (operators/ivf.py)."""
+    import numpy as np
+
+    if sup_ch is not None:
+        from .ivf import two_level_cells
+
+        order, probe_d2, _ = two_level_cells(
+            pts, c_mat, sup_ch[0], sup_ch[1], nprobe
+        )
+    else:
+        d2 = (
+            (pts * pts).sum(axis=1, keepdims=True)
+            - 2.0 * pts @ c_mat.T
+            + (c_mat * c_mat).sum(axis=1)[None, :]
+        )
+        order = np.argpartition(d2, nprobe - 1, axis=1)[:, :nprobe]
+        probe_d2 = np.take_along_axis(d2, order, axis=1)
+    home = order[np.arange(len(pts)), np.argmin(probe_d2, axis=1)]
+    return order, home
+
+
+def _cell_pairs(p_ids, p_mat, m_ids, m_mat):
+    """One cell's candidate block: every probe × member pair as canonical
+    (lo < hi, s = -squared distance), self-pairs dropped and the two
+    orientations of a pair deduped (they carry bitwise-equal s).  The
+    distance accumulates sequentially over dims, as the dense kernel
+    does, so a pair present in both engines is bitwise identical."""
+    import numpy as np
+
+    acc = np.zeros((len(p_ids), len(m_ids)), dtype="f8")
+    for j in range(p_mat.shape[1]):
+        diff = p_mat[:, j, None] - m_mat[None, :, j]
+        acc += diff * diff
+    lo = np.repeat(p_ids, len(m_ids))
+    hi = np.tile(m_ids, len(p_ids))
+    keep = lo != hi
+    lo, hi, s = lo[keep], hi[keep], -acc.ravel()[keep]
+    swap = lo > hi
+    lo[swap], hi[swap] = hi[swap], lo[swap]
+    # one int64 key per pair: exact while vec_ids stay below ~3·10⁹
+    m_key = max(int(hi.max()), int(lo.max())) + 1 if len(lo) else 1
+    _, first = np.unique(lo * m_key + hi, return_index=True)
+    return lo[first], hi[first], s[first]
+
+
+def _top_k_rows(ep, other, s, k):
+    """The rows ranking below ``k`` per ``ep`` under (s DESC, other ASC)
+    — the comparator of the downstream window; lexsort keys are
+    last-key-primary."""
+    import numpy as np
+
+    o = np.lexsort((other, -s, ep))
+    ep, other, s = ep[o], other[o], s[o]
+    idx = np.arange(len(ep))
+    grp_start = np.where(np.r_[True, ep[1:] != ep[:-1]], idx, 0)
+    keep = idx - np.maximum.accumulate(grp_start) < k
+    return ep[keep], other[keep], s[keep]
+
+
 def ivf_candidate_pairs(
     spark: SparkSession,
     sf_dir: str,
@@ -741,32 +803,12 @@ def ivf_candidate_pairs(
         for pdf in batches:
             ids = pdf["vec_id"].to_numpy(dtype="i8")
             pts = np.stack(pdf["embedding"].to_numpy()).astype("f8")
-            if sc is not None:
-                from .ivf import two_level_cells
-
-                order, probe_d2, _ = two_level_cells(
-                    pts, c_mat, sc[0], sc[1], nprobe
-                )
-            else:
-                d2 = (
-                    (pts * pts).sum(axis=1, keepdims=True)
-                    - 2.0 * pts @ c_mat.T
-                    + (c_mat * c_mat).sum(axis=1)[None, :]
-                )
-                order = np.argpartition(d2, nprobe - 1, axis=1)[:, :nprobe]
-                probe_d2 = np.take_along_axis(d2, order, axis=1)
-            # home = true argmin among the nprobe probes
-            home_pos = np.argmin(probe_d2, axis=1)
-            rows = np.repeat(np.arange(len(ids)), nprobe)
-            cells = c_ids[order].ravel()
-            is_home = (
-                order == order[np.arange(len(ids)), home_pos][:, None]
-            ).ravel()
+            order, home = _coarse_probes(pts, c_mat, nprobe, sc)
             yield pd.DataFrame(
                 {
-                    "cell": cells,
+                    "cell": c_ids[order].ravel(),
                     "vec_id": np.repeat(ids, nprobe),
-                    "is_home": is_home,
+                    "is_home": (order == home[:, None]).ravel(),
                     "embedding": np.repeat(pdf["embedding"].to_numpy(), nprobe),
                 }
             )
@@ -836,24 +878,13 @@ def ivf_candidate_pairs(
         mem = pdf[pdf["is_home"]]
         if not len(mem) or not len(pdf):
             return pd.DataFrame({"i": [], "k": [], "s": []})
-        p_ids = pdf["vec_id"].to_numpy(dtype="i8")
-        m_ids = mem["vec_id"].to_numpy(dtype="i8")
-        p_mat = np.stack(pdf["embedding"].to_numpy()).astype("f8")
-        m_mat = np.stack(mem["embedding"].to_numpy()).astype("f8")
-        d = p_mat.shape[1]
-        acc = np.zeros((len(p_ids), len(m_ids)), dtype="f8")
-        for j in range(d):  # sequential over dims == the dense kernel
-            diff = p_mat[:, j, None] - m_mat[None, :, j]
-            acc += diff * diff
-        lo = np.repeat(p_ids, len(m_ids))
-        hi = np.tile(m_ids, len(p_ids))
-        keep = lo != hi
-        lo, hi, s = lo[keep], hi[keep], -acc.ravel()[keep]
-        swap = lo > hi
-        lo[swap], hi[swap] = hi[swap], lo[swap]
-        out = pd.DataFrame({"i": lo, "k": hi, "s": s})
-        # within-cell dedup (probe×member emits both orientations)
-        return out.drop_duplicates(["i", "k"])
+        lo, hi, s = _cell_pairs(
+            pdf["vec_id"].to_numpy(dtype="i8"),
+            np.stack(pdf["embedding"].to_numpy()).astype("f8"),
+            mem["vec_id"].to_numpy(dtype="i8"),
+            np.stack(mem["embedding"].to_numpy()).astype("f8"),
+        )
+        return pd.DataFrame({"i": lo, "k": hi, "s": s})
 
     def cell_topk_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         out = cell_kernel(pdf)
@@ -863,18 +894,13 @@ def ivf_candidate_pairs(
         hi = out["k"].to_numpy(dtype="i8")
         s = out["s"].to_numpy(dtype="f8")
         # both directed orientations of the deduped canonical pairs
-        ep = np.concatenate([lo, hi])
-        other = np.concatenate([hi, lo])
-        ss = np.concatenate([s, s])
-        # per-endpoint rank under (s DESC, other ASC) — the window
-        # comparator downstream; lexsort keys are last-key-primary
-        order = np.lexsort((other, -ss, ep))
-        ep, other, ss = ep[order], other[order], ss[order]
-        idx = np.arange(len(ep))
-        grp_start = np.where(np.r_[True, ep[1:] != ep[:-1]], idx, 0)
-        rank = idx - np.maximum.accumulate(grp_start)
-        keep = rank < per_point_topk
-        return pd.DataFrame({"i": ep[keep], "k": other[keep], "s": ss[keep]})
+        ep, other, ss = _top_k_rows(
+            np.concatenate([lo, hi]),
+            np.concatenate([hi, lo]),
+            np.concatenate([s, s]),
+            per_point_topk,
+        )
+        return pd.DataFrame({"i": ep, "k": other, "s": ss})
 
     if per_point_topk is not None:
         # directed, per-cell-truncated; caller dedups across cells
@@ -924,54 +950,26 @@ def _knn_candidate_pairs_fused(
         if len(c_ids) == 0:
             return
         nprobe = min(SPARSE_NPROBE, len(c_ids))
-        # coarse assignment — assign_cells verbatim
-        d2 = (
-            (pts * pts).sum(axis=1, keepdims=True)
-            - 2.0 * pts @ c_mat.T
-            + (c_mat * c_mat).sum(axis=1)[None, :]
-        )
-        order = np.argpartition(d2, nprobe - 1, axis=1)[:, :nprobe]
-        probe_d2 = np.take_along_axis(d2, order, axis=1)
-        home_col = order[
-            np.arange(len(ids)), np.argmin(probe_d2, axis=1)
-        ]
-        nd = pts.shape[1]
+        order, home_col = _coarse_probes(pts, c_mat, nprobe)
         out_i, out_k, out_s = [], [], []
         for c in np.unique(order):
             probe_rows = np.nonzero((order == c).any(axis=1))[0]
             member_rows = probe_rows[home_col[probe_rows] == c]
             if not len(member_rows) or not len(probe_rows):
                 continue
-            p_ids, m_ids = ids[probe_rows], ids[member_rows]
-            p_mat, m_mat = pts[probe_rows], pts[member_rows]
-            acc = np.zeros((len(p_ids), len(m_ids)), dtype="f8")
-            for j in range(nd):  # sequential over dims == the dense kernel
-                diff = p_mat[:, j, None] - m_mat[None, :, j]
-                acc += diff * diff
-            lo = np.repeat(p_ids, len(m_ids))
-            hi = np.tile(m_ids, len(p_ids))
-            keep = lo != hi
-            lo, hi, s = lo[keep], hi[keep], -acc.ravel()[keep]
-            swap = lo > hi
-            lo[swap], hi[swap] = hi[swap], lo[swap]
-            # within-cell dedup (duplicate rows are bitwise-equal)
-            m_key = max(int(hi.max()), int(lo.max())) + 1 if len(lo) else 1
-            _, first = np.unique(lo * m_key + hi, return_index=True)
-            lo, hi, s = lo[first], hi[first], s[first]
-            # per-endpoint rank under (s DESC, other ASC), keep < k —
-            # cell_topk_kernel verbatim
-            ep = np.concatenate([lo, hi])
-            other = np.concatenate([hi, lo])
-            ss = np.concatenate([s, s])
-            o = np.lexsort((other, -ss, ep))
-            ep, other, ss = ep[o], other[o], ss[o]
-            idx = np.arange(len(ep))
-            grp_start = np.where(np.r_[True, ep[1:] != ep[:-1]], idx, 0)
-            rank = idx - np.maximum.accumulate(grp_start)
-            kept = rank < k
-            out_i.append(ep[kept])
-            out_k.append(other[kept])
-            out_s.append(ss[kept])
+            lo, hi, s = _cell_pairs(
+                ids[probe_rows], pts[probe_rows],
+                ids[member_rows], pts[member_rows],
+            )
+            ep, other, ss = _top_k_rows(
+                np.concatenate([lo, hi]),
+                np.concatenate([hi, lo]),
+                np.concatenate([s, s]),
+                k,
+            )
+            out_i.append(ep)
+            out_k.append(other)
+            out_s.append(ss)
         if not out_i:
             return
         ii = np.concatenate(out_i)
@@ -988,13 +986,7 @@ def _knn_candidate_pairs_fused(
         _, first = np.unique(ii * m_key + kk, return_index=True)
         ii, kk, ss = ii[first], kk[first], ss[first]
         # global per-point top-k — the window (s DESC, k ASC), rn <= k
-        o = np.lexsort((kk, -ss, ii))
-        ii, kk, ss = ii[o], kk[o], ss[o]
-        idx = np.arange(len(ii))
-        grp_start = np.where(np.r_[True, ii[1:] != ii[:-1]], idx, 0)
-        rank = idx - np.maximum.accumulate(grp_start)
-        kept = rank < k
-        ii, kk, ss = ii[kept], kk[kept], ss[kept]
+        ii, kk, ss = _top_k_rows(ii, kk, ss, k)
         # symmetrize + final dedup
         ei = np.concatenate([ii, kk])
         ek = np.concatenate([kk, ii])

@@ -1,7 +1,8 @@
 """Benchmark harness (driver contract): runs the headline queries at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
-  {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+  {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...,
+   "cpus": <defaultParallelism>, "passes": {query: timed runs}}
 
 Each query is forced with a count() (no driver-side row materialization
 beyond the aggregate — the cost measured is the distributed plan)."""
@@ -123,6 +124,7 @@ def main() -> None:
     qs["udf_scalar_pandas"](spark, sf_dir).count()
     t_bench = time.time()
     timings: dict[str, float] = {}
+    passes: dict[str, int] = {}
     for pass_i in range(N_PASSES):
         if pass_i > 0 and time.time() - t_bench > PASS2_DEADLINE_SEC:
             break
@@ -132,6 +134,7 @@ def main() -> None:
             dt = round(time.time() - t0, 3)
             if name not in timings or dt < timings[name]:
                 timings[name] = dt
+            passes[name] = passes.get(name, 0) + 1
             _cleanup(spark)
     if time.time() - t_bench <= PASS2_DEADLINE_SEC:
         for name in EXTRA_PASS_QUERIES:  # third min-pass, AP rows only
@@ -140,6 +143,7 @@ def main() -> None:
             dt = round(time.time() - t0, 3)
             if name not in timings or dt < timings[name]:
                 timings[name] = dt
+            passes[name] = passes.get(name, 0) + 1
             _cleanup(spark)
     total = round(sum(timings.values()), 3)
     print(
@@ -150,6 +154,8 @@ def main() -> None:
                 "unit": "sec",
                 "queries": timings,
                 "sf": float(sf),
+                "cpus": spark.sparkContext.defaultParallelism,
+                "passes": passes,
             }
         )
     )

@@ -19,6 +19,7 @@ from affinity_propagation_mapreduce_spark.operators.vector import (
     TOP_K,
     q_knn_cosine_topk,
 )
+from affinity_propagation_mapreduce_spark.sources.tables import parquet_data_files
 
 from .conftest import SF_SMALL, SF_T2
 
@@ -130,17 +131,116 @@ def test_compaction_folds_batches_and_keeps_ledger(spark):
 
     row = ai.q_ann_index_incremental(spark, SF_SMALL).first()  # built+appended+deleted
     path = ai.ann_index_path(SF_SMALL) + "-incr"
+    gen = ai._gen_of(ai._read_meta(path))
     comp = ai.compact_ann_index(spark, path)
     assert comp["rows"] == row.n_live  # the r10 gate already folded its takedown slice
     assert comp["rows_tombstoned"] == 0
     batch_dirs = [
-        n
-        for n in os.listdir(ai.codes_root(path))
-        if n.startswith("batch=") and n != "batch=base"
+        n for n in os.listdir(ai.codes_root(path)) if n.startswith("batch=")
     ]
-    assert batch_dirs == []
+    assert batch_dirs == [f"batch=fold-g{gen + 1}"]
     with open(os.path.join(path, "meta.json")) as fh:
         assert "delta-bucket-0" in json.load(fh)["batches"]
+
+
+@pytest.fixture(scope="module")
+def churned(spark, tmp_path_factory):
+    """A 500-row layout after build → append → delete: two batch dirs
+    and pending tombstones spread over several cells.  Tests copy it."""
+    from pyspark.sql import functions as F
+
+    from affinity_propagation_mapreduce_spark.sources import table
+
+    raw = table(spark, SF_SMALL, "embeddings").select("vec_id", "embedding")
+    delta = raw.where(F.col("vec_id") % 10 == 0)
+    dead = raw.where(F.col("vec_id") % 7 == 2).select("vec_id")
+    path = str(tmp_path_factory.mktemp("churned") / "layout")
+    ai.build_ann_index(
+        spark, SF_SMALL, path=path, emb_raw=raw.where(F.col("vec_id") % 10 != 0)
+    )
+    ai.append_ann_index(spark, path, delta, "d1")
+    ai.delete_ann_index(spark, path, dead, "del-7-2")
+    return path, delta, dead
+
+
+def _live_rows(spark, path):
+    codes = spark.read.parquet(ai.codes_root(path))
+    return sorted(
+        (r.vec_id, r.cell, bytes(r.code), r.nrm)
+        for r in ai._live_codes(spark, path, codes)
+        .select("vec_id", "cell", "code", "nrm")
+        .collect()
+    )
+
+
+def _inodes(root, skip_cell):
+    return {
+        os.path.relpath(f, root): os.stat(f).st_ino
+        for f in parquet_data_files(root)
+        if f"{os.sep}cell={skip_cell}{os.sep}" not in f
+    }
+
+
+def test_fold_every_cell_and_one_cell(spark, churned, tmp_path):
+    """Both selections of the one fold body and the shared meta commit:
+    the every-cell fold (no selection) leaves exactly the live set in
+    one ``batch=fold-g<G+1>``, no tombstones, merged ledgers and no-op
+    replays; a one-cell fold hard-links every other cell's files."""
+    import shutil
+
+    src, delta, dead = churned
+    path, one = str(tmp_path / "every"), str(tmp_path / "one")
+    shutil.copytree(src, path)
+    shutil.copytree(src, one)
+    live = _live_rows(spark, path)
+    assert [r[0] for r in live] == [i for i in range(500) if i % 7 != 2]
+
+    gen = ai._gen_of(ai._read_meta(path))
+    res = ai.compact_ann_index(spark, path)
+    meta = ai._read_meta(path)
+    assert ai._gen_of(meta) == gen + 1
+    assert res["garbage_cleared"] and res["rows"] == len(live) == meta["n"]
+    assert res["rows_tombstoned"] == sum(1 for i in range(500) if i % 7 == 2)
+    assert _live_rows(spark, path) == live
+    assert not ai._tombstone_dirs(path)
+    assert [
+        n for n in os.listdir(ai.codes_root(path)) if n.startswith("batch=")
+    ] == [f"batch=fold-g{gen + 1}"]
+    assert meta["batches"] == ["d1"] and meta["deletes"] == ["del-7-2"]
+    assert meta["delete_cover"] == {}
+    assert ai.append_ann_index(spark, path, delta, "d1") == 0
+    assert ai.delete_ann_index(spark, path, dead, "del-7-2") == 0
+
+    stats = ai.ann_cell_stats(spark, one)
+    target = min(c for c, s in stats.items() if s["dead"] > 0)
+    before = _inodes(ai.codes_root(one), target)
+    res = ai.compact_ann_index(spark, one, cells=[target])
+    assert res["cells_folded"] == 1 and not res["garbage_cleared"]
+    assert before and _inodes(ai.codes_root(one), target) == before
+    assert _live_rows(spark, one) == live
+
+
+def test_listers_skip_uncommitted_files(spark, churned, tmp_path):
+    """A stray ``_temporary/0/part-*.parquet`` (an uncommitted write
+    attempt, which Spark never reads) inside a cell dir and inside a
+    tombstone dir must not change the cell stats or tombstone counts."""
+    import shutil
+
+    path = str(tmp_path / "layout")
+    shutil.copytree(churned[0], path)
+    croot, tombs = ai.codes_root(path), ai._tombstone_dirs(path)
+    clean_stats = ai.ann_cell_stats(spark, path)
+    clean_rows = ai._tombstone_rows(tombs)
+    base = os.path.join(croot, "batch=base")
+    cell = min(c for c in os.listdir(base) if c.startswith("cell="))
+    for d in (os.path.join(base, cell), tombs[0]):
+        part = next(f for f in os.listdir(d) if f.endswith(".parquet"))
+        os.makedirs(os.path.join(d, "_temporary", "0"))
+        shutil.copy(
+            os.path.join(d, part), os.path.join(d, "_temporary", "0", part)
+        )
+    assert ai.ann_cell_stats(spark, path) == clean_stats
+    assert ai._tombstone_rows(tombs) == clean_rows
 
 
 def test_reap_superseded_indexes(tmp_path):

@@ -290,9 +290,9 @@ class TestPartialFold:
         assert linked > 0, "no unfolded cell files were carried by link"
 
     def test_budgeted_loop_matches_full_fold(self, spark, tmp_path):
-        """partial∘…∘partial ≡ full: two identical layouts, one folded
-        by the budgeted loop, one by the monolithic fold — the live
-        (vec_id, cell, code, nrm) sets must be IDENTICAL."""
+        """partial∘…∘partial ≡ every-cell: two identical layouts, one
+        folded by the budgeted loop, one by the every-cell fold — the
+        live (vec_id, cell, code, nrm) sets must be IDENTICAL."""
         raw = table(spark, SF_SMALL, "embeddings").select("vec_id", "embedding")
         base = raw.where(F.col("vec_id") % 10 != 0)
         delta = raw.where(F.col("vec_id") % 10 == 0)

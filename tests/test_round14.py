@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from affinity_propagation_mapreduce_spark.operators import ann_index as ai
 from affinity_propagation_mapreduce_spark.sources import table
+from affinity_propagation_mapreduce_spark.sources.tables import parquet_data_files
 
 from .conftest import SF_SMALL
 
@@ -138,7 +139,7 @@ class TestMigrationLifecycle:
         croot = ai._codes_root_gen(path, ai._gen_of(meta))
         for b in os.listdir(croot):
             if b.startswith("batch="):
-                assert ai._has_parquet_files(os.path.join(croot, b)), (
+                assert parquet_data_files(os.path.join(croot, b)), (
                     f"schema-less batch dir survived migration: {b}"
                 )
         live = ai._live_codes(
