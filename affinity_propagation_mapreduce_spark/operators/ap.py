@@ -122,26 +122,6 @@ class reliable_checkpoints:
 # Spark-side kernel
 # ---------------------------------------------------------------------------
 
-def similarity_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A1 reference formulation: s(i,k) = -||x_i-x_k||^2 via a sequential
-    ``F.aggregate`` fold.  Bitwise identical to DuckDB's ``list_reduce``
-    (verified on sf0.01) but interpreted per-element — kept as the
-    semantic reference; the engine path is ``similarity_off_diagonal``.
-    """
-    emb = table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
-    a = emb.select(F.col("vec_id").alias("i"), F.col("emb").alias("ea"))
-    b = emb.select(F.col("vec_id").alias("k"), F.col("emb").alias("eb"))
-    sq_diffs = F.zip_with("ea", "eb", lambda x, y: (x - y) * (x - y))
-    s = -F.aggregate(sq_diffs, F.lit(0.0), lambda acc, v: acc + v)
-    return (
-        a.crossJoin(b)
-        .where(F.col("i") != F.col("k"))
-        .select("i", "k", s.alias("s"))
-    )
-
-
 def similarity_off_diagonal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1: s(i,k) = -||x_i-x_k||^2 for i != k over `embeddings`.
 
@@ -411,31 +391,37 @@ def _kth_value_in_band(
     return float(vals[k])
 
 
-def _median_preference_fast(
-    spark: SparkSession, sf_dir: str, off: DataFrame
-) -> float | None:
-    """Driver-side exact median of the (already materialized) off-diagonal
-    similarities: Arrow-collect the single `s` column from the
-    checkpointed kernel output and interpolate with Spark's own formula
-    `lower + (upper-lower)*0.5` — bitwise-equal to the distributed
-    `percentile(s, 0.5)` (same values, same interpolation) at ~10% of
-    its cost, and with no N² recompute on the driver.  Returns None
-    above the size gate (callers fall back to the distributed
-    percentile)."""
+def _interp_median(vals) -> float:
+    """Spark's exact ``percentile(v, 0.5)`` of a non-empty float64 array:
+    ``lower + (upper-lower)*(pos-lo)`` over the two middle order
+    statistics.  ``np.partition`` selects them independently of input
+    order, so the result is bitwise the Spark aggregate's."""
     import numpy as np
 
-    n = _n_points(spark, sf_dir)  # footer-metadata count (r16): this
-    # ran a fresh count JOB per preference call under the bench's
-    # cache-clearing regime
-    if n > _FAST_MEDIAN_MAX_N:
-        return None
-    vals = off.select("s").toPandas()["s"].to_numpy()
     m = vals.size
     pos = 0.5 * (m - 1)
     lo = int(pos)
     part = np.partition(vals, [lo, lo + 1] if lo + 1 < m else [lo])
     lower, upper = part[lo], part[min(lo + 1, m - 1)]
     return float(lower + (upper - lower) * (pos - lo))
+
+
+def _median_preference_fast(
+    spark: SparkSession, sf_dir: str, off: DataFrame
+) -> float | None:
+    """Driver-side exact median of the (already materialized) off-diagonal
+    similarities: Arrow-collect the single `s` column from the
+    checkpointed kernel output and interpolate with ``_interp_median`` —
+    bitwise-equal to the distributed `percentile(s, 0.5)` (same values,
+    same interpolation) at ~10% of its cost, and with no N² recompute on
+    the driver.  Returns None above the size gate (callers fall back to
+    the distributed percentile)."""
+    n = _n_points(spark, sf_dir)  # footer-metadata count (r16): this
+    # ran a fresh count JOB per preference call under the bench's
+    # cache-clearing regime
+    if n > _FAST_MEDIAN_MAX_N:
+        return None
+    return _interp_median(off.select("s").toPandas()["s"].to_numpy())
 
 
 def init_state(smat: DataFrame) -> DataFrame:
@@ -929,8 +915,8 @@ def _knn_candidate_pairs_fused(
     instead of two crossings and four exchanges (repartition, groupBy
     cell, dedup, window) — the distributed path's per-stage overhead
     dominated at this scale (~2.4 s → ~0.6 s warm at N=2000).  This is
-    the same fused-small pattern the sparse LOOP has used since r13
-    (cluster_sparse_blocked's one-task branch, same gate)."""
+    the same fused-small pattern as the one-task sparse LOOP
+    (cluster_sparse_blocked, same gate)."""
     import numpy as np
     import pandas as pd
 
@@ -1048,6 +1034,18 @@ def cluster_sparse(
     availability sum — exactly Frey–Dueck's sparse formulation.  Message
     state is O(N·k) rows; per-iteration cost scales linearly in N.
 
+    Two engines split at one gate, ``ap_dense.SPARSE_FUSED_MAX_N``: at or
+    below it the one-task ragged loop
+    (``ap_dense.cluster_sparse_blocked``: build, in-kernel median, T
+    iterations and assignment in ONE task); above it the coordinate loop
+    (``_coordinate_sparse_labels``) with the rank-narrowing exact median.
+    A distributed ragged loop (one job per iteration, column stats
+    combined on the driver) used to serve the band up to
+    ``ap_dense.BLOCKED_MAX_N``.  Measured on a 4-core host (T=5, warm,
+    equal labels) it lost to the coordinate loop at every N it served —
+    9.7–11.0 s vs 9.1–9.3 s at N=4,000, 15.3–18.3 s vs 12.0–15.1 s at
+    6,000, 20.9–21.1 s vs 14.7 s at 10,500 — so it was deleted.
+
     Points none of whose candidates became exemplars are emitted with
     exemplar = -1 (honest sparse semantics: a point can only elect an
     exemplar it has a declared similarity to).
@@ -1063,55 +1061,42 @@ def cluster_sparse(
         knn_candidate_pairs(spark, sf_dir, k, trained=trained), eager=False
     )
     ids = table(spark, sf_dir, "embeddings").select("vec_id")
-    n = _n_points(spark, sf_dir)
-    if n <= _BLOCKED().BLOCKED_MAX_N:
-        # ragged-blocked fused loop (ap_dense.cluster_sparse_blocked):
-        # same semantics, ONE job per iteration (accumulator-carried
-        # column stats) instead of the coordinate loop's per-pass
-        # broadcast-agg jobs.  Gated like the dense engine — the
-        # coordinate loop below is the >gate scale path.
-        if n <= _BLOCKED().SPARSE_FUSED_MAX_N:
-            # fused-small: the kernel holds the whole candidate graph in
-            # one task, so the median preference is computed IN-KERNEL
-            # (bitwise percentile(s,0.5), r16) — the separate
-            # single-reducer percentile job disappears
-            return _BLOCKED().cluster_sparse_blocked(
-                spark, cand, ids, None, iterations, lam
-            )
-        p_val = cand.agg(F.expr("percentile(s, 0.5)").alias("p")).first()[0]
-        if p_val is not None:  # None ⟺ empty candidate graph
-            return _BLOCKED().cluster_sparse_blocked(
-                spark, cand, ids, p_val, iterations, lam
-            )
-        # degenerate corpus (no candidate pairs): nobody can elect an
-        # exemplar it has a declared similarity to
-        return ids.select(
-            F.col("vec_id"), F.lit(-1).cast("long").alias("exemplar")
-        )
-    # >gate scale: exact median of the O(N^1.5) candidate similarities
-    # via rank narrowing — `percentile` would buffer all of them on one
-    # reducer (~10⁹ values at N=10⁶, the OOM found by the above-gate run)
-    p_val = exact_median_distributed(cand)
+    if _n_points(spark, sf_dir) <= _BLOCKED().SPARSE_FUSED_MAX_N:
+        return _BLOCKED().cluster_sparse_blocked(spark, cand, ids, iterations, lam)
+    # exact median of the O(N^1.5) candidate similarities via rank
+    # narrowing — `percentile` would buffer all of them on one reducer
+    # (~10⁹ values at N=10⁶, the OOM found by the above-gate run).  The
+    # graph is never empty here: nlist = max(16, √(4N)) < N puts two
+    # points in some cell, and every point probes its home cell.
+    return _coordinate_sparse_labels(
+        cand, ids, exact_median_distributed(cand), iterations, lam
+    )
+
+
+def _coordinate_sparse_labels(
+    cand: DataFrame, ids: DataFrame, pref: float, iterations: int, lam: float
+) -> DataFrame:
+    """The coordinate sparse loop: the candidate graph plus the ``pref``
+    diagonal, T damped passes, exemplars, assignment over declared edges;
+    every ``ids`` point without an exemplar among its candidates gets
+    -1.  Sparse state is O(N·k) rows — small enough to retain every
+    iteration's LAZY checkpoint (it materializes inside the next pass's
+    first job instead of a dedicated eager job: one job per iteration
+    saved; eager+unpersist is only needed for the O(N²) dense state)."""
     diag = ids.select(
         F.col("vec_id").alias("i"), F.col("vec_id").alias("k"),
-        F.lit(p_val).alias("s"),
+        F.lit(pref).alias("s"),
     )
-    smat = _ckpt(cand.unionByName(diag), eager=False)
-    # sparse state is O(N·k) rows — small enough to retain every
-    # iteration's LAZY checkpoint (materializes inside the next pass's
-    # first job instead of a dedicated eager job: one job per iteration
-    # saved; eager+unpersist is only needed for the O(N²) dense state)
-    state = init_state(smat)
+    state = init_state(_ckpt(cand.unionByName(diag), eager=False))
     for _ in range(iterations):
         state = availability_pass(responsibility_pass(state, lam), lam)
         state = _ckpt(state, eager=False)
-    ex = exemplars_from_state(state)
-    best = assign(cand, ex)
+    best = assign(cand, exemplars_from_state(state))
     return (
         ids.join(best, ids["vec_id"] == best["vec_id"], "left")
         .select(
             ids["vec_id"],
-            F.coalesce(best["exemplar"], F.lit(-1)).alias("exemplar"),
+            F.coalesce(best["exemplar"], F.lit(-1).cast("long")).alias("exemplar"),
         )
     )
 
@@ -1243,26 +1228,9 @@ def q_ap_assign_sparse_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment restricted to declared edges; unreachable points emit
     exemplar = -1."""
     cand = _ckpt(sparse_candidates_checked(spark, sf_dir), eager=False)
-    p = cand.agg(F.expr("percentile(s, 0.5)").alias("p"))
     ids = table(spark, sf_dir, "embeddings").select("vec_id")
-    diag = ids.crossJoin(p).select(
-        F.col("vec_id").alias("i"), F.col("vec_id").alias("k"),
-        F.col("p").alias("s"),
-    )
-    smat = _ckpt(cand.unionByName(diag), eager=False)
-    state = init_state(smat)
-    for _ in range(T_DEFAULT):
-        state = availability_pass(responsibility_pass(state))
-        state = _ckpt(state, eager=False)
-    ex = exemplars_from_state(state)
-    best = assign(cand, ex)
-    return (
-        ids.join(best, ids["vec_id"] == best["vec_id"], "left")
-        .select(
-            ids["vec_id"],
-            F.coalesce(best["exemplar"], F.lit(-1).cast("long")).alias("exemplar"),
-        )
-    )
+    p = cand.agg(F.expr("percentile(s, 0.5)")).first()[0]
+    return _coordinate_sparse_labels(cand, ids, p, T_DEFAULT, DAMPING)
 
 
 def oracle_ap_assign_sparse_checked(

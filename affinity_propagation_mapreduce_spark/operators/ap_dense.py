@@ -35,8 +35,7 @@ accumulation as ``ap.similarity_off_diagonal`` (bitwise equal to DuckDB's
 (bitwise), and availability depends on group sums whose ordering already
 differs between any two engines — outputs that expose it are rounded to 3
 decimals on both sides (ap.py module docstring).  The median preference
-reuses the interpolation formula proven bitwise-equal to
-``percentile(s, 0.5)`` (ap._median_preference_fast).
+is ``ap._interp_median``, bitwise-equal to ``percentile(s, 0.5)``.
 
 Scale gate: ``BLOCKED_MAX_N`` bounds the dense N² regime.  Below it
 every dense AP query iterates with the one fused loop of
@@ -60,13 +59,16 @@ from pyspark.sql import functions as F
 
 from ..sources import table
 from ..sources.tables import parquet_data_files
-from .ap import _ckpt, _release_ckpt
+from .ap import _ckpt, _interp_median, _release_ckpt
 
 DAMPING = 0.5
 BLOCKED_MAX_N = 10_000  # N² kernel work + 2 resident N² states bound this
-# sparse ragged state (~n·k·24 B) small enough for ONE task: the whole
-# build + T iterations + assignment fuses into a single job (~3 MB at
-# 4k points, k=32) — see cluster_sparse_blocked's fused-small branch
+# ap.cluster_sparse's one gate.  At or below it the sparse ragged state
+# (~n·k·24 B, ~3 MB at 4k points, k=32) fits ONE task: build + T
+# iterations + assignment run as a single job (cluster_sparse_blocked);
+# above it the coordinate loop.  At N=4,000 on a 4-core host (T=5, warm):
+# one-task 4.5–5.2 s, coordinate loop 9.1–9.3 s (36 jobs), the deleted
+# distributed ragged loop 9.7–11.0 s (20 jobs).
 SPARSE_FUSED_MAX_N = 4_000
 # NOTE (r15 optimization round, measured negative): a dense fused-small
 # branch — the whole retain=False chain (similarity + preference + T
@@ -499,16 +501,7 @@ class DenseAP:
             if self.n <= _FAST_MEDIAN_MAX_N:
                 vals = self._offdiag()
                 self._prefs["min"] = float(vals.min())
-                m = vals.size
-                pos = 0.5 * (m - 1)
-                lo = int(pos)
-                part = np.partition(
-                    vals, [lo, lo + 1] if lo + 1 < m else [lo]
-                )
-                lower, upper = part[lo], part[min(lo + 1, m - 1)]
-                self._prefs["median"] = float(
-                    lower + (upper - lower) * (pos - lo)
-                )
+                self._prefs["median"] = _interp_median(vals)
             elif kind == "min":
                 # only the requested scalar: a min chain never pays the
                 # multi-pass median narrowing (review finding r8)
@@ -763,14 +756,9 @@ class DenseAP:
 
 
 # ---------------------------------------------------------------------------
-# Ragged-blocked sparse loop: the same two-job iteration applied to the
-# k-NN candidate graph (ap.cluster_sparse's small-N accelerator)
+# One-task ragged sparse loop: the MR-AP row update and column-stats reduce
+# over the k-NN candidate graph (ap.cluster_sparse at N <= SPARSE_FUSED_MAX_N)
 # ---------------------------------------------------------------------------
-
-_SPARSE_SCHEMA = (
-    "i long, ks array<long>, s array<double>, "
-    "r array<double>, a array<double>"
-)
 
 
 def _sparse_r_row(s, r, a, lam):
@@ -802,59 +790,34 @@ def _sparse_build_row(i_val, nbrs, pref: float):
     return np.insert(kk[order], pos, i_val), np.insert(vv[order], pos, pref)
 
 
-def _sparse_partial(iv, ksc, sc, rc, ac, ids_b, lam):
-    """Deterministic column-stat partial of a set of ragged rows: the
-    NEXT responsibilities' clipped column sum (diagonal excluded) and
-    diagonal, rows processed in ascending-i order → (colsum, diag_i,
-    diag_r)."""
-    order = np.argsort(iv)
-    colsum = np.zeros(len(ids_b), dtype="f8")
-    diag_i, diag_r = [], []
-    for j in order:
-        ks = np.asarray(ksc[j], dtype="i8")
-        r_next = _sparse_r_row(
-            np.asarray(sc[j], dtype="f8"),
-            np.asarray(rc[j], dtype="f8"),
-            np.asarray(ac[j], dtype="f8"),
-            lam,
-        )
-        own = ks == iv[j]
-        diag_i.append(iv[j])
-        diag_r.append(float(r_next[own][0]))
-        rp = np.maximum(r_next, 0.0)
-        rp[own] = 0.0
-        np.add.at(colsum, np.searchsorted(ids_b, ks), rp)
-    return (
-        colsum,
-        np.array(diag_i, dtype="i8"),
-        np.array(diag_r, dtype="f8"),
-    )
+def _sparse_iterate(iv, ksc, sc, iterations: int, lam: float) -> np.ndarray:
+    """T damped iterations over ragged rows (``iv`` ascending, one row
+    per point, each holding its diagonal) → the elected exemplar ids.
 
-
-def _sparse_step(iv, ksc, sc, rc, ac, colsum, rkk, ids_b, lam):
-    """One damped iteration of a set of ragged rows given the column
-    stats → (r rows, a rows, elected exemplar ids, the next iteration's
-    ``_sparse_partial``) — the row update both loop branches run."""
-    out_r, out_a, ex_ids = [], [], []
-    for j in range(len(iv)):
-        ks = np.asarray(ksc[j], dtype="i8")
-        av = np.asarray(ac[j], dtype="f8")
-        r_new = _sparse_r_row(
-            np.asarray(sc[j], dtype="f8"), np.asarray(rc[j], dtype="f8"), av, lam
-        )
-        idx = np.searchsorted(ids_b, ks)
-        own = ks == iv[j]
-        rp = np.maximum(r_new, 0.0)
-        rp[own] = 0.0
-        a_hat = np.minimum(0.0, rkk[idx] + colsum[idx] - rp)
-        a_hat[own] = colsum[idx[own]]
-        a_new = lam * av + (1 - lam) * a_hat
-        out_r.append(r_new)
-        out_a.append(a_new)
-        if (a_new[own][0] + r_new[own][0]) > 0:
-            ex_ids.append(iv[j])
-    nxt = _sparse_partial(iv, ksc, sc, out_r, out_a, ids_b, lam)
-    return out_r, out_a, np.array(ex_ids, dtype="i8"), nxt
+    Each iteration computes every row's r once, then the clipped
+    off-diagonal column sums — one sequential ``np.add.at`` over the
+    rows in ascending-i order — and the diagonal r(k,k), then a:
+    the coordinate ``responsibility_pass``/``availability_pass`` algebra
+    with a fixed summation order."""
+    idx = [np.searchsorted(iv, ks) for ks in ksc]
+    own = [ks == i for ks, i in zip(ksc, iv)]
+    flat_idx = np.concatenate(idx)
+    rc = [np.zeros(len(ks), dtype="f8") for ks in ksc]
+    ac = rc
+    for _ in range(iterations):
+        rc = [_sparse_r_row(s, r, a, lam) for s, r, a in zip(sc, rc, ac)]
+        rp = [np.where(o, 0.0, np.maximum(r, 0.0)) for r, o in zip(rc, own)]
+        colsum = np.zeros(len(iv), dtype="f8")
+        np.add.at(colsum, flat_idx, np.concatenate(rp))
+        rkk = np.array([r[o][0] for r, o in zip(rc, own)], dtype="f8")
+        ac = [
+            lam * a
+            + (1 - lam)
+            * np.where(o, colsum[ix], np.minimum(0.0, rkk[ix] + colsum[ix] - p))
+            for a, p, ix, o in zip(ac, rp, idx, own)
+        ]
+    elected = [(a[o][0] + r[o][0]) > 0 for r, a, o in zip(rc, ac, own)]
+    return iv[np.array(elected, dtype=bool)]
 
 
 def _sparse_labels(iv, ksc, sc, exb: np.ndarray) -> np.ndarray:
@@ -877,42 +840,25 @@ def cluster_sparse_blocked(
     spark: SparkSession,
     cand: DataFrame,
     ids_df: DataFrame,
-    pref: float | None,
     iterations: int,
     lam: float = DAMPING,
 ) -> DataFrame:
     """Sparse AP over a symmetric deduped candidate graph ``cand``
-    (i, k, s) with the FUSED blocked iteration: state is one ragged row
-    per point (its candidate list + the preference diagonal), the
-    responsibility update is row-local, and each damped iteration is a
-    single update/checkpoint job whose accumulator side-channel carries
-    the next iteration's availability column stats (bootstrap stats ride
-    the build job; the final exemplar set rides the last update) —
-    identical semantics to running ``ap.responsibility_pass``/
-    ``availability_pass`` over the coordinate candidate relation (the
-    >BLOCKED_MAX_N path), at a fraction of the per-iteration job cost.
+    (i, k, s) in ONE task: the ragged relation ``ids LEFT JOIN nbrs``
+    (one row per point: its candidate list, plus the preference
+    diagonal) is coalesced to a single partition, and the kernel
+    computes the median preference from the candidate s values it holds
+    (``ap._interp_median``, bitwise ``percentile(s, 0.5)``), runs the T
+    iterations (``_sparse_iterate``) and labels every point — identical
+    semantics to ``ap.responsibility_pass``/``availability_pass`` over
+    the coordinate candidate relation (the loop ``ap.cluster_sparse``
+    runs above SPARSE_FUSED_MAX_N), with one job instead of several per
+    iteration.
 
     Emits (vec_id, exemplar) for EVERY point; points with no elected
     exemplar among their candidates get -1 (the honest sparse
-    semantics, same as the coordinate ``ap.cluster_sparse``).
-
-    Both branches — fused-small (one task) and distributed (one job per
-    iteration) — run the same row construction, row update and labeller.
-
-    ``pref=None`` (fused-small branch only, r16): the median preference
-    is computed INSIDE the fused kernel from the candidate s values it
-    already holds — Spark's own interpolation formula on the same
-    doubles (the ``_median_preference_fast`` equivalence, bitwise equal
-    to ``percentile(s, 0.5)``) — so the separate single-reducer
-    percentile job disappears.  The distributed branch still requires
-    the scalar up front (its per-row build kernels each see only a
-    partition of the graph)."""
+    semantics, same as the coordinate loop)."""
     import pandas as pd
-
-    id_rows = ids_df.collect()
-    ids = np.sort(np.array([r[0] for r in id_rows], dtype="i8"))
-    n = len(ids)
-    ids_bc = spark.sparkContext.broadcast(ids)
 
     ragged = ids_df.selectExpr(f"{ids_df.columns[0]} as i").join(
         cand.groupBy("i").agg(
@@ -922,180 +868,35 @@ def cluster_sparse_blocked(
         "left",
     )
 
-    if n <= SPARSE_FUSED_MAX_N:
-        # -- fused-small path: ONE job for build + T iterations + assign.
-        # At this size the ragged state is a single AQE-coalesced
-        # partition anyway, so the distributed loop's per-iteration
-        # accumulator is a single partial — the arithmetic below is the
-        # SAME code on the same single block, so labels are identical
-        # while T eager-checkpoint jobs, T broadcasts, and the separate
-        # build/assign jobs collapse into one task (bench sf0.1: the
-        # blocked phase drops ~2.6 s → ~0.4 s).
-        def fused_kernel(batches):
-            frames = [p for p in batches if len(p)]
-            if not frames:
-                return
-            pdf = pd.concat(frames).sort_values("i", ignore_index=True)
-            iv = pdf["i"].to_numpy(dtype="i8")
-            pref_ = pref
-            if pref_ is None:
-                # exact median preference from the candidate s values
-                # this task already holds — Spark's percentile
-                # interpolation on the same doubles (bitwise equal; the
-                # _median_preference_fast formula), selection via
-                # np.partition is input-order-independent
-                chunks = [
-                    np.array([x["s"] for x in nbrs], dtype="f8")
-                    for nbrs in pdf["nbrs"]
-                    if nbrs is not None and len(nbrs) > 0
-                ]
-                all_s = (
-                    np.concatenate(chunks)
-                    if chunks
-                    else np.empty(0, dtype="f8")
-                )
-                if all_s.size == 0:  # empty candidate graph: nobody can
-                    # elect an exemplar it has no declared similarity to
-                    yield pd.DataFrame(
-                        {"vec_id": iv, "exemplar": np.full(len(iv), -1, "i8")}
-                    )
-                    return
-                m = all_s.size
-                ppos = 0.5 * (m - 1)
-                lo_r = int(ppos)
-                part = np.partition(
-                    all_s, [lo_r, lo_r + 1] if lo_r + 1 < m else [lo_r]
-                )
-                lower, upper = part[lo_r], part[min(lo_r + 1, m - 1)]
-                pref_ = float(lower + (upper - lower) * (ppos - lo_r))
-            rows = [
-                _sparse_build_row(i_val, nbrs, pref_)
-                for i_val, nbrs in zip(pdf["i"], pdf["nbrs"])
-            ]
-            ksc = [ks for ks, _ in rows]
-            sc = [sv for _, sv in rows]
-            rc = [np.zeros(len(ks), dtype="f8") for ks in ksc]
-            ac = rc
-            # bootstrap: stats of r_1 (identical to acc0 in the loop path)
-            nxt = _sparse_partial(iv, ksc, sc, rc, ac, ids, lam)
-            exb = np.array([], dtype="i8")
-            for _ in range(iterations):
-                colsum, diag_i, diag_r = nxt
-                rkk = np.zeros(len(ids), dtype="f8")
-                rkk[np.searchsorted(ids, diag_i)] = diag_r
-                rc, ac, exb, nxt = _sparse_step(
-                    iv, ksc, sc, rc, ac, colsum, rkk, ids, lam
-                )
-            yield pd.DataFrame(
-                {"vec_id": iv, "exemplar": _sparse_labels(iv, ksc, sc, exb)}
-            )
-
-        return ragged.coalesce(1).mapInPandas(
-            fused_kernel, schema="vec_id long, exemplar long"
-        )
-
-    if pref is None:
-        raise ValueError(
-            "pref=None (in-kernel median) is fused-small-branch-only; "
-            "the distributed loop needs the scalar preference up front"
-        )
-    sc_ctx = spark.sparkContext
-    acc0 = sc_ctx.accumulator({}, _PartialsAcc())
-
-    def build_kernel(batches):
-        ids_b = ids_bc.value
+    def kernel(batches):
         frames = [p for p in batches if len(p)]
         if not frames:
             return
-        pdf = pd.concat(frames)
+        pdf = pd.concat(frames).sort_values("i", ignore_index=True)
         iv = pdf["i"].to_numpy(dtype="i8")
+        chunks = [
+            np.array([x["s"] for x in nbrs], dtype="f8")
+            for nbrs in pdf["nbrs"]
+            if nbrs is not None and len(nbrs) > 0
+        ]
+        if not chunks:  # empty candidate graph: nobody can elect an
+            # exemplar it has no declared similarity to
+            yield pd.DataFrame(
+                {"vec_id": iv, "exemplar": np.full(len(iv), -1, "i8")}
+            )
+            return
+        pref = _interp_median(np.concatenate(chunks))
         rows = [
             _sparse_build_row(i_val, nbrs, pref)
             for i_val, nbrs in zip(pdf["i"], pdf["nbrs"])
         ]
         ksc = [ks for ks, _ in rows]
         sc = [sv for _, sv in rows]
-        z = [np.zeros(len(ks), dtype="f8") for ks in ksc]
-        # bootstrap: stats of r_1 ride the build job's accumulator
-        colsum, diag_i, diag_r = _sparse_partial(iv, ksc, sc, z, z, ids_b, lam)
-        acc0.add(
-            {int(iv.min()): (colsum, diag_i, diag_r, np.array([], dtype="i8"))}
+        exb = _sparse_iterate(iv, ksc, sc, iterations, lam)
+        yield pd.DataFrame(
+            {"vec_id": iv, "exemplar": _sparse_labels(iv, ksc, sc, exb)}
         )
-        yield pd.DataFrame({"i": iv, "ks": ksc, "s": sc, "r": z, "a": z})
 
-    # eager checkpoint runs the build job synchronously → acc0 populated
-    state = _ckpt(
-        ragged.mapInPandas(build_kernel, schema=_SPARSE_SCHEMA), eager=True
+    return ragged.coalesce(1).mapInPandas(
+        kernel, schema="vec_id long, exemplar long"
     )
-
-    def _rows(pdf):
-        return (
-            pdf["i"].to_numpy(dtype="i8"),
-            pdf["ks"].to_numpy(),
-            pdf["s"].to_numpy(),
-            pdf["r"].to_numpy(),
-            pdf["a"].to_numpy(),
-        )
-
-    def update_kernel_factory(stats_bc, acc):
-        def update_kernel(batches):
-            ids_b = ids_bc.value
-            colsum, rkk = stats_bc.value
-            frames = [p for p in batches if len(p)]
-            if not frames:
-                return
-            iv, ksc, sc, rc, ac = _rows(pd.concat(frames))
-            out_r, out_a, ex_ids, (colsum_n, diag_i, diag_r) = _sparse_step(
-                iv, ksc, sc, rc, ac, colsum, rkk, ids_b, lam
-            )
-            # next iteration's stats ride this job's accumulator
-            acc.add({int(iv.min()): (colsum_n, diag_i, diag_r, ex_ids)})
-            yield pd.DataFrame(
-                {"i": iv, "ks": list(ksc), "s": list(sc), "r": out_r, "a": out_a}
-            )
-
-        return update_kernel
-
-    # the build checkpoint is released by the first iteration so only ONE
-    # state copy stays pinned across the loop (the ap.iterate()
-    # discipline); the final state must stay — the assignment result
-    # reads it lazily
-    colsum, rkk, ex = _combine_partials(acc0.value, ids)
-    spent: list = []  # consumed stats broadcasts, destroyed after the loop
-    for _ in range(iterations):
-        stats_bc = sc_ctx.broadcast((colsum, rkk))
-        acc = sc_ctx.accumulator({}, _PartialsAcc())
-        prev = state
-        state = _ckpt(
-            state.mapInPandas(
-                update_kernel_factory(stats_bc, acc), schema=_SPARSE_SCHEMA
-            ),
-            eager=True,
-        )
-        # consumed by the eager job; truncated lineage never recomputes.
-        # Destroyed after the loop — mid-loop RemoveBroadcast RPCs contend
-        # with the next iteration's task launches (warm A/B ~0.2 s), and T
-        # pinned stats broadcasts are ≤160 KB each at the gate.
-        spent.append(stats_bc)
-        _release_ckpt(prev)
-        colsum, rkk, ex = _combine_partials(acc.value, ids)
-    for bc in spent:
-        try:
-            bc.destroy()
-        except Exception:
-            pass
-
-    # ``ex`` is the exemplar set of the FINAL state (accumulated by the
-    # last update job) — broadcast into the row-local assignment
-    ex_bc = sc_ctx.broadcast(ex)
-
-    def assign_kernel(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            iv, ksc, sc, _, _ = _rows(pdf)
-            yield pd.DataFrame(
-                {"vec_id": iv, "exemplar": _sparse_labels(iv, ksc, sc, ex_bc.value)}
-            )
-
-    return state.mapInPandas(assign_kernel, schema="vec_id long, exemplar long")

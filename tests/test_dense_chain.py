@@ -1,6 +1,6 @@
 """The one dense AP iteration kernel: the fused chain's recorded
 convergence deltas and exemplar sets against the coordinate reference,
-and both sides of the ragged sparse loop's fused-small gate."""
+and both sides of the sparse gate."""
 
 from __future__ import annotations
 
@@ -57,28 +57,21 @@ def test_high_damping_exemplars_equal_coordinate_iterate(spark):
     assert sweep[lam] == len(coord)
 
 
-def test_sparse_distributed_branch_equals_fused_small(spark, monkeypatch):
-    """Both sides of SPARSE_FUSED_MAX_N run the same row construction, row
-    update and labeller: with the scalar median preference, the
-    distributed branch's labels must equal the fused-small branch's."""
+def test_sparse_coordinate_loop_equals_fused_small(spark, monkeypatch):
+    """Both sides of cluster_sparse's one gate, SPARSE_FUSED_MAX_N: the
+    one-task ragged loop's labels must equal the coordinate loop's (same
+    candidate graph, same update algebra, same median)."""
     from affinity_propagation_mapreduce_spark.operators import ap, ap_dense
-    from affinity_propagation_mapreduce_spark.sources import table
-
-    cand = ap._ckpt(ap.knn_candidate_pairs(spark, SF_T2, 32), eager=False)
-    ids = table(spark, SF_T2, "embeddings").select("vec_id")
-    p_val = cand.agg(F.expr("percentile(s, 0.5)")).first()[0]
 
     def labels():
+        ap.clear_cache()
         return sorted(
-            (r.vec_id, r.exemplar)
-            for r in ap_dense.cluster_sparse_blocked(
-                spark, cand, ids, p_val, ap.T_DEFAULT
-            ).collect()
+            (r.vec_id, r.exemplar) for r in ap.cluster_sparse(spark, SF_T2).collect()
         )
 
     small = labels()
     monkeypatch.setattr(ap_dense, "SPARSE_FUSED_MAX_N", 0)
-    dist = labels()
+    coord = labels()
     assert len(small) == ap._n_points(spark, SF_T2)
     assert np.unique([e for _, e in small if e != -1]).size > 0
-    assert dist == small
+    assert coord == small

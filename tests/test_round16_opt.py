@@ -180,43 +180,37 @@ def test_dup_cut_gate(spark):
 
 
 def test_sparse_in_kernel_median_equals_percentile_job(spark):
-    """cluster_sparse_blocked(pref=None) — the fused-small in-kernel
-    median — must produce the identical label set as the old flow
-    (Spark percentile(s, 0.5) job + scalar pref)."""
-    from pyspark.sql import functions as F
-
-    from affinity_propagation_mapreduce_spark.operators import ap, ap_dense
-    from affinity_propagation_mapreduce_spark.sources import table
+    """The one-task sparse loop's in-kernel median (``ap._interp_median``
+    over the candidate s values) must be bitwise Spark's
+    ``percentile(s, 0.5)`` over the same graph, in either input order."""
+    from affinity_propagation_mapreduce_spark.operators import ap
 
     cand = ap._ckpt(ap.knn_candidate_pairs(spark, SF_T2, 32), eager=False)
-    ids = table(spark, SF_T2, "embeddings").select("vec_id")
-    p_val = cand.agg(F.expr("percentile(s, 0.5)").alias("p")).first()[0]
-    old = sorted(
-        (r.vec_id, r.exemplar)
-        for r in ap_dense.cluster_sparse_blocked(
-            spark, cand, ids, p_val, 5
-        ).collect()
-    )
-    new = sorted(
-        (r.vec_id, r.exemplar)
-        for r in ap_dense.cluster_sparse_blocked(
-            spark, cand, ids, None, 5
-        ).collect()
-    )
-    assert old == new
+    want = cand.agg(F.expr("percentile(s, 0.5)")).first()[0]
+    vals = cand.select("s").toPandas()["s"].to_numpy()
+    assert vals.size > 1 and isinstance(want, float)
+    assert ap._interp_median(vals) == want
+    assert ap._interp_median(vals[::-1].copy()) == want
 
 
-def test_sparse_distributed_branch_refuses_pref_none(spark, monkeypatch):
-    """Above the fused-small gate the in-kernel median is unavailable —
-    the distributed loop must refuse pref=None loudly."""
+def test_sparse_below_gate_job_count(spark):
+    """Below SPARSE_FUSED_MAX_N, ``cluster_sparse`` needs no id collect
+    or preference job: the single task holds every id and computes the
+    median itself — at most 4 Spark jobs for the whole call."""
     from affinity_propagation_mapreduce_spark.operators import ap, ap_dense
-    from affinity_propagation_mapreduce_spark.sources import table
 
-    cand = ap.knn_candidate_pairs(spark, SF_SMALL, 32)
-    ids = table(spark, SF_SMALL, "embeddings").select("vec_id")
-    monkeypatch.setattr(ap_dense, "SPARSE_FUSED_MAX_N", 0)
-    with pytest.raises(ValueError):
-        ap_dense.cluster_sparse_blocked(spark, cand, ids, None, 1)
+    assert ap._n_points(spark, SF_T2) <= ap_dense.SPARSE_FUSED_MAX_N
+    ap.clear_cache()
+    sc = spark.sparkContext
+    group = "sparse-below-gate-jobcount"
+    sc.setJobGroup(group, "sparse job-count pin")
+    try:
+        rows = ap.cluster_sparse(spark, SF_T2).collect()
+    finally:
+        sc.setJobGroup(None, None)
+    assert len(rows) == ap._n_points(spark, SF_T2)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 4, f"expected <= 4 jobs, got {len(jobs)}"
 
 
 def test_fused_candidate_pairs_empty_corpus_guard(spark, tmp_path):

@@ -186,7 +186,7 @@ def test_blocked_sparse_loop_equals_coordinate(spark, monkeypatch):
     blocked = {
         r.vec_id: r.exemplar for r in ap.cluster_sparse(spark, SF_SMALL).collect()
     }
-    monkeypatch.setattr(ap_dense, "BLOCKED_MAX_N", 0)
+    monkeypatch.setattr(ap_dense, "SPARSE_FUSED_MAX_N", 0)
     ap.clear_cache()
     coord = {
         r.vec_id: r.exemplar for r in ap.cluster_sparse(spark, SF_SMALL).collect()
