@@ -225,11 +225,25 @@ def similarity_matrix(
     return off.unionByName(diag)
 
 
-# ≤25M s-values Arrow-collected (~200 MB driver).  Lowered from 10k in
-# round 8 (verdict #7): at the old gate edge the collect coexisted with
-# the blocked engine's O(blocks·N) accumulator payloads for ~800 MB of
-# driver pressure; the distributed percentile fallback is bitwise-equal
-# (cliff-tested) and costs negligible extra wall above 5k points.
+# Two uses.  (1) The preference: ≤25M s-values Arrow-collected (~200 MB
+# driver).  Lowered from 10k in round 8 (verdict #7): at the old gate
+# edge the collect coexisted with the blocked engine's O(blocks·N)
+# accumulator payloads for ~800 MB of driver pressure; the distributed
+# percentile fallback is bitwise-equal (cliff-tested) and costs
+# negligible extra wall above 5k points.  (2) DenseAP.chain's one-task
+# loop (retain=False): at or below the gate the bootstrap and all T
+# iterations run in ONE single-task job, above it one job per iteration.
+# Warm q_ap_assign ops on a 4-core host (T=5, 4 GB driver heap,
+# generated d=32 corpora), bitwise-equal outputs:
+#   N        per-iteration loop   one-task loop
+#   3,000    10.9–12.1 s          8.3–8.5 s
+#   5,000    28.8–29.9 s          16.4–16.8 s
+#   10,000   110.6 s              77.7 s (an earlier one-task kernel
+#                                 that ran _r_block twice per iteration
+#                                 and decoded r and a)
+# At N=10,000 that kernel's whole-host used-memory peak was ~13.4 GB of
+# 15 GB (the per-iteration loop: ~7.8 GB), which is why the one-task
+# loop stops at this gate.
 _FAST_MEDIAN_MAX_N = 5_000
 
 
@@ -1123,7 +1137,7 @@ def q_ap_assign_sparse(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB — on ≥ SPARSE_AGREEMENT_FLOOR of points, else this query
     RAISES and the driver row turns red."""
     res = cluster_sparse(spark, sf_dir)
-    if _n_points(spark, sf_dir) <= _SPARSE_GATE_MAX_N:
+    if 0 < _n_points(spark, sf_dir) <= _SPARSE_GATE_MAX_N:  # empty: no check
         res = _ckpt(res, eager=False)  # gate + returned result: one compute
         checked = q_ap_assign_sparse_checked(spark, sf_dir).select(
             "vec_id", F.col("exemplar").alias("exemplar_chk")
@@ -1485,14 +1499,20 @@ def cached_smat(spark: SparkSession, sf_dir: str, pref: str = "median") -> DataF
 
 def _dense(spark: SparkSession, sf_dir: str):
     """Blocked dense engine instance (operators/ap_dense.py) behind every
-    multi-iteration dense query.  Refused above its size gate: the dense
-    N² loop is the wrong tool there, and the coordinate engine is no
-    fallback (661 s at N=12k — PLANS.md "blocked-gate probe")."""
+    multi-iteration dense query.  Refused below 2 points (no
+    off-diagonal similarity, so no preference) and above its size gate:
+    the dense N² loop is the wrong tool there, and the coordinate engine
+    is no fallback (661 s at N=12k — PLANS.md "blocked-gate probe")."""
     key = _ckey(spark, sf_dir, "dense")
     if key not in _cache:
         from . import ap_dense
 
         n = _n_points(spark, sf_dir)
+        if n < 2:
+            raise ValueError(
+                f"dense AP needs at least 2 points, got N={n}: there is no "
+                "off-diagonal similarity to take a preference from"
+            )
         if n > ap_dense.BLOCKED_MAX_N:
             raise ValueError(
                 f"dense AP refused at N={n} > BLOCKED_MAX_N="

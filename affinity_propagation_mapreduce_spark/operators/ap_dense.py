@@ -24,10 +24,15 @@ with the matrix stored as row blocks:
   per-partition partials (rows sorted by i → deterministic numpy pairwise
   sums) ride an accumulator (O(blocks·N) bytes), are combined on the
   driver in block order, and broadcast back — the classic MR column job;
-* one iteration = ONE Arrow-vectorized update/checkpoint job
-  (``DenseAP.chain``): the kernel applies the update and side-channels
-  the next iteration's column stats, the exemplar set of the state it
-  produced and the iteration's convergence delta max|r_t − r_{t−1}|.
+* ``DenseAP.chain`` runs the iterations one of two ways, bitwise equal
+  in every output.  At N ≤ ap._FAST_MEDIAN_MAX_N a ``retain=False``
+  chain is ONE single-task job: the task cuts state0's rows back into
+  its blocks, runs the bootstrap and all T iterations block by block,
+  combines the partials in block order and emits the final state once.
+  Otherwise one iteration = ONE Arrow-vectorized update/checkpoint job:
+  the kernel applies the update and side-channels the next iteration's
+  column stats, the exemplar set of the state it produced and the
+  iteration's convergence delta max|r_t − r_{t−1}|.
 
 Float parity: s is computed with the same sequential per-dimension
 accumulation as ``ap.similarity_off_diagonal`` (bitwise equal to DuckDB's
@@ -38,16 +43,16 @@ decimals on both sides (ap.py module docstring).  The median preference
 is ``ap._interp_median``, bitwise-equal to ``percentile(s, 0.5)``.
 
 Scale gate: ``BLOCKED_MAX_N`` bounds the dense N² regime.  Below it
-every dense AP query iterates with the one fused loop of
-``DenseAP.chain``.  The gate is NOT driver-memory-bound — above
-ap._FAST_MEDIAN_MAX_N the preference is a rank-narrowing median and the
-bootstrap column stats a job, so the driver only ever sees O(blocks·N)
-accumulator payloads.  The binding costs are the N² kernel work per
-iteration and the two resident 3·N²·8 B checkpointed states (measured:
-N=12k blocked exceeds 10 min while the coordinate loop takes 661 s —
-PLANS.md "blocked-gate probe").  Above the gate the dense queries are
-refused (``ap._dense`` raises): ``ap.cluster_sparse`` is the scale path
-and ``ap.cluster`` the coordinate reference.
+every dense AP query iterates with ``DenseAP.chain``.  The gate is NOT
+driver-memory-bound — above ap._FAST_MEDIAN_MAX_N the preference is a
+rank-narrowing median and the loop the per-iteration one, so the driver
+only ever sees O(blocks·N) accumulator payloads.  The binding costs are
+the N² kernel work per iteration and the two resident 3·N²·8 B
+checkpointed states (measured: N=12k blocked exceeds 10 min while the
+coordinate loop takes 661 s — PLANS.md "blocked-gate probe").  Above the
+gate the dense queries are refused (``ap._dense`` raises):
+``ap.cluster_sparse`` is the scale path and ``ap.cluster`` the
+coordinate reference.
 """
 
 from __future__ import annotations
@@ -70,18 +75,21 @@ BLOCKED_MAX_N = 10_000  # N² kernel work + 2 resident N² states bound this
 # one-task 4.5–5.2 s, coordinate loop 9.1–9.3 s (36 jobs), the deleted
 # distributed ragged loop 9.7–11.0 s (20 jobs).
 SPARSE_FUSED_MAX_N = 4_000
-# NOTE (r15 optimization round, measured negative): a dense fused-small
-# branch — the whole retain=False chain (similarity + preference + T
-# iterations) as ONE single-task job, bitwise-emulating the per-block
-# column-sum order — was implemented, proven row-identical at sf0.1 on
-# all 8 ap_* declared queries, and REVERTED: at N=2000 the single-core
-# kernel is ~3.7 s and shipping the 96 MB state out of one Python
-# worker adds ~2.5 s single-threaded Arrow/JVM work, vs ~4.4 s for the
-# whole distributed fused loop (bench reading with the branch: 8.5 s).
-# Unlike the sparse ragged state (~3 MB at the SPARSE_FUSED_MAX_N gate),
-# the dense N² state is big enough that per-task parallelism still pays
-# at the N it was measured at.  The surviving piece is the masked-max _r_block below, which the fused
-# experiment surfaced.
+# NOTE (dense one-task loop, measured): the r15 "fused-small" dense
+# branch ran similarity + preference + T iterations in one task and lost
+# to the distributed loop (N=2,000: 8.5 s bench reading vs ~4.4 s), so it
+# was reverted.  That result no longer holds for
+# DenseAP._one_task_chain: only the T iterations run in the one task,
+# the similarity (state0's nb tasks) and the final state (a checkpointed
+# relation the assignment reads) stay distributed, and the old kernel
+# was slower — it took the 2nd max with np.partition (1.7 s vs 0.04 s
+# per 2000² block for the masked max it surfaced, _r_block below) and
+# ran _r_block twice per iteration.  On a 4-core host at N=1,500 (T=5)
+# the one-task loop cuts the perfbench ap_dense op from 5.10 s to 2.61 s
+# (medians of 12 alternating pairs, 12 of 12 won) and the traced chain
+# span from 3.48 s to 0.95 s, 7 → 3 Spark jobs per op: five ~0.3 s
+# Python-job floors outweigh ~30 ms of numpy per block per iteration.
+# The 32-core side of the r15 result was not re-measured on this host.
 _TARGET_BLOCK_BYTES = 64 << 20  # per-task state footprint bound (3 N-arrays/row)
 # Work floor per block: the JVM↔Python handshake is paid per TASK, so
 # splitting a small state across every core is a net loss (measured on
@@ -186,6 +194,14 @@ def _n_blocks(spark: SparkSession, n: int) -> int:
     return min(n, max(int(by_mem), min(par, int(by_work))))
 
 
+def _block_bounds(n: int, nb: int) -> np.ndarray:
+    """Row bounds of the ``nb`` near-equal id-contiguous blocks of the
+    sorted ids: block b is rows [bounds[b], bounds[b+1]).  State0's
+    partitions and the one-task loop's blocks are both cut here, so the
+    loop's per-block partials are the partitions' bitwise."""
+    return np.linspace(0, n, nb + 1).astype("i8")
+
+
 def _r_block(s: np.ndarray, r: np.ndarray, a: np.ndarray, lam: float) -> np.ndarray:
     """Damped responsibility update for a block of rows — the exact
     ``ap_numpy_oracle.iterate`` formulation (row-local, so identical on
@@ -231,20 +247,41 @@ def _sorted_block(batches, ids_b: np.ndarray, pref: float):
 def _stats_partial(s, r, a, rows, di, lam: float):
     """A block's column-stats partial of the NEXT responsibilities
     r_new = ``_r_block(s, r, a)``: (clipped column sum Σ_i max(0, r_new)
-    with the diagonal excluded — pairwise over the id-sorted rows — and
-    the diagonal r_new).  The one implementation behind the driver
-    bootstrap, the bootstrap job and the fused kernel, so their stats
-    agree bitwise."""
+    with the diagonal excluded — pairwise over the id-sorted rows — the
+    diagonal r_new, and r_new itself).  The one implementation behind the
+    bootstrap job and both loops, so their stats agree bitwise; the
+    one-task loop reuses r_new as the next iteration's responsibilities."""
     r_new = _r_block(s, r, a, lam)
     diag_r = r_new[rows, di].copy()
     rp = np.maximum(r_new, 0.0)
     rp[rows, di] = 0.0
-    return rp.sum(0), diag_r
+    return rp.sum(0), diag_r, r_new
+
+
+def _block_iteration(s, r, a, r_new, rows, di, iv, colsum, rkk, lam: float):
+    """One damped iteration of an id-sorted block (s diagonal patched)
+    given r_new = ``_r_block(s, r, a)`` and the combined column stats
+    (colsum, rkk) of r_new → (a_new, r_next, partial).  ``partial`` is
+    the block's ``_combine_partials`` entry: the NEXT iteration's column
+    stats, the exemplar candidates of the state (s, r_new, a_new) and
+    max|r_new − r| (a max is exact and order-free, so the combined delta
+    is bitwise the coordinate join's); r_next is the next iteration's
+    r_new.  Shared by ``_step`` and the one-task loop."""
+    rp = np.maximum(r_new, 0.0)
+    rp[rows, di] = 0.0
+    a_hat = np.minimum(0.0, rkk[None, :] + colsum[None, :] - rp)
+    a_hat[rows, di] = colsum[di]
+    a_new = lam * a + (1 - lam) * a_hat
+    colsum_n, diag_rn, r_next = _stats_partial(s, r_new, a_new, rows, di, lam)
+    ex_ids = iv[(a_new[rows, di] + r_new[rows, di]) > 0]
+    delta = float(np.abs(r_new - r).max())
+    return a_new, r_next, (colsum_n, iv, diag_rn, ex_ids, delta)
 
 
 class _PartialsAcc(AccumulatorParam):
-    """Per-partition stats partials keyed by the partition's min row id.
-    Merge is key-OVERWRITE: each partition's partial is deterministic
+    """Per-partition stats partials keyed by the partition's min row id
+    (the one-task loop's single result under key 0).  Merge is
+    key-OVERWRITE: each partition's partial is deterministic
     (rows sorted by id inside the kernel), so a retried or speculative
     task re-adds the identical value under the same key — the
     accumulator stays correct without relying on Spark's
@@ -312,9 +349,8 @@ class DenseAP:
         else:
             self.ids, mat = loaded
         self.n = len(self.ids)
-        # full s matrix (rows in ids order), held once the preference
-        # collect has paid for it (small-N only) — feeds the driver-side
-        # bootstrap column stats (see _bootstrap_stats)
+        # full s matrix (rows in ids order) from state0's side-channel
+        # (small-N only), held until pref_value has taken both scalars
         self._s_full: np.ndarray | None = None
         self.bc = spark.sparkContext.broadcast((self.ids, mat))
         self.nb = _n_blocks(spark, self.n)
@@ -351,11 +387,11 @@ class DenseAP:
 
         Below the small-N collect gate the eager checkpoint job ALSO
         side-channels each block's s matrix through an accumulator
-        (r16): the preference / bootstrap consumers then assemble the
-        full matrix driver-side from the exact f8 arrays the kernel
-        yielded — the separate ``toArrow`` collect job disappears.  The
-        bytes moved are the same ~N²·8 the collect moved; above the gate
-        no accumulator is attached and nothing is shipped."""
+        (r16): the preference then assembles the full matrix driver-side
+        from the exact f8 arrays the kernel yielded — the separate
+        ``toArrow`` collect job disappears.  The bytes moved are the same
+        ~N²·8 the collect moved; above the gate no accumulator is
+        attached and nothing is shipped."""
         if self._state0 is not None:
             return self._state0
         from .ap import _FAST_MEDIAN_MAX_N
@@ -380,7 +416,7 @@ class DenseAP:
             # `emb.repartition(nb, "vec_id")` was a shuffle whose only
             # purpose was to deal rows to blocks the broadcast can deal
             # for free)
-            bounds = np.linspace(0, nn, nb + 1).astype("i8")
+            bounds = _block_bounds(nn, nb)
             for b in batches:
                 for blk in b.column(0).to_numpy(zero_copy_only=False):
                     lo, hi = int(bounds[blk]), int(bounds[blk + 1])
@@ -425,20 +461,17 @@ class DenseAP:
     # -- preference ----------------------------------------------------
 
     def _collect_s_full(self) -> np.ndarray:
-        """Collect the checkpointed s rows via ``toArrow`` and reshape
-        the list column's flat values buffer — same doubles as the old
-        toPandas path without the per-row object boxing (measured 0.27 s
-        → 0.15 s warm at N=2000; r15, guide §6 Arrow driver transfers).
-        The full matrix (rows in ids order, RAW -0.0 diagonal) is kept on
-        the instance: it feeds both preference scalars AND the
-        driver-side bootstrap column stats (r16 — one collect, zero
-        further bootstrap jobs).  Small-N only (the caller gates on
-        ap._FAST_MEDIAN_MAX_N, the same gate the transient preference
-        collect always had)."""
-        state = self.state0()  # may populate _s_full (the eager job's
-        # accumulator side-channel) — then no collect job runs at all
-        if self._s_full is not None:
-            return self._s_full
+        """The full s matrix (rows in ids order, RAW -0.0 diagonal) for
+        the preference scalars: taken from state0's accumulator
+        side-channel — then no collect job runs at all — and released
+        from the instance, or else collected via ``toArrow`` with the
+        list column's flat values buffer reshaped (same doubles as the
+        old toPandas path without the per-row boxing; r15, guide §6).
+        Small-N only (the caller gates on ap._FAST_MEDIAN_MAX_N)."""
+        state = self.state0()
+        s, self._s_full = self._s_full, None
+        if s is not None:
+            return s
         tbl = state.select("i", "s").toArrow()
         iv = tbl.column("i").to_numpy()
         scol = tbl.column("s").combine_chunks()
@@ -447,9 +480,7 @@ class DenseAP:
             s = np.stack(scol.to_numpy(zero_copy_only=False))
         else:
             s = flat.reshape(len(iv), self.n)
-        order = np.argsort(iv)
-        self._s_full = np.ascontiguousarray(s[order])
-        return self._s_full
+        return np.ascontiguousarray(s[np.argsort(iv)])
 
     def _offdiag(self) -> np.ndarray:
         s = self._collect_s_full()
@@ -480,12 +511,12 @@ class DenseAP:
         to ``percentile(s, 0.5)`` — or exact min.
 
         Below ap._FAST_MEDIAN_MAX_N both derive from one driver collect
-        whose value array is dropped immediately (~200 MB at the 5k
-        gate).  Above it the driver never sees the N² values at all:
-        min is a plain aggregate and the median runs
-        ``ap.exact_median_distributed`` (rank-narrowing histogram,
-        bounded collect, bitwise-equal — the same routing every other
-        large-N preference uses since round 8).  This removed the last
+        (in practice state0's side-channel) whose matrix and value array
+        are dropped immediately (~200 MB each at the 5k gate).  Above it
+        the driver never sees the N² values at all: min is a plain
+        aggregate and the median runs ``ap.exact_median_distributed``
+        (rank-narrowing histogram, bounded collect, bitwise-equal — the
+        same routing every other large-N preference uses since round 8).  This removed the last
         O(N²) driver allocation in the engine; BLOCKED_MAX_N is now
         bounded by executor state size + O(blocks·N) accumulator
         payloads, not driver memory.
@@ -516,47 +547,10 @@ class DenseAP:
 
     # -- iteration -----------------------------------------------------
 
-    def _bootstrap_stats(self, pref: float, lam: float):
-        """Column stats of r_1 computed ON THE DRIVER from the held s
-        matrix — bitwise the ``_col_stats(state0, ...)`` job (r16, guide
-        §4.1/§5: the bootstrap is a planning-sized computation — at the
-        small-N gate the driver already holds every input, so the job +
-        collect bought nothing but a task handshake).
-
-        Bitwise argument: state0's partition p is exactly the contiguous
-        ids slice [bounds[p], bounds[p+1]) in ascending-i order, so the
-        per-partition kernel ran the identical ``_stats_partial`` on the
-        identical C-contiguous arrays; the partials feed the SAME
-        ``_combine_partials``.  Pinned by tests/test_round16_opt.py
-        against the job path.  Returns None above the preference-collect
-        gate (then the job runs)."""
-        from .ap import _FAST_MEDIAN_MAX_N
-
-        if self.n > _FAST_MEDIAN_MAX_N:
-            return None
-        s_full = self._collect_s_full()
-        bounds = np.linspace(0, self.n, self.nb + 1).astype("i8")
-        parts: dict[int, tuple] = {}
-        for b in range(self.nb):
-            lo, hi = int(bounds[b]), int(bounds[b + 1])
-            if lo >= hi:
-                continue
-            iv = self.ids[lo:hi]
-            s = s_full[lo:hi].copy()
-            rows = np.arange(hi - lo)
-            di = np.arange(lo, hi)
-            s[rows, di] = pref
-            z = np.zeros_like(s)
-            colsum, diag_r = _stats_partial(s, z, z, rows, di, lam)
-            parts[int(iv.min())] = (colsum, iv, diag_r, [])
-        colsum, rkk, _ = _combine_partials(parts, self.ids)
-        return self.spark.sparkContext.broadcast((colsum, rkk))
-
     def _col_stats(self, state: DataFrame, pref: float, lam: float):
-        """The MR column job, run only as the bootstrap above
-        ap._FAST_MEDIAN_MAX_N, where the driver must never hold the N² s
-        values: per-partition partials of r_1 collected (O(blocks·N)
-        bytes) and combined on the driver in deterministic block order."""
+        """The MR column job, the per-iteration loop's bootstrap:
+        per-partition partials of r_1 collected (O(blocks·N) bytes) and
+        combined on the driver in deterministic block order."""
         bc = self.bc
 
         def stats_kernel(batches):
@@ -566,7 +560,7 @@ class DenseAP:
             if blk is None:
                 return
             iv, s, r, a, rows, di = blk
-            colsum, diag_r = _stats_partial(s, r, a, rows, di, lam)
+            colsum, diag_r, _ = _stats_partial(s, r, a, rows, di, lam)
             yield pa.RecordBatch.from_arrays(
                 [
                     pa.array([int(iv.min())], pa.int64()),
@@ -591,13 +585,11 @@ class DenseAP:
     def _step(
         self, state: DataFrame, stats_bc, pref: float, lam: float, acc
     ) -> DataFrame:
-        """One damped iteration given the broadcast column stats: the
-        (r, a) update, plus — through ``acc`` — the NEXT iteration's
-        column-stat partials, the exemplar candidates of the state just
-        produced and the block's max|r_new − r| (max is exact and
-        order-free, so the combined delta is bitwise the coordinate
-        join's).  Emits the next state with the diagonal s patched to
-        the preference."""
+        """One damped iteration of the per-iteration loop given the
+        broadcast column stats: ``_block_iteration`` per partition, its
+        partial (next column stats, exemplar candidates, delta) through
+        ``acc``.  Emits the next state with the diagonal s patched to the
+        preference."""
         bc = self.bc
 
         def step_kernel(batches):
@@ -608,18 +600,73 @@ class DenseAP:
                 return
             iv, s, r, a, rows, di = blk
             r_new = _r_block(s, r, a, lam)
-            rp = np.maximum(r_new, 0.0)
-            rp[rows, di] = 0.0
-            a_hat = np.minimum(0.0, rkk[None, :] + colsum[None, :] - rp)
-            a_hat[rows, di] = colsum[di]
-            a_new = lam * a + (1 - lam) * a_hat
-            colsum_n, diag_rn = _stats_partial(s, r_new, a_new, rows, di, lam)
-            ex_ids = iv[(a_new[rows, di] + r_new[rows, di]) > 0]
-            delta = float(np.abs(r_new - r).max())
-            acc.add({int(iv.min()): (colsum_n, iv, diag_rn, ex_ids, delta)})
+            a_new, _, part = _block_iteration(
+                s, r, a, r_new, rows, di, iv, colsum, rkk, lam
+            )
+            acc.add({int(iv.min()): part})
             yield _encode_state(iv, s, r_new, a_new)
 
         return state.mapInArrow(step_kernel, schema=_STATE_SCHEMA)
+
+    def _one_task_chain(self, iterations: int, pref: float, lam: float):
+        """The bootstrap and all T iterations in ONE single-task job over
+        state0's (i, s) → (final state, exemplar ids, deltas).  The task
+        cuts the id-sorted rows into state0's ``nb`` blocks
+        (``_block_bounds``), runs ``_stats_partial``/``_block_iteration``
+        per block and combines the partials with ``_combine_partials`` in
+        block order — the per-iteration loop's arithmetic on the same
+        arrays, so every output is bitwise that loop's.  The final state
+        is emitted once, one Arrow batch per block; the exemplar set and
+        the deltas ride an accumulator."""
+        bc = self.bc
+        nb = self.nb
+        acc = self.spark.sparkContext.accumulator({}, _PartialsAcc())
+
+        def loop_kernel(batches):
+            ids_b, _ = bc.value
+            got = _decode_state(batches, cols=(1,))
+            if got is None:
+                return
+            iv, (s,) = got
+            order = np.argsort(iv)
+            iv, s = iv[order], s[order]  # a writable copy
+            blocks, parts = [], {}
+            bounds = _block_bounds(len(iv), nb)
+            for lo, hi in zip(bounds[:-1], bounds[1:]):
+                if lo >= hi:
+                    continue
+                biv, sb = iv[lo:hi], s[lo:hi]
+                rows = np.arange(hi - lo)
+                di = np.searchsorted(ids_b, biv)
+                sb[rows, di] = pref
+                z = np.zeros_like(sb)
+                colsum, diag_r, r_new = _stats_partial(sb, z, z, rows, di, lam)
+                parts[int(biv[0])] = (colsum, biv, diag_r, [])
+                blocks.append((biv, sb, z, z, r_new, rows, di))
+            colsum, rkk, _ = _combine_partials(parts, ids_b)
+            deltas = []
+            for _ in range(iterations):
+                parts = {}
+                for j, (biv, sb, r, a, r_new, rows, di) in enumerate(blocks):
+                    a_new, r_next, parts[int(biv[0])] = _block_iteration(
+                        sb, r, a, r_new, rows, di, biv, colsum, rkk, lam
+                    )
+                    blocks[j] = (biv, sb, r_new, a_new, r_next, rows, di)
+                colsum, rkk, ex = _combine_partials(parts, ids_b)
+                deltas.append(max(part[4] for part in parts.values()))
+            acc.add({0: (ex, np.array(deltas, dtype="f8"))})
+            for biv, sb, r, a, *_ in blocks:
+                yield _encode_state(biv, sb, r, a)
+
+        state = _ckpt(
+            self.state0()
+            .select("i", "s")  # state0's r and a are zeros: not shipped
+            .coalesce(1)
+            .mapInArrow(loop_kernel, schema=_STATE_SCHEMA),
+            eager=True,
+        )
+        ex, deltas = acc.value[0]
+        return state, ex, deltas
 
     def chain(
         self,
@@ -628,21 +675,32 @@ class DenseAP:
         pref: str = "median",
         retain: bool = True,
     ) -> list[DataFrame]:
-        """States after iterations 1..T.  After the bootstrap column stats
-        (driver-side below ap._FAST_MEDIAN_MAX_N, one job above), every
-        iteration is ONE eager update job whose accumulator side-channel
-        carries the next iteration's column stats, the exemplar set and
-        the convergence delta.  The final exemplar set and the T deltas
-        are recorded (``ex_hint``/``deltas``), so no consumer scans a
-        state for them.  ``retain=False`` releases each previous state's
-        blocks (the ap.iterate() discipline) and returns only the final
-        state; ``retain=True`` keeps and returns every state."""
+        """States after iterations 1..T.  The final exemplar set and the T
+        convergence deltas are recorded (``ex_hint``/``deltas``), so no
+        consumer scans a state for them.
+
+        ``retain=False`` at N ≤ ap._FAST_MEDIAN_MAX_N runs the bootstrap
+        and all T iterations as one single-task job
+        (``_one_task_chain``) and returns only the final state.
+        Otherwise the per-iteration loop runs: one bootstrap column-stats
+        job, then one eager update job per iteration whose accumulator
+        side-channel carries the next iteration's column stats, the
+        exemplar set and the convergence delta.  ``retain=True`` keeps
+        and returns every state; ``retain=False`` releases each previous
+        state's blocks (the ap.iterate() discipline) and returns only the
+        final one.  Both loops are bitwise equal in every output."""
+        from .ap import _FAST_MEDIAN_MAX_N
+
         p = self.pref_value(pref)
+        key = (pref, lam, iterations)
+        if not retain and iterations > 0 and self.n <= _FAST_MEDIAN_MAX_N:
+            state, self._ex_hint[key], self._deltas[key] = self._one_task_chain(
+                iterations, p, lam
+            )
+            return [state]
         sc = self.spark.sparkContext
         state = self.state0()
-        stats_bc = self._bootstrap_stats(p, lam) or self._col_stats(
-            state, p, lam
-        )
+        stats_bc = self._col_stats(state, p, lam)
         states: list[DataFrame] = []
         deltas: list[float] = []
         ex: np.ndarray | None = None
@@ -670,8 +728,8 @@ class DenseAP:
                 bc.destroy()
             except Exception:
                 pass
-        self._ex_hint[(pref, lam, iterations)] = ex
-        self._deltas[(pref, lam, iterations)] = np.array(deltas, dtype="f8")
+        self._ex_hint[key] = ex
+        self._deltas[key] = np.array(deltas, dtype="f8")
         return states if retain else [state]
 
     # -- consumers -----------------------------------------------------
@@ -692,9 +750,11 @@ class DenseAP:
 
     def assign(self, state: DataFrame, ex: np.ndarray) -> DataFrame:
         """label(i) = argmax over exemplars k of s(i,k), ties to lowest k,
-        exemplars labeled as themselves (the ap.assign semantics).  The
-        chain's exemplar set ``ex`` is broadcast into a row-local kernel —
-        no N² relation is rebuilt for the final argmax."""
+        exemplars labeled as themselves (the ap.assign semantics); an
+        empty ``ex`` yields no rows at all (sparse emits −1 instead —
+        see cluster_sparse_blocked).  The chain's exemplar set ``ex`` is
+        broadcast into a row-local kernel — no N² relation is rebuilt for
+        the final argmax."""
         bc = self.bc
         ex_bc = self.spark.sparkContext.broadcast(ex)
 
@@ -857,7 +917,10 @@ def cluster_sparse_blocked(
 
     Emits (vec_id, exemplar) for EVERY point; points with no elected
     exemplar among their candidates get -1 (the honest sparse
-    semantics, same as the coordinate loop)."""
+    semantics, same as the coordinate loop).  Dense differs:
+    ``DenseAP.assign`` emits NO row for a point with no exemplar, which
+    happens only when the chain elects none at all (then the result is
+    empty) — that row set is in the DuckDB hashes, so it stays."""
     import pandas as pd
 
     ragged = ids_df.selectExpr(f"{ids_df.columns[0]} as i").join(

@@ -1,6 +1,6 @@
 """The one dense AP iteration kernel: the fused chain's recorded
 convergence deltas and exemplar sets against the coordinate reference,
-and both sides of the sparse gate."""
+and both sides of the dense one-task gate and of the sparse gate."""
 
 from __future__ import annotations
 
@@ -75,3 +75,45 @@ def test_sparse_coordinate_loop_equals_fused_small(spark, monkeypatch):
     assert len(small) == ap._n_points(spark, SF_T2)
     assert np.unique([e for _, e in small if e != -1]).size > 0
     assert coord == small
+
+
+def test_one_task_chain_bitwise_equals_per_iteration_loop(spark, monkeypatch):
+    """Both sides of the one-task gate, ap._FAST_MEDIAN_MAX_N, at sf0.01
+    with the rows cut into several blocks: the one-task loop's labels,
+    exemplar set, deltas and final (i, s, r, a) arrays must be bitwise
+    the per-iteration loop's."""
+    from affinity_propagation_mapreduce_spark.operators import ap, ap_dense
+
+    T = ap.T_DEFAULT
+    monkeypatch.setattr(ap_dense, "_MIN_BLOCK_BYTES", 1 << 20)
+
+    def run():
+        d = ap_dense.DenseAP(spark, SF_T2)
+        try:
+            st = d.chain(T, retain=False)[-1]
+            ex = d.ex_hint("median", ap_dense.DAMPING, T)
+            deltas = d.deltas("median", ap_dense.DAMPING, T)
+            labels = sorted(tuple(r) for r in d.assign(st, ex).collect())
+            tbl = st.toArrow()
+            iv = tbl.column("i").to_numpy()
+            order = np.argsort(iv)
+            arrays = [iv[order]] + [
+                np.stack(tbl.column(c).to_numpy(zero_copy_only=False))[order]
+                for c in ("s", "r", "a")
+            ]
+            return d.nb, st.rdd.getNumPartitions(), labels, ex, deltas, arrays
+        finally:
+            d.destroy()
+
+    nb, parts_one, *one = run()
+    monkeypatch.setattr(ap, "_FAST_MEDIAN_MAX_N", ap._n_points(spark, SF_T2) - 1)
+    _, parts_loop, *loop = run()
+    assert parts_one == 1 and parts_loop == nb
+    assert nb > 1 or spark.sparkContext.defaultParallelism == 1
+    labels, ex, deltas, arrays = one
+    assert len(labels) == len(arrays[0]) and ex.size > 0
+    assert labels == loop[0]
+    assert np.array_equal(ex, loop[1])
+    assert deltas.shape == (T,) and deltas.tobytes() == loop[2].tobytes()
+    for got, want in zip(arrays, loop[3]):
+        assert got.shape == want.shape and got.tobytes() == want.tobytes()

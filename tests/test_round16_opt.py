@@ -1,6 +1,6 @@
-"""Round-16 optimization pins: driver-side bootstrap stats, pyarrow
-model/dimension loads (bitwise vs the Spark collect paths they replace),
-the size-gated dup-cut policy, and the AP job-count budget."""
+"""Round-16 optimization pins: pyarrow model/dimension loads (bitwise
+vs the Spark collect paths they replace), the size-gated dup-cut policy,
+and the AP job-count budgets."""
 
 from __future__ import annotations
 
@@ -30,45 +30,11 @@ def test_dense_ap_arrow_embeddings_match_collect(spark):
     assert mat_a.shape == mat_c.shape and np.array_equal(mat_a, mat_c)
 
 
-def test_bootstrap_stats_bitwise_equals_col_stats_job(spark):
-    """The driver-side bootstrap column stats must be bitwise the
-    _col_stats(state0) job they replace, for median AND min preferences
-    and a non-default damping."""
-    from affinity_propagation_mapreduce_spark.operators import ap_dense
-
-    d = ap_dense.DenseAP(spark, SF_T2)
-    try:
-        for pref_kind, lam in (("median", 0.5), ("min", 0.5), ("median", 0.7)):
-            p = d.pref_value(pref_kind)
-            bc_drv = d._bootstrap_stats(p, lam)
-            assert bc_drv is not None
-            bc_job = d._col_stats(d.state0(), p, lam)
-            cd, rd = bc_drv.value
-            cj, rj = bc_job.value
-            assert cd.shape == cj.shape and np.array_equal(cd, cj)
-            assert np.array_equal(rd, rj)
-    finally:
-        d.destroy()
-
-
-def test_bootstrap_stats_gated_above_fast_median(spark, monkeypatch):
-    """Above the small-N collect gate the bootstrap returns None and the
-    chain falls back to the _col_stats job (scale adaptivity)."""
-    from affinity_propagation_mapreduce_spark.operators import ap, ap_dense
-
-    d = ap_dense.DenseAP(spark, SF_SMALL)
-    try:
-        monkeypatch.setattr(ap, "_FAST_MEDIAN_MAX_N", d.n - 1)
-        assert d._bootstrap_stats(-1.0, 0.5) is None
-    finally:
-        d.destroy()
-
-
 def test_dense_ap_assign_job_count_budget(spark):
-    """The fused retain=False chain + assignment must stay within its
-    job budget: state0 + preference collect + T update jobs + the
-    assignment action — the bootstrap stats job and the embeddings
-    collect job are gone (r16, verdict r15 #4)."""
+    """The retain=False chain + assignment must stay within its job
+    budget: state0, the one-task loop (bootstrap + all T iterations) and
+    the assignment action — the preference collect rides state0's
+    side-channel, and no per-iteration job is left."""
     from affinity_propagation_mapreduce_spark.operators import ap_dense
 
     T = 5
@@ -85,11 +51,9 @@ def test_dense_ap_assign_job_count_budget(spark):
             sc.setJobGroup(None, None)
         assert n == d.n
         jobs = sc.statusTracker().getJobIdsForGroup(group)
-        # state0 (1) + T fused updates + the assign count (1, AQE may
-        # split it in 2); the preference collect, bootstrap stats job
-        # and embeddings collect job are all gone (r16) — never the old
-        # budget of T + 6
-        assert len(jobs) <= T + 3, f"expected <= {T + 3} jobs, got {len(jobs)}"
+        # state0 (1) + the one-task loop (1) + the assign count (1, AQE
+        # may split it in 2)
+        assert len(jobs) <= 4, f"expected <= 4 jobs, got {len(jobs)}"
     finally:
         d.destroy()
 
