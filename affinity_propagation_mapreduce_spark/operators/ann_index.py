@@ -97,6 +97,8 @@ from .vector import (
     PQ_SHORTLIST,
     PQ_SHORTLIST_FRAC,
     RECALL_FLOORS,
+    RERANK_BROADCAST_MAX_ROWS,
+    TOP_K,
     _emb,
     _exact_rerank,
     _fold_sum,
@@ -796,11 +798,30 @@ def _per_cell_cap(
     return max(PQ_SHORTLIST, -(-2 * shortlist // max(1, int(width))))
 
 
+def _fixed_width_bytes(arr, width: int) -> np.ndarray:
+    """A binary Arrow array whose values are all ``width`` bytes long
+    → (rows, width) uint8 view of its data buffer (no per-row boxing).
+    Raises on a ragged value — codes are fixed-width by construction."""
+    import pyarrow as pa
+
+    bufs = arr.buffers()
+    off_t = "i8" if pa.types.is_large_binary(arr.type) else "i4"
+    off = np.frombuffer(bufs[1], dtype=off_t)[
+        arr.offset : arr.offset + len(arr) + 1
+    ]
+    data = np.frombuffer(bufs[2], dtype="u1")[off[0] : off[-1]]
+    if data.size != len(arr) * width:
+        raise ValueError("ragged PQ code row in the codes scan")
+    return data.reshape(len(arr), width)
+
+
 def _adc_scan(
     spark, codes_df, meta, books, qids, qmat, qnrm, shortlist, cell_to_q,
-    per_cell_cap: int | None = None,
+    per_cell_cap: int | None = None, k: int | None = None,
 ):
-    """Shared ADC kernel over a (possibly cell-pruned) codes scan.
+    """Shared ADC kernel over a (possibly cell-pruned) codes scan: one
+    ``mapInArrow`` pass whose ``code`` (and ``emb``) columns are decoded
+    from the Arrow buffers, never boxed per row through pandas.
 
     LUT chunks are computed LAZILY per 256-query block from the
     broadcast query matrix (|Q|·d doubles — ~5 MB at |Q|=10k) and
@@ -840,17 +861,34 @@ def _adc_scan(
     all come from one cell, so the cap is a measured-recall trade, not
     a lossless bound — callers size it ≥ 2·shortlist/width (double the
     even-spread share) and the recall floors re-verify it; None keeps
-    the old emit-everything behavior."""
+    the old emit-everything behavior.
+
+    ``k`` (store_raw layouts, the codes scan carrying ``emb``) fuses the
+    exact rerank into the same pass: the kernel also emits the exact
+    cosine of every row it emits — per-dimension left folds from 0.0 in
+    f8 over the raw f4 vector widened to f8, the order of the JVM
+    ``_dot``/``_fold_sum`` the two-pass rerank runs, so the doubles are
+    bitwise equal — and ONE ``query_id`` exchange applies the shortlist
+    window and then the top-k window (cosine DESC, id ASC), returning
+    (query_id, neighbor_id, cosine, rn).  Without ``k`` it returns the
+    shortlist (query_id, neighbor_id)."""
     m_, dsub = meta["m"], meta["dsub"]
     emit_cap = int(per_cell_cap) if per_cell_cap else int(shortlist)
     lut_budget = _LUT_CACHE_BYTES  # snapshot: ships inside the closure
     counters = _BRANCH_COUNTERS  # snapshot: (lut, direct) accs or None
+    exact = k is not None
+    in_cols = ["vec_id", "cell", "code", "nrm"]
+    out_names = ["query_id", "neighbor_id", "pq_cosine"]
+    if exact:
+        in_cols.append("emb")
+        out_names.append("cosine")
     bc = spark.sparkContext.broadcast((books, qids, qmat, qnrm, cell_to_q))
 
     def kernel(batches):
-        import pandas as pd
+        import pyarrow as pa
 
         bks, qi_, qm_, qn_, c2q = bc.value
+        qmT = np.ascontiguousarray(qm_.T)  # per-dimension query columns
         qm3 = qm_.reshape(len(qi_), m_, dsub)
         lut_chunks: dict[int, np.ndarray] = {}
         # bound the per-worker LUT cache: a chunk is 256·m·ksub doubles
@@ -878,22 +916,21 @@ def _adc_scan(
                 lut_chunks[lo] = got
             return got
 
-        for pdf in batches:
-            if len(pdf) == 0:
+        for b in batches:
+            nb = b.num_rows
+            if nb == 0:
                 continue
-            ids = pdf["vec_id"].to_numpy(dtype="i8")
-            nrm = pdf["nrm"].to_numpy(dtype="f8")
-            codes = np.frombuffer(
-                b"".join(pdf["code"].tolist()), dtype="u1"
-            ).reshape(len(ids), m_)
-            home = pdf["cell"].to_numpy(dtype="i8")
-            out_q, out_n, out_s = [], [], []
+            ids = b.column(0).to_numpy(zero_copy_only=False).astype("i8")
+            home = b.column(1).to_numpy(zero_copy_only=False).astype("i8")
+            codes = _fixed_width_bytes(b.column(2), m_)
+            nrm = b.column(3).to_numpy(zero_copy_only=False).astype("f8")
+            out_p, out_r, out_s = [], [], []
             for c in np.unique(home):
                 probing = c2q.get(int(c))
                 if probing is None or not len(probing):
                     continue
-                sel = home == c
-                c_ids, c_codes, c_nrm = ids[sel], codes[sel], nrm[sel]
+                c_rows = np.flatnonzero(home == c)
+                c_ids, c_codes, c_nrm = ids[c_rows], codes[c_rows], nrm[c_rows]
                 # adc[p, j] = sum_m lut[p, m, codes[j, m]] — chunk the
                 # probing queries so the score matrix stays ~MBs.
                 # Probing lists are built in ascending query order, so
@@ -929,31 +966,57 @@ def _adc_scan(
                     adc /= qn_[pr][:, None] * c_nrm[None, :]
                     for row, p in enumerate(pr):
                         mask = c_ids != qi_[p]
-                        cand_ids, cand = c_ids[mask], adc[row][mask]
-                        keep = np.lexsort((cand_ids, -cand))[:emit_cap]
-                        out_q.append(np.full(len(keep), qi_[p], dtype="i8"))
-                        out_n.append(cand_ids[keep])
+                        cand = adc[row][mask]
+                        keep = np.lexsort((c_ids[mask], -cand))[:emit_cap]
+                        out_p.append(np.full(len(keep), p, dtype="i8"))
+                        out_r.append(c_rows[mask][keep])
                         out_s.append(cand[keep])
-            if not out_q:
+            if not out_p:
                 continue
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "pq_cosine": np.concatenate(out_s),
-                }
+            qrow, rows = np.concatenate(out_p), np.concatenate(out_r)
+            cols = [qi_[qrow], ids[rows], np.concatenate(out_s)]
+            if exact:
+                # exact cosine of every emitted row, folded one dimension
+                # at a time (sequential, as the JVM fold).  The stored
+                # nrm is numpy's pairwise sum, so the neighbor norm is
+                # re-folded from the raw vector as the JVM rerank does.
+                flat = b.column(4).flatten().to_numpy(zero_copy_only=False)
+                embT = np.ascontiguousarray(
+                    flat.astype("f8").reshape(nb, len(qmT)).T
+                )
+                dot = np.zeros(len(rows), dtype="f8")
+                sq = np.zeros(nb, dtype="f8")
+                for j, ej in enumerate(embT):
+                    dot += qmT[j][qrow] * ej[rows]
+                    sq += ej * ej
+                cols.append(dot / (qn_[qrow] * np.sqrt(sq)[rows]))
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c) for c in cols], names=out_names
             )
 
-    scored = codes_df.select("vec_id", "cell", "code", "nrm").mapInPandas(
-        kernel, "query_id long, neighbor_id long, pq_cosine double"
+    scored = codes_df.select(*in_cols).mapInArrow(
+        kernel,
+        "query_id long, neighbor_id long, "
+        + ", ".join(f"{c} double" for c in out_names[2:]),
     )
     w_adc = Window.partitionBy("query_id").orderBy(
         F.desc("pq_cosine"), F.asc("neighbor_id")
     )
+    short = scored.withColumn("prn", F.row_number().over(w_adc)).where(
+        F.col("prn") <= shortlist
+    )
+    if not exact:
+        return short.select("query_id", "neighbor_id")
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("cosine"), F.asc("neighbor_id")
+    )
     return (
-        scored.withColumn("prn", F.row_number().over(w_adc))
-        .where(F.col("prn") <= shortlist)
-        .select("query_id", "neighbor_id")
+        short.withColumn("rn", F.row_number().over(w))
+        .where(F.col("rn") <= k)
+        .select(
+            "query_id", "neighbor_id", "cosine",
+            F.col("rn").cast("long").alias("rn"),
+        )
     )
 
 
@@ -1083,51 +1146,97 @@ def choose_search_mode(nlist: int, n_probe: int) -> str:
     return "flat" if n_probe >= nlist * FLAT_MODE_PROBE_FRAC else "ivf"
 
 
-def _probed_cell_dirs(croot: str, cells) -> list[str]:
-    """Direct paths of the probed cell directories across every batch —
-    file listing touches O(batches · probed) dirs, never all nlist."""
-    batches = [
-        os.path.join(croot, b)
-        for b in os.listdir(croot)
-        if b.startswith("batch=")
-    ]
-    return [
-        d
-        for b in batches
-        for c in cells
-        if os.path.isdir(d := os.path.join(b, f"cell={int(c)}"))
-    ]
-
-
-# Per-process scan-relation memo (r16, guide §6/§7.3): creating the
-# DataFrame for a probed-cells read is DRIVER work — file listing over
-# O(probed · batches) directories plus parquet schema inference —
-# measured ~0.9 s per `spark.read.parquet(*126 dirs)` at sf0.1, and a
-# filtered serve paid it TWICE (codes scan + raw-rerank store scan).
-# The codes tree is IMMUTABLE per (generation root, batch-dir set):
-# appends only ADD batch dirs (changing the key), every fold/compaction
-# bumps the generation (changing croot), and files inside a committed
-# batch dir are never rewritten — so a memoized relation can never see
-# stale files.  This memoizes the SCAN RELATION (unresolved rows), not
-# any result: tombstone suppression, predicates and reranks all apply
-# per serve on top.
-_scan_memo: dict[tuple, DataFrame] = {}
+# Per-process scan-relation memo, one entry per COMMITTED BATCH DIR:
+# creating a scan DataFrame is DRIVER work — Spark's file listing (a
+# parallel listing job once a dir holds more than 32 children) plus a
+# parquet schema-inference job — and keying it on the probed-dir set,
+# which changes with every query batch, paid ~1.1-1.9 s of listing on
+# every perfbench ``ann_serve`` serve (4-core host, 6-8k × d=32).  A batch dir is IMMUTABLE once
+# renamed into place (appends add new dirs, every fold/migration writes
+# a new generation root), so its relation is built once per
+# (application, batch dir) and every serve takes the union of the
+# current generation's relations, pruned by ``cell IN (probed)``: a warm
+# serve lists nothing, a serve after an append lists only the new
+# batch.  ``batch`` is the dir's tag as a string literal — never an
+# inferred partition value: inferred from one batch alone, tag "007"
+# reads as the integer 7 and misses its tombstones.  Each entry carries the dir's (inode, mtime) stamp so
+# a layout removed and rebuilt at the same path is never served from a
+# stale listing.  Entries of a superseded generation root are evicted
+# when a newer root of the same layout is scanned; _SCAN_MEMO_MAX bounds
+# the entries of OTHER roots only, so a layout with more batch dirs
+# than the cap does not thrash.  This memoizes SCAN RELATIONS, not
+# results: tombstones, predicates and reranks apply per serve on top.
+_scan_memo: dict[tuple, tuple] = {}
 _SCAN_MEMO_MAX = 64
+
+# The whole-tree read (search_flat_pq, the selectivity fallback), keyed
+# on (application, croot, (croot,)).  Known stale: append_ann_index adds
+# a batch dir without changing the key, so a flat serve in a process
+# that appended misses the new batch (ROADMAP carry-over).
+_tree_memo: dict[tuple, DataFrame] = {}
 
 
 def _codes_scan(spark, croot: str, dirs: list[str]) -> DataFrame:
-    """Memoized `spark.read.option("basePath", croot).parquet(*dirs)`
-    (pass dirs=[croot] for a whole-tree read).  One listing + schema
-    inference per (application, croot, dir set) instead of per serve."""
+    """Memoized whole-tree `spark.read.option("basePath", croot)
+    .parquet(*dirs)` with dirs=[croot] (see _tree_memo)."""
     key = (spark.sparkContext.applicationId, croot, tuple(sorted(dirs)))
-    hit = _scan_memo.get(key)
+    hit = _tree_memo.get(key)
     if hit is not None:
         return hit
     df = spark.read.option("basePath", croot).parquet(*dirs)
-    while len(_scan_memo) >= _SCAN_MEMO_MAX:
-        _scan_memo.pop(next(iter(_scan_memo)))
-    _scan_memo[key] = df
+    while len(_tree_memo) >= _SCAN_MEMO_MAX:
+        _tree_memo.pop(next(iter(_tree_memo)))
+    _tree_memo[key] = df
     return df
+
+
+def _batch_scan(spark, croot: str, cells) -> DataFrame | None:
+    """The codes rows of ``cells`` across every committed batch dir of
+    generation root ``croot``: the union of the memoized per-batch
+    relations (see _scan_memo) with ``cell IN (cells)`` pushed into
+    each scan as a PartitionFilter.  None when no batch holds any row."""
+    import functools
+
+    app = spark.sparkContext.applicationId
+    layout = os.path.dirname(croot)
+    for key in [
+        k for k in _scan_memo
+        if k[0] != app
+        or (
+            os.path.dirname(k[1]) != croot
+            and os.path.dirname(os.path.dirname(k[1])) == layout
+        )
+    ]:
+        del _scan_memo[key]
+    rels = []
+    for name in sorted(os.listdir(croot)):
+        if not name.startswith("batch="):
+            continue
+        bdir = os.path.join(croot, name)
+        st = os.stat(bdir)
+        key = (app, bdir)
+        hit = _scan_memo.get(key)
+        if hit is None or hit[0] != (st.st_ino, st.st_mtime_ns):
+            df = None
+            # an empty append lands a _SUCCESS-only dir, which has no
+            # schema to infer and no rows to serve
+            if any(n.startswith("cell=") for n in os.listdir(bdir)):
+                df = spark.read.parquet(bdir).withColumn(
+                    "batch", F.lit(name.split("=", 1)[1])
+                )
+            others = [
+                k for k in _scan_memo if os.path.dirname(k[1]) != croot
+            ]
+            while others and len(_scan_memo) >= _SCAN_MEMO_MAX:
+                del _scan_memo[others.pop(0)]
+            hit = _scan_memo[key] = ((st.st_ino, st.st_mtime_ns), df)
+        if hit[1] is not None:
+            rels.append(hit[1])
+    if not rels:
+        return None
+    return functools.reduce(DataFrame.unionByName, rels).where(
+        F.col("cell").isin([int(c) for c in cells])
+    )
 
 
 def _apply_id_filter(codes, filter_ids, filter_count: int | None):
@@ -1159,15 +1268,14 @@ def search_ann_index(
     ``auto_n_probe(nlist)`` (the measured default; explicit values
     override).
 
-    Pruning is DIRECT-PATH, not filter-based: the probed
-    batch=*/cell=C directories are enumerated driver-side and handed to
-    the reader explicitly, so file listing touches only
-    O(batches · probed) directories.  Reading the layout root instead
-    makes Spark's parallel partition discovery list ALL nlist
-    directories first (one listing task per directory — ~9k tasks at
-    N=10M before a single byte of codes is read).  The `cell` filter
-    stays on as a semantic guard; it prunes nothing the path list
-    hasn't already.
+    The scan is the union of one memoized relation per committed batch
+    dir (``_batch_scan``), pruned by ``cell IN (probed)`` as a
+    PartitionFilter per batch: unprobed cell dirs are never read, and
+    the listing is paid once per (process, batch dir), not per serve.
+    Reading the layout ROOT instead would re-list every batch and all
+    its nlist cell dirs through one parallel partition discovery (~9k
+    listing tasks at N=10M) — and, memoized, go stale on the next
+    append.
 
     ``model`` (the ``load_ann_model`` triple) and ``cell_to_q`` (the
     driver-side probe map) let a caller that already resolved them —
@@ -1177,23 +1285,38 @@ def search_ann_index(
     resting on an invariant argument, not a mechanism)."""
     if model is None:
         model = load_ann_model(spark, path)
-    meta, cent_mat, books = model
     if n_probe is None:
-        n_probe = auto_n_probe(meta["nlist"])
-    shortlist = max(PQ_SHORTLIST, meta["n"] // PQ_SHORTLIST_FRAC)
+        n_probe = auto_n_probe(model[0]["nlist"])
     if cell_to_q is None:
-        cell_to_q = _probe_map(cent_mat, qmat, n_probe)
+        cell_to_q = _probe_map(model[1], qmat, n_probe)
+    return _ivf_search(
+        spark, path, model, qids, qmat, qnrm, n_probe, cell_to_q,
+        filter_ids=filter_ids, filter_count=filter_count,
+        filter_expr=filter_expr,
+    )
+
+
+def _ivf_search(
+    spark, path, model, qids, qmat, qnrm, n_probe, cell_to_q,
+    filter_ids=None, filter_count=None, filter_expr=None, k=None,
+):
+    """search_ann_index's body; ``k`` fuses the exact rerank into the
+    ADC pass (_adc_scan) and returns the top-k instead of the
+    shortlist."""
+    meta, _cent, books = model
+    shortlist = max(PQ_SHORTLIST, meta["n"] // PQ_SHORTLIST_FRAC)
     # the whole serve resolves ONE meta snapshot: codes tree, tombstone
     # tree, and delete cover all come from the generation this load saw
     croot = _codes_root_gen(path, _gen_of(meta))
     if not os.path.isdir(croot):
         raise FileNotFoundError(f"ANN layout has no codes tree: {croot}")
-    probed_dirs = _probed_cell_dirs(croot, cell_to_q)
-    if not probed_dirs:  # every probed cell empty in every batch
-        return spark.createDataFrame([], "query_id long, neighbor_id long")
-    codes = _codes_scan(spark, croot, probed_dirs).where(
-        F.col("cell").isin([int(c) for c in cell_to_q])
-    )
+    codes = _batch_scan(spark, croot, cell_to_q)
+    if codes is None:  # no batch holds a row
+        return spark.createDataFrame(
+            [],
+            "query_id long, neighbor_id long"
+            + ("" if k is None else ", cosine double, rn long"),
+        )
     codes = _live_codes(spark, path, codes, meta)
     if filter_expr is not None:
         # predicate pushdown: the metadata columns live IN the codes
@@ -1213,7 +1336,7 @@ def search_ann_index(
     cap = _per_cell_cap(len(qids), int(n_probe), shortlist, n_frag)
     return _adc_scan(
         spark, codes, meta, books, qids, qmat, qnrm, shortlist, cell_to_q,
-        per_cell_cap=cap,
+        per_cell_cap=cap, k=k,
     )
 
 
@@ -1283,20 +1406,16 @@ def search_auto(
 
 def raw_rerank_frame(spark, path: str, meta: dict, cells, filter_expr=None):
     """(vec_id, emb, nrm) for the probed cells, read from the layout's
-    own raw column (store_raw builds) — live rows only, direct-path
-    dirs.  Per-serve read cost ∝ probed mass, never corpus size.
-    ``filter_expr`` prunes the store scan by a metadata predicate the
-    same pushed-filter way the codes scan is pruned (meta_cols
-    builds)."""
-    croot = _codes_root_gen(path, _gen_of(meta))
-    dirs = _probed_cell_dirs(croot, cells)
-    if not dirs:
+    own raw column (store_raw builds) — live rows only, through the
+    per-batch scan memo.  Per-serve read cost ∝ probed mass, never
+    corpus size.  ``filter_expr`` prunes the store scan by a metadata
+    predicate the same pushed-filter way the codes scan is pruned
+    (meta_cols builds)."""
+    df = _batch_scan(spark, _codes_root_gen(path, _gen_of(meta)), cells)
+    if df is None:
         return spark.createDataFrame(
             [], "vec_id long, emb array<double>, nrm double"
         )
-    df = _codes_scan(spark, croot, dirs).where(
-        F.col("cell").isin([int(c) for c in cells])
-    )
     if filter_expr is not None:
         df = df.where(F.expr(filter_expr))
     df = _live_codes(spark, path, df, meta)
@@ -1311,12 +1430,25 @@ def serve_topk(
     min_recall: float | None = BULK_RECALL_FLOOR,
 ):
     """The full serving pipeline: |Q|-aware shortlist (``search_auto``
-    semantics) + exact rerank.  A ``store_raw`` layout reranks from the
-    PROBED partitions of its own codes tree — the serving-store shape:
-    at 1M × d=768 the corpus-rescan rerank held the warm serve at ~50 s
-    (a 3 GB scan per batch) while the probed partitions are ~1/100th of
-    that.  Non-raw layouts rerank against ``norms_df`` (vec_id, emb,
-    nrm) — the caller's full-precision store.
+    semantics) + exact rerank, top-``TOP_K`` per query as (query_id,
+    neighbor_id, cosine, rn).
+
+    A ``store_raw`` layout served without ``norms_df`` in IVF mode,
+    inside the interactive band (|Q|·shortlist ≤
+    RERANK_BROADCAST_MAX_ROWS), runs in ONE pass: the ADC kernel reads
+    (vec_id, cell, code, nrm, emb) from the probed cells of the
+    per-batch scan memo, emits the exact cosine beside each ADC score,
+    and one ``query_id`` exchange applies the shortlist window and then
+    the top-k window — partition-local refinement, one global merge.
+    A warm serve is one scan and two Spark jobs (the exchange's map
+    stage and the result): no listing, no schema inference, no query
+    frame, no second scan of the probed cells, no rerank join.  Every
+    other serve keeps the two passes: the shortlist, then
+    ``_exact_rerank`` against the probed partitions of the layout's raw
+    column (raw layouts) or against ``norms_df`` (vec_id, emb, nrm) —
+    the caller's full-precision store, required for non-raw layouts.
+    Both shapes return the same doubles: the one-pass cosine is the
+    JVM fold's arithmetic.
 
     GENERATION-ATOMIC BY CONSTRUCTION (r11 verdict "missing" #2): the
     model — and with it meta.json — is read exactly ONCE here; the
@@ -1336,15 +1468,24 @@ def serve_topk(
         n_probe = plan_n_probe(
             meta["nlist"], meta["n"], len(qids), mode, min_recall=min_recall
         )
+    sl_rows = len(qids) * max(PQ_SHORTLIST, meta["n"] // PQ_SHORTLIST_FRAC)
     smode = choose_search_mode(meta["nlist"], n_probe)
     if smode == "flat":
         shortlist = search_flat_pq(spark, path, qids, qmat, qnrm, model=model)
         cells = list(range(meta["nlist"]))
     else:
         cell_to_q = _probe_map(cent_mat, qmat, n_probe)
-        shortlist = search_ann_index(
-            spark, path, qids, qmat, qnrm, n_probe=n_probe,
-            model=model, cell_to_q=cell_to_q,
+        if (
+            norms_df is None
+            and meta.get("raw")
+            and sl_rows <= RERANK_BROADCAST_MAX_ROWS
+        ):
+            return _ivf_search(
+                spark, path, model, qids, qmat, qnrm, n_probe, cell_to_q,
+                k=TOP_K,
+            )
+        shortlist = _ivf_search(
+            spark, path, model, qids, qmat, qnrm, n_probe, cell_to_q
         )
         cells = list(cell_to_q)
     # the in-place-vs-join economics price the store side by the rows
@@ -1364,7 +1505,6 @@ def serve_topk(
         raise ValueError(
             "non-raw layout needs norms_df (vec_id, emb, nrm) to rerank"
         )
-    sl_rows = len(qids) * max(PQ_SHORTLIST, meta["n"] // PQ_SHORTLIST_FRAC)
     return _exact_rerank(
         spark, norms_df, shortlist, qids, qmat, qnrm, shortlist_rows=sl_rows,
         store_rows=store_est,
@@ -1539,8 +1679,6 @@ def serve_topk_filtered(
     ``mode`` = "auto" (coded rule) | "pre" | "post"; returns
     ``(result_df, mode)``.  One model snapshot serves the whole
     pipeline, as serve_topk."""
-    from .vector import TOP_K, _exact_rerank
-
     if (filter_ids is None) == (filter_expr is None):
         raise ValueError(
             "exactly one of filter_ids / filter_expr must be given"
@@ -1657,7 +1795,7 @@ def serve_topk_filtered(
     if filter_expr is not None:
         # qualifying test from the codes tree's OWN metadata columns —
         # a (vec_id, predicate-cols) column-pruned scan with the
-        # predicate pushed, restricted to the PROBED cell dirs (every
+        # predicate pushed, pruned to the PROBED cells (every
         # overfetched neighbor was read from a probed cell, so the
         # qualifying scan never needs the rest of the corpus).  The
         # overfetched side is |Q|·k' rows, so it BROADCASTS and the
@@ -1669,17 +1807,14 @@ def serve_topk_filtered(
         # in several batch dirs → dropDuplicates on the joined (tiny)
         # result, never on the scan.
         croot0 = _codes_root_gen(path, _gen_of(meta))
-        qdirs = _probed_cell_dirs(croot0, cells)
-        if not qdirs:  # every probed cell empty (fully-dead folds vanish)
+        qscan = _batch_scan(spark, croot0, cells)
+        if qscan is None:  # no batch holds a row (fully-dead folds vanish)
             return (
                 spark.createDataFrame(
                     [], "query_id long, neighbor_id long, cosine double, rn long"
                 ),
                 fmode,
             )
-        qscan = _codes_scan(spark, croot0, qdirs).where(
-            F.col("cell").isin([int(c) for c in cells])
-        )
         # LIVE rows only: a tombstoned row's STALE metadata must never
         # qualify a re-inserted neighbor whose current metadata does
         # not (found by review: delete vec X [qualifying label], re-add

@@ -780,7 +780,8 @@ class DenseAP:
                     names=["vec_id", "exemplar"],
                 )
 
-        return state.mapInArrow(
+        # only (i, s) cross into Python: the kernel never reads r or a
+        return state.select("i", "s").mapInArrow(
             assign_kernel, schema="vec_id long, exemplar long"
         )
 

@@ -498,6 +498,12 @@ PQ_SHORTLIST_FRAC = 2500  # ... grown to N/2500 at scale: the shortlist must
                           # 0.24 at shortlist=50 vs 0.96 at 200)
 _PQ_GATE_MAX_N = 5_000
 
+# interactive rerank band: a |Q|·shortlist estimate at or below this
+# many rows broadcasts the shortlist side of the exact rerank
+# (_exact_rerank), and a raw-layout IVF serve scores the exact cosine
+# inside its one ADC pass instead (ann_index.serve_topk)
+RERANK_BROADCAST_MAX_ROWS = 8_000_000
+
 
 def _pq_train_codebooks(spark, sf_dir, emb=None):
     """Deterministic per-subspace Lloyd codebooks on an md5-ordered
@@ -838,10 +844,11 @@ def _exact_rerank(spark, norms, shortlist_df, qids, qmat, qnrm,
     ``shortlist_rows``: the caller's |Q|·shortlist estimate, which picks
     one of THREE join shapes:
 
-    * ≤ 8M rows (interactive) — broadcast the shortlist side, turning
-      the store join map-side (without the hint the planner shuffled
-      the CORPUS against a few-thousand-row shortlist: ~29 GB of
-      shuffle at 10M×d=768 for a |Q|=10 batch).
+    * ≤ RERANK_BROADCAST_MAX_ROWS (interactive) — broadcast the
+      shortlist side, turning the store join map-side (without the
+      hint the planner shuffled the CORPUS against a few-thousand-row
+      shortlist: ~29 GB of shuffle at 10M×d=768 for a |Q|=10
+      batch).
     * bulk, WHEN the in-place economics win — ``_pair_rerank_inplace``:
       the pair set broadcasts, the full-precision store is scored IN
       PLACE and never shuffles.  What the in-place pass saves is the
@@ -863,7 +870,7 @@ def _exact_rerank(spark, norms, shortlist_df, qids, qmat, qnrm,
     )
     d = len(qmat[0]) if len(qids) else 0
     sl = shortlist_df
-    if shortlist_rows is not None and shortlist_rows <= 8_000_000:
+    if shortlist_rows is not None and shortlist_rows <= RERANK_BROADCAST_MAX_ROWS:
         sl = F.broadcast(sl)
     elif (
         shortlist_rows is not None

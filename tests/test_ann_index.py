@@ -275,9 +275,10 @@ def test_reap_superseded_indexes(tmp_path):
 
 
 def test_direct_path_read_equals_root_scan(spark):
-    """The direct-path probed-cell read (listing O(probed) dirs instead
-    of all nlist — the 26→15 s serve win at 10M) must return exactly
-    the shortlist the root-scan + partition-filter formulation does."""
+    """The serving scan — the union of the memoized per-batch relations
+    (``_batch_scan``), pruned by ``cell IN (probed)`` — must return
+    exactly the shortlist the root-scan + partition-filter formulation
+    does."""
     from pyspark.sql import functions as F
 
     path = ai.build_ann_index(spark, SF_T2)
@@ -309,3 +310,180 @@ def test_probe_map_covers_every_query():
         for p in lst:
             counts[p] = counts.get(p, 0) + 1
     assert all(v == 3 for v in counts.values())
+
+
+# --- one-pass raw serve: bitwise pins and job budget ----------------------
+
+RAW_PROBE = 8  # explicit width: IVF mode on the 63-cell SF_SMALL layout
+
+
+@pytest.fixture(scope="module")
+def raw_layout(spark, tmp_path_factory):
+    """A store_raw layout of SF_SMALL; tests copy it before mutating."""
+    from affinity_propagation_mapreduce_spark.sources import table
+
+    path = str(tmp_path_factory.mktemp("raw") / "layout")
+    raw = table(spark, SF_SMALL, "embeddings").select("vec_id", "embedding")
+    ai.build_ann_index(spark, SF_SMALL, path=path, emb_raw=raw, store_raw=True)
+    return path
+
+
+def _copy_layout(src, tmp_path):
+    import shutil
+
+    dst = str(tmp_path / "layout")
+    shutil.copytree(src, dst)
+    return dst
+
+
+def _store(emb_frame):
+    """(vec_id, emb, nrm) over an embeddings frame, as ``_norms``."""
+    from pyspark.sql import functions as F
+
+    emb = F.col("embedding").cast("array<double>")
+    return emb_frame.select(
+        "vec_id",
+        emb.alias("emb"),
+        F.sqrt(ai._fold_sum(F.transform(emb, lambda x: x * x))).alias("nrm"),
+    )
+
+
+def _near_copies(spark, qmat, first_id: int, seed: int):
+    """One f4 near-copy of every query, ids from ``first_id``."""
+    rng = np.random.default_rng(seed)
+    pts = (qmat + 1e-3 * rng.normal(size=qmat.shape)).astype("f4")
+    rows = [
+        (first_id + i, [float(v) for v in p]) for i, p in enumerate(pts)
+    ]
+    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+
+def _served(df):
+    return sorted(
+        (r.query_id, r.rn, r.neighbor_id, r.cosine.hex()) for r in df.collect()
+    )
+
+
+def _assert_one_pass_equals_two_pass(spark, path, store, qids, qmat, qnrm):
+    one = ai.serve_topk(spark, path, qids, qmat, qnrm, n_probe=RAW_PROBE)
+    # the raw serve ran the one-pass shape: no query frame, no rerank join
+    assert "q_emb" not in one._jdf.queryExecution().executedPlan().toString()
+    two = ai.serve_topk(
+        spark, path, qids, qmat, qnrm, n_probe=RAW_PROBE, norms_df=store
+    )
+    got, want = _served(one), _served(two)
+    assert got == want and len(got) == N_QUERIES * TOP_K
+    return got
+
+
+def test_raw_serve_equals_two_pass_bitwise(spark, raw_layout, tmp_path):
+    """The one-pass raw serve (exact cosine inside the ADC kernel) must
+    equal the two-pass serve over the same corpus bitwise on (query_id,
+    rn, neighbor_id, cosine): after the build, after an IVF-mode append
+    of near-copies (which must be served), and after a delete inside a
+    numeric-looking batch tag (deleted ids are never served)."""
+    from affinity_propagation_mapreduce_spark.sources import table
+
+    path = _copy_layout(raw_layout, tmp_path)
+    qids, qmat, qnrm = ai._query_rows(spark, SF_SMALL)
+    corpus = table(spark, SF_SMALL, "embeddings").select("vec_id", "embedding")
+    assert ai.choose_search_mode(
+        ai._read_meta(path)["nlist"], RAW_PROBE
+    ) == "ivf"
+    _assert_one_pass_equals_two_pass(
+        spark, path, _store(corpus), qids, qmat, qnrm
+    )
+
+    b1 = _near_copies(spark, qmat, 10_000, seed=1)
+    assert ai.append_ann_index(spark, path, b1, "b1") == N_QUERIES
+    store = _store(corpus.unionByName(b1))
+    got = _assert_one_pass_equals_two_pass(spark, path, store, qids, qmat, qnrm)
+    assert {r[2] for r in got} >= set(range(10_000, 10_000 + N_QUERIES))
+
+    # inferred as a partition value from this batch alone, tag "007"
+    # would read back as the integer 7 and its tombstones would miss
+    b7 = _near_copies(spark, qmat, 20_000, seed=7)
+    assert ai.append_ann_index(spark, path, b7, "007") == N_QUERIES
+    dead = list(range(20_000, 20_000 + N_QUERIES, 2))
+    ai.delete_ann_index(
+        spark, path, spark.createDataFrame([(i,) for i in dead], "vec_id long"),
+        "d-007",
+    )
+    store = _store(corpus.unionByName(b1).unionByName(b7))
+    got = _assert_one_pass_equals_two_pass(spark, path, store, qids, qmat, qnrm)
+    served = {r[2] for r in got}
+    assert not served & set(dead)
+    assert served & set(range(20_001, 20_000 + N_QUERIES, 2))
+
+
+def test_raw_serve_keeps_two_pass_rows_for_a_twice_live_id(
+    spark, raw_layout, tmp_path
+):
+    """append_ann_index does not dedupe ids, so one vec_id can be live
+    in two batch dirs.  The one-pass serve then returns exactly what the
+    two-pass serve over the corpus store returns: one row per live copy
+    that survives the shortlist."""
+    from affinity_propagation_mapreduce_spark.sources import table
+
+    path = _copy_layout(raw_layout, tmp_path)
+    qids, qmat, qnrm = ai._query_rows(spark, SF_SMALL)
+    corpus = table(spark, SF_SMALL, "embeddings").select("vec_id", "embedding")
+    b1 = _near_copies(spark, qmat, 10_000, seed=1)
+    assert ai.append_ann_index(spark, path, b1, "b1") == N_QUERIES
+    assert ai.append_ann_index(spark, path, b1, "b1-again") == N_QUERIES
+    got = _assert_one_pass_equals_two_pass(
+        spark, path, _store(corpus.unionByName(b1)), qids, qmat, qnrm
+    )
+    # each query's near-copy is live twice and served twice
+    twice = [r for r in got if r[2] >= 10_000]
+    assert len(twice) == 2 * N_QUERIES
+
+
+def _serve_jobs(spark, path, qids, qmat, qnrm, group):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "raw serve job-count pin")
+    try:
+        rows = ai.serve_topk(
+            spark, path, qids, qmat, qnrm, n_probe=RAW_PROBE
+        ).collect()
+    finally:
+        sc.setJobGroup(None, None)
+    assert len(rows) == len(qids) * TOP_K
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_warm_raw_serve_job_budget(spark, raw_layout, tmp_path):
+    """A warm raw IVF serve runs the one scan: the exchange's map stage
+    and the result — no listing, schema, query-frame, broadcast or
+    second-scan job.  The first serve after an append pays the new
+    batch's listing and schema inference once."""
+    path = _copy_layout(raw_layout, tmp_path)
+    qids, qmat, qnrm = ai._query_rows(spark, SF_SMALL, n_queries=2 * N_QUERIES)
+    first = (qids[:N_QUERIES], qmat[:N_QUERIES], qnrm[:N_QUERIES])
+    second = (qids[N_QUERIES:], qmat[N_QUERIES:], qnrm[N_QUERIES:])
+    _serve_jobs(spark, path, *first, "raw-serve-cold")
+    # a different query set probes a different cell set
+    warm = _serve_jobs(spark, path, *second, "raw-serve-warm")
+    assert warm <= 2, f"expected <= 2 jobs, got {warm}"
+    b1 = _near_copies(spark, first[1], 10_000, seed=1)
+    assert ai.append_ann_index(spark, path, b1, "b1") == N_QUERIES
+    after = _serve_jobs(spark, path, *first, "raw-serve-append")
+    assert after <= 4, f"expected <= 4 jobs, got {after}"
+
+
+def test_batch_scan_relists_a_layout_rebuilt_in_place(
+    spark, raw_layout, churned, tmp_path
+):
+    """A layout removed and rebuilt at the same path in one process must
+    not be scanned through the removed layout's memoized listing."""
+    import shutil
+
+    path = _copy_layout(raw_layout, tmp_path)
+    croot = ai.codes_root(path)
+    cells = range(64)  # covers the nlist of both layouts
+    assert ai._batch_scan(spark, croot, cells).count() == 500
+    shutil.rmtree(path)
+    shutil.copytree(churned[0], path)  # base (450 rows) + batch d1 (50)
+    assert ai.codes_root(path) == croot
+    got = ai._batch_scan(spark, croot, cells).select("vec_id").collect()
+    assert sorted(r.vec_id for r in got) == list(range(500))

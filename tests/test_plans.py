@@ -260,8 +260,8 @@ def test_filtered_serve_pre_mode_semijoins_the_scan(spark):
     assert used == "pre"
     plan = pre._jdf.queryExecution().executedPlan().toString()
     # the semi-join sits below the python ADC kernel (scan side), so it
-    # appears between the parquet scan and the MapInPandas stage
-    scan_side = plan.split("MapInPandas")[-1]
+    # appears between the parquet scan and the MapInArrow stage
+    scan_side = plan.split("MapInArrow")[-1]
     assert "LeftSemi" in scan_side, plan
     post, used = ai.serve_topk_filtered(
         spark, path, qids, qmat, qnrm, fids, mode="post", norms_df=norms
@@ -270,9 +270,9 @@ def test_filtered_serve_pre_mode_semijoins_the_scan(spark):
     plan_post = post._jdf.queryExecution().executedPlan().toString()
     # post-mode: the final rewindow filters via one semi-join ABOVE the
     # rerank window; the codes scan below the kernel stays unfiltered
-    above_kernel = plan_post.split("MapInPandas")[0]
+    above_kernel = plan_post.split("MapInArrow")[0]
     assert "LeftSemi" in above_kernel, plan_post
-    assert "LeftSemi" not in plan_post.split("MapInPandas")[-1], plan_post
+    assert "LeftSemi" not in plan_post.split("MapInArrow")[-1], plan_post
 
 
 def test_filtered_serve_expr_pushes_predicate_into_codes_scan(
@@ -299,7 +299,7 @@ def test_filtered_serve_expr_pushes_predicate_into_codes_scan(
     )
     assert used == "pre"
     plan = pre._jdf.queryExecution().executedPlan().toString()
-    scan_side = plan.split("MapInPandas")[-1]
+    scan_side = plan.split("MapInArrow")[-1]
     assert "EqualTo(label,0)" in scan_side, plan
     assert "LeftSemi" not in scan_side, plan
     post, used = ai.serve_topk_filtered(
@@ -307,11 +307,11 @@ def test_filtered_serve_expr_pushes_predicate_into_codes_scan(
     )
     assert used == "post"
     plan_post = post._jdf.queryExecution().executedPlan().toString()
-    above_kernel = plan_post.split("MapInPandas")[0]
+    above_kernel = plan_post.split("MapInArrow")[0]
     assert "EqualTo(label,0)" in above_kernel, plan_post
     assert "BroadcastHashJoin" in above_kernel, plan_post
     # the codes scan below the kernel stays unfiltered in post-mode
-    assert "EqualTo(label,0)" not in plan_post.split("MapInPandas")[-1]
+    assert "EqualTo(label,0)" not in plan_post.split("MapInArrow")[-1]
 
 
 def test_lakehouse_pruned_scan_still_pushes_predicate(spark):

@@ -203,7 +203,10 @@ def main():
         )
         return
 
-    assert n > ap._BLOCKED().BLOCKED_MAX_N or mode == "dense", "not above gate"
+    # cluster_sparse picks its engine by SPARSE_FUSED_MAX_N
+    assert n > ap._BLOCKED().SPARSE_FUSED_MAX_N or mode == "dense", (
+        "not above gate"
+    )
     kwargs = {"iterations": iters} if iters else {}
     t0 = time.monotonic()
     with PeakState(spark) as ps:
