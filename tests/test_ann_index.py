@@ -416,13 +416,13 @@ def test_raw_serve_equals_two_pass_bitwise(spark, raw_layout, tmp_path):
     assert served & set(range(20_001, 20_000 + N_QUERIES, 2))
 
 
-def test_raw_serve_keeps_two_pass_rows_for_a_twice_live_id(
-    spark, raw_layout, tmp_path
+def test_raw_serves_agree_for_a_twice_live_id(
+    spark, raw_layout, tmp_path, monkeypatch
 ):
     """append_ann_index does not dedupe ids, so one vec_id can be live
-    in two batch dirs.  The one-pass serve then returns exactly what the
-    two-pass serve over the corpus store returns: one row per live copy
-    that survives the shortlist."""
+    in two batch dirs.  The one-pass serve, the raw two-pass serve and
+    the two-pass serve over the corpus store then return the same rows:
+    one per live copy that survives the shortlist."""
     from affinity_propagation_mapreduce_spark.sources import table
 
     path = _copy_layout(raw_layout, tmp_path)
@@ -437,6 +437,35 @@ def test_raw_serve_keeps_two_pass_rows_for_a_twice_live_id(
     # each query's near-copy is live twice and served twice
     twice = [r for r in got if r[2] >= 10_000]
     assert len(twice) == 2 * N_QUERIES
+    # past the crossing bound the raw layout reranks against its own
+    # store, which holds both copies of every near-copy id
+    monkeypatch.setattr(ai, "_ONE_PASS_MAX_VALUES", 0)
+    raw_two = ai.serve_topk(spark, path, qids, qmat, qnrm, n_probe=RAW_PROBE)
+    assert "q_emb" in raw_two._jdf.queryExecution().executedPlan().toString()
+    assert _served(raw_two) == got
+
+
+def test_one_pass_stays_inside_the_measured_crossing(
+    spark, raw_layout, monkeypatch
+):
+    """The one-pass serve runs only while the kernel's estimated vector
+    values (scored rows × d) fit _ONE_PASS_MAX_VALUES; one value past
+    it, the serve keeps the two passes."""
+    qids, qmat, qnrm = ai._query_rows(spark, SF_SMALL)
+    meta, cent_mat, _books = ai.load_ann_model(spark, raw_layout)
+    c2q = ai._probe_map(cent_mat, qmat, RAW_PROBE)
+    values = sum(len(q) for q in c2q.values()) * meta["n"] * (
+        meta["m"] * meta["dsub"]
+    ) / meta["nlist"]
+    assert values <= ai._ONE_PASS_MAX_VALUES
+
+    def plan(bound):
+        monkeypatch.setattr(ai, "_ONE_PASS_MAX_VALUES", bound)
+        df = ai.serve_topk(spark, raw_layout, qids, qmat, qnrm, n_probe=RAW_PROBE)
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    assert "q_emb" not in plan(int(values) + 1)
+    assert "q_emb" in plan(int(values) - 1)
 
 
 def _serve_jobs(spark, path, qids, qmat, qnrm, group):
