@@ -26,27 +26,35 @@ with the matrix stored as row blocks:
   driver in block order, and broadcast back — the classic MR column job;
 * ``DenseAP.chain`` runs the iterations one of two ways, bitwise equal
   in every output.  At N ≤ ap._FAST_MEDIAN_MAX_N a ``retain=False``
-  chain is ONE single-task job: the task cuts state0's rows back into
-  its blocks, runs the bootstrap and all T iterations block by block,
-  combines the partials in block order and emits the final state once.
-  Otherwise one iteration = ONE Arrow-vectorized update/checkpoint job:
-  the kernel applies the update and side-channels the next iteration's
-  column stats, the exemplar set of the state it produced and the
-  iteration's convergence delta max|r_t − r_{t−1}|.
+  chain is the whole query in ONE single-task job over the embeddings
+  broadcast: the task folds S, takes both preference scalars, runs the
+  bootstrap and all T iterations block by block at state0's block
+  bounds, labels every point by ``assign``'s rule and emits the final
+  state once; labels, preferences, exemplar set and deltas ride an
+  accumulator, so ``ap.q_ap_assign`` is that job plus its own action.
+  Otherwise the loop starts from the checkpointed zero state
+  (``state0``, one task per block) and one iteration = ONE
+  Arrow-vectorized update/checkpoint job: the kernel applies the update
+  and side-channels the next iteration's column stats, the exemplar set
+  of the state it produced and the iteration's convergence delta
+  max|r_t − r_{t−1}|.
 
-Float parity: s is computed with the same sequential per-dimension
-accumulation as ``ap.similarity_off_diagonal`` (bitwise equal to DuckDB's
-``list_reduce`` fold), the responsibility update is selection arithmetic
-(bitwise), and availability depends on group sums whose ordering already
-differs between any two engines — outputs that expose it are rounded to 3
-decimals on both sides (ap.py module docstring).  The median preference
-is ``ap._interp_median``, bitwise-equal to ``percentile(s, 0.5)``.
+Float parity: s is computed by one fold (``_fold_s``) with the same
+sequential per-dimension accumulation as ``ap.similarity_off_diagonal``
+(bitwise equal to DuckDB's ``list_reduce`` fold), the responsibility
+update is selection arithmetic (bitwise), and availability depends on
+group sums whose ordering already differs between any two engines —
+outputs that expose it are rounded to 3 decimals on both sides (ap.py
+module docstring).  The median preference is ``ap._interp_median``,
+bitwise-equal to ``percentile(s, 0.5)``.
 
 Scale gate: ``BLOCKED_MAX_N`` bounds the dense N² regime.  Below it
 every dense AP query iterates with ``DenseAP.chain``.  The gate is NOT
-driver-memory-bound — above ap._FAST_MEDIAN_MAX_N the preference is a
-rank-narrowing median and the loop the per-iteration one, so the driver
-only ever sees O(blocks·N) accumulator payloads.  The binding costs are
+driver-memory-bound — below ap._FAST_MEDIAN_MAX_N a query's N² matrix
+lives in its one task (only a direct ``pref_value`` call collects it,
+~200 MB at that gate), and above it the preference is a rank-narrowing
+median and the loop the per-iteration one, so the driver only ever sees
+O(N) labels and O(blocks·N) accumulator payloads.  The binding costs are
 the N² kernel work per iteration and the two resident 3·N²·8 B
 checkpointed states (measured: N=12k blocked exceeds 10 min while the
 coordinate loop takes 661 s — PLANS.md "blocked-gate probe").  Above the
@@ -75,21 +83,33 @@ BLOCKED_MAX_N = 10_000  # N² kernel work + 2 resident N² states bound this
 # one-task 4.5–5.2 s, coordinate loop 9.1–9.3 s (36 jobs), the deleted
 # distributed ragged loop 9.7–11.0 s (20 jobs).
 SPARSE_FUSED_MAX_N = 4_000
-# NOTE (dense one-task loop, measured): the r15 "fused-small" dense
+# NOTE (dense one-task query, measured): the r15 "fused-small" dense
 # branch ran similarity + preference + T iterations in one task and lost
-# to the distributed loop (N=2,000: 8.5 s bench reading vs ~4.4 s), so it
-# was reverted.  That result no longer holds for
-# DenseAP._one_task_chain: only the T iterations run in the one task,
-# the similarity (state0's nb tasks) and the final state (a checkpointed
-# relation the assignment reads) stay distributed, and the old kernel
-# was slower — it took the 2nd max with np.partition (1.7 s vs 0.04 s
-# per 2000² block for the masked max it surfaced, _r_block below) and
-# ran _r_block twice per iteration.  On a 4-core host at N=1,500 (T=5)
-# the one-task loop cuts the perfbench ap_dense op from 5.10 s to 2.61 s
-# (medians of 12 alternating pairs, 12 of 12 won) and the traced chain
-# span from 3.48 s to 0.95 s, 7 → 3 Spark jobs per op: five ~0.3 s
-# Python-job floors outweigh ~30 ms of numpy per block per iteration.
-# The 32-core side of the r15 result was not re-measured on this host.
+# to the distributed loop (N=2,000, 32 cores: 8.5 s bench reading vs
+# ~4.4 s), so it was reverted.  DenseAP._one_task_chain runs those steps
+# and the labels in one task again and wins, because that loss was the
+# old kernel's own work: it took the 2nd max with np.partition (1.7 s vs
+# 0.04 s per 2000² block for _r_block's masked max) and ran _r_block
+# twice per iteration.  Without that, a job boundary costs more than the
+# work it spreads: the one-core fold is ~0.24 s at N=1,500, while a
+# separate state0 job paid a job floor and shipped S three ways (54 MB
+# to the JVM, 18 MB back through an accumulator, 18 MB into the loop
+# task), and a separate assignment job read (i, s) a third time.  Warm
+# q_ap_assign per Spark job, the three-job path (state0, loop task,
+# assign) against the one-task query (query task, label count),
+# generated d=32 corpora, T=5, 4-core host, 6 ops (3 processes × 2) each:
+#   N      job                          three jobs    one-task query
+#   1,500  state0 (nb tasks)            0.60–0.75 s   —
+#          loop task / query task       0.73–0.88 s   0.94–1.43 s
+#          assign / label count         0.21–0.45 s   0.02–0.04 s
+#          op wall                      1.91–2.43 s   1.20–1.84 s
+#   5,000  state0 (nb tasks)            3.1–4.5 s     —
+#          loop task / query task       6.8–8.2 s     8.7–10.7 s
+#          assign / label count         0.9–1.1 s     0.02–0.04 s
+#          op wall                      12.1–14.3 s   8.9–10.9 s
+# At N=5,000 the task's one-core fold and preferences alone take
+# 3.9–4.2 s and 0.5–0.7 s, about state0's job wall, and the op is still
+# ~3 s faster.  The 32-core side of the r15 result was not re-measured.
 _TARGET_BLOCK_BYTES = 64 << 20  # per-task state footprint bound (3 N-arrays/row)
 # Work floor per block: the JVM↔Python handshake is paid per TASK, so
 # splitting a small state across every core is a net loss (measured on
@@ -99,6 +119,12 @@ _TARGET_BLOCK_BYTES = 64 << 20  # per-task state footprint bound (3 N-arrays/row
 # the cap stays defaultParallelism and the memory bound still wins at
 # large N, so the choice is problem-size-adaptive, not a core-count tune.
 _MIN_BLOCK_BYTES = 8 << 20
+# Rows per strip of _fold_s: a strip's accumulator and difference rows
+# (2 × 64 × N × 8 B, 1.5 MB at N=1,500) stay cache-resident across the
+# d passes.  N=1,500, d=32, one core, 7 runs each: 0.31–0.38 s
+# unstripped, 0.22–0.25 s in 64-row strips (32 and 128 rows within
+# 0.03 s of 64), bitwise equal.
+_FOLD_STRIP = 64
 
 _STATE_SCHEMA = "i long, s array<double>, r array<double>, a array<double>"
 
@@ -200,6 +226,49 @@ def _block_bounds(n: int, nb: int) -> np.ndarray:
     partitions and the one-task loop's blocks are both cut here, so the
     loop's per-block partials are the partitions' bitwise."""
     return np.linspace(0, n, nb + 1).astype("i8")
+
+
+def _fold_s(av: np.ndarray, m: np.ndarray) -> np.ndarray:
+    """s(i, k) = −Σ_d (av[i, d] − m[k, d])² for every row of ``av``
+    against every row of ``m`` (RAW diagonal: −0.0), folded sequentially
+    per dimension in f8 — the fold of ``ap.similarity_off_diagonal``.
+    The one copy of it: state0's blocks and the one-task chain's matrix.
+
+    Rows are independent, so folding in ``_FOLD_STRIP``-row strips
+    changes no bit; the in-place subtract/square/add is the same
+    elementwise op sequence with less memory traffic (the fold is
+    bandwidth-bound on a 4-core host, not flop-bound)."""
+    out = np.empty((len(av), len(m)))
+    diff = np.empty((min(_FOLD_STRIP, len(av)), len(m)))
+    for lo in range(0, len(av), _FOLD_STRIP):
+        acc = out[lo : lo + _FOLD_STRIP]
+        dv = diff[: len(acc)]
+        acc.fill(0.0)
+        for d in range(m.shape[1]):
+            np.subtract(av[lo : lo + len(acc), d, None], m[None, :, d], out=dv)
+            np.multiply(dv, dv, out=dv)
+            np.add(acc, dv, out=acc)
+        np.negative(acc, out=acc)
+    return out
+
+
+def _pref_scalars(s: np.ndarray) -> dict[str, float]:
+    """Both preference scalars of a full RAW-diagonal s matrix: the
+    exact min and the interpolated median (bitwise ``percentile(s,
+    0.5)``) of its N²−N off-diagonal values."""
+    off = s[~np.eye(len(s), dtype=bool)]
+    return {"min": float(off.min()), "median": _interp_median(off)}
+
+
+def _assign_rows(iv: np.ndarray, s: np.ndarray, ids: np.ndarray, ex: np.ndarray):
+    """``assign``'s rule for the rows ``iv`` of s (columns in ``ids``
+    order) and a non-empty sorted exemplar set ``ex``: argmax over
+    exemplars k of s(i, k), first occurrence == lowest k, and exemplars
+    label themselves."""
+    lab = ex[s[:, np.searchsorted(ids, ex)].argmax(1)]
+    member = np.isin(iv, ex)
+    lab[member] = iv[member]
+    return lab
 
 
 def _r_block(s: np.ndarray, r: np.ndarray, a: np.ndarray, lam: float) -> np.ndarray:
@@ -349,17 +418,16 @@ class DenseAP:
         else:
             self.ids, mat = loaded
         self.n = len(self.ids)
-        # full s matrix (rows in ids order) from state0's side-channel
-        # (small-N only), held until pref_value has taken both scalars
-        self._s_full: np.ndarray | None = None
         self.bc = spark.sparkContext.broadcast((self.ids, mat))
         self.nb = _n_blocks(spark, self.n)
         self._state0: DataFrame | None = None
         self._prefs: dict[str, float] = {}
         # per chain run, keyed (pref, lam, T): the final state's exemplar
-        # set and the T convergence deltas max|r_t − r_{t−1}|
+        # set and the T convergence deltas max|r_t − r_{t−1}|; and per
+        # one-task chain run, the final state's labels
         self._ex_hint: dict[tuple, np.ndarray] = {}
         self._deltas: dict[tuple, np.ndarray] = {}
+        self._labels: dict[tuple, np.ndarray] = {}
 
     def destroy(self) -> None:
         """Release executor-side state when this instance is evicted from
@@ -376,38 +444,25 @@ class DenseAP:
             except Exception:
                 pass
             self._state0 = None
-        self._s_full = None
 
     # -- zero state ----------------------------------------------------
 
     def state0(self) -> DataFrame:
-        """(i, s row, r=0, a=0) with the RAW diagonal (s(i,i) = -0.0);
-        kernels patch the diagonal to the preference at use, so one zero
-        state serves every (pref, lam) chain.
+        """(i, s row, r=0, a=0) with the RAW diagonal (s(i,i) = -0.0),
+        checkpointed once per instance, ``nb`` blocks of ``_fold_s``
+        rows; kernels patch the diagonal to the preference at use, so
+        one zero state serves every (pref, lam) chain.
 
-        Below the small-N collect gate the eager checkpoint job ALSO
-        side-channels each block's s matrix through an accumulator
-        (r16): the preference then assembles the full matrix driver-side
-        from the exact f8 arrays the kernel yielded — the separate
-        ``toArrow`` collect job disappears.  The bytes moved are the same
-        ~N²·8 the collect moved; above the gate no accumulator is
-        attached and nothing is shipped."""
+        The per-iteration loop and ``pref_value`` read it; a
+        ``retain=False`` chain below ap._FAST_MEDIAN_MAX_N does not (it
+        folds S inside its one task)."""
         if self._state0 is not None:
             return self._state0
-        from .ap import _FAST_MEDIAN_MAX_N
-
         bc = self.bc
-        s_acc = (
-            self.spark.sparkContext.accumulator({}, _PartialsAcc())
-            if self.n <= _FAST_MEDIAN_MAX_N
-            else None
-        )
-
         nb = self.nb
 
         def sim_kernel(batches):
             ids_b, m_b = bc.value
-            nd = m_b.shape[1]
             nn = len(ids_b)
             # nb near-equal CONTIGUOUS slices of the sorted-id row range;
             # every embedding the kernel needs is already in the broadcast,
@@ -422,57 +477,27 @@ class DenseAP:
                     lo, hi = int(bounds[blk]), int(bounds[blk + 1])
                     if lo >= hi:
                         continue
-                    ai = ids_b[lo:hi]
-                    av = m_b[lo:hi]
-                    acc = np.zeros((hi - lo, nn), dtype="f8")
-                    diff = np.empty_like(acc)
-                    for d in range(nd):  # sequential over dims == the fold
-                        # in-place subtract/square/add: the same
-                        # elementwise op sequence (bitwise equal), ~40%
-                        # less memory traffic — the fold is
-                        # bandwidth-bound on this host, not flop-bound
-                        np.subtract(av[:, d, None], m_b[None, :, d], out=diff)
-                        np.multiply(diff, diff, out=diff)
-                        np.add(acc, diff, out=acc)
-                    np.negative(acc, out=acc)
-                    if s_acc is not None:
-                        s_acc.add({int(blk): acc.copy()})
                     z = np.zeros((hi - lo, nn), dtype="f8")
-                    yield _encode_state(ai, acc, z, z)
+                    yield _encode_state(
+                        ids_b[lo:hi], _fold_s(m_b[lo:hi], m_b), z, z
+                    )
 
         blocks = self.spark.range(0, nb, 1, nb)
         self._state0 = _ckpt(
             blocks.mapInArrow(sim_kernel, schema=_STATE_SCHEMA),
             eager=True,
         )
-        if s_acc is not None and self._s_full is None:
-            parts = s_acc.value
-            rows = sum(p.shape[0] for p in parts.values())
-            if rows == self.n and all(
-                p.shape[1] == self.n for p in parts.values()
-            ):  # complete cover: blocks ascend, so key order == ids order
-                self._s_full = np.ascontiguousarray(
-                    np.concatenate([parts[b] for b in sorted(parts)])
-                )
-            # else: leave None — _collect_s_full's toArrow collect is the
-            # fallback and bitwise-identical
         return self._state0
 
     # -- preference ----------------------------------------------------
 
     def _collect_s_full(self) -> np.ndarray:
         """The full s matrix (rows in ids order, RAW -0.0 diagonal) for
-        the preference scalars: taken from state0's accumulator
-        side-channel — then no collect job runs at all — and released
-        from the instance, or else collected via ``toArrow`` with the
-        list column's flat values buffer reshaped (same doubles as the
-        old toPandas path without the per-row boxing; r15, guide §6).
-        Small-N only (the caller gates on ap._FAST_MEDIAN_MAX_N)."""
-        state = self.state0()
-        s, self._s_full = self._s_full, None
-        if s is not None:
-            return s
-        tbl = state.select("i", "s").toArrow()
+        the preference scalars, collected from state0 via ``toArrow``
+        with the list column's flat values buffer reshaped (same doubles
+        as a toPandas collect without the per-row boxing).  Small-N only
+        (the caller gates on ap._FAST_MEDIAN_MAX_N)."""
+        tbl = self.state0().select("i", "s").toArrow()
         iv = tbl.column("i").to_numpy()
         scol = tbl.column("s").combine_chunks()
         flat = scol.values.to_numpy(zero_copy_only=False)
@@ -481,12 +506,6 @@ class DenseAP:
         else:
             s = flat.reshape(len(iv), self.n)
         return np.ascontiguousarray(s[np.argsort(iv)])
-
-    def _offdiag(self) -> np.ndarray:
-        s = self._collect_s_full()
-        mask = np.ones(s.shape, dtype=bool)
-        mask[np.arange(self.n), np.arange(self.n)] = False
-        return s[mask]
 
     def _offdiag_df(self) -> DataFrame:
         """The N²−N off-diagonal s values as a DISTRIBUTED one-column
@@ -510,9 +529,11 @@ class DenseAP:
         """Exact preference scalar: interpolated median — bitwise equal
         to ``percentile(s, 0.5)`` — or exact min.
 
-        Below ap._FAST_MEDIAN_MAX_N both derive from one driver collect
-        (in practice state0's side-channel) whose matrix and value array
-        are dropped immediately (~200 MB each at the 5k gate).  Above it
+        A one-task chain records both as it runs, so no query calls this
+        below the gate.  Below ap._FAST_MEDIAN_MAX_N a call (a
+        ``retain=True`` or T=0 chain, a direct caller) derives both from one
+        driver collect of state0's s whose matrix and value array are
+        dropped immediately (~200 MB each at the 5k gate).  Above it
         the driver never sees the N² values at all: min is a plain
         aggregate and the median runs ``ap.exact_median_distributed``
         (rank-narrowing histogram, bounded collect, bitwise-equal — the
@@ -530,9 +551,7 @@ class DenseAP:
             from .ap import _FAST_MEDIAN_MAX_N, exact_median_distributed
 
             if self.n <= _FAST_MEDIAN_MAX_N:
-                vals = self._offdiag()
-                self._prefs["min"] = float(vals.min())
-                self._prefs["median"] = _interp_median(vals)
+                self._prefs.update(_pref_scalars(self._collect_s_full()))
             elif kind == "min":
                 # only the requested scalar: a min chain never pays the
                 # multi-pass median narrowing (review finding r8)
@@ -608,37 +627,41 @@ class DenseAP:
 
         return state.mapInArrow(step_kernel, schema=_STATE_SCHEMA)
 
-    def _one_task_chain(self, iterations: int, pref: float, lam: float):
-        """The bootstrap and all T iterations in ONE single-task job over
-        state0's (i, s) → (final state, exemplar ids, deltas).  The task
-        cuts the id-sorted rows into state0's ``nb`` blocks
+    def _one_task_chain(self, iterations: int, pref: str, lam: float):
+        """The whole dense query in ONE single-task job over the
+        embeddings broadcast → (final state, exemplar ids, deltas,
+        {"min", "median"} preferences, labels).  The task folds S with
+        ``_fold_s`` (state0's rows, bitwise), takes both preference
+        scalars from its off-diagonal as ``pref_value`` does, patches the
+        diagonal to ``pref``'s, cuts the rows into state0's ``nb`` blocks
         (``_block_bounds``), runs ``_stats_partial``/``_block_iteration``
         per block and combines the partials with ``_combine_partials`` in
         block order — the per-iteration loop's arithmetic on the same
-        arrays, so every output is bitwise that loop's.  The final state
-        is emitted once, one Arrow batch per block; the exemplar set and
-        the deltas ride an accumulator."""
+        arrays, so every output is bitwise that loop's.  The labels are
+        ``assign``'s of the final state, one per point in ids order (none
+        when no exemplar was elected).  The final state is emitted once,
+        one Arrow batch per block; everything else rides an
+        accumulator."""
         bc = self.bc
         nb = self.nb
         acc = self.spark.sparkContext.accumulator({}, _PartialsAcc())
 
         def loop_kernel(batches):
-            ids_b, _ = bc.value
-            got = _decode_state(batches, cols=(1,))
-            if got is None:
-                return
-            iv, (s,) = got
-            order = np.argsort(iv)
-            iv, s = iv[order], s[order]  # a writable copy
+            for _ in batches:  # the one driving row of spark.range
+                pass
+            ids_b, m_b = bc.value
+            s = _fold_s(m_b, m_b)
+            prefs = _pref_scalars(s)
+            p = prefs[pref]
             blocks, parts = [], {}
-            bounds = _block_bounds(len(iv), nb)
+            bounds = _block_bounds(len(ids_b), nb)
             for lo, hi in zip(bounds[:-1], bounds[1:]):
                 if lo >= hi:
                     continue
-                biv, sb = iv[lo:hi], s[lo:hi]
+                biv, sb = ids_b[lo:hi], s[lo:hi]
                 rows = np.arange(hi - lo)
                 di = np.searchsorted(ids_b, biv)
-                sb[rows, di] = pref
+                sb[rows, di] = p
                 z = np.zeros_like(sb)
                 colsum, diag_r, r_new = _stats_partial(sb, z, z, rows, di, lam)
                 parts[int(biv[0])] = (colsum, biv, diag_r, [])
@@ -654,19 +677,18 @@ class DenseAP:
                     blocks[j] = (biv, sb, r_new, a_new, r_next, rows, di)
                 colsum, rkk, ex = _combine_partials(parts, ids_b)
                 deltas.append(max(part[4] for part in parts.values()))
-            acc.add({0: (ex, np.array(deltas, dtype="f8"))})
+            lab = _assign_rows(ids_b, s, ids_b, ex) if ex.size else ex
+            acc.add({0: (ex, np.array(deltas, dtype="f8"), prefs, lab)})
             for biv, sb, r, a, *_ in blocks:
                 yield _encode_state(biv, sb, r, a)
 
         state = _ckpt(
-            self.state0()
-            .select("i", "s")  # state0's r and a are zeros: not shipped
-            .coalesce(1)
-            .mapInArrow(loop_kernel, schema=_STATE_SCHEMA),
+            self.spark.range(0, 1, 1, 1).mapInArrow(
+                loop_kernel, schema=_STATE_SCHEMA
+            ),
             eager=True,
         )
-        ex, deltas = acc.value[0]
-        return state, ex, deltas
+        return (state, *acc.value[0])
 
     def chain(
         self,
@@ -679,25 +701,30 @@ class DenseAP:
         convergence deltas are recorded (``ex_hint``/``deltas``), so no
         consumer scans a state for them.
 
-        ``retain=False`` at N ≤ ap._FAST_MEDIAN_MAX_N runs the bootstrap
-        and all T iterations as one single-task job
-        (``_one_task_chain``) and returns only the final state.
-        Otherwise the per-iteration loop runs: one bootstrap column-stats
-        job, then one eager update job per iteration whose accumulator
-        side-channel carries the next iteration's column stats, the
-        exemplar set and the convergence delta.  ``retain=True`` keeps
-        and returns every state; ``retain=False`` releases each previous
-        state's blocks (the ap.iterate() discipline) and returns only the
-        final one.  Both loops are bitwise equal in every output."""
+        ``retain=False`` at N ≤ ap._FAST_MEDIAN_MAX_N (and T ≥ 1) runs
+        the similarity, both preferences, the bootstrap, all T
+        iterations and the labels as one single-task job
+        (``_one_task_chain``), records the preferences and the labels
+        (``labels``) too, and returns only the final state.  Otherwise
+        the per-iteration loop runs from ``state0`` and ``pref_value``:
+        one bootstrap column-stats job, then one eager update job per
+        iteration whose accumulator side-channel carries the next
+        iteration's column stats, the exemplar set and the convergence
+        delta.  ``retain=True`` keeps and returns every state;
+        ``retain=False`` releases each previous state's blocks (the
+        ap.iterate() discipline) and returns only the final one.  Both
+        loops are bitwise equal in every output."""
         from .ap import _FAST_MEDIAN_MAX_N
 
-        p = self.pref_value(pref)
         key = (pref, lam, iterations)
         if not retain and iterations > 0 and self.n <= _FAST_MEDIAN_MAX_N:
-            state, self._ex_hint[key], self._deltas[key] = self._one_task_chain(
-                iterations, p, lam
+            state, self._ex_hint[key], self._deltas[key], prefs, lab = (
+                self._one_task_chain(iterations, pref, lam)
             )
+            self._prefs.update(prefs)
+            self._labels[key] = lab
             return [state]
+        p = self.pref_value(pref)
         sc = self.spark.sparkContext
         state = self.state0()
         stats_bc = self._col_stats(state, p, lam)
@@ -748,6 +775,15 @@ class DenseAP:
         run (unrounded); None if none ran."""
         return self._deltas.get((pref, lam, T))
 
+    def labels(
+        self, pref: str = "median", lam: float = DAMPING, T: int | None = None
+    ) -> np.ndarray | None:
+        """``assign``'s labels of the final state of the one-task chain
+        run with (pref, lam, T): the exemplar of each point in ``ids``
+        order, empty when no exemplar was elected; None if no one-task
+        chain ran."""
+        return self._labels.get((pref, lam, T))
+
     def assign(self, state: DataFrame, ex: np.ndarray) -> DataFrame:
         """label(i) = argmax over exemplars k of s(i,k), ties to lowest k,
         exemplars labeled as themselves (the ap.assign semantics); an
@@ -765,18 +801,13 @@ class DenseAP:
             exb = ex_bc.value
             if len(exb) == 0:
                 return
-            e_di = np.searchsorted(ids_b, exb)
             for b in batches:
                 got = _decode_state([b], cols=(1,))
                 if got is None:
                     continue
                 iv, (s,) = got
-                vals = s[:, e_di]
-                lab = exb[vals.argmax(1)]  # first occurrence == lowest k
-                member = np.isin(iv, exb)
-                lab[member] = iv[member]
                 yield pa.RecordBatch.from_arrays(
-                    [pa.array(iv), pa.array(lab)],
+                    [pa.array(iv), pa.array(_assign_rows(iv, s, ids_b, exb))],
                     names=["vec_id", "exemplar"],
                 )
 

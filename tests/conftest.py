@@ -43,18 +43,43 @@ def pytest_terminal_summary(terminalreporter, exitstatus, config):
         )
 
 
+def _stale_slow_ids(config, slow: set, nodeids: set) -> list:
+    """Slow-list ids whose file was collected whole but which name no
+    collected test: a renamed or deleted test would otherwise leave the
+    slow tier silently.  Files narrowed to single tests by node-id
+    arguments, or by ``--lf``, are not checked."""
+    if config.getoption("lf", default=False):
+        return []
+    base, root = config.invocation_params.dir, config.rootpath
+    narrowed = {
+        os.path.relpath(os.path.join(base, a.split("::")[0]), root).replace("\\", "/")
+        for a in config.args
+        if "::" in a
+    }
+    files = {nid.split("::")[0] for nid in nodeids} - narrowed
+    return sorted(nid for nid in slow - nodeids if nid.split("::")[0] in files)
+
+
 def pytest_collection_modifyitems(config, items):
     try:
         with open(_SLOW_LIST) as fh:
             slow = {ln.strip() for ln in fh if ln.strip()}
     except OSError:
         return
+    nodeids = set()
     for item in items:
         nodeid = item.nodeid.replace("\\", "/")
         if not nodeid.startswith("tests/"):
             nodeid = "tests/" + nodeid.split("tests/")[-1]
+        nodeids.add(nodeid)
         if nodeid in slow:
             item.add_marker(pytest.mark.slow)
+    stale = _stale_slow_ids(config, slow, nodeids)
+    if stale:
+        raise pytest.UsageError(
+            f"{len(stale)} id(s) in tests/slow_tests.txt name no collected "
+            "test of a collected file (renamed or deleted?): " + ", ".join(stale)
+        )
     config.stash[_SLOW_COLLECTED] = sum(
         1 for item in items if item.get_closest_marker("slow") is not None
     )

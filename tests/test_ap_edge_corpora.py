@@ -54,6 +54,7 @@ def test_dense_queries_serve_two_and_three_points(spark, tmp_path, n):
     assert ex == ex_ref.tolist()
     labels = sorted(tuple(r) for r in ap.q_ap_assign(spark, sf).collect())
     assert labels == ([] if len(ex) == 0 else list(enumerate(lab_ref.tolist())))
+    assert (labels == []) == (n == 2)  # two points elect no exemplar
     conv = ap.q_ap_convergence(spark, sf).collect()
     assert [r.iter for r in conv] == list(range(1, ap.T_DEFAULT + 1))
 

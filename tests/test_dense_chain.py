@@ -1,6 +1,8 @@
 """The one dense AP iteration kernel: the fused chain's recorded
 convergence deltas and exemplar sets against the coordinate reference,
-and both sides of the dense one-task gate and of the sparse gate."""
+both sides of the dense one-task gate and of the sparse gate, the
+one-task chain's recorded labels and preferences, and the one
+similarity fold."""
 
 from __future__ import annotations
 
@@ -117,3 +119,52 @@ def test_one_task_chain_bitwise_equals_per_iteration_loop(spark, monkeypatch):
     assert deltas.shape == (T,) and deltas.tobytes() == loop[2].tobytes()
     for got, want in zip(arrays, loop[3]):
         assert got.shape == want.shape and got.tobytes() == want.tobytes()
+
+
+def test_one_task_records_equal_assign_and_collected_prefs(spark, monkeypatch):
+    """The one-task chain's recorded labels are ``assign``'s over its
+    final state, row for row, and its recorded preferences are the
+    scalars of state0's collected matrix — at sf0.01 cut into several
+    blocks, for both preference kinds."""
+    from affinity_propagation_mapreduce_spark.operators import ap, ap_dense
+
+    T = ap.T_DEFAULT
+    monkeypatch.setattr(ap_dense, "_MIN_BLOCK_BYTES", 1 << 20)
+    d = ap_dense.DenseAP(spark, SF_T2)
+    try:
+        assert d.nb > 1 or spark.sparkContext.defaultParallelism == 1
+        for pref in ("median", "min"):
+            st = d.chain(T, pref=pref, retain=False)[-1]
+            ex = d.ex_hint(pref, ap_dense.DAMPING, T)
+            lab = d.labels(pref, ap_dense.DAMPING, T)
+            want = [tuple(r) for r in d.assign(st, ex).collect()]
+            assert ex.size > 0 and len(want) == d.n
+            assert list(zip(d.ids.tolist(), lab.tolist())) == want
+        recorded = dict(d._prefs)
+        s = d._collect_s_full()
+        off = s[~np.eye(d.n, dtype=bool)]
+        assert recorded["min"] == float(off.min())
+        assert recorded["median"] == ap._interp_median(off)
+    finally:
+        d.destroy()
+
+
+def test_fold_strips_equal_untiled_fold():
+    """``_fold_s`` in row strips is bitwise the untiled sequential
+    per-dimension fold, at a row count that is not a multiple of the
+    strip and for a block of rows against all of them."""
+    from affinity_propagation_mapreduce_spark.operators import ap_dense
+
+    n = 2 * ap_dense._FOLD_STRIP + 7
+    m = np.random.default_rng(3).normal(size=(n, 11)).astype("f4").astype("f8")
+
+    def untiled(av):
+        acc = np.zeros((len(av), n))
+        for d in range(m.shape[1]):
+            acc += (av[:, d, None] - m[None, :, d]) ** 2
+        return -acc
+
+    for av in (m, m[5 : ap_dense._FOLD_STRIP + 9]):
+        got = ap_dense._fold_s(av, m)
+        assert got.shape == (len(av), n)
+        assert got.tobytes() == untiled(av).tobytes()

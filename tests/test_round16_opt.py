@@ -32,9 +32,9 @@ def test_dense_ap_arrow_embeddings_match_collect(spark):
 
 def test_dense_ap_assign_job_count_budget(spark):
     """The retain=False chain + assignment must stay within its job
-    budget: state0, the one-task loop (bootstrap + all T iterations) and
-    the assignment action — the preference collect rides state0's
-    side-channel, and no per-iteration job is left."""
+    budget: the one-task chain (similarity, preference, bootstrap and
+    all T iterations) and the assignment action — no state0, preference
+    collect or per-iteration job is left."""
     from affinity_propagation_mapreduce_spark.operators import ap_dense
 
     T = 5
@@ -51,11 +51,30 @@ def test_dense_ap_assign_job_count_budget(spark):
             sc.setJobGroup(None, None)
         assert n == d.n
         jobs = sc.statusTracker().getJobIdsForGroup(group)
-        # state0 (1) + the one-task loop (1) + the assign count (1, AQE
-        # may split it in 2)
-        assert len(jobs) <= 4, f"expected <= 4 jobs, got {len(jobs)}"
+        # the one-task chain (1) + the assign count (1, AQE may split it
+        # in 2)
+        assert len(jobs) <= 3, f"expected <= 3 jobs, got {len(jobs)}"
     finally:
         d.destroy()
+
+
+def test_q_ap_assign_job_count_budget(spark):
+    """``q_ap_assign``'s count below the one-task gate: the one-task
+    chain's job, then one job over the single-partition relation of its
+    recorded labels (no exchange)."""
+    from affinity_propagation_mapreduce_spark.operators import ap
+
+    ap.clear_cache()
+    sc = spark.sparkContext
+    group = "q-ap-assign-jobcount"
+    sc.setJobGroup(group, "q_ap_assign job-count pin")
+    try:
+        n = ap.q_ap_assign(spark, SF_SMALL).count()
+    finally:
+        sc.setJobGroup(None, None)
+    assert n == ap._n_points(spark, SF_SMALL)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 2, f"expected <= 2 jobs, got {len(jobs)}"
 
 
 def test_query_rows_arrow_matches_collect(spark):
