@@ -9,10 +9,13 @@ as a reusable on-disk layout and adds a search-only serving path:
 
 * ``build_ann_index`` — trains the sampled-Lloyd IVF coarse quantizer
   (operators/ivf.py) and the per-subspace PQ codebooks
-  (vector._pq_train_codebooks), encodes the WHOLE corpus in one
-  mapInPandas pass (home cell + PQ byte codes + true norm), and lands a
+  (vector._pq_train_codebooks) from one md5-ordered sample
+  (vector.train_quantizers), encodes the WHOLE corpus in one
+  mapInArrow pass (home cell + PQ byte codes + true norm), writes the
+  two model tables from the driver with pyarrow, and lands a
   crash-safe layout (events._layout_write_once: flock'd write-once,
-  temp-dir/rename swap):
+  temp-dir/rename swap) — 4 Spark jobs on a fresh corpus: schema, the
+  sample, the encode map and the cell-tree write:
 
       <path>/meta.json                 build params + corpus size + the
                                        GENERATION pointer (v3)
@@ -87,7 +90,6 @@ from .ivf import (
     build_two_level,
     corpus_rows,
     cost_balanced_nlist,
-    train_centroids,
     two_level_cells,
 )
 from .vector import (
@@ -102,8 +104,8 @@ from .vector import (
     _emb,
     _exact_rerank,
     _fold_sum,
-    _pq_train_codebooks,
     q_knn_cosine_topk,
+    train_quantizers,
 )
 
 # bumped whenever the on-disk layout or the quantizer parameters change:
@@ -245,12 +247,19 @@ def _merged_ledgers(path: str, meta: dict, gen: int) -> tuple[list, list]:
 def _write_cell_tree(rows: DataFrame, out: str) -> None:
     """Land ``rows`` as one codes batch directory partitioned by coarse
     cell — the physical IVF layout every build, append, fold and
-    migration writes.  One shuffle partition per cell gives one file per
-    cell; sorting by vec_id within it keeps row-group min/max stats
-    tight."""
+    migration writes.  Each cell hashes to exactly one shuffle
+    partition, so each cell gets one file per batch.  The partition
+    count is explicit (the session's ``spark.sql.shuffle.partitions``):
+    a bare ``repartition("cell")`` is coalesced by AQE by bytes, and at
+    small batches that folded every cell's file creation into one
+    serial task.  Rows sort by (cell, vec_id) within the partition, so
+    each file is vec_id-ordered and row-group min/max stats stay tight;
+    the partitioned writer sorts by cell itself and would drop a bare
+    vec_id sort beneath it."""
+    parts = int(rows.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     (
-        rows.repartition("cell")
-        .sortWithinPartitions("vec_id")
+        rows.repartition(parts, "cell")
+        .sortWithinPartitions("cell", "vec_id")
         .write.mode("overwrite")
         .partitionBy("cell")
         .parquet(out)
@@ -281,18 +290,48 @@ def _norms(spark, sf_dir):
     )
 
 
+def _embedding_matrix(col, d: int) -> np.ndarray:
+    """(rows, d) float64 matrix over an Arrow list column's flat values
+    buffer, without per-row boxing (the decode ``ap_dense._decode_state``
+    and the ADC kernel use).  A null row, or a row of other than ``d``
+    values, raises ``ValueError``: a flat-buffer reshape would otherwise
+    silently shift every later vector in the batch."""
+    if col.null_count:
+        raise ValueError("null embedding row in the ANN encode input")
+    bad = np.diff(col.offsets.to_numpy(zero_copy_only=False))
+    bad = bad[bad != d]
+    if bad.size:
+        raise ValueError(
+            f"ragged embedding row in the ANN encode input: {int(bad[0])} "
+            f"values, the quantizers are d={d}"
+        )
+    flat = col.flatten().to_numpy(zero_copy_only=False)
+    return flat.astype("f8", copy=False).reshape(len(col), d)
+
+
+def _list_array(mat: np.ndarray):
+    """Arrow list column over a (rows, w) matrix's flat buffer."""
+    import pyarrow as pa
+
+    n, w = mat.shape
+    offs = np.arange(0, (n + 1) * w, w, dtype="i4")
+    return pa.ListArray.from_arrays(
+        pa.array(offs), pa.array(np.ascontiguousarray(mat).ravel())
+    )
+
+
 def _encode_codes(
     spark, emb, cent_mat, sup_ch, books, with_raw: bool = False,
     meta_cols: tuple = (),
 ):
-    """Encode (vec_id, emb) rows against FIXED quantizers: home cell via
-    the (two-level) coarse assignment, PQ byte codes per subspace, true
-    norm computed in the kernel (numpy — NOT the interpreted JVM fold:
-    feeding a fold-computed nrm column would evaluate it per corpus row
-    and the kernel ignored it anyway).  ``with_raw`` carries the
-    full-precision vector through as one more column — parquet is
-    columnar, so the ADC scan's column pruning never touches those
-    bytes, while the exact rerank can read them from the PROBED
+    """Encode (vec_id, emb) rows against FIXED quantizers in one
+    ``mapInArrow`` kernel: ``emb`` is decoded from the list column's
+    flat values buffer (``_embedding_matrix``; a null or ragged row
+    raises), then home cell via the (two-level) coarse assignment, PQ
+    byte codes per subspace, and the true norm in numpy.  ``with_raw``
+    carries the full-precision vector through as one more column —
+    parquet is columnar, so the ADC scan's column pruning never touches
+    those bytes, while the exact rerank can read them from the PROBED
     partitions instead of rescanning the whole corpus (the d=768 warm
     serve was corpus-scan-bound at 50 s; see serve_topk).  Returns
     (encoded_df, broadcast); the caller destroys the broadcast after
@@ -310,17 +349,23 @@ def _encode_codes(
     meta_types = [
         (c, emb.schema[c].dataType.simpleString()) for c in meta_cols
     ]
+    in_cols = ("vec_id", "emb") + meta_cols
+    out_names = ["vec_id", "cell", "code", "nrm"]
+    if with_raw:
+        out_names.append("emb")
+    out_names += list(meta_cols)
     bc = spark.sparkContext.broadcast((cent_mat, sup_ch, books))
 
     def encode(batches):
-        import pandas as pd
+        import pyarrow as pa
 
         c_mat, sc, bks = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
+        for b in batches:
+            nb = b.num_rows
+            if nb == 0:
                 continue
-            x = np.array([list(e) for e in pdf["emb"]], dtype="f8")
-            ids = pdf["vec_id"].to_numpy(dtype="i8")
+            x = _embedding_matrix(b.column(1), m_ * dsub)
+            ids = b.column(0).to_numpy(zero_copy_only=False).astype("i8")
             nrm = np.sqrt((x * x).sum(axis=1))
             if sc is not None:
                 order, _d2, _ = two_level_cells(x, c_mat, sc[0], sc[1], 1)
@@ -332,8 +377,8 @@ def _encode_codes(
                     + (c_mat * c_mat).sum(axis=1)[None, :]
                 )
                 home = d2.argmin(axis=1)
-            xs = x.reshape(len(x), m_, dsub)
-            codes = np.empty((len(x), m_), dtype="u1")
+            xs = x.reshape(nb, m_, dsub)
+            codes = np.empty((nb, m_), dtype="u1")
             for m in range(m_):
                 d2c = (
                     (xs[:, m] * xs[:, m]).sum(axis=1, keepdims=True)
@@ -341,30 +386,68 @@ def _encode_codes(
                     + (bks[m] * bks[m]).sum(axis=1)[None, :]
                 )
                 codes[:, m] = d2c.argmin(axis=1)
-            out = {
-                "vec_id": ids,
-                "cell": home.astype("i8"),
-                "code": [row.tobytes() for row in codes],
-                "nrm": nrm,
-            }
+            cols = [
+                pa.array(ids),
+                pa.array(home.astype("i8")),
+                # one m_-byte code per row over the (rows, m_) buffer
+                pa.Array.from_buffers(
+                    pa.binary(), nb,
+                    [None,
+                     pa.py_buffer(np.arange(0, (nb + 1) * m_, m_, dtype="i4")),
+                     pa.py_buffer(codes.tobytes())],
+                ),
+                pa.array(nrm),
+            ]
             if with_raw:
                 # float32, matching the corpus's own storage precision
                 # (every corpus here lands f4; f8->f4 of an f4 source is
                 # lossless, and storing f8 would double the raw bytes)
-                out["emb"] = list(x.astype("f4"))
-            frame = pd.DataFrame(out)
-            for c in meta_cols:
-                # verbatim pass-through, same Arrow batch row order
-                frame[c] = pdf[c].to_numpy()
-            yield frame
+                cols.append(_list_array(x.astype("f4")))
+            # verbatim pass-through, same Arrow batch row order
+            cols += [b.column(2 + i) for i in range(len(meta_cols))]
+            yield pa.RecordBatch.from_arrays(cols, names=out_names)
 
     schema = "vec_id long, cell long, code binary, nrm double"
     if with_raw:
         schema += ", emb array<float>"
     for c, t in meta_types:
         schema += f", {c} {t}"
-    encoded = emb.mapInPandas(encode, schema)
+    encoded = emb.select(*in_cols).mapInArrow(encode, schema)
     return encoded, bc
+
+
+def _write_model_tables(path: str, cent_mat, books, suffix: str = "") -> None:
+    """Land the two model tables, ``centroids<suffix>.parquet`` (cell
+    long, c_emb array<double>) and ``codebooks<suffix>.parquet`` (m
+    long, code long, vec array<double>), from the driver with pyarrow:
+    each is one ``part-00000.parquet`` plus ``_SUCCESS``, rows in key
+    order.  ``_read_model_arrays_arrow`` and ``load_ann_model``'s Spark
+    fallback read them back.  They are O(sqrt(N)·d) driver arrays, so
+    writing them needs no Spark job."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    m_, ksub, dsub = books.shape
+    tables = {
+        "centroids": pa.table({
+            "cell": pa.array(np.arange(len(cent_mat), dtype="i8")),
+            "c_emb": _list_array(np.asarray(cent_mat, dtype="f8")),
+        }),
+        "codebooks": pa.table({
+            "m": pa.array(np.repeat(np.arange(m_, dtype="i8"), ksub)),
+            "code": pa.array(np.tile(np.arange(ksub, dtype="i8"), m_)),
+            "vec": _list_array(np.asarray(books, dtype="f8").reshape(-1, dsub)),
+        }),
+    }
+    for name, tbl in tables.items():
+        out = os.path.join(path, f"{name}{suffix}.parquet")
+        shutil.rmtree(out, ignore_errors=True)
+        os.makedirs(out)
+        pq.write_table(tbl, os.path.join(out, "part-00000.parquet"))
+        with open(os.path.join(out, "_SUCCESS"), "w"):
+            pass
 
 
 def build_ann_index(
@@ -388,6 +471,13 @@ def build_ann_index(
     cell would run S× oversized for the life of the layout).  The hint
     affects geometry only; meta ``n`` stays the count actually encoded
     (appends advance it).
+
+    A fresh build from ``sf_dir`` runs 4 Spark jobs: the embeddings
+    schema, ONE md5 sample that trains both quantizers
+    (``train_quantizers``), the ``mapInArrow`` encode (the map side of
+    the cell exchange) and the cell-tree write.  The row count is a
+    footer read, and the model tables are written on the driver
+    (``_write_model_tables``).  ``emb_raw`` adds its own count job.
 
     ALL expensive work (training collects AND the corpus encode) runs
     inside write_fn, i.e. under the layout flock AFTER the _SUCCESS
@@ -417,15 +507,10 @@ def build_ann_index(
             n = src.count()
         raw = src.select("vec_id", "embedding", *meta_cols)
         nlist = cost_balanced_nlist(max(n, n_hint or 0), IVFPQ_QUERY_PROBE)
-        cent_mat = train_centroids(
-            raw.select("vec_id", "embedding"), nlist
-        )
+        cent_mat, books = train_quantizers(raw, nlist, n)  # books (m, ksub, dsub)
         sup_ch = (
             build_two_level(cent_mat) if len(cent_mat) >= TWO_LEVEL_MIN else None
         )
-        books = _pq_train_codebooks(
-            spark, sf_dir, raw.select("vec_id", "embedding")
-        )  # (m, ksub, dsub)
         emb = raw.select(
             "vec_id",
             F.col("embedding").cast("array<double>").alias("emb"),
@@ -445,22 +530,7 @@ def build_ann_index(
         _write_cell_tree(
             encoded, os.path.join(tmp, "codes.g0.parquet", "batch=base")
         )
-        spark.createDataFrame(
-            [(i, [float(v) for v in c]) for i, c in enumerate(cent_mat)],
-            "cell long, c_emb array<double>",
-        ).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(tmp, "centroids.parquet")
-        )
-        spark.createDataFrame(
-            [
-                (m, c, [float(v) for v in books[m, c]])
-                for m in range(m_)
-                for c in range(ksub)
-            ],
-            "m long, code long, vec array<double>",
-        ).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(tmp, "codebooks.parquet")
-        )
+        _write_model_tables(tmp, cent_mat, books)
         if meta_cols:
             _write_selectivity_sample(
                 raw.select("vec_id", *meta_cols), n,
@@ -3024,11 +3094,10 @@ def migrate_ann_index(
             source = source.localCheckpoint(eager=True)
         n_live = source.count()
         nlist = cost_balanced_nlist(n_live, IVFPQ_QUERY_PROBE)
-        cent_mat = train_centroids(source, nlist)
+        cent_mat, books = train_quantizers(source, nlist, n_live)
         sup_ch = (
             build_two_level(cent_mat) if len(cent_mat) >= TWO_LEVEL_MIN else None
         )
-        books = _pq_train_codebooks(spark, None, emb=source)
         m_, ksub, dsub = books.shape
         # batch-by-batch re-encode into the next generation's tree
         batch_dirs = sorted(
@@ -3078,22 +3147,7 @@ def migrate_ann_index(
             )
         # new model tables at their FINAL gen-scoped names (crash here →
         # orphans with gen+1 > pointer, reaped age-gated)
-        spark.createDataFrame(
-            [(i, [float(v) for v in c]) for i, c in enumerate(cent_mat)],
-            "cell long, c_emb array<double>",
-        ).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(path, f"centroids.g{gen + 1}.parquet")
-        )
-        spark.createDataFrame(
-            [
-                (m, c, [float(v) for v in books[m, c]])
-                for m in range(m_)
-                for c in range(ksub)
-            ],
-            "m long, code long, vec array<double>",
-        ).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(path, f"codebooks.g{gen + 1}.parquet")
-        )
+        _write_model_tables(path, cent_mat, books, suffix=f".g{gen + 1}")
         import shutil
 
         new_root = _codes_root_gen(path, gen + 1)

@@ -788,7 +788,7 @@ def ivf_candidate_pairs(
     if trained:
         from .ivf import TWO_LEVEL_MIN, build_two_level, train_centroids
 
-        cent_mat = train_centroids(emb, nlist)
+        cent_mat = train_centroids(emb, nlist, n=n)
         cent_ids = np.arange(len(cent_mat), dtype="i8")
         # two-level assignment once the cell count justifies it:
         # coarse work per point drops O(nlist) → O(sqrt(nlist))

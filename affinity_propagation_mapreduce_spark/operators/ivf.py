@@ -95,8 +95,12 @@ def cost_balanced_nlist(n: int, nprobe: int) -> int:
     return max(16, int(round(math.sqrt(nprobe * n))))
 
 
-def md5_sample_rows(emb: DataFrame, k: int) -> list:
-    """Deterministic md5-ordered sample of ``k`` rows, scale-safe.
+SAMPLE_PER_CELL = 8  # centroid training sample per coarse cell
+
+
+def md5_sample(emb: DataFrame, k: int, n: int | None = None) -> list:
+    """The first ``k`` rows of ``emb`` in (md5(vec_id), vec_id) order,
+    returned in that order: one Spark job, scale-safe.
 
     The naive ``orderBy(md5).limit(k).collect()`` makes EVERY scan task
     ship its own partial top-k to the driver — at 10M × d=768 that is
@@ -108,13 +112,20 @@ def md5_sample_rows(emb: DataFrame, k: int) -> list:
     limit's partial results, so it stays small).  Prefix order dominates
     full-string order, so if the filtered set holds ≥ k rows it provably
     contains the true top-k by full md5 — the selected sample is
-    IDENTICAL to the unfiltered formulation (quantizers, and every hash
-    downstream of them, are unchanged); if the filter under-selects
-    (Chernoff ~e^{-k/4} at 2× margin) the unfiltered path runs as a
-    fallback."""
+    IDENTICAL to the unfiltered formulation.  The filtered top-k is
+    collected directly: fewer than k rows back means the filter
+    under-selected (Chernoff ~e^{-k/4} at 2× margin), and the unfiltered
+    formulation runs as the fallback.  ``n`` is the row count of
+    ``emb`` when the caller already holds it (a footer read); it only
+    sizes the threshold, so a stale ``n`` costs at most the fallback,
+    never a different sample.
+
+    A prefix of this order is exactly the smaller sample, so callers
+    that train several quantizers draw the largest sample once and
+    take each one's prefix (``md5_prefix``)."""
     order = [F.md5(F.col("vec_id").cast("string")), F.col("vec_id")]
-    sel = emb
-    n = emb.count()
+    if n is None:
+        n = emb.count()
     if n > 4 * k > 0:
         t = min(1 << 32, int((1 << 32) * 2.0 * k / n) + 1)
         pref = (
@@ -123,19 +134,48 @@ def md5_sample_rows(emb: DataFrame, k: int) -> list:
                 16, 10,
             ).cast("long")
         )
-        filtered = emb.where(pref < t)
-        if filtered.count() >= k:
-            sel = filtered
-    rows = sel.orderBy(*order).limit(k).collect()
-    rows.sort(key=lambda r: r.vec_id)
-    return rows
+        rows = emb.where(pref < t).orderBy(*order).limit(k).collect()
+        if len(rows) >= k:
+            return rows
+    return emb.orderBy(*order).limit(k).collect()
+
+
+def md5_prefix(sample: list, k: int) -> list:
+    """The md5-ordered sample of ``k`` rows taken from a larger
+    ``md5_sample``, sorted by vec_id (the training order)."""
+    return sorted(sample[:k], key=lambda r: r.vec_id)
+
+
+def md5_sample_rows(emb: DataFrame, k: int, n: int | None = None) -> list:
+    """Deterministic md5-ordered sample of ``k`` rows, sorted by vec_id
+    (see ``md5_sample``)."""
+    return md5_prefix(md5_sample(emb, k, n), k)
+
+
+def lloyd_update(pts: np.ndarray, assign: np.ndarray, cent: np.ndarray) -> None:
+    """One Lloyd mean step in place: ``cent[c]`` becomes the mean of the
+    rows of ``pts`` assigned to ``c``; empty cells keep their row.  The
+    per-cell sums are ``np.bincount`` folds, which add in ascending row
+    order exactly as ``pts[assign == c].mean(axis=0)`` does for d ≥ 2
+    (at d = 1 numpy's mean switches to pairwise summation), so the
+    result is bitwise that of the per-cell loop."""
+    k, d = cent.shape
+    counts = np.bincount(assign, minlength=k)
+    sums = np.stack(
+        [np.bincount(assign, weights=pts[:, j], minlength=k) for j in range(d)],
+        axis=1,
+    )
+    live = counts > 0
+    cent[live] = sums[live] / counts[live, None]
 
 
 def train_centroids(
-    emb: DataFrame,
+    emb: DataFrame | None,
     nlist: int,
-    sample_per_cell: int = 8,
+    sample_per_cell: int = SAMPLE_PER_CELL,
     iters: int = 2,
+    n: int | None = None,
+    sample: list | None = None,
 ) -> np.ndarray:
     """Deterministic sampled Lloyd refinement (the k-means|| shortcut:
     train on a bounded sample, not the corpus).
@@ -146,15 +186,18 @@ def train_centroids(
     the ``nlist`` lowest-vec_id sampled points, and refined with
     ``iters`` Lloyd steps in numpy.  Empty cells keep their previous
     centroid.  Everything is a pure function of (vec_id, embedding), so
-    retries and re-runs reproduce the same quantizer.
+    retries and re-runs reproduce the same quantizer.  ``sample`` is a
+    larger ``md5_sample`` the caller already drew (its prefix is this
+    sample); ``n`` is the row count of ``emb`` when known.
 
     On clustered data this tracks the density modes the lowest-id
     pseudo-centroids miss (recall comparison in tests/test_ann_recall.py);
     the lowest-id scheme remains the declared oracle-mirrorable variant.
     """
-    rows = md5_sample_rows(
-        emb.select("vec_id", "embedding"), nlist * sample_per_cell
-    )
+    k = nlist * sample_per_cell
+    if sample is None:
+        sample = md5_sample(emb.select("vec_id", "embedding"), k, n)
+    rows = md5_prefix(sample, k)
     pts = np.array([r.embedding for r in rows], dtype="f8")
     nlist = min(nlist, len(pts))
     cent = pts[:nlist].copy()
@@ -164,11 +207,7 @@ def train_centroids(
             - 2.0 * pts @ cent.T
             + (cent * cent).sum(axis=1)[None, :]
         )
-        assign = d2.argmin(axis=1)
-        for c in range(nlist):
-            members = pts[assign == c]
-            if len(members):
-                cent[c] = members.mean(axis=0)
+        lloyd_update(pts, d2.argmin(axis=1), cent)
     return cent
 
 
@@ -195,10 +234,7 @@ def build_two_level(cent_mat: np.ndarray, iters: int = 2):
         )
         assign = d2.argmin(axis=1)
         if _ < iters:
-            for s in range(nsup):
-                members = cent_mat[assign == s]
-                if len(members):
-                    sup[s] = members.mean(axis=0)
+            lloyd_update(cent_mat, assign, sup)
     children = [np.flatnonzero(assign == s) for s in range(nsup)]
     return sup, children
 

@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..sources import table
-from .ivf import ORACLE_SF_N, cost_balanced_nlist
+from .ivf import ORACLE_SF_N, cost_balanced_nlist, lloyd_update
 
 N_QUERIES = 10  # fixed query ids 0..9 (deterministic contract)
 TOP_K = 5
@@ -505,23 +505,25 @@ _PQ_GATE_MAX_N = 5_000
 RERANK_BROADCAST_MAX_ROWS = 8_000_000
 
 
-def _pq_train_codebooks(spark, sf_dir, emb=None):
+def _pq_train_codebooks(spark, sf_dir, emb=None, sample=None):
     """Deterministic per-subspace Lloyd codebooks on an md5-ordered
     sample — the PQ analogue of ivf.train_centroids (same bounded-sample
     shortcut, same lowest-id init, empty cells keep their codeword).
     Driver cost is O(sample·d) bytes; the returned codebooks are
     M·KSUB·(d/M) doubles (= d·KSUB, ~16 KB here) — broadcastable at any
     corpus size.  ``emb`` (vec_id, embedding) overrides the corpus
-    (incremental index builds train on their base subset)."""
+    (incremental index builds train on their base subset); ``sample``
+    is a larger ``ivf.md5_sample`` the caller already drew (see
+    ``train_quantizers``)."""
     import numpy as np
 
-    if emb is None:
-        emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    from .ivf import md5_sample_rows
+    from .ivf import md5_prefix, md5_sample
 
-    # scale-safe sampler: hash-threshold pre-filter, sample identical
-    # to the plain orderBy+limit (see md5_sample_rows)
-    rows = md5_sample_rows(emb, PQ_TRAIN_SAMPLE)
+    if sample is None:
+        if emb is None:
+            emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+        sample = md5_sample(emb, PQ_TRAIN_SAMPLE)
+    rows = md5_prefix(sample, PQ_TRAIN_SAMPLE)
     pts = np.array([list(r.embedding) for r in rows], dtype="f8")
     d = pts.shape[1]
     # adapt the subspace count to the dimension: PQ_M when it divides d
@@ -563,13 +565,30 @@ def _pq_train_codebooks(spark, sf_dir, emb=None):
                 - 2.0 * sub @ cent.T
                 + (cent * cent).sum(axis=1)[None, :]
             )
-            assign = d2.argmin(axis=1)
-            for c in range(k):
-                members = sub[assign == c]
-                if len(members):
-                    cent[c] = members.mean(axis=0)
+            lloyd_update(sub, d2.argmin(axis=1), cent)
         books[m] = cent
     return books
+
+
+def train_quantizers(emb, nlist: int, n: int | None = None):
+    """The coarse centroids (``ivf.train_centroids``) and the PQ
+    codebooks (``_pq_train_codebooks``) from ONE md5-ordered sample of
+    max(nlist·SAMPLE_PER_CELL, PQ_TRAIN_SAMPLE) rows of ``emb``
+    (vec_id, embedding): each trainer takes its md5-order prefix, which
+    is exactly the sample it would have drawn alone — one Spark job
+    instead of two.  ``n`` is the row count of ``emb`` when the caller
+    holds it.  Returns (cent_mat, books)."""
+    from .ivf import SAMPLE_PER_CELL, md5_sample, train_centroids
+
+    sample = md5_sample(
+        emb.select("vec_id", "embedding"),
+        max(nlist * SAMPLE_PER_CELL, PQ_TRAIN_SAMPLE),
+        n,
+    )
+    return (
+        train_centroids(None, nlist, sample=sample),
+        _pq_train_codebooks(None, None, sample=sample),
+    )
 
 
 def knn_cosine_pq(spark, sf_dir):
@@ -945,16 +964,15 @@ def knn_cosine_ivfpq(spark, sf_dir):
         build_two_level,
         corpus_rows,
         cost_balanced_nlist,
-        train_centroids,
     )
 
     n_corpus = corpus_rows(spark, sf_dir)
     shortlist = max(PQ_SHORTLIST, n_corpus // PQ_SHORTLIST_FRAC)
     nlist = cost_balanced_nlist(n_corpus, N_PROBE)
-    emb_raw = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    cent_mat = train_centroids(emb_raw, nlist)
+    cent_mat, books = train_quantizers(
+        table(spark, sf_dir, "embeddings"), nlist, n_corpus
+    )
     sup_ch = build_two_level(cent_mat) if len(cent_mat) >= TWO_LEVEL_MIN else None
-    books = _pq_train_codebooks(spark, sf_dir)
     m_, k_, dsub = books.shape
 
     emb = _emb(spark, sf_dir)
@@ -1285,8 +1303,9 @@ def q_dedup_embed_cosine_ivf(spark, sf_dir):
     from .ivf import corpus_rows
 
     emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    nlist = cost_balanced_nlist(corpus_rows(spark, sf_dir), DUP_NPROBE)
-    cent_mat = train_centroids(emb, nlist)
+    n = corpus_rows(spark, sf_dir)
+    nlist = cost_balanced_nlist(n, DUP_NPROBE)
+    cent_mat = train_centroids(emb, nlist, n=n)
     cent_ids = np.arange(len(cent_mat), dtype="i8")
     sup_ch = build_two_level(cent_mat) if len(cent_mat) >= TWO_LEVEL_MIN else None
     bc = spark.sparkContext.broadcast((cent_ids, cent_mat, sup_ch))

@@ -468,17 +468,26 @@ def test_one_pass_stays_inside_the_measured_crossing(
     assert "q_emb" in plan(int(values) - 1)
 
 
-def _serve_jobs(spark, path, qids, qmat, qnrm, group):
+def _jobs_in_group(spark, group, fn):
+    """``fn()``'s result and the ids of the Spark jobs it ran."""
     sc = spark.sparkContext
-    sc.setJobGroup(group, "raw serve job-count pin")
+    sc.setJobGroup(group, "job-count pin")
     try:
-        rows = ai.serve_topk(
-            spark, path, qids, qmat, qnrm, n_probe=RAW_PROBE
-        ).collect()
+        out = fn()
     finally:
         sc.setJobGroup(None, None)
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def _serve_jobs(spark, path, qids, qmat, qnrm, group):
+    rows, jobs = _jobs_in_group(
+        spark, group,
+        lambda: ai.serve_topk(
+            spark, path, qids, qmat, qnrm, n_probe=RAW_PROBE
+        ).collect(),
+    )
     assert len(rows) == len(qids) * TOP_K
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    return len(jobs)
 
 
 def test_warm_raw_serve_job_budget(spark, raw_layout, tmp_path):
@@ -516,3 +525,204 @@ def test_batch_scan_relists_a_layout_rebuilt_in_place(
     assert ai.codes_root(path) == croot
     got = ai._batch_scan(spark, croot, cells).select("vec_id").collect()
     assert sorted(r.vec_id for r in got) == list(range(500))
+
+
+# --- build: one sample, driver-written model tables, Arrow encode -----------
+
+
+def test_fresh_build_job_budget(spark, tmp_path):
+    """A fresh build from a table runs 4 Spark jobs: schema, the one
+    quantizer sample, the encode map and the cell-tree write (11 before
+    the sample was shared and the model tables left Spark).  The write
+    runs one task per shuffle partition, each cell in one file."""
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "layout")
+    _, jobs = _jobs_in_group(
+        spark, "ann-build-fresh",
+        lambda: ai.build_ann_index(spark, SF_SMALL, path=path, store_raw=True),
+    )
+    assert len(jobs) <= 4, f"expected <= 4 jobs, got {len(jobs)}"
+    sc = spark.sparkContext
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    write = sc.statusTracker().getJobInfo(max(jobs))
+    tasks = [sc.statusTracker().getStageInfo(s).numTasks for s in write.stageIds]
+    assert max(tasks) == parts, (tasks, parts)
+    base = os.path.join(ai.codes_root(path), "batch=base")
+    cells = [d for d in os.listdir(base) if d.startswith("cell=")]
+    assert len(cells) > 1
+    for c in cells:
+        files = parquet_data_files(os.path.join(base, c))
+        assert len(files) == 1, (c, files)
+        ids = pq.read_table(files[0], columns=["vec_id"]).column(0).to_numpy()
+        assert (np.diff(ids) > 0).all()
+
+
+def test_append_job_budget(spark, raw_layout, tmp_path):
+    path = _copy_layout(raw_layout, tmp_path)
+    qids, qmat, _qnrm = ai._query_rows(spark, SF_SMALL)
+    batch = _near_copies(spark, qmat, 20_000, seed=2)
+    n, jobs = _jobs_in_group(
+        spark, "ann-append",
+        lambda: ai.append_ann_index(spark, path, batch, "j1"),
+    )
+    assert n == len(qids)
+    assert len(jobs) <= 5, f"expected <= 5 jobs, got {len(jobs)}"
+
+
+def _md5_order_ids(ids, k):
+    import hashlib
+
+    key = sorted(ids, key=lambda i: (hashlib.md5(str(i).encode()).hexdigest(), i))
+    return sorted(key[:k])
+
+
+@pytest.mark.parametrize("inflate_n", [False, True], ids=["filtered", "fallback"])
+def test_shared_sample_prefix_equals_md5_sample_rows(spark, inflate_n):
+    """The md5-order prefix of ``train_quantizers``' one sample is the
+    sample each trainer drew alone, on the hash pre-filter branch
+    (n > 4k) and on its under-selection fallback (an inflated n drives
+    the threshold below every row: the filtered top-k comes back short
+    and the unfiltered formulation runs as a second job)."""
+    from affinity_propagation_mapreduce_spark.operators import ivf, vector
+
+    n = 20_000
+    emb = spark.range(n).selectExpr(
+        "id as vec_id",
+        "array(cast(id % 7 as float), cast(id % 11 as float)) as embedding",
+    )
+    nlist = ivf.cost_balanced_nlist(n, vector.IVFPQ_QUERY_PROBE)
+    k_cent, k_pq = nlist * ivf.SAMPLE_PER_CELL, vector.PQ_TRAIN_SAMPLE
+    assert n > 4 * max(k_cent, k_pq) and k_cent != k_pq
+    n_arg = 10**12 if inflate_n else n
+    sample, jobs = _jobs_in_group(
+        spark, f"md5-sample-{inflate_n}",
+        lambda: ivf.md5_sample(emb, max(k_cent, k_pq), n_arg),
+    )
+    assert len(jobs) == (2 if inflate_n else 1)
+    ids = list(range(n))
+    for k in (k_cent, k_pq):
+        prefix = ivf.md5_prefix(sample, k)
+        alone = ivf.md5_sample_rows(emb, k, n)
+        assert prefix == alone
+        assert [r.vec_id for r in prefix] == _md5_order_ids(ids, k)
+
+
+def _loop_lloyd(pts, cent, iters):
+    """The per-cell Lloyd loop the bincount update replaced."""
+    for _ in range(iters):
+        d2 = (
+            (pts * pts).sum(axis=1, keepdims=True)
+            - 2.0 * pts @ cent.T
+            + (cent * cent).sum(axis=1)[None, :]
+        )
+        assign = d2.argmin(axis=1)
+        for c in range(len(cent)):
+            members = pts[assign == c]
+            if len(members):
+                cent[c] = members.mean(axis=0)
+    return cent
+
+
+def _sample_rows(pts):
+    from pyspark.sql import Row
+
+    return [Row(vec_id=i, embedding=[float(v) for v in p]) for i, p in enumerate(pts)]
+
+
+def test_bincount_lloyd_equals_per_cell_loop():
+    """``lloyd_update`` (bincount sums) is bitwise the per-cell
+    ``members.mean(axis=0)`` loop, for the coarse centroids and the PQ
+    codebooks, on a seeded sample whose duplicated rows leave cells
+    empty (an empty cell keeps its row)."""
+    from affinity_propagation_mapreduce_spark.operators import ivf, vector
+
+    rng = np.random.default_rng(11)
+    pts = rng.normal(size=(600, 8)).astype("f4").astype("f8")
+    pts[1] = pts[0]  # two equal initial centroids: the second stays empty
+    pts[300:310] = pts[5]
+    cent = pts[:40].copy()
+    assign = (
+        (pts * pts).sum(axis=1, keepdims=True) - 2.0 * pts @ cent.T
+        + (cent * cent).sum(axis=1)[None, :]
+    ).argmin(axis=1)
+    assert 1 not in set(assign.tolist())  # cell 1 is empty
+    got = cent.copy()
+    ivf.lloyd_update(pts, assign, got)
+    want = _loop_lloyd(pts, cent.copy(), 1)
+    assert got.tobytes() == want.tobytes() and (got[1] == pts[1]).all()
+
+    rows = _sample_rows(pts)  # in id order, so md5 prefixes are id prefixes
+    cent_new = ivf.train_centroids(None, 40, sample=rows)
+    head = pts[: 40 * ivf.SAMPLE_PER_CELL]
+    assert cent_new.tobytes() == _loop_lloyd(head, head[:40].copy(), 2).tobytes()
+
+    books = vector._pq_train_codebooks(None, None, sample=rows)
+    m_, k, dsub = books.shape
+    assert (m_, k, dsub) == (4, 256, 2)
+    for m in range(m_):
+        sub = pts[:, m * dsub : (m + 1) * dsub]
+        want = _loop_lloyd(sub, sub[:k].copy(), 4)
+        assert books[m].tobytes() == want.tobytes(), m
+
+
+def test_driver_written_model_tables_round_trip(spark, tmp_path, monkeypatch):
+    """pyarrow-written model tables read back bitwise through the pyarrow
+    loader and through ``load_ann_model``'s Spark fallback, with the
+    Spark schema the ``createDataFrame(...).coalesce(1)`` writer gave."""
+    import json
+
+    rng = np.random.default_rng(5)
+    cent = rng.normal(size=(10, 6))
+    books = rng.normal(size=(3, 4, 2))
+    path = str(tmp_path / "layout")
+    os.makedirs(path)
+    meta = {"m": 3, "ksub": 4, "dsub": 2}
+    with open(os.path.join(path, "meta.json"), "w") as fh:
+        json.dump(meta, fh)
+    ai._write_model_tables(path, cent, books)
+    for name in ("centroids", "codebooks"):
+        assert os.path.isfile(os.path.join(path, f"{name}.parquet", "_SUCCESS"))
+    c2, b2 = ai._read_model_arrays_arrow(path, meta)
+    assert c2.tobytes() == cent.tobytes() and b2.tobytes() == books.tobytes()
+
+    monkeypatch.setattr(ai, "_read_model_arrays_arrow", lambda p, m: None)
+    _meta, c3, b3 = ai.load_ann_model(spark, path)
+    assert c3.tobytes() == cent.tobytes() and b3.tobytes() == books.tobytes()
+
+    for name, ddl in (
+        ("centroids", "cell long, c_emb array<double>"),
+        ("codebooks", "m long, code long, vec array<double>"),
+    ):
+        got = spark.read.parquet(os.path.join(path, f"{name}.parquet")).schema
+        assert got == spark.createDataFrame([], ddl).schema, name
+
+
+def test_encode_rejects_ragged_or_null_embedding(spark):
+    """The Arrow encode kernel reshapes the flat values buffer, so a
+    ragged row — even one whose batch total still divides by d — or a
+    null row must raise instead of shifting the vectors after it."""
+    import pyarrow as pa
+    from pyspark.errors import PythonException
+
+    t = pa.list_(pa.float64())
+    ok = pa.array([[1.0, 2.0, 3.0, 4.0], [5.0, 6.0, 7.0, 8.0]], t)
+    assert ai._embedding_matrix(ok, 4).shape == (2, 4)
+    for bad in (
+        pa.array([[1.0, 2.0, 3.0, 4.0], [1.0, 2.0, 3.0, 4.0, 5.0], [1.0, 2.0, 3.0]], t),
+        pa.array([[1.0, 2.0, 3.0, 4.0], None], t),
+    ):
+        with pytest.raises(ValueError):
+            ai._embedding_matrix(bad, 4)
+
+    cent = np.eye(2, 4)
+    books = np.zeros((2, 2, 2))
+    rows = [(0, [0.0, 1.0, 2.0, 3.0]), (1, [0.0, 1.0, 2.0, 3.0, 4.0]),
+            (2, [0.0, 1.0, 2.0])]
+    emb = spark.createDataFrame(rows, "vec_id long, emb array<double>")
+    encoded, bc = ai._encode_codes(spark, emb, cent, None, books)
+    try:
+        with pytest.raises(PythonException, match="ragged embedding row"):
+            encoded.collect()
+    finally:
+        bc.destroy(blocking=False)
