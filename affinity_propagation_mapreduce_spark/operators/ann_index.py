@@ -266,17 +266,22 @@ def _write_cell_tree(rows: DataFrame, out: str) -> None:
     )
 
 
-def _landed_rows(spark, out: str) -> int:
+def _landed_rows(out: str) -> int:
     """Row count a maintenance write landed at ``out``, read back from
-    disk for the in-function row gates.  ``partitionBy`` over an EMPTY
+    the written files' parquet footers for the in-function row gates —
+    the number ``spark.read.parquet(out).count()`` returns, without its
+    listing, schema and count jobs.  ``partitionBy`` over an EMPTY
     frame leaves a _SUCCESS-only directory that ``spark.read.parquet``
     rejects with 'Unable to infer schema' (advice r13 #1): such a write
     is removed and counts zero, so no generation carries a schema-less
     batch directory."""
     import shutil
 
-    if parquet_data_files(out):
-        return spark.read.parquet(out).count()
+    import pyarrow.parquet as pq
+
+    files = parquet_data_files(out)
+    if files:
+        return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
     shutil.rmtree(out, ignore_errors=True)
     return 0
 
@@ -2733,7 +2738,7 @@ def compact_ann_index(
         # ratio DESC), so a tight-budget round — or a fully-deleted
         # layout — can fold to zero rows: the folded cells then simply
         # vanish from the new generation
-        n_written = _landed_rows(spark, os.path.join(tmp, fold_batch))
+        n_written = _landed_rows(os.path.join(tmp, fold_batch))
         n_live_f = live_f.count()
         if n_written != n_live_f:
             raise AssertionError(
@@ -3140,7 +3145,7 @@ def migrate_ann_index(
             out = os.path.join(tmp, f"batch=mig-{_safe_tag(tag)}")
             _write_cell_tree(encoded, out)
             # a fully-tombstoned source batch re-encodes to ZERO rows
-            n_written += _landed_rows(spark, out)
+            n_written += _landed_rows(out)
         if n_written != n_live:
             raise AssertionError(
                 f"migration re-encoded {n_written} rows, live set is {n_live}"

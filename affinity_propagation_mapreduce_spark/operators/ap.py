@@ -225,28 +225,22 @@ def similarity_matrix(
     return off.unionByName(diag)
 
 
-# Two uses.  (1) The preference: ≤25M s-values Arrow-collected (~200 MB
-# driver).  Lowered from 10k in round 8 (verdict #7): at the old gate
-# edge the collect coexisted with the blocked engine's O(blocks·N)
-# accumulator payloads for ~800 MB of driver pressure; the distributed
-# percentile fallback is bitwise-equal (cliff-tested) and costs
-# negligible extra wall above 5k points.  (2) DenseAP.chain's one-task
-# query (retain=False): at or below the gate the similarity, both
-# preferences, the bootstrap, all T iterations and the labels run in ONE
-# single-task job, above it state0, the distributed median and one job
-# per iteration.  Warm q_ap_assign ops on a 4-core host (T=5, 4 GB
-# driver heap, generated d=32 corpora, 6 ops per cell except the forced
-# loop's 2), peak RSS of the whole process tree (one loop vs one-task
-# pair is pinned bitwise equal at sf0.01 by tests/test_dense_chain.py):
-#   N       per-iteration loop (gate   one-task query
-#           forced below N)
-#   1,500   5.6–5.7 s, 14 jobs, 2.9 GB   1.2–1.8 s, 2 jobs, 1.0 GB
-#   3,000   9.1–10.4 s, 17 jobs, 5.4 GB  3.9–4.2 s, 2 jobs, 1.8 GB
-#   5,000   26.2–26.7 s, 17 jobs, 6.0 GB 8.9–10.9 s, 2 jobs, 3.2–3.5 GB
-# At N=10,000 an earlier one-task kernel (only the iterations in the
-# task, _r_block twice per iteration, r and a decoded) peaked at ~13.4 GB
-# of 15 GB whole-host used memory (the per-iteration loop: ~7.8 GB),
-# which is why the one task stops at this gate.
+# The coordinate engine's median preference: at or below it ≤25M
+# s-values are Arrow-collected (~200 MB driver) and interpolated on the
+# driver, above it ``exact_median_distributed`` narrows by rank (bitwise
+# equal, cliff-tested).  Lowered from 10k in round 8 (verdict #7): at the
+# old edge the collect coexisted with the blocked engine's accumulator
+# payloads for ~800 MB of driver pressure.  The blocked engine no longer
+# reads it: DenseAP.chain runs one single-task job at every N ≤
+# BLOCKED_MAX_N.  Its per-iteration loop, which served 5,000 < N ≤ 10,000
+# until then, against the one task with a one-core and a threaded fold,
+# q_ap_assign().count() on a 4-core host (4 GB driver heap, generated
+# d=32 corpora, seed 7, 2 ops per process, peak RSS of the process tree;
+# labels, ex_hint, deltas and preferences bitwise equal on all sides):
+#   N       per-iteration loop    one task, 1-core fold  one task, threaded fold
+#   7,500   62.6–73.6 s, 6.6 GB   27.9–36.8 s, 6.1 GB    21.0–28.0 s, 5.5 GB
+#   10,000  125.8–128.8 s, 6.6 GB 63.7–72.2 s, 8.1 GB    44.3–53.2 s, 8.0 GB
+# (17 Spark jobs per op in the loop, 2 in the one task.)
 _FAST_MEDIAN_MAX_N = 5_000
 
 
@@ -1557,25 +1551,18 @@ def _exemplar_df(spark: SparkSession, ex) -> DataFrame:
 
 
 def _labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Final (vec_id, exemplar) assignment, shared by A7/A8.  Below the
-    one-task gate the chain's task already labelled every point, so the
-    relation is those recorded labels in one partition (its count is one
-    job with no exchange).  Above it the argmax runs row-local over the
-    final blocked state — no coordinate N² relation or window is rebuilt
-    for the assignment."""
+    """Final (vec_id, exemplar) assignment, shared by A7/A8: the chain's
+    task already labelled every point, so the relation is those recorded
+    labels in one partition (its count is one job with no exchange)."""
     key = _ckey(spark, sf_dir, "labels")
     if key not in _cache:
-        st = _dense_chain(spark, sf_dir)
+        import pyarrow as pa
+
+        _dense_chain(spark, sf_dir)
         d = _dense(spark, sf_dir)
         lab = d.labels("median", DAMPING, T_DEFAULT)
-        if lab is None:
-            ex = _exemplar_ids(spark, sf_dir)
-            _cache[key] = d.assign(st, ex=ex).localCheckpoint(eager=False)
-        else:
-            import pyarrow as pa
-
-            rows = pa.table({"vec_id": d.ids[: lab.size], "exemplar": lab})
-            _cache[key] = spark.createDataFrame(rows).coalesce(1)
+        rows = pa.table({"vec_id": d.ids[: lab.size], "exemplar": lab})
+        _cache[key] = spark.createDataFrame(rows).coalesce(1)
     return _cache[key]
 
 

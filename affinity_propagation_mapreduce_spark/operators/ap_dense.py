@@ -9,35 +9,27 @@ projection), and at bench scale (N=2000 → 4M rows × 5 iterations) the
 per-job fixed costs dominate: ~3 s/iteration of which <0.1 s is arithmetic.
 
 This module is the SAME algorithm in the shape the MR-AP paper actually
-describes — a row-parallel responsibility job and a column-stats reduce —
-with the matrix stored as row blocks:
+describes — a row-parallel responsibility update and a column-stats
+reduce — with the matrix stored as row blocks:
 
-* state = one DataFrame row per point i: ``(i, s[N], r[N], a[N])``
-  (arrays ordered by ascending vec_id), hash-partitioned into blocks whose
-  size is bounded by ``_TARGET_BLOCK_BYTES`` — block *count* grows as N²,
-  block *size* stays constant, so the layout scales like any other
-  fixed-split relation;
+* state = one row per point i: ``(i, s[N], r[N], a[N])`` (arrays ordered
+  by ascending vec_id), cut into ``nb`` id-contiguous blocks
+  (``_n_blocks``/``_block_bounds``) whose size is bounded by
+  ``_TARGET_BLOCK_BYTES``;
 * the responsibility update is row-local (``_r_block`` — bitwise the
   formulation of ``ap_numpy_oracle.iterate``, itself proven equal to the
   coordinate passes in tests/test_ap_numpy.py);
 * the availability update needs only two N-vectors of column statistics:
-  per-partition partials (rows sorted by i → deterministic numpy pairwise
-  sums) ride an accumulator (O(blocks·N) bytes), are combined on the
-  driver in block order, and broadcast back — the classic MR column job;
-* ``DenseAP.chain`` runs the iterations one of two ways, bitwise equal
-  in every output.  At N ≤ ap._FAST_MEDIAN_MAX_N a ``retain=False``
-  chain is the whole query in ONE single-task job over the embeddings
-  broadcast: the task folds S, takes both preference scalars, runs the
-  bootstrap and all T iterations block by block at state0's block
-  bounds, labels every point by ``assign``'s rule and emits the final
-  state once; labels, preferences, exemplar set and deltas ride an
-  accumulator, so ``ap.q_ap_assign`` is that job plus its own action.
-  Otherwise the loop starts from the checkpointed zero state
-  (``state0``, one task per block) and one iteration = ONE
-  Arrow-vectorized update/checkpoint job: the kernel applies the update
-  and side-channels the next iteration's column stats, the exemplar set
-  of the state it produced and the iteration's convergence delta
-  max|r_t − r_{t−1}|.
+  per-block partials (rows sorted by i → deterministic numpy pairwise
+  sums) combined in block order — the classic MR column job.  The block
+  cut fixes that summation order, and so the output bits;
+* ``DenseAP.chain`` runs the whole query in ONE single-task job over the
+  embeddings broadcast (``_one_task_chain``): the task folds S, takes
+  both preference scalars, runs the bootstrap and all T iterations block
+  by block, labels every point by ``assign``'s rule and emits the final
+  state once; labels, preferences, exemplar set and the convergence
+  deltas max|r_t − r_{t−1}| ride an accumulator, so ``ap.q_ap_assign``
+  is that job plus its own action.
 
 Float parity: s is computed by one fold (``_fold_s``) with the same
 sequential per-dimension accumulation as ``ap.similarity_off_diagonal``
@@ -50,20 +42,19 @@ bitwise-equal to ``percentile(s, 0.5)``.
 
 Scale gate: ``BLOCKED_MAX_N`` bounds the dense N² regime.  Below it
 every dense AP query iterates with ``DenseAP.chain``.  The gate is NOT
-driver-memory-bound — below ap._FAST_MEDIAN_MAX_N a query's N² matrix
-lives in its one task (only a direct ``pref_value`` call collects it,
-~200 MB at that gate), and above it the preference is a rank-narrowing
-median and the loop the per-iteration one, so the driver only ever sees
-O(N) labels and O(blocks·N) accumulator payloads.  The binding costs are
-the N² kernel work per iteration and the two resident 3·N²·8 B
-checkpointed states (measured: N=12k blocked exceeds 10 min while the
-coordinate loop takes 661 s — PLANS.md "blocked-gate probe").  Above the
-gate the dense queries are refused (``ap._dense`` raises):
+driver-memory-bound — the N² matrix lives in one task, and the driver
+only sees O(N) labels and deltas.  The binding costs are the N² kernel
+work per iteration and the task's resident N² arrays (s, r, a and the
+next r: 8.0–8.1 GB peak RSS of the process tree for ``q_ap_assign`` at
+N=10,000, d=32, 4 GB driver heap).  Above
+the gate the dense queries are refused (``ap._dense`` raises):
 ``ap.cluster_sparse`` is the scale path and ``ap.cluster`` the
 coordinate reference.
 """
 
 from __future__ import annotations
+
+import os
 
 import numpy as np
 from pyspark.accumulators import AccumulatorParam
@@ -72,10 +63,10 @@ from pyspark.sql import functions as F
 
 from ..sources import table
 from ..sources.tables import parquet_data_files
-from .ap import _ckpt, _interp_median, _release_ckpt
+from .ap import _ckpt, _interp_median
 
 DAMPING = 0.5
-BLOCKED_MAX_N = 10_000  # N² kernel work + 2 resident N² states bound this
+BLOCKED_MAX_N = 10_000  # N² kernel work + the task's resident N² arrays bound this
 # ap.cluster_sparse's one gate.  At or below it the sparse ragged state
 # (~n·k·24 B, ~3 MB at 4k points, k=32) fits ONE task: build + T
 # iterations + assignment run as a single job (cluster_sparse_blocked);
@@ -110,6 +101,9 @@ SPARSE_FUSED_MAX_N = 4_000
 # At N=5,000 the task's one-core fold and preferences alone take
 # 3.9–4.2 s and 0.5–0.7 s, about state0's job wall, and the op is still
 # ~3 s faster.  The 32-core side of the r15 result was not re-measured.
+# _TARGET_BLOCK_BYTES and _MIN_BLOCK_BYTES size state0's tasks, and the
+# same cut (_n_blocks) is the chain's block order for the column sums:
+# changing either changes the output bits.
 _TARGET_BLOCK_BYTES = 64 << 20  # per-task state footprint bound (3 N-arrays/row)
 # Work floor per block: the JVM↔Python handshake is paid per TASK, so
 # splitting a small state across every core is a net loss (measured on
@@ -223,32 +217,41 @@ def _n_blocks(spark: SparkSession, n: int) -> int:
 def _block_bounds(n: int, nb: int) -> np.ndarray:
     """Row bounds of the ``nb`` near-equal id-contiguous blocks of the
     sorted ids: block b is rows [bounds[b], bounds[b+1]).  State0's
-    partitions and the one-task loop's blocks are both cut here, so the
-    loop's per-block partials are the partitions' bitwise."""
+    partitions and the chain's blocks are both cut here; the cut fixes
+    the order the column sums are combined in, and so the output bits."""
     return np.linspace(0, n, nb + 1).astype("i8")
 
 
-def _fold_s(av: np.ndarray, m: np.ndarray) -> np.ndarray:
+def _fold_s(av: np.ndarray, m: np.ndarray, workers: int = 1) -> np.ndarray:
     """s(i, k) = −Σ_d (av[i, d] − m[k, d])² for every row of ``av``
     against every row of ``m`` (RAW diagonal: −0.0), folded sequentially
     per dimension in f8 — the fold of ``ap.similarity_off_diagonal``.
-    The one copy of it: state0's blocks and the one-task chain's matrix.
+    The one copy of it: state0's blocks, the chain's and
+    ``pref_value``'s matrix.
 
-    Rows are independent, so folding in ``_FOLD_STRIP``-row strips
-    changes no bit; the in-place subtract/square/add is the same
-    elementwise op sequence with less memory traffic (the fold is
-    bandwidth-bound on a 4-core host, not flop-bound)."""
+    Rows are independent, so folding in ``_FOLD_STRIP``-row strips, on
+    ``workers`` threads (the ufuncs release the GIL), changes no bit;
+    the in-place subtract/square/add is the same elementwise op sequence
+    with less memory traffic (the fold is bandwidth-bound on a 4-core
+    host, not flop-bound).  A single-task job passes the host's cores:
+    at N=7,500, d=32 the one-core fold took 12.8 s of the chain task,
+    and 4 threads fold the same rows ~4× faster."""
+    from concurrent.futures import ThreadPoolExecutor
+
     out = np.empty((len(av), len(m)))
-    diff = np.empty((min(_FOLD_STRIP, len(av)), len(m)))
-    for lo in range(0, len(av), _FOLD_STRIP):
+
+    def strip(lo):
         acc = out[lo : lo + _FOLD_STRIP]
-        dv = diff[: len(acc)]
+        dv = np.empty_like(acc)
         acc.fill(0.0)
         for d in range(m.shape[1]):
             np.subtract(av[lo : lo + len(acc), d, None], m[None, :, d], out=dv)
             np.multiply(dv, dv, out=dv)
             np.add(acc, dv, out=acc)
         np.negative(acc, out=acc)
+
+    with ThreadPoolExecutor(workers) as pool:
+        list(pool.map(strip, range(0, len(av), _FOLD_STRIP)))
     return out
 
 
@@ -295,31 +298,13 @@ def _r_block(s: np.ndarray, r: np.ndarray, a: np.ndarray, lam: float) -> np.ndar
     return lam * r + (1 - lam) * (s - excl)
 
 
-def _sorted_block(batches, ids_b: np.ndarray, pref: float):
-    """One partition's state with rows in ascending id (deterministic
-    partial sums) and the s diagonal patched to the preference →
-    (iv, s, r, a, rows, di), or None for an empty partition.  The
-    fancy-indexed matrices are fresh writable copies of the immutable
-    Arrow buffers."""
-    got = _decode_state(batches)
-    if got is None:
-        return None
-    iv, (s, r, a) = got
-    order = np.argsort(iv)
-    iv, s, r, a = iv[order], s[order], r[order], a[order]
-    rows = np.arange(len(iv))
-    di = np.searchsorted(ids_b, iv)
-    s[rows, di] = pref
-    return iv, s, r, a, rows, di
-
-
 def _stats_partial(s, r, a, rows, di, lam: float):
     """A block's column-stats partial of the NEXT responsibilities
     r_new = ``_r_block(s, r, a)``: (clipped column sum Σ_i max(0, r_new)
     with the diagonal excluded — pairwise over the id-sorted rows — the
-    diagonal r_new, and r_new itself).  The one implementation behind the
-    bootstrap job and both loops, so their stats agree bitwise; the
-    one-task loop reuses r_new as the next iteration's responsibilities."""
+    diagonal r_new, and r_new itself).  The chain's bootstrap and every
+    iteration take their stats here, and reuse r_new as the next
+    iteration's responsibilities."""
     r_new = _r_block(s, r, a, lam)
     diag_r = r_new[rows, di].copy()
     rp = np.maximum(r_new, 0.0)
@@ -335,7 +320,7 @@ def _block_iteration(s, r, a, r_new, rows, di, iv, colsum, rkk, lam: float):
     stats, the exemplar candidates of the state (s, r_new, a_new) and
     max|r_new − r| (a max is exact and order-free, so the combined delta
     is bitwise the coordinate join's); r_next is the next iteration's
-    r_new.  Shared by ``_step`` and the one-task loop."""
+    r_new."""
     rp = np.maximum(r_new, 0.0)
     rp[rows, di] = 0.0
     a_hat = np.minimum(0.0, rkk[None, :] + colsum[None, :] - rp)
@@ -348,13 +333,12 @@ def _block_iteration(s, r, a, r_new, rows, di, iv, colsum, rkk, lam: float):
 
 
 class _PartialsAcc(AccumulatorParam):
-    """Per-partition stats partials keyed by the partition's min row id
-    (the one-task loop's single result under key 0).  Merge is
-    key-OVERWRITE: each partition's partial is deterministic
-    (rows sorted by id inside the kernel), so a retried or speculative
-    task re-adds the identical value under the same key — the
-    accumulator stays correct without relying on Spark's
-    exactly-once-per-result-task bookkeeping."""
+    """The chain task's result (exemplar set, deltas, preferences,
+    labels) under key 0.  Merge is key-OVERWRITE: the task is
+    deterministic, so a retried or speculative attempt re-adds the
+    identical value under the same key — the accumulator stays correct
+    without relying on Spark's exactly-once-per-result-task
+    bookkeeping."""
 
     def zero(self, value):
         return {}
@@ -365,15 +349,14 @@ class _PartialsAcc(AccumulatorParam):
 
 
 def _combine_partials(parts: dict, ids: np.ndarray):
-    """Driver-side combine of accumulator partials in deterministic
-    (min_i-sorted) block order → (colsum, rkk, exemplar_ids).
+    """Combine the per-block partials in deterministic (min_i-sorted)
+    block order → (colsum, rkk, exemplar_ids).
 
     Completeness invariant: the diag_i ids across all partials must cover
-    every id exactly once.  The fused loop's column stats ride a task
-    side-channel; a partial that was silently dropped (a future refactor
-    yielding early, a kernel filtering all rows) would otherwise corrupt
-    every later iteration without any symptom — this one O(N) check turns
-    that into a loud failure."""
+    every id exactly once.  A partial that was silently dropped (a future
+    refactor skipping a block) would otherwise corrupt every later
+    iteration without any symptom — this one O(N) check turns that into
+    a loud failure."""
     keys = sorted(parts)
     colsum = np.sum(
         np.stack([np.asarray(parts[k][0], dtype="f8") for k in keys]), axis=0
@@ -400,8 +383,8 @@ def _combine_partials(parts: dict, ids: np.ndarray):
 
 class DenseAP:
     """Per-(application, sf_dir) blocked engine instance.  Owns the
-    embedding broadcast, the checkpointed zero state, and the preference
-    scalars; iteration chains are built on demand."""
+    embedding broadcast and the preference scalars; chains are run on
+    demand and record their results here."""
 
     def __init__(self, spark: SparkSession, sf_dir: str):
         self.spark = spark
@@ -423,8 +406,8 @@ class DenseAP:
         self._state0: DataFrame | None = None
         self._prefs: dict[str, float] = {}
         # per chain run, keyed (pref, lam, T): the final state's exemplar
-        # set and the T convergence deltas max|r_t − r_{t−1}|; and per
-        # one-task chain run, the final state's labels
+        # set, the T convergence deltas max|r_t − r_{t−1}| and the final
+        # state's labels
         self._ex_hint: dict[tuple, np.ndarray] = {}
         self._deltas: dict[tuple, np.ndarray] = {}
         self._labels: dict[tuple, np.ndarray] = {}
@@ -450,12 +433,8 @@ class DenseAP:
     def state0(self) -> DataFrame:
         """(i, s row, r=0, a=0) with the RAW diagonal (s(i,i) = -0.0),
         checkpointed once per instance, ``nb`` blocks of ``_fold_s``
-        rows; kernels patch the diagonal to the preference at use, so
-        one zero state serves every (pref, lam) chain.
-
-        The per-iteration loop and ``pref_value`` read it; a
-        ``retain=False`` chain below ap._FAST_MEDIAN_MAX_N does not (it
-        folds S inside its one task)."""
+        rows: the state before iteration 1, for its coordinate view.  No
+        chain reads it: each folds S inside its one task."""
         if self._state0 is not None:
             return self._state0
         bc = self.bc
@@ -491,157 +470,54 @@ class DenseAP:
 
     # -- preference ----------------------------------------------------
 
-    def _collect_s_full(self) -> np.ndarray:
-        """The full s matrix (rows in ids order, RAW -0.0 diagonal) for
-        the preference scalars, collected from state0 via ``toArrow``
-        with the list column's flat values buffer reshaped (same doubles
-        as a toPandas collect without the per-row boxing).  Small-N only
-        (the caller gates on ap._FAST_MEDIAN_MAX_N)."""
-        tbl = self.state0().select("i", "s").toArrow()
-        iv = tbl.column("i").to_numpy()
-        scol = tbl.column("s").combine_chunks()
-        flat = scol.values.to_numpy(zero_copy_only=False)
-        if flat.size != len(iv) * self.n:  # ragged guard: fall back
-            s = np.stack(scol.to_numpy(zero_copy_only=False))
-        else:
-            s = flat.reshape(len(iv), self.n)
-        return np.ascontiguousarray(s[np.argsort(iv)])
-
-    def _offdiag_df(self) -> DataFrame:
-        """The N²−N off-diagonal s values as a DISTRIBUTED one-column
-        relation (``v``): posexplode each state row's s array and drop
-        the diagonal position via a broadcast (id → column index) map.
-        Reads the checkpointed zero state; nothing is collected."""
-        idx = self.spark.createDataFrame(
-            [(int(i), int(j)) for j, i in enumerate(self.ids)],
-            "i long, di int",
-        )
-        return (
-            self.state0()
-            .select("i", F.posexplode("s"))
-            .withColumnRenamed("col", "v")
-            .join(F.broadcast(idx), "i")
-            .where(F.col("pos") != F.col("di"))
-            .select("v")
-        )
-
     def pref_value(self, kind: str = "median") -> float:
         """Exact preference scalar: interpolated median — bitwise equal
-        to ``percentile(s, 0.5)`` — or exact min.
+        to ``percentile(s, 0.5)`` — or exact min of the N²−N off-diagonal
+        similarities.
 
-        A one-task chain records both as it runs, so no query calls this
-        below the gate.  Below ap._FAST_MEDIAN_MAX_N a call (a
-        ``retain=True`` or T=0 chain, a direct caller) derives both from one
-        driver collect of state0's s whose matrix and value array are
-        dropped immediately (~200 MB each at the 5k gate).  Above it
-        the driver never sees the N² values at all: min is a plain
-        aggregate and the median runs ``ap.exact_median_distributed``
-        (rank-narrowing histogram, bounded collect, bitwise-equal — the
-        same routing every other large-N preference uses since round 8).  This removed the last
-        O(N²) driver allocation in the engine; BLOCKED_MAX_N is now
-        bounded by executor state size + O(blocks·N) accumulator
-        payloads, not driver memory.
-
-        (Optimization-round negative result, guide §1: routing the
-        small-N branch through one JVM ``percentile(v,0.5)+min(v)`` agg
-        job instead of the collect was tried and is 5-10× SLOWER — exact
-        percentile buffers a value→count map over ~N² mostly-distinct
-        doubles.  The Arrow collect + np.partition stays.)"""
+        A chain records both as it runs, so no query calls this.  A call
+        before any chain runs one single-task job over the embeddings
+        broadcast that folds S with ``_fold_s`` and takes both scalars
+        with ``_pref_scalars`` — the chain task's own code — so the
+        driver only ever receives the two doubles.  (A JVM
+        ``percentile(v, 0.5)`` + ``min(v)`` aggregate over the exploded
+        values was measured 5-10× slower: exact percentile buffers a
+        value→count map over ~N² mostly-distinct doubles.)"""
         if kind not in self._prefs:
-            from .ap import _FAST_MEDIAN_MAX_N, exact_median_distributed
+            bc = self.bc
 
-            if self.n <= _FAST_MEDIAN_MAX_N:
-                self._prefs.update(_pref_scalars(self._collect_s_full()))
-            elif kind == "min":
-                # only the requested scalar: a min chain never pays the
-                # multi-pass median narrowing (review finding r8)
-                self._prefs["min"] = float(
-                    self._offdiag_df().agg(F.min("v")).first()[0]
-                )
-            else:
-                self._prefs["median"] = float(
-                    exact_median_distributed(self._offdiag_df(), col="v")
-                )
+            def pref_kernel(batches):
+                import pyarrow as pa
+
+                for _ in batches:  # the one driving row of spark.range
+                    pass
+                _, m_b = bc.value
+                p = _pref_scalars(_fold_s(m_b, m_b, os.cpu_count() or 1))
+                yield pa.RecordBatch.from_pydict({k: [v] for k, v in p.items()})
+
+            row = (
+                self.spark.range(0, 1, 1, 1)
+                .mapInArrow(pref_kernel, schema="min double, median double")
+                .first()
+            )
+            self._prefs.update(row.asDict())
         return self._prefs[kind]
 
     # -- iteration -----------------------------------------------------
-
-    def _col_stats(self, state: DataFrame, pref: float, lam: float):
-        """The MR column job, the per-iteration loop's bootstrap:
-        per-partition partials of r_1 collected (O(blocks·N) bytes) and
-        combined on the driver in deterministic block order."""
-        bc = self.bc
-
-        def stats_kernel(batches):
-            import pyarrow as pa
-
-            blk = _sorted_block(batches, bc.value[0], pref)
-            if blk is None:
-                return
-            iv, s, r, a, rows, di = blk
-            colsum, diag_r, _ = _stats_partial(s, r, a, rows, di, lam)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array([int(iv.min())], pa.int64()),
-                    pa.array([colsum]),
-                    pa.array([iv]),
-                    pa.array([diag_r]),
-                ],
-                names=["min_i", "colsum", "diag_i", "diag_r"],
-            )
-
-        parts = state.mapInArrow(
-            stats_kernel,
-            schema="min_i long, colsum array<double>, "
-            "diag_i array<long>, diag_r array<double>",
-        ).collect()
-        colsum, rkk, _ = _combine_partials(
-            {p.min_i: (p.colsum, p.diag_i, p.diag_r, []) for p in parts},
-            self.ids,
-        )
-        return self.spark.sparkContext.broadcast((colsum, rkk))
-
-    def _step(
-        self, state: DataFrame, stats_bc, pref: float, lam: float, acc
-    ) -> DataFrame:
-        """One damped iteration of the per-iteration loop given the
-        broadcast column stats: ``_block_iteration`` per partition, its
-        partial (next column stats, exemplar candidates, delta) through
-        ``acc``.  Emits the next state with the diagonal s patched to the
-        preference."""
-        bc = self.bc
-
-        def step_kernel(batches):
-            ids_b, _ = bc.value
-            colsum, rkk = stats_bc.value
-            blk = _sorted_block(batches, ids_b, pref)
-            if blk is None:
-                return
-            iv, s, r, a, rows, di = blk
-            r_new = _r_block(s, r, a, lam)
-            a_new, _, part = _block_iteration(
-                s, r, a, r_new, rows, di, iv, colsum, rkk, lam
-            )
-            acc.add({int(iv.min()): part})
-            yield _encode_state(iv, s, r_new, a_new)
-
-        return state.mapInArrow(step_kernel, schema=_STATE_SCHEMA)
 
     def _one_task_chain(self, iterations: int, pref: str, lam: float):
         """The whole dense query in ONE single-task job over the
         embeddings broadcast → (final state, exemplar ids, deltas,
         {"min", "median"} preferences, labels).  The task folds S with
-        ``_fold_s`` (state0's rows, bitwise), takes both preference
-        scalars from its off-diagonal as ``pref_value`` does, patches the
-        diagonal to ``pref``'s, cuts the rows into state0's ``nb`` blocks
+        ``_fold_s`` on the host's cores (state0's rows, bitwise), takes
+        both preference scalars from its off-diagonal as ``pref_value``
+        does, patches the diagonal to ``pref``'s, cuts the rows into ``nb`` blocks
         (``_block_bounds``), runs ``_stats_partial``/``_block_iteration``
         per block and combines the partials with ``_combine_partials`` in
-        block order — the per-iteration loop's arithmetic on the same
-        arrays, so every output is bitwise that loop's.  The labels are
-        ``assign``'s of the final state, one per point in ids order (none
-        when no exemplar was elected).  The final state is emitted once,
-        one Arrow batch per block; everything else rides an
-        accumulator."""
+        block order.  The labels are ``assign``'s of the final state, one
+        per point in ids order (none when no exemplar was elected).  The
+        final state is emitted once, one Arrow batch per block;
+        everything else rides an accumulator."""
         bc = self.bc
         nb = self.nb
         acc = self.spark.sparkContext.accumulator({}, _PartialsAcc())
@@ -650,7 +526,7 @@ class DenseAP:
             for _ in batches:  # the one driving row of spark.range
                 pass
             ids_b, m_b = bc.value
-            s = _fold_s(m_b, m_b)
+            s = _fold_s(m_b, m_b, os.cpu_count() or 1)
             prefs = _pref_scalars(s)
             p = prefs[pref]
             blocks, parts = [], {}
@@ -697,67 +573,28 @@ class DenseAP:
         pref: str = "median",
         retain: bool = True,
     ) -> list[DataFrame]:
-        """States after iterations 1..T.  The final exemplar set and the T
-        convergence deltas are recorded (``ex_hint``/``deltas``), so no
-        consumer scans a state for them.
+        """States after iterations 1..T, each from one ``_one_task_chain``
+        job that also records that run's exemplar set, convergence deltas,
+        labels (``ex_hint``/``deltas``/``labels``) and both preferences,
+        so no consumer scans a state for them.
 
-        ``retain=False`` at N ≤ ap._FAST_MEDIAN_MAX_N (and T ≥ 1) runs
-        the similarity, both preferences, the bootstrap, all T
-        iterations and the labels as one single-task job
-        (``_one_task_chain``), records the preferences and the labels
-        (``labels``) too, and returns only the final state.  Otherwise
-        the per-iteration loop runs from ``state0`` and ``pref_value``:
-        one bootstrap column-stats job, then one eager update job per
-        iteration whose accumulator side-channel carries the next
-        iteration's column stats, the exemplar set and the convergence
-        delta.  ``retain=True`` keeps and returns every state;
-        ``retain=False`` releases each previous state's blocks (the
-        ap.iterate() discipline) and returns only the final one.  Both
-        loops are bitwise equal in every output."""
-        from .ap import _FAST_MEDIAN_MAX_N
-
-        key = (pref, lam, iterations)
-        if not retain and iterations > 0 and self.n <= _FAST_MEDIAN_MAX_N:
+        ``retain=False`` runs the T-iteration job once and returns only
+        its final state.  ``retain=True`` runs one job per t = 1..T and
+        returns all T states (bitwise the states after t iterations of
+        the T-run; only tests read them).  Raises ValueError for T < 1:
+        there is no state to return."""
+        if iterations < 1:
+            raise ValueError(f"chain needs T >= 1 iterations, got {iterations}")
+        states: list[DataFrame] = []
+        for t in range(1 if retain else iterations, iterations + 1):
+            key = (pref, lam, t)
             state, self._ex_hint[key], self._deltas[key], prefs, lab = (
-                self._one_task_chain(iterations, pref, lam)
+                self._one_task_chain(t, pref, lam)
             )
             self._prefs.update(prefs)
             self._labels[key] = lab
-            return [state]
-        p = self.pref_value(pref)
-        sc = self.spark.sparkContext
-        state = self.state0()
-        stats_bc = self._col_stats(state, p, lam)
-        states: list[DataFrame] = []
-        deltas: list[float] = []
-        ex: np.ndarray | None = None
-        spent: list = []  # consumed stats broadcasts, destroyed after the loop
-        for it in range(iterations):
-            acc = sc.accumulator({}, _PartialsAcc())
-            prev = state
-            state = _ckpt(self._step(state, stats_bc, p, lam, acc), eager=True)
-            # the eager job consumed the stats; the checkpoint's truncated
-            # lineage can never recompute.  Destroy AFTER the loop, not
-            # here: a mid-loop RemoveBroadcast RPC contends with the next
-            # iteration's task launches (warm A/B: ~0.3 s over T
-            # iterations), while T pinned stats broadcasts are only
-            # 2·N·8 B each — ≤160 KB at the BLOCKED_MAX_N gate.
-            spent.append(stats_bc)
-            if not retain and it > 0:
-                _release_ckpt(prev)
             states.append(state)
-            colsum, rkk, ex = _combine_partials(acc.value, self.ids)
-            deltas.append(max(part[4] for part in acc.value.values()))
-            if it < iterations - 1:  # the final combine only feeds ex
-                stats_bc = sc.broadcast((colsum, rkk))
-        for bc in spent:
-            try:
-                bc.destroy()
-            except Exception:
-                pass
-        self._ex_hint[key] = ex
-        self._deltas[key] = np.array(deltas, dtype="f8")
-        return states if retain else [state]
+        return states
 
     # -- consumers -----------------------------------------------------
 
@@ -778,10 +615,9 @@ class DenseAP:
     def labels(
         self, pref: str = "median", lam: float = DAMPING, T: int | None = None
     ) -> np.ndarray | None:
-        """``assign``'s labels of the final state of the one-task chain
-        run with (pref, lam, T): the exemplar of each point in ``ids``
-        order, empty when no exemplar was elected; None if no one-task
-        chain ran."""
+        """``assign``'s labels of the final state of the chain run with
+        (pref, lam, T): the exemplar of each point in ``ids`` order,
+        empty when no exemplar was elected; None if none ran."""
         return self._labels.get((pref, lam, T))
 
     def assign(self, state: DataFrame, ex: np.ndarray) -> DataFrame:
@@ -819,7 +655,12 @@ class DenseAP:
     def coordinate_view(self, state: DataFrame) -> DataFrame:
         """Explode a blocked state to the coordinate relation
         (i, k, s, r, a) for consumers written against the reference
-        engine (A4/A5 and the parity pins)."""
+        engine (A4/A5 and the parity pins).  A chain state is one
+        partition; the explode runs over ``nb`` hash partitions of it.
+        Counting the T=1 view at N=7,500 (nb=21) on a 4-core host took
+        12.2–12.4 s so, against 13.1–14.1 s over the one partition and
+        15.1–17.0 s over round-robin partitions (which sort the rows
+        first)."""
         bc = self.bc
 
         def explode_kernel(batches):
@@ -842,7 +683,7 @@ class DenseAP:
                     names=["i", "k", "s", "r", "a"],
                 )
 
-        return state.mapInArrow(
+        return state.repartition(self.nb, "i").mapInArrow(
             explode_kernel, schema="i long, k long, s double, r double, a double"
         )
 

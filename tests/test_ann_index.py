@@ -243,6 +243,46 @@ def test_listers_skip_uncommitted_files(spark, churned, tmp_path):
     assert ai._tombstone_rows(tombs) == clean_rows
 
 
+def test_landed_rows_read_from_footers(spark, churned, tmp_path, monkeypatch):
+    """A fold and a migrate count the rows they wrote from the parquet
+    footers: each count equals ``spark.read.parquet(out).count()``, and a
+    two-batch migrate runs no listing, schema or count job per batch."""
+    import shutil
+
+    from affinity_propagation_mapreduce_spark.sources import table
+
+    emb = table(spark, SF_SMALL, "embeddings").select("vec_id", "embedding")
+    timed = str(tmp_path / "timed")
+    shutil.copytree(churned[0], timed)
+    res, jobs = _jobs_in_group(
+        spark, "ann-migrate",
+        lambda: ai.migrate_ann_index(spark, timed, emb_source=emb),
+    )
+    assert res["rows"] == sum(1 for i in range(500) if i % 7 != 2)
+    # 34 with a listing, schema and count job per landed batch
+    assert len(jobs) <= 27, f"expected <= 27 jobs, got {len(jobs)}"
+
+    landed = []
+    real = ai._landed_rows
+
+    def checked(out):
+        want = spark.read.parquet(out).count() if parquet_data_files(out) else 0
+        landed.append((real(out), want))
+        return landed[-1][0]
+
+    monkeypatch.setattr(ai, "_landed_rows", checked)
+    for name, mutate in (
+        ("fold", lambda p: ai.compact_ann_index(spark, p)),
+        ("migrate", lambda p: ai.migrate_ann_index(spark, p, emb_source=emb)),
+    ):
+        path = str(tmp_path / name)
+        shutil.copytree(churned[0], path)
+        mutate(path)
+    # one fold batch, then the migrate's two re-encoded batches
+    assert len(landed) == 3 and all(n > 0 for n, _ in landed)
+    assert [n for n, _ in landed] == [want for _, want in landed]
+
+
 def test_reap_superseded_indexes(tmp_path):
     """Same-corpus layouts with a different fingerprint are removed;
     the current layout and a flock-held sibling survive."""

@@ -1,12 +1,13 @@
-"""The one dense AP iteration kernel: the fused chain's recorded
-convergence deltas and exemplar sets against the coordinate reference,
-both sides of the dense one-task gate and of the sparse gate, the
-one-task chain's recorded labels and preferences, and the one
-similarity fold."""
+"""The one dense AP iteration loop: the chain's recorded convergence
+deltas and exemplar sets against the coordinate reference, its outputs
+against bits pinned from the per-iteration loop it replaced, its
+recorded labels and preferences, both sides of the sparse gate, and
+the one similarity fold."""
 
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from .conftest import SF_SMALL, SF_T2
@@ -79,60 +80,79 @@ def test_sparse_coordinate_loop_equals_fused_small(spark, monkeypatch):
     assert coord == small
 
 
-def test_one_task_chain_bitwise_equals_per_iteration_loop(spark, monkeypatch):
-    """Both sides of the one-task gate, ap._FAST_MEDIAN_MAX_N, at sf0.01
-    with the rows cut into several blocks: the one-task loop's labels,
-    exemplar set, deltas and final (i, s, r, a) arrays must be bitwise
-    the per-iteration loop's."""
+# md5 of the dense chain's outputs at sf0.01, T=5, median preference, cut
+# into 6 blocks (``_TARGET_BLOCK_BYTES`` = 1 MB with the 6 MB state; the
+# 8 MB ``_MIN_BLOCK_BYTES`` work floor keeps the cut off the core count),
+# recorded from the per-iteration loop (one bootstrap column-stats job,
+# then one update job per iteration over state0's blocks) that served
+# 5,000 < N ≤ 10,000 before the one-task chain served every N.
+CHAIN_PINS = {
+    "labels": "7a9a11fd673ebe96f37ef00febeabacc",
+    "ex_hint": "f0f20add3a19c75bbaf1b1024cbfc7da",
+    "deltas": "9c16b52d2a8c36577a6a699b4c85f1f6",
+    "state": "5aa48668fabd0a9e17b889b69fc5ea71",
+    "median": "-0x1.ffd9ad0cec50dp+0",
+    "min": "-0x1.8c726801da5f4p+1",
+}
+
+
+def _md5(b: bytes) -> str:
+    import hashlib
+
+    return hashlib.md5(b).hexdigest()
+
+
+def test_chain_outputs_equal_pinned_bits(spark, monkeypatch):
+    """At sf0.01 cut into several blocks the chain's labels, exemplar
+    set, deltas, preferences and final (i, s, r, a) arrays are bitwise
+    the per-iteration loop's (``CHAIN_PINS``), from one single-partition
+    state."""
     from affinity_propagation_mapreduce_spark.operators import ap, ap_dense
 
     T = ap.T_DEFAULT
-    monkeypatch.setattr(ap_dense, "_MIN_BLOCK_BYTES", 1 << 20)
-
-    def run():
-        d = ap_dense.DenseAP(spark, SF_T2)
-        try:
-            st = d.chain(T, retain=False)[-1]
-            ex = d.ex_hint("median", ap_dense.DAMPING, T)
-            deltas = d.deltas("median", ap_dense.DAMPING, T)
-            labels = sorted(tuple(r) for r in d.assign(st, ex).collect())
-            tbl = st.toArrow()
-            iv = tbl.column("i").to_numpy()
-            order = np.argsort(iv)
-            arrays = [iv[order]] + [
-                np.stack(tbl.column(c).to_numpy(zero_copy_only=False))[order]
-                for c in ("s", "r", "a")
-            ]
-            return d.nb, st.rdd.getNumPartitions(), labels, ex, deltas, arrays
-        finally:
-            d.destroy()
-
-    nb, parts_one, *one = run()
-    monkeypatch.setattr(ap, "_FAST_MEDIAN_MAX_N", ap._n_points(spark, SF_T2) - 1)
-    _, parts_loop, *loop = run()
-    assert parts_one == 1 and parts_loop == nb
-    assert nb > 1 or spark.sparkContext.defaultParallelism == 1
-    labels, ex, deltas, arrays = one
-    assert len(labels) == len(arrays[0]) and ex.size > 0
-    assert labels == loop[0]
-    assert np.array_equal(ex, loop[1])
-    assert deltas.shape == (T,) and deltas.tobytes() == loop[2].tobytes()
-    for got, want in zip(arrays, loop[3]):
-        assert got.shape == want.shape and got.tobytes() == want.tobytes()
-
-
-def test_one_task_records_equal_assign_and_collected_prefs(spark, monkeypatch):
-    """The one-task chain's recorded labels are ``assign``'s over its
-    final state, row for row, and its recorded preferences are the
-    scalars of state0's collected matrix — at sf0.01 cut into several
-    blocks, for both preference kinds."""
-    from affinity_propagation_mapreduce_spark.operators import ap, ap_dense
-
-    T = ap.T_DEFAULT
-    monkeypatch.setattr(ap_dense, "_MIN_BLOCK_BYTES", 1 << 20)
+    monkeypatch.setattr(ap_dense, "_TARGET_BLOCK_BYTES", 1 << 20)
     d = ap_dense.DenseAP(spark, SF_T2)
     try:
-        assert d.nb > 1 or spark.sparkContext.defaultParallelism == 1
+        assert d.nb == 6
+        st = d.chain(T, retain=False)[-1]
+        ex = d.ex_hint("median", ap_dense.DAMPING, T)
+        deltas = d.deltas("median", ap_dense.DAMPING, T)
+        labels = sorted(tuple(r) for r in d.assign(st, ex).collect())
+        tbl = st.toArrow()
+        iv = tbl.column("i").to_numpy()
+        order = np.argsort(iv)
+        arrays = [iv[order]] + [
+            np.stack(tbl.column(c).to_numpy(zero_copy_only=False))[order]
+            for c in ("s", "r", "a")
+        ]
+        assert st.rdd.getNumPartitions() == 1
+        assert len(labels) == d.n and ex.size > 0 and deltas.shape == (T,)
+        got = {
+            "labels": _md5(np.array(labels, dtype="i8").tobytes()),
+            "ex_hint": _md5(ex.astype("i8").tobytes()),
+            "deltas": _md5(deltas.tobytes()),
+            "state": _md5(b"".join(a.tobytes() for a in arrays)),
+            "median": d.pref_value("median").hex(),
+            "min": d.pref_value("min").hex(),
+        }
+        assert got == CHAIN_PINS
+    finally:
+        d.destroy()
+
+
+def test_chain_records_equal_assign_and_coordinate_prefs(spark, monkeypatch):
+    """The chain's recorded labels are ``assign``'s over its final state,
+    row for row, and its recorded preferences are bitwise the coordinate
+    engine's: ``exact_median_distributed`` and ``min`` over
+    ``ap.similarity_off_diagonal`` — at sf0.01 cut into several blocks,
+    for both preference kinds."""
+    from affinity_propagation_mapreduce_spark.operators import ap, ap_dense
+
+    T = ap.T_DEFAULT
+    monkeypatch.setattr(ap_dense, "_TARGET_BLOCK_BYTES", 1 << 20)
+    d = ap_dense.DenseAP(spark, SF_T2)
+    try:
+        assert d.nb > 1
         for pref in ("median", "min"):
             st = d.chain(T, pref=pref, retain=False)[-1]
             ex = d.ex_hint(pref, ap_dense.DAMPING, T)
@@ -140,19 +160,68 @@ def test_one_task_records_equal_assign_and_collected_prefs(spark, monkeypatch):
             want = [tuple(r) for r in d.assign(st, ex).collect()]
             assert ex.size > 0 and len(want) == d.n
             assert list(zip(d.ids.tolist(), lab.tolist())) == want
-        recorded = dict(d._prefs)
-        s = d._collect_s_full()
-        off = s[~np.eye(d.n, dtype=bool)]
-        assert recorded["min"] == float(off.min())
-        assert recorded["median"] == ap._interp_median(off)
+        off = ap.similarity_off_diagonal(spark, SF_T2)
+        assert d._prefs == {
+            "median": ap.exact_median_distributed(off),
+            "min": off.agg(F.min("s")).first()[0],
+        }
     finally:
         d.destroy()
 
 
+def test_chain_refuses_no_iterations(spark):
+    """T < 1 has no state to return."""
+    from affinity_propagation_mapreduce_spark.operators import ap
+
+    d = ap._dense(spark, SF_SMALL)
+    for retain in (True, False):
+        with pytest.raises(ValueError, match="T >= 1"):
+            d.chain(0, retain=retain)
+
+
+# md5 of q_ap_assign's sorted (vec_id, exemplar) rows on the generated
+# N=5,200, d=8 corpus below (10 blocks), recorded from the per-iteration
+# loop, which served it in 17 Spark jobs.
+N5200_LABELS = "c501dfe478d2b9e7b006c1e26c70ebe7"
+
+
+def test_q_ap_assign_above_old_gate_in_two_jobs(spark, tmp_path, monkeypatch):
+    """Above the 5,000 points where the one-task chain used to stop,
+    ``q_ap_assign`` is still the chain's one job plus the label count,
+    with the per-iteration loop's labels."""
+    from perfbench import gen
+
+    from affinity_propagation_mapreduce_spark.operators import ap, ap_dense
+
+    n = 5_200
+    data = gen.write_embeddings(str(tmp_path), 7, n, 8, 16, 1.0)
+    # the work floor out of the cut: nb is the memory bound's 10 blocks
+    # on any core count
+    monkeypatch.setattr(ap_dense, "_MIN_BLOCK_BYTES", 1 << 40)
+    ap.clear_cache()
+    sc = spark.sparkContext
+    sc.setJobGroup("ap-assign-5200", "q_ap_assign job-count pin")
+    try:
+        got = ap.q_ap_assign(spark, data).count()
+        jobs = sc.statusTracker().getJobIdsForGroup("ap-assign-5200")
+    finally:
+        sc.setJobGroup(None, None)
+    try:
+        assert got == n and ap._dense(spark, data).nb == 10
+        assert len(jobs) <= 2, f"expected <= 2 jobs, got {len(jobs)}"
+        rows = sorted(tuple(r) for r in ap.q_ap_assign(spark, data).collect())
+        assert _md5(np.array(rows, dtype="i8").tobytes()) == N5200_LABELS
+    finally:
+        ap._release_ckpt(ap._dense_chain(spark, data))  # the 650 MB state
+        ap._dense(spark, data).destroy()
+        ap.clear_cache()
+
+
 def test_fold_strips_equal_untiled_fold():
-    """``_fold_s`` in row strips is bitwise the untiled sequential
-    per-dimension fold, at a row count that is not a multiple of the
-    strip and for a block of rows against all of them."""
+    """``_fold_s`` in row strips, on one thread and on several, is
+    bitwise the untiled sequential per-dimension fold, at a row count
+    that is not a multiple of the strip and for a block of rows against
+    all of them."""
     from affinity_propagation_mapreduce_spark.operators import ap_dense
 
     n = 2 * ap_dense._FOLD_STRIP + 7
@@ -165,6 +234,7 @@ def test_fold_strips_equal_untiled_fold():
         return -acc
 
     for av in (m, m[5 : ap_dense._FOLD_STRIP + 9]):
-        got = ap_dense._fold_s(av, m)
-        assert got.shape == (len(av), n)
-        assert got.tobytes() == untiled(av).tobytes()
+        for workers in (1, 3):
+            got = ap_dense._fold_s(av, m, workers)
+            assert got.shape == (len(av), n)
+            assert got.tobytes() == untiled(av).tobytes()

@@ -265,37 +265,32 @@ class TestAboveGate:
             shutil.rmtree(sf_dir, ignore_errors=True)
 
 
-class TestBlockedPrefDistributed:
-    """The blocked engine's preference above _FAST_MEDIAN_MAX_N never
-    collects the N² off-diagonal array: min is a plain aggregate and the
-    median routes through ap.exact_median_distributed over the exploded
-    state — bitwise-equal to the numpy interpolation across the cliff."""
+class TestBlockedPrefInTask:
+    """The blocked engine's preference is one single-task job over the
+    embeddings broadcast: the driver receives only the two scalars, and
+    both are bitwise the coordinate engine's — the rank-narrowing
+    ``ap.exact_median_distributed`` and ``min`` over
+    ``ap.similarity_off_diagonal``."""
 
-    def test_blocked_pref_distributed_equals_numpy(self, spark, monkeypatch):
-        import inspect
-
+    def test_in_task_pref_equals_coordinate_engine(self, spark):
         from affinity_propagation_mapreduce_spark.operators import ap_dense
 
-        cls = [
-            o
-            for _, o in vars(ap_dense).items()
-            if inspect.isclass(o) and hasattr(o, "pref_value")
-        ][0]
-        e_np = cls(spark, SF_SMALL)
+        off = ap.similarity_off_diagonal(spark, SF_SMALL)
+        want = {
+            "median": ap.exact_median_distributed(off),
+            "min": off.agg(F.min("s")).first()[0],
+        }
+        d = ap_dense.DenseAP(spark, SF_SMALL)
+        sc = spark.sparkContext
+        sc.setJobGroup("blocked-pref", "in-task preference pin")
         try:
-            med_np = e_np.pref_value("median")
-            min_np = e_np.pref_value("min")
-            e_d = cls(spark, SF_SMALL)
-            monkeypatch.setattr(ap, "_FAST_MEDIAN_MAX_N", 0)
-            try:
-                med_d = e_d.pref_value("median")
-                min_d = e_d.pref_value("min")
-            finally:
-                e_d.destroy()
-            assert med_d == med_np  # bitwise, no tolerance
-            assert min_d == min_np
+            got = {k: d.pref_value(k) for k in ("median", "min")}
+            jobs = sc.statusTracker().getJobIdsForGroup("blocked-pref")
         finally:
-            e_np.destroy()
+            sc.setJobGroup(None, None)
+            d.destroy()
+        assert got == want  # bitwise, no tolerance
+        assert len(jobs) == 1, f"one job fills both scalars, got {len(jobs)}"
 
 
 class TestPerCellTopkCandidates:
