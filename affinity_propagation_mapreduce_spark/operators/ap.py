@@ -20,7 +20,10 @@ matrix DataFrame ``(i, k, s, r, a)``:
   the re-key shuffle between them is planned by Catalyst;
 * per-iteration ``localCheckpoint()`` truncates lineage — the in-memory
   analogue of the reference's write-matrices-to-HDFS-per-iteration, minus
-  the I/O tax.
+  the I/O tax.  That loop (``iterate``) now serves the coordinate and
+  sparse queries only: ``cluster``, ``cluster_converged`` and every
+  multi-iteration dense query run the blocked engine's one-task chain
+  (``ap_dense.DenseAP.chain``).
 
 Scale notes (100 TB): the dense N^2 similarity is the wall (SURVEY.md §7).
 The exact kernel here is the oracle-checked path; ``knn_candidate_pairs``
@@ -70,23 +73,6 @@ def _ckpt(df: DataFrame, eager: bool = True) -> DataFrame:
     if _RELIABLE[0]:
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)
-
-
-def _release_ckpt(df: DataFrame) -> None:
-    """Unpersist a checkpointed chain state through the JVM
-    persistent-RDD registry.  ``df.rdd`` is a freshly DERIVED RDD, not
-    the internally persisted localCheckpoint RDD, so
-    ``df.rdd.unpersist()`` is a no-op that silently pins every state
-    (round-1 review finding).  The real checkpoint RDD is the one inside
-    the post-checkpoint LogicalRDD plan node — released by exact id, so
-    co-materialized neighbors (e.g. a lazily-checkpointed S matrix) are
-    never touched."""
-    jsc = df.sparkSession.sparkContext._jsc
-    rdd = jsc.getPersistentRDDs().get(
-        df._jdf.queryExecution().analyzed().rdd().id()
-    )
-    if rdd is not None:
-        rdd.unpersist()
 
 
 class reliable_checkpoints:
@@ -183,65 +169,6 @@ def similarity_off_diagonal(spark: SparkSession, sf_dir: str) -> DataFrame:
     return half.unionByName(
         half.select(F.col("k").alias("i"), F.col("i").alias("k"), "s")
     )
-
-
-def preference(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A2: median of the off-diagonal similarities (1-row DataFrame).
-
-    Exact interpolated median on both engines → bitwise parity.
-    """
-    off = similarity_off_diagonal(spark, sf_dir)
-    return off.select(F.expr("percentile(s, 0.5)").alias("preference"))
-
-
-def similarity_matrix(
-    spark: SparkSession, sf_dir: str, pref: str = "median", off: DataFrame | None = None
-) -> DataFrame:
-    """Full S including the diagonal s(k,k) = preference (median or min).
-
-    Pass a pre-checkpointed ``off`` to reuse one materialized kernel run
-    across the S matrix, the preference aggregate, and the final
-    assignment scan (cluster() does).
-
-    The preference is computed as a SCALAR up front — driver Arrow
-    median below _FAST_MEDIAN_MAX_N, rank-narrowing distributed median
-    above it (both bitwise-equal to ``percentile(s, 0.5)``).  Never the
-    single-reducer ``percentile`` aggregate itself: it buffers all N²−N
-    values on one task and OOM'd at N=12k (round-8 above-gate run)."""
-    if off is None:
-        off = similarity_off_diagonal(spark, sf_dir)  # half-checkpointed inside
-    if pref == "median":
-        p = _median_preference_fast(spark, sf_dir, off)
-        if p is None:
-            p = exact_median_distributed(off)
-    else:
-        p = off.agg(F.min("s")).first()[0]
-    ids = table(spark, sf_dir, "embeddings").select("vec_id")
-    diag = ids.select(
-        F.col("vec_id").alias("i"),
-        F.col("vec_id").alias("k"),
-        F.lit(p).cast("double").alias("s"),
-    )
-    return off.unionByName(diag)
-
-
-# The coordinate engine's median preference: at or below it ≤25M
-# s-values are Arrow-collected (~200 MB driver) and interpolated on the
-# driver, above it ``exact_median_distributed`` narrows by rank (bitwise
-# equal, cliff-tested).  Lowered from 10k in round 8 (verdict #7): at the
-# old edge the collect coexisted with the blocked engine's accumulator
-# payloads for ~800 MB of driver pressure.  The blocked engine no longer
-# reads it: DenseAP.chain runs one single-task job at every N ≤
-# BLOCKED_MAX_N.  Its per-iteration loop, which served 5,000 < N ≤ 10,000
-# until then, against the one task with a one-core and a threaded fold,
-# q_ap_assign().count() on a 4-core host (4 GB driver heap, generated
-# d=32 corpora, seed 7, 2 ops per process, peak RSS of the process tree;
-# labels, ex_hint, deltas and preferences bitwise equal on all sides):
-#   N       per-iteration loop    one task, 1-core fold  one task, threaded fold
-#   7,500   62.6–73.6 s, 6.6 GB   27.9–36.8 s, 6.1 GB    21.0–28.0 s, 5.5 GB
-#   10,000  125.8–128.8 s, 6.6 GB 63.7–72.2 s, 8.1 GB    44.3–53.2 s, 8.0 GB
-# (17 Spark jobs per op in the loop, 2 in the one task.)
-_FAST_MEDIAN_MAX_N = 5_000
 
 
 # exact-median scale path: per narrowing level, the candidate band must
@@ -405,34 +332,16 @@ def _kth_value_in_band(
 def _interp_median(vals) -> float:
     """Spark's exact ``percentile(v, 0.5)`` of a non-empty float64 array:
     ``lower + (upper-lower)*(pos-lo)`` over the two middle order
-    statistics.  ``np.partition`` selects them independently of input
-    order, so the result is bitwise the Spark aggregate's."""
-    import numpy as np
-
+    statistics.  The partition selects them independently of input
+    order, so the result is bitwise the Spark aggregate's.  It runs IN
+    PLACE: ``vals`` comes back reordered (both callers pass a fresh
+    copy, so no N²-sized second copy is made)."""
     m = vals.size
     pos = 0.5 * (m - 1)
     lo = int(pos)
-    part = np.partition(vals, [lo, lo + 1] if lo + 1 < m else [lo])
-    lower, upper = part[lo], part[min(lo + 1, m - 1)]
+    vals.partition([lo, lo + 1] if lo + 1 < m else [lo])
+    lower, upper = vals[lo], vals[min(lo + 1, m - 1)]
     return float(lower + (upper - lower) * (pos - lo))
-
-
-def _median_preference_fast(
-    spark: SparkSession, sf_dir: str, off: DataFrame
-) -> float | None:
-    """Driver-side exact median of the (already materialized) off-diagonal
-    similarities: Arrow-collect the single `s` column from the
-    checkpointed kernel output and interpolate with ``_interp_median`` —
-    bitwise-equal to the distributed `percentile(s, 0.5)` (same values,
-    same interpolation) at ~10% of its cost, and with no N² recompute on
-    the driver.  Returns None above the size gate (callers fall back to
-    the distributed percentile)."""
-    n = _n_points(spark, sf_dir)  # footer-metadata count (r16): this
-    # ran a fresh count JOB per preference call under the bench's
-    # cache-clearing regime
-    if n > _FAST_MEDIAN_MAX_N:
-        return None
-    return _interp_median(off.select("s").toPandas()["s"].to_numpy())
 
 
 def init_state(smat: DataFrame) -> DataFrame:
@@ -512,33 +421,18 @@ def availability_pass(state: DataFrame, lam: float = DAMPING) -> DataFrame:
     return stage.select("i", "k", "s", "r", new_a.alias("a"))
 
 
-def iterate(
-    state: DataFrame,
-    iterations: int,
-    lam: float = DAMPING,
-    checkpoint: bool = True,
-) -> DataFrame:
-    """Run T damped iterations; checkpoint per iteration to truncate
-    lineage (the Spark analogue of the reference's per-iteration FS
-    round-trip — SURVEY.md §3.2).  Eager checkpoints + unpersisting the
-    previous iteration's blocks keep exactly ONE message-state copy
-    pinned in storage memory: with T states resident the later
-    iterations slow 2-4× from eviction/GC pressure at sf0.1 (the
-    previous state is released by ``_release_ckpt``)."""
-    prev: DataFrame | None = None
+def iterate(state: DataFrame, iterations: int, lam: float = DAMPING) -> DataFrame:
+    """The coordinate loop: T damped passes, each state checkpointed to
+    truncate lineage (the reference's per-iteration FS round-trip —
+    SURVEY.md §3.2) LAZILY and retained, so it materializes inside the
+    next pass's first job.  Its readers — the sparse coordinate loop and
+    the checked twin — hold O(N·k) rows per state; dense AP runs on
+    ``ap_dense.DenseAP.chain``.  The R state is not checkpointed: its two
+    consumers each re-run one scan and broadcast probe of the last state."""
     for _ in range(iterations):
-        # the R state is deliberately NOT checkpointed mid-iteration: its
-        # two consumers (col_stats aggregation, final A projection) each
-        # re-execute only a scan + one broadcast probe over the cached
-        # previous state — cheaper than a second O(N²) memory write per
-        # iteration (measured at sf0.1; the expensive variant was tried
-        # and reverted).
-        state = availability_pass(responsibility_pass(state, lam), lam)
-        if checkpoint:
-            state = _ckpt(state, eager=True)
-            if prev is not None:
-                _release_ckpt(prev)
-            prev = state
+        state = _ckpt(
+            availability_pass(responsibility_pass(state, lam), lam), eager=False
+        )
     return state
 
 
@@ -591,25 +485,22 @@ def cluster(
     pref: str = "median",
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
-    """End-to-end AP: similarity → T iterations → exemplars → assignment.
-    Returns (vec_id, exemplar).
+    """End-to-end dense AP: similarity → T iterations → exemplars →
+    assignment, returned as (vec_id, exemplar) — the labels the blocked
+    engine's one-task chain records (``_labels``, shared with
+    ``q_ap_assign``).  No rows when no exemplar was elected.  Refused,
+    as every dense query is, below 2 and above ``BLOCKED_MAX_N`` points
+    (``_dense``); ``cluster_sparse`` is the scale path.
 
-    ``checkpoint_dir`` switches every lineage truncation in the chain
-    from ``localCheckpoint`` (executor-memory blocks: fast, but executor
-    loss kills a truncated chain) to reliable ``checkpoint()`` files
-    under the given fault-tolerant directory — the mode for multi-hour
-    runs on a real cluster.  See :class:`reliable_checkpoints`."""
+    ``checkpoint_dir`` switches the chain's lineage truncation from
+    ``localCheckpoint`` (executor-memory blocks: fast, but executor loss
+    kills a truncated chain) to reliable ``checkpoint()`` files under the
+    given fault-tolerant directory — the mode for multi-hour runs on a
+    real cluster.  See :class:`reliable_checkpoints`."""
     if checkpoint_dir is not None:
         with reliable_checkpoints(spark, checkpoint_dir):
             return cluster(spark, sf_dir, iterations, lam, pref)
-    # off is a cheap mirror-union over the internally checkpointed upper
-    # triangle — no extra checkpoint needed; downstream re-scans reuse
-    # the materialized half
-    off = similarity_off_diagonal(spark, sf_dir)
-    smat = _ckpt(similarity_matrix(spark, sf_dir, pref=pref, off=off), eager=False)
-    state = iterate(init_state(smat), iterations, lam)
-    ex = exemplars_from_state(state)
-    return assign(off, ex)
+    return _labels(spark, sf_dir, pref=pref, lam=lam, T=iterations)
 
 
 # ---------------------------------------------------------------------------
@@ -1088,20 +979,16 @@ def _coordinate_sparse_labels(
     cand: DataFrame, ids: DataFrame, pref: float, iterations: int, lam: float
 ) -> DataFrame:
     """The coordinate sparse loop: the candidate graph plus the ``pref``
-    diagonal, T damped passes, exemplars, assignment over declared edges;
-    every ``ids`` point without an exemplar among its candidates gets
-    -1.  Sparse state is O(N·k) rows — small enough to retain every
-    iteration's LAZY checkpoint (it materializes inside the next pass's
-    first job instead of a dedicated eager job: one job per iteration
-    saved; eager+unpersist is only needed for the O(N²) dense state)."""
+    diagonal, T damped passes (``iterate``), exemplars, assignment over
+    declared edges; every ``ids`` point without an exemplar among its
+    candidates gets -1."""
     diag = ids.select(
         F.col("vec_id").alias("i"), F.col("vec_id").alias("k"),
         F.lit(pref).alias("s"),
     )
-    state = init_state(_ckpt(cand.unionByName(diag), eager=False))
-    for _ in range(iterations):
-        state = availability_pass(responsibility_pass(state, lam), lam)
-        state = _ckpt(state, eager=False)
+    state = iterate(
+        init_state(_ckpt(cand.unionByName(diag), eager=False)), iterations, lam
+    )
     best = assign(cand, exemplars_from_state(state))
     return (
         ids.join(best, ids["vec_id"] == best["vec_id"], "left")
@@ -1317,36 +1204,21 @@ def cluster_converged(
     convergence_iter: int = 15,
     lam: float = DAMPING,
 ) -> tuple[DataFrame, int]:
-    """Convergence-driven AP (sklearn-style semantics: stop when the
-    exemplar set is stable for `convergence_iter` consecutive iterations,
-    else at `max_iter`).  Reported but not hashed (BASELINE.md): the
+    """Convergence-driven dense AP (Frey & Dueck's stop rule, sklearn's
+    semantics: stop once the exemplar set has been non-empty and
+    unchanged for ``convergence_iter`` consecutive iterations, else at
+    ``max_iter``).  Reported but not hashed (BASELINE.md): the
     t2-declared queries unroll a fixed T for determinism.
 
-    The per-iteration convergence probe collects only the exemplar ID
-    set (O(#exemplars) driver traffic, never the message state).
+    One chain job: the one-task chain applies the rule to the exemplar
+    set it computes each iteration and records how many iterations ran
+    (its delta count).  Refused like ``cluster``.
     Returns (labels DataFrame, iterations_run)."""
-    off = similarity_off_diagonal(spark, sf_dir)
-    smat = _ckpt(similarity_matrix(spark, sf_dir, off=off), eager=False)
-    state = init_state(smat)
-    prev: frozenset[int] | None = None
-    stable = 0
-    it = 0
-    for it in range(1, max_iter + 1):
-        state = _ckpt(
-            availability_pass(responsibility_pass(state, lam), lam), eager=False
-        )
-        ex_now = frozenset(
-            r.exemplar for r in exemplars_from_state(state).collect()
-        )
-        if prev is not None and ex_now == prev and ex_now:
-            stable += 1
-            if stable >= convergence_iter:
-                break
-        else:
-            stable = 0
-        prev = ex_now
-    ex = exemplars_from_state(state)
-    return assign(off, ex), it
+    labels = _labels(
+        spark, sf_dir, lam=lam, T=max_iter, convergence_iter=convergence_iter
+    )
+    deltas = _dense(spark, sf_dir).deltas("median", lam, max_iter, convergence_iter)
+    return labels, deltas.size
 
 
 # ---------------------------------------------------------------------------
@@ -1359,9 +1231,8 @@ def cluster_converged(
 # correctness budget (round 1: 27 queries never got a CORRECTNESS row).
 # The cache holds lazily-checkpointed DataFrames keyed by
 # (applicationId, sf_dir): the kernel materializes once, and every A-row
-# reuses the same RDD blocks.  The multi-iteration A-rows all read the
-# blocked engine's fused chain (one resident state per (pref, lam, T))
-# and the exemplar set and convergence deltas it records.
+# reuses the same RDD blocks.  The multi-iteration A-rows and ``cluster``
+# read the one-task chain's records (one run per stop rule).
 
 _cache: dict[tuple, object] = {}
 
@@ -1458,33 +1329,16 @@ def cached_off(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _cache[key]
 
 
-def _pref_scalar(spark: SparkSession, sf_dir: str, pref: str) -> float | None:
-    """Driver-side exact preference value: interpolated median (Arrow
-    collect below _FAST_MEDIAN_MAX_N, rank-narrowing distributed median
-    above — both bitwise-equal to ``percentile(s, 0.5)``) or exact min.
-    None only for an empty off-diagonal (single-point corpus)."""
-    key = _ckey(spark, sf_dir, "prefval", pref)
-    if key not in _cache:
-        off = cached_off(spark, sf_dir)
-        if pref == "min":
-            _cache[key] = off.agg(F.min("s")).first()[0]
-        else:
-            p = _median_preference_fast(spark, sf_dir, off)
-            if p is None:  # above the Arrow-collect gate: rank narrowing
-                p = exact_median_distributed(off)
-            _cache[key] = p
-    return _cache[key]
-
-
 def cached_smat(spark: SparkSession, sf_dir: str, pref: str = "median") -> DataFrame:
-    """Full S (off-diagonal + preference diagonal), checkpointed, cached."""
+    """Full S (off-diagonal + preference diagonal), checkpointed, cached.
+    The preference is the dense engine's (``DenseAP.pref_value``: bitwise
+    ``percentile(s, 0.5)`` or ``min(s)``), so S is refused over the same
+    N range as every dense query."""
     key = _ckey(spark, sf_dir, "smat", pref)
     if key not in _cache:
+        p = _dense(spark, sf_dir).pref_value(pref)
         off = cached_off(spark, sf_dir)
         ids = table(spark, sf_dir, "embeddings").select("vec_id")
-        p = _pref_scalar(spark, sf_dir, pref)
-        # p is None only for an empty off-diagonal (single-point corpus):
-        # the NULL diagonal mirrors percentile-over-empty semantics
         diag = ids.select(
             F.col("vec_id").alias("i"),
             F.col("vec_id").alias("k"),
@@ -1495,11 +1349,12 @@ def cached_smat(spark: SparkSession, sf_dir: str, pref: str = "median") -> DataF
 
 
 def _dense(spark: SparkSession, sf_dir: str):
-    """Blocked dense engine instance (operators/ap_dense.py) behind every
-    multi-iteration dense query.  Refused below 2 points (no
-    off-diagonal similarity, so no preference) and above its size gate:
-    the dense N² loop is the wrong tool there, and the coordinate engine
-    is no fallback (661 s at N=12k — PLANS.md "blocked-gate probe")."""
+    """Blocked dense engine instance (operators/ap_dense.py) behind
+    ``cluster``, ``cluster_converged`` and every multi-iteration dense
+    query.  Refused below 2 points (no off-diagonal similarity, so no
+    preference) and above its size gate: the dense N² loop is the wrong
+    tool there (the deleted coordinate loop took 661 s at N=12k —
+    PLANS.md "blocked-gate probe")."""
     key = _ckey(spark, sf_dir, "dense")
     if key not in _cache:
         from . import ap_dense
@@ -1513,8 +1368,8 @@ def _dense(spark: SparkSession, sf_dir: str):
         if n > ap_dense.BLOCKED_MAX_N:
             raise ValueError(
                 f"dense AP refused at N={n} > BLOCKED_MAX_N="
-                f"{ap_dense.BLOCKED_MAX_N}: use ap.cluster_sparse (the "
-                "scale path) or ap.cluster (the coordinate reference)"
+                f"{ap_dense.BLOCKED_MAX_N}: use ap.cluster_sparse, the scale "
+                "path (ap.cluster runs this dense engine)"
             )
         _cache[key] = ap_dense.DenseAP(spark, sf_dir)
     return _cache[key]
@@ -1526,14 +1381,18 @@ def _dense_chain(
     pref: str = "median",
     lam: float = DAMPING,
     T: int = T_DEFAULT,
+    convergence_iter: int | None = None,
 ) -> DataFrame:
-    """Final blocked state of the fused chain, cached per (pref, lam, T);
-    the chain's exemplar set and convergence deltas are recorded on the
-    ``_dense`` instance."""
-    key = _ckey(spark, sf_dir, "dchain", pref, lam, T)
+    """Final blocked state of the one-task chain, cached per (pref, lam,
+    T, convergence_iter); the chain's exemplar set, convergence deltas
+    and labels are recorded on the ``_dense`` instance under the same
+    key."""
+    key = _ckey(spark, sf_dir, "dchain", pref, lam, T, convergence_iter)
     if key not in _cache:
         d = _dense(spark, sf_dir)
-        _cache[key] = d.chain(T, lam=lam, pref=pref, retain=False)[-1]
+        _cache[key] = d.chain(
+            T, lam=lam, pref=pref, retain=False, convergence_iter=convergence_iter
+        )[-1]
     return _cache[key]
 
 
@@ -1550,17 +1409,26 @@ def _exemplar_df(spark: SparkSession, ex) -> DataFrame:
     return spark.createDataFrame([(int(e),) for e in ex], "exemplar long")
 
 
-def _labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Final (vec_id, exemplar) assignment, shared by A7/A8: the chain's
-    task already labelled every point, so the relation is those recorded
-    labels in one partition (its count is one job with no exchange)."""
-    key = _ckey(spark, sf_dir, "labels")
+def _labels(
+    spark: SparkSession,
+    sf_dir: str,
+    pref: str = "median",
+    lam: float = DAMPING,
+    T: int = T_DEFAULT,
+    convergence_iter: int | None = None,
+) -> DataFrame:
+    """Final (vec_id, exemplar) assignment of the chain run with (pref,
+    lam, T, convergence_iter) — A7/A8 and ``cluster``/``cluster_converged``
+    read it: the chain's task already labelled every point, so the
+    relation is those recorded labels in one partition (its count is one
+    job with no exchange)."""
+    key = _ckey(spark, sf_dir, "labels", pref, lam, T, convergence_iter)
     if key not in _cache:
         import pyarrow as pa
 
-        _dense_chain(spark, sf_dir)
+        _dense_chain(spark, sf_dir, pref, lam, T, convergence_iter)
         d = _dense(spark, sf_dir)
-        lab = d.labels("median", DAMPING, T_DEFAULT)
+        lab = d.labels(pref, lam, T, convergence_iter)
         rows = pa.table({"vec_id": d.ids[: lab.size], "exemplar": lab})
         _cache[key] = spark.createDataFrame(rows).coalesce(1)
     return _cache[key]

@@ -1,12 +1,12 @@
 """Blocked dense Affinity-Propagation engine (the MR-AP row/column jobs
 as Arrow-vectorized block kernels).
 
-The coordinate-format engine in ``ap.py`` is the semantic reference: every
-pass is relational algebra the DuckDB oracle mirrors CTE-for-CTE.  It is
-also job-heavy — each damped iteration costs three full scans of the O(N²)
-coordinate state (top-2 window aggregate, column-stats aggregate, checkpoint
-projection), and at bench scale (N=2000 → 4M rows × 5 iterations) the
-per-job fixed costs dominate: ~3 s/iteration of which <0.1 s is arithmetic.
+The coordinate-format passes in ``ap.py`` are the semantic reference: each
+is relational algebra the DuckDB oracle mirrors CTE-for-CTE.  Run as a
+dense loop they were job-heavy: three full scans of the O(N²) coordinate
+state per iteration, ~3 s/iteration at N=2000 of which <0.1 s was
+arithmetic.  That loop is deleted; ``ap.cluster`` and
+``ap.cluster_converged`` run here too.
 
 This module is the SAME algorithm in the shape the MR-AP paper actually
 describes — a row-parallel responsibility update and a column-stats
@@ -29,7 +29,9 @@ reduce — with the matrix stored as row blocks:
   by block, labels every point by ``assign``'s rule and emits the final
   state once; labels, preferences, exemplar set and the convergence
   deltas max|r_t − r_{t−1}| ride an accumulator, so ``ap.q_ap_assign``
-  is that job plus its own action.
+  and ``ap.cluster`` are that job plus their own action.  With a
+  ``convergence_iter`` the task stops at Frey & Dueck's rule instead of
+  at T (``ap.cluster_converged``).
 
 Float parity: s is computed by one fold (``_fold_s``) with the same
 sequential per-dimension accumulation as ``ap.similarity_off_diagonal``
@@ -47,9 +49,9 @@ only sees O(N) labels and deltas.  The binding costs are the N² kernel
 work per iteration and the task's resident N² arrays (s, r, a and the
 next r: 8.0–8.1 GB peak RSS of the process tree for ``q_ap_assign`` at
 N=10,000, d=32, 4 GB driver heap).  Above
-the gate the dense queries are refused (``ap._dense`` raises):
-``ap.cluster_sparse`` is the scale path and ``ap.cluster`` the
-coordinate reference.
+the gate the dense queries, ``ap.cluster`` and ``ap.cluster_converged``
+are refused (``ap._dense`` raises): ``ap.cluster_sparse`` is the scale
+path.
 """
 
 from __future__ import annotations
@@ -256,10 +258,14 @@ def _fold_s(av: np.ndarray, m: np.ndarray, workers: int = 1) -> np.ndarray:
 
 
 def _pref_scalars(s: np.ndarray) -> dict[str, float]:
-    """Both preference scalars of a full RAW-diagonal s matrix: the
-    exact min and the interpolated median (bitwise ``percentile(s,
-    0.5)``) of its N²−N off-diagonal values."""
-    off = s[~np.eye(len(s), dtype=bool)]
+    """Both preference scalars of a full RAW-diagonal, C-contiguous s:
+    the exact min and the interpolated median (bitwise ``percentile(s,
+    0.5)``) of its N²−N off-diagonal values.  After the first element the
+    diagonal ends every (N+1)-run of the flat matrix, so the view below
+    is the off-diagonal in row order; ``ravel`` copies it once and the
+    median partitions that copy in place."""
+    n = len(s)
+    off = s.ravel()[1:].reshape(n - 1, n + 1)[:, :-1].ravel()
     return {"min": float(off.min()), "median": _interp_median(off)}
 
 
@@ -405,9 +411,9 @@ class DenseAP:
         self.nb = _n_blocks(spark, self.n)
         self._state0: DataFrame | None = None
         self._prefs: dict[str, float] = {}
-        # per chain run, keyed (pref, lam, T): the final state's exemplar
-        # set, the T convergence deltas max|r_t − r_{t−1}| and the final
-        # state's labels
+        # per chain run, keyed (pref, lam, T, convergence_iter): the final
+        # state's exemplar set, the convergence deltas max|r_t − r_{t−1}|
+        # of the iterations it ran and the final state's labels
         self._ex_hint: dict[tuple, np.ndarray] = {}
         self._deltas: dict[tuple, np.ndarray] = {}
         self._labels: dict[tuple, np.ndarray] = {}
@@ -423,7 +429,8 @@ class DenseAP:
             pass
         if self._state0 is not None:
             try:
-                self._state0._jdf.queryExecution().analyzed().rdd().unpersist()
+                # py4j cannot fill RDD.unpersist's Scala default argument
+                self._state0._jdf.queryExecution().analyzed().rdd().unpersist(False)
             except Exception:
                 pass
             self._state0 = None
@@ -505,7 +512,9 @@ class DenseAP:
 
     # -- iteration -----------------------------------------------------
 
-    def _one_task_chain(self, iterations: int, pref: str, lam: float):
+    def _one_task_chain(
+        self, iterations: int, pref: str, lam: float, convergence_iter: int | None
+    ):
         """The whole dense query in ONE single-task job over the
         embeddings broadcast → (final state, exemplar ids, deltas,
         {"min", "median"} preferences, labels).  The task folds S with
@@ -517,7 +526,13 @@ class DenseAP:
         block order.  The labels are ``assign``'s of the final state, one
         per point in ids order (none when no exemplar was elected).  The
         final state is emitted once, one Arrow batch per block;
-        everything else rides an accumulator."""
+        everything else rides an accumulator.
+
+        With ``convergence_iter`` the loop stops early by Frey & Dueck's
+        rule: once the exemplar set has been non-empty and equal to the
+        previous iteration's for ``convergence_iter`` consecutive
+        iterations; ``iterations`` is then the cap.  One delta is
+        recorded per iteration run."""
         bc = self.bc
         nb = self.nb
         acc = self.spark.sparkContext.accumulator({}, _PartialsAcc())
@@ -543,7 +558,7 @@ class DenseAP:
                 parts[int(biv[0])] = (colsum, biv, diag_r, [])
                 blocks.append((biv, sb, z, z, r_new, rows, di))
             colsum, rkk, _ = _combine_partials(parts, ids_b)
-            deltas = []
+            deltas, prev, stable = [], None, 0
             for _ in range(iterations):
                 parts = {}
                 for j, (biv, sb, r, a, r_new, rows, di) in enumerate(blocks):
@@ -553,6 +568,15 @@ class DenseAP:
                     blocks[j] = (biv, sb, r_new, a_new, r_next, rows, di)
                 colsum, rkk, ex = _combine_partials(parts, ids_b)
                 deltas.append(max(part[4] for part in parts.values()))
+                if convergence_iter is None:
+                    continue
+                if prev is not None and ex.size and np.array_equal(ex, prev):
+                    stable += 1
+                    if stable >= convergence_iter:
+                        break
+                else:
+                    stable = 0
+                prev = ex
             lab = _assign_rows(ids_b, s, ids_b, ex) if ex.size else ex
             acc.add({0: (ex, np.array(deltas, dtype="f8"), prefs, lab)})
             for biv, sb, r, a, *_ in blocks:
@@ -572,24 +596,26 @@ class DenseAP:
         lam: float = DAMPING,
         pref: str = "median",
         retain: bool = True,
+        convergence_iter: int | None = None,
     ) -> list[DataFrame]:
         """States after iterations 1..T, each from one ``_one_task_chain``
         job that also records that run's exemplar set, convergence deltas,
-        labels (``ex_hint``/``deltas``/``labels``) and both preferences,
-        so no consumer scans a state for them.
+        labels (``ex_hint``/``deltas``/``labels``, keyed by the stop rule
+        too) and both preferences, so no consumer scans a state for them.
 
         ``retain=False`` runs the T-iteration job once and returns only
         its final state.  ``retain=True`` runs one job per t = 1..T and
         returns all T states (bitwise the states after t iterations of
-        the T-run; only tests read them).  Raises ValueError for T < 1:
-        there is no state to return."""
+        the T-run; only tests read them).  ``convergence_iter`` turns T
+        into a cap (see ``_one_task_chain``).  Raises ValueError for
+        T < 1: there is no state to return."""
         if iterations < 1:
             raise ValueError(f"chain needs T >= 1 iterations, got {iterations}")
         states: list[DataFrame] = []
         for t in range(1 if retain else iterations, iterations + 1):
-            key = (pref, lam, t)
+            key = (pref, lam, t, convergence_iter)
             state, self._ex_hint[key], self._deltas[key], prefs, lab = (
-                self._one_task_chain(t, pref, lam)
+                self._one_task_chain(t, pref, lam, convergence_iter)
             )
             self._prefs.update(prefs)
             self._labels[key] = lab
@@ -599,26 +625,32 @@ class DenseAP:
     # -- consumers -----------------------------------------------------
 
     def ex_hint(
-        self, pref: str = "median", lam: float = DAMPING, T: int | None = None
+        self, pref: str = "median", lam: float = DAMPING, T: int | None = None,
+        convergence_iter: int | None = None,
     ) -> np.ndarray | None:
         """Exemplar set {k : a(k,k) + r(k,k) > 0} of the final state of
-        the chain run with (pref, lam, T), sorted; None if none ran."""
-        return self._ex_hint.get((pref, lam, T))
+        the chain run with (pref, lam, T, convergence_iter), sorted; None
+        if none ran."""
+        return self._ex_hint.get((pref, lam, T, convergence_iter))
 
     def deltas(
-        self, pref: str = "median", lam: float = DAMPING, T: int | None = None
+        self, pref: str = "median", lam: float = DAMPING, T: int | None = None,
+        convergence_iter: int | None = None,
     ) -> np.ndarray | None:
-        """max|r_t − r_{t−1}| over all (i, k) for t = 1..T of that chain
-        run (unrounded); None if none ran."""
-        return self._deltas.get((pref, lam, T))
+        """max|r_t − r_{t−1}| over all (i, k) for each iteration t that
+        chain run ran (unrounded; T of them unless the stop rule ended it
+        early); None if none ran."""
+        return self._deltas.get((pref, lam, T, convergence_iter))
 
     def labels(
-        self, pref: str = "median", lam: float = DAMPING, T: int | None = None
+        self, pref: str = "median", lam: float = DAMPING, T: int | None = None,
+        convergence_iter: int | None = None,
     ) -> np.ndarray | None:
         """``assign``'s labels of the final state of the chain run with
-        (pref, lam, T): the exemplar of each point in ``ids`` order,
-        empty when no exemplar was elected; None if none ran."""
-        return self._labels.get((pref, lam, T))
+        (pref, lam, T, convergence_iter): the exemplar of each point in
+        ``ids`` order, empty when no exemplar was elected; None if none
+        ran."""
+        return self._labels.get((pref, lam, T, convergence_iter))
 
     def assign(self, state: DataFrame, ex: np.ndarray) -> DataFrame:
         """label(i) = argmax over exemplars k of s(i,k), ties to lowest k,

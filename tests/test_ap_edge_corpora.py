@@ -1,6 +1,7 @@
 """Edge corpora, N = 0, 1, 2, 3, through every AP entry point: the dense
-queries refuse N < 2 by name and serve N = 2, 3 on the one-task loop
-(one block); the sparse query serves every N, labelling each point."""
+queries, ``cluster`` and ``cluster_converged`` refuse N < 2 by name and
+serve N = 2, 3 on the one-task loop (one block); the sparse query serves
+every N, labelling each point."""
 
 from __future__ import annotations
 
@@ -33,9 +34,17 @@ def test_dense_queries_refuse_fewer_than_two_points(spark, tmp_path, n):
     from affinity_propagation_mapreduce_spark.operators import ap
 
     sf = _corpus(tmp_path, n)
-    for q in (ap.q_ap_assign, ap.q_ap_exemplars, ap.q_ap_convergence):
+    for q in (
+        ap.q_ap_assign,
+        ap.q_ap_exemplars,
+        ap.q_ap_convergence,
+        ap.q_ap_responsibility,
+        ap.cluster,
+    ):
         with pytest.raises(ValueError, match=f"N={n}"):
             q(spark, sf).collect()
+    with pytest.raises(ValueError, match=f"N={n}"):
+        ap.cluster_converged(spark, sf, max_iter=20, convergence_iter=3)
 
 
 @pytest.mark.parametrize("n", [2, 3])
@@ -57,6 +66,26 @@ def test_dense_queries_serve_two_and_three_points(spark, tmp_path, n):
     assert (labels == []) == (n == 2)  # two points elect no exemplar
     conv = ap.q_ap_convergence(spark, sf).collect()
     assert [r.iter for r in conv] == list(range(1, ap.T_DEFAULT + 1))
+    assert sorted(tuple(r) for r in ap.cluster(spark, sf).collect()) == labels
+
+
+@pytest.mark.parametrize("n", [2, 3])
+def test_cluster_converged_serves_two_and_three_points(spark, tmp_path, n):
+    """The stop rule equals the numpy reference's: at N=2 no exemplar is
+    ever elected, so the chain runs all ``max_iter`` iterations and the
+    labels are empty."""
+    from affinity_propagation_mapreduce_spark.operators import ap, ap_numpy_oracle
+
+    sf = _corpus(tmp_path, n)
+    ex_ref, lab_ref, it_ref = ap_numpy_oracle.cluster_converged(
+        np.array(_POINTS[:n]), max_iter=20, convergence_iter=3, lam=ap.DAMPING
+    )
+    labels, iters = ap.cluster_converged(spark, sf, max_iter=20, convergence_iter=3)
+    got = sorted(tuple(r) for r in labels.collect())
+    assert iters == it_ref
+    assert got == ([] if len(ex_ref) == 0 else list(enumerate(lab_ref.tolist())))
+    if n == 2:
+        assert (iters, got) == (20, [])
 
 
 @pytest.mark.parametrize("n", [0, 1, 2, 3])

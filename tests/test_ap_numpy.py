@@ -30,7 +30,7 @@ def test_engine_matches_numpy_oracle(spark):
     ex_np, labels_np = ap_numpy_oracle.cluster(mat, iterations=ap.T_DEFAULT)
 
     state = ap.iterate(
-        ap.init_state(ap.similarity_matrix(spark, SF_SMALL)), ap.T_DEFAULT
+        ap.init_state(ap.cached_smat(spark, SF_SMALL)), ap.T_DEFAULT
     )
     ex_spark = sorted(
         r.exemplar for r in ap.exemplars_from_state(state).collect()

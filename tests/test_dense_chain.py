@@ -1,8 +1,9 @@
 """The one dense AP iteration loop: the chain's recorded convergence
-deltas and exemplar sets against the coordinate reference, its outputs
+deltas and exemplar sets against the coordinate passes, its outputs
 against bits pinned from the per-iteration loop it replaced, its
-recorded labels and preferences, both sides of the sparse gate, and
-the one similarity fold."""
+recorded labels and preferences, its stop rule and the job counts of
+``cluster_converged`` and ``entry()``, both sides of the sparse gate,
+and the one similarity fold."""
 
 from __future__ import annotations
 
@@ -212,9 +213,64 @@ def test_q_ap_assign_above_old_gate_in_two_jobs(spark, tmp_path, monkeypatch):
         rows = sorted(tuple(r) for r in ap.q_ap_assign(spark, data).collect())
         assert _md5(np.array(rows, dtype="i8").tobytes()) == N5200_LABELS
     finally:
-        ap._release_ckpt(ap._dense_chain(spark, data))  # the 650 MB state
+        # the 650 MB state: its localCheckpoint RDD is the analyzed plan's
+        ap._dense_chain(spark, data)._jdf.queryExecution().analyzed().rdd().unpersist(False)
         ap._dense(spark, data).destroy()
         ap.clear_cache()
+
+
+# ``cluster_converged(max_iter=60, convergence_iter=5)`` at sf0.001,
+# recorded from the coordinate loop (one exemplar collect per iteration)
+# that served it before the one-task chain: iterations run and the md5
+# of the sorted (vec_id, exemplar) rows.
+CONVERGED_PIN = (32, "2c8f216853b8879c087db24d710485b2")
+
+
+def _jobs_of(spark, group: str, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "job-count pin")
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_cluster_converged_in_one_chain_job(spark):
+    """``cluster_converged`` is the chain's one job, which applies the
+    stop rule in its task, with the coordinate loop's iteration count
+    and labels; its record is keyed by the stop rule, so the fixed-T
+    entry of the same T stays empty."""
+    from affinity_propagation_mapreduce_spark.operators import ap
+
+    ap.clear_cache()
+    (labels, iters), jobs = _jobs_of(
+        spark,
+        "ap-converged",
+        lambda: ap.cluster_converged(spark, SF_SMALL, max_iter=60, convergence_iter=5),
+    )
+    assert jobs == 1
+    rows = sorted(tuple(r) for r in labels.collect())
+    assert len(rows) == 500
+    assert (iters, _md5(np.array(rows, dtype="i8").tobytes())) == CONVERGED_PIN
+    d = ap._dense(spark, SF_SMALL)
+    assert d.deltas("median", ap.DAMPING, 60, 5).size == iters
+    assert d.deltas("median", ap.DAMPING, 60) is None
+
+
+def test_entry_job_budget(spark):
+    """The flagship ``entry()`` is ``cluster``'s chain job plus the
+    collect of its recorded labels."""
+    import __spark_entry__
+
+    from affinity_propagation_mapreduce_spark.operators import ap
+
+    ap.clear_cache()
+    rows, jobs = _jobs_of(
+        spark, "ap-entry", lambda: __spark_entry__.entry(spark).collect()
+    )
+    assert len(rows) == 500
+    assert jobs <= 3, f"expected <= 3 jobs, got {jobs}"
 
 
 def test_fold_strips_equal_untiled_fold():

@@ -60,24 +60,6 @@ def test_sparse_ap_candidates_sub_n2(spark):
     assert cand.count() <= 0.5 * half_dense, "candidate set is ~dense"
 
 
-def test_iterate_keeps_one_state_resident(spark):
-    """iterate() must release each previous iteration's checkpoint blocks
-    (df.rdd.unpersist() was a silent no-op — all T states stayed pinned)."""
-    from affinity_propagation_mapreduce_spark.operators import ap
-    from .conftest import SF_SMALL
-
-    jsc = spark.sparkContext._jsc
-    before = set(jsc.getPersistentRDDs().keys())
-    smat = ap.similarity_matrix(spark, SF_SMALL).localCheckpoint(eager=False)
-    ap.iterate(ap.init_state(smat), 3)
-    new = set(jsc.getPersistentRDDs().keys()) - before
-    # exactly three non-state RDDs legitimately remain: the kernel's
-    # half-triangle checkpoint, the S matrix, and the FINAL state.  A
-    # regressed (no-op) release would leave the two intermediate states
-    # too (= 5).
-    assert len(new) <= 3, f"{len(new)} new persistent RDDs remain"
-
-
 def test_simhash_candidates_keyed_join(spark):
     """SimHash candidate generation must be the half-fingerprint
     equi-join, never an all-pairs nested loop."""
@@ -122,7 +104,7 @@ def test_ap_pass_state_never_sorted(spark):
     formulation regressed to shuffling the matrix."""
     from affinity_propagation_mapreduce_spark.operators import ap
 
-    state = ap.init_state(ap.similarity_matrix(spark, SF_T2))
+    state = ap.init_state(ap.cached_smat(spark, SF_T2))
     one_iter = ap.availability_pass(ap.responsibility_pass(state))
     plan = one_iter._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan

@@ -62,7 +62,7 @@ def test_spark_matches_numpy_on_random_matrix(spark, seed):
         (int(i), int(k), float(s[i, k])) for i in range(n) for k in range(n)
     ]
     smat = spark.createDataFrame(triples, "i long, k long, s double")
-    state = ap.iterate(ap.init_state(smat), iterations=3, checkpoint=False)
+    state = ap.iterate(ap.init_state(smat), iterations=3)
     ex_spark = sorted(r.exemplar for r in ap.exemplars_from_state(state).collect())
     r_np, a_np = ap_numpy_oracle.iterate(s, iterations=3)
     idx = np.arange(n)

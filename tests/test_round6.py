@@ -37,32 +37,6 @@ def test_ivf_dup_subset_gate_green(spark):
     assert row.recall >= vector.IVF_DUP_RECALL_FLOOR
 
 
-def test_median_fast_path_bitwise_equals_distributed(spark, monkeypatch):
-    """_FAST_MEDIAN_MAX_N silently switches the preference plan from the
-    Arrow-collected driver median to the distributed percentile at
-    N=10,001 (r5 verdict #7): the two paths must produce the BITWISE
-    identical preference, so the cliff changes cost, never results.
-    Verified both ways: fast vs distributed on the same kernel output,
-    and end-to-end cluster() with the gate forced to the fallback."""
-    from affinity_propagation_mapreduce_spark.operators import ap
-
-    off = ap.similarity_off_diagonal(spark, SF_SMALL)
-    fast = ap._median_preference_fast(spark, SF_SMALL, off)
-    assert fast is not None
-    dist = off.agg(F.expr("percentile(s, 0.5)").alias("p")).collect()[0].p
-    assert fast == dist  # bitwise, no tolerance
-
-    # below the gate the fast path must decline and cluster() still works
-    monkeypatch.setattr(ap, "_FAST_MEDIAN_MAX_N", 10)
-    assert ap._median_preference_fast(spark, SF_SMALL, off) is None
-    # end-to-end on the fallback plan: same labels as the fast plan
-    # (T_DEFAULT iterations — one iteration elects no exemplars yet)
-    fall = {r.vec_id: r.exemplar for r in ap.cluster(spark, SF_SMALL).collect()}
-    monkeypatch.setattr(ap, "_FAST_MEDIAN_MAX_N", 10_000)
-    fastl = {r.vec_id: r.exemplar for r in ap.cluster(spark, SF_SMALL).collect()}
-    assert fall == fastl
-
-
 def test_stream_batch_equiv_gate_raises_on_divergence(spark, monkeypatch):
     """Corrupting one batch operator must make the combined gate raise:
     proves the multiset comparison actually bites (the green path is
@@ -119,20 +93,34 @@ def test_blocked_first_iteration_bitwise_equals_coordinate(spark):
     assert row.da < 1e-9
 
 
+def _numpy_labels(spark, sf_dir) -> dict[int, int]:
+    """The dense numpy reference's labels (T_DEFAULT, median preference)
+    over the embeddings — an engine independent of both Spark ones."""
+    from affinity_propagation_mapreduce_spark.operators import ap, ap_numpy_oracle
+
+    from .test_ap_numpy import _embedding_matrix
+
+    mat, _ = _embedding_matrix(spark, sf_dir)
+    _, lab = ap_numpy_oracle.cluster(mat, ap.T_DEFAULT, ap.DAMPING)
+    return dict(enumerate(lab.tolist()))
+
+
 def test_blocked_labels_equal_coordinate_cluster(spark):
-    """End-to-end: the blocked assignment (_labels fast path) must agree
-    with the coordinate reference pipeline cluster() exactly."""
+    """End-to-end: the blocked assignment (``_labels``, which
+    ``cluster()`` also returns) must agree exactly with the dense numpy
+    reference."""
     from affinity_propagation_mapreduce_spark.operators import ap
 
     blocked = {r.vec_id: r.exemplar for r in ap._labels(spark, SF_SMALL).collect()}
-    coord = {r.vec_id: r.exemplar for r in ap.cluster(spark, SF_SMALL).collect()}
-    assert blocked == coord and len(blocked) == 500
+    clustered = {r.vec_id: r.exemplar for r in ap.cluster(spark, SF_SMALL).collect()}
+    assert blocked == clustered == _numpy_labels(spark, SF_SMALL)
+    assert len(blocked) == 500
 
 
 def test_blocked_gate_refuses_dense_above_gate(spark, monkeypatch):
     """Above BLOCKED_MAX_N the dense queries are refused loudly, naming
-    the scale path and the coordinate reference — there is no silent
-    coordinate fallback (661 s at N=12k)."""
+    the scale path and that ``cluster`` runs the same engine — there is
+    no silent fallback (the coordinate loop took 661 s at N=12k)."""
     from affinity_propagation_mapreduce_spark.operators import ap, ap_dense
 
     ap.clear_cache()
@@ -161,19 +149,18 @@ def test_blocked_pref_matches_oracle_formula(spark):
 
 
 def test_fused_dense_loop_equals_coordinate(spark):
-    """The fused single-job-per-iteration dense loop (retain=False, the
-    bench-scale path) must produce the same labels as the coordinate
-    reference pipeline, and its accumulator-carried exemplar hint must
-    equal the label set."""
+    """The one-task dense chain (retain=False, the bench-scale path) must
+    produce the dense numpy reference's labels, and its
+    accumulator-carried exemplar hint must equal the label set."""
     from affinity_propagation_mapreduce_spark.operators import ap
 
     ap.clear_cache()
     fused = {r.vec_id: r.exemplar for r in ap._labels(spark, SF_SMALL).collect()}
     ex_hint = {r.exemplar for r in ap.q_ap_exemplars(spark, SF_SMALL).collect()}
-    coord = {r.vec_id: r.exemplar for r in ap.cluster(spark, SF_SMALL).collect()}
     ap.clear_cache()
-    assert fused == coord
-    assert ex_hint == set(coord.values())
+    ref = _numpy_labels(spark, SF_SMALL)
+    assert fused == ref
+    assert ex_hint == set(ref.values())
 
 
 def test_blocked_sparse_loop_equals_coordinate(spark, monkeypatch):

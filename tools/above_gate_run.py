@@ -1,7 +1,7 @@
 """Above-gate AP execution — round-8 verdict item #1.
 
-Every path above ``BLOCKED_MAX_N = 10_000`` (the coordinate dense engine,
-the coordinate sparse loop, the distributed exact-median preference) had
+The paths above the dense refusal (``BLOCKED_MAX_N = 10_000``) — the
+coordinate sparse loop and the distributed exact-median preference — had
 only ever been exercised via monkeypatched gates at small N.  This runner
 synthesizes a clustered corpus at real above-gate sizes (same generator
 as tests/test_growth_law.py), writes it as a testdata-shaped sf dir, and
@@ -9,7 +9,6 @@ runs the REAL entry points end-to-end:
 
   python tools/above_gate_run.py sparse 25000
   python tools/above_gate_run.py sparse 50000
-  python tools/above_gate_run.py dense 12000
 
 Prints one JSON line per run: wall seconds, label sanity (rows, exemplar
 count, unassigned count, max-cluster share) and peak persisted-state
@@ -203,17 +202,14 @@ def main():
         )
         return
 
+    if mode != "sparse":
+        raise SystemExit(f"unknown mode {mode!r}: sparse, knn_pq, knn_ivfpq, knn_ivf")
     # cluster_sparse picks its engine by SPARSE_FUSED_MAX_N
-    assert n > ap._BLOCKED().SPARSE_FUSED_MAX_N or mode == "dense", (
-        "not above gate"
-    )
+    assert n > ap._BLOCKED().SPARSE_FUSED_MAX_N, "not above gate"
     kwargs = {"iterations": iters} if iters else {}
     t0 = time.monotonic()
     with PeakState(spark) as ps:
-        if mode == "sparse":
-            rows = ap.cluster_sparse(spark, sf_dir, **kwargs).collect()
-        else:
-            rows = ap.cluster(spark, sf_dir, **kwargs).collect()
+        rows = ap.cluster_sparse(spark, sf_dir, **kwargs).collect()
     wall = time.monotonic() - t0
     out = {
         "mode": mode,
