@@ -79,11 +79,11 @@ class reliable_checkpoints:
     """Context manager: route every AP-chain lineage truncation through
     reliable ``checkpoint()`` files under ``checkpoint_dir``.
 
-    Usage (or pass ``checkpoint_dir=`` to :func:`cluster` /
-    :func:`cluster_sparse`, which wrap themselves in this)::
+    Usage (or pass ``checkpoint_dir=`` to :func:`cluster_sparse`, which
+    wraps itself in this)::
 
         with ap.reliable_checkpoints(spark, "hdfs://nn/ap-ckpt"):
-            ap.cluster(spark, sf_dir)
+            ap.cluster_sparse(spark, sf_dir)
 
     Spark never auto-deletes reliable checkpoint files; callers own the
     directory's lifecycle (set
@@ -483,7 +483,6 @@ def cluster(
     iterations: int = T_DEFAULT,
     lam: float = DAMPING,
     pref: str = "median",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """End-to-end dense AP: similarity → T iterations → exemplars →
     assignment, returned as (vec_id, exemplar) — the labels the blocked
@@ -492,14 +491,9 @@ def cluster(
     as every dense query is, below 2 and above ``BLOCKED_MAX_N`` points
     (``_dense``); ``cluster_sparse`` is the scale path.
 
-    ``checkpoint_dir`` switches the chain's lineage truncation from
-    ``localCheckpoint`` (executor-memory blocks: fast, but executor loss
-    kills a truncated chain) to reliable ``checkpoint()`` files under the
-    given fault-tolerant directory — the mode for multi-hour runs on a
-    real cluster.  See :class:`reliable_checkpoints`."""
-    if checkpoint_dir is not None:
-        with reliable_checkpoints(spark, checkpoint_dir):
-            return cluster(spark, sf_dir, iterations, lam, pref)
+    The result persists nothing and reads no persisted block: the chain
+    job emits no state, and the labels are driver-side rows, so losing
+    an executor's blocks cannot lose it (no checkpoint mode to pick)."""
     return _labels(spark, sf_dir, pref=pref, lam=lam, T=iterations)
 
 
@@ -954,7 +948,7 @@ def cluster_sparse(
 
     ``checkpoint_dir`` switches the chain to reliable ``checkpoint()``
     files (executor-loss-tolerant mode for real-cluster runs) — see
-    :class:`reliable_checkpoints` and :func:`cluster`.
+    :class:`reliable_checkpoints`.
     """
     if checkpoint_dir is not None:
         with reliable_checkpoints(spark, checkpoint_dir):
@@ -1217,8 +1211,8 @@ def cluster_converged(
     labels = _labels(
         spark, sf_dir, lam=lam, T=max_iter, convergence_iter=convergence_iter
     )
-    deltas = _dense(spark, sf_dir).deltas("median", lam, max_iter, convergence_iter)
-    return labels, deltas.size
+    d = _dense_chain(spark, sf_dir, lam=lam, T=max_iter, convergence_iter=convergence_iter)
+    return labels, d.deltas("median", lam, max_iter, convergence_iter).size
 
 
 # ---------------------------------------------------------------------------
@@ -1382,18 +1376,14 @@ def _dense_chain(
     lam: float = DAMPING,
     T: int = T_DEFAULT,
     convergence_iter: int | None = None,
-) -> DataFrame:
-    """Final blocked state of the one-task chain, cached per (pref, lam,
-    T, convergence_iter); the chain's exemplar set, convergence deltas
-    and labels are recorded on the ``_dense`` instance under the same
-    key."""
-    key = _ckey(spark, sf_dir, "dchain", pref, lam, T, convergence_iter)
-    if key not in _cache:
-        d = _dense(spark, sf_dir)
-        _cache[key] = d.chain(
-            T, lam=lam, pref=pref, retain=False, convergence_iter=convergence_iter
-        )[-1]
-    return _cache[key]
+):
+    """The ``_dense`` instance, with the one-task chain of (pref, lam, T,
+    convergence_iter) run once for its records (``DenseAP.record``: the
+    exemplar set, convergence deltas, exemplar counts and labels).  No
+    state: the job emits none and nothing is cached here."""
+    d = _dense(spark, sf_dir)
+    d.record(T, lam=lam, pref=pref, convergence_iter=convergence_iter)
+    return d
 
 
 def _exemplar_ids(
@@ -1401,8 +1391,7 @@ def _exemplar_ids(
 ):
     """Sorted exemplar ids after T_DEFAULT iterations (the chain's
     record — no state scan)."""
-    _dense_chain(spark, sf_dir, pref=pref, lam=lam)
-    return _dense(spark, sf_dir).ex_hint(pref, lam, T_DEFAULT)
+    return _dense_chain(spark, sf_dir, pref=pref, lam=lam).ex_hint(pref, lam, T_DEFAULT)
 
 
 def _exemplar_df(spark: SparkSession, ex) -> DataFrame:
@@ -1426,8 +1415,7 @@ def _labels(
     if key not in _cache:
         import pyarrow as pa
 
-        _dense_chain(spark, sf_dir, pref, lam, T, convergence_iter)
-        d = _dense(spark, sf_dir)
+        d = _dense_chain(spark, sf_dir, pref, lam, T, convergence_iter)
         lab = d.labels(pref, lam, T, convergence_iter)
         rows = pa.table({"vec_id": d.ids[: lab.size], "exemplar": lab})
         _cache[key] = spark.createDataFrame(rows).coalesce(1)
@@ -1461,9 +1449,14 @@ def q_ap_availability(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _one_iteration_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Coordinate view (i, k, s, r, a) of the T=1 fused chain."""
+    """Coordinate view (i, k, s, r, a) of the T=1 fused chain — the one
+    dense reader of a chain state, whose checkpoint is cached per
+    (application, sf_dir)."""
     d = _dense(spark, sf_dir)
-    return d.coordinate_view(_dense_chain(spark, sf_dir, T=1))
+    key = _ckey(spark, sf_dir, "state1")
+    if key not in _cache:
+        _cache[key] = d.chain(1, retain=False)[-1]
+    return d.coordinate_view(_cache[key])
 
 
 def q_ap_iterate_once(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1507,8 +1500,7 @@ def q_ap_convergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A9: max |r_t - r_{t-1}| per iteration t = 1..T — the deltas the
     fused chain's kernels recorded (a max is exact and order-free, so
     they are bitwise the coordinate join's), rounded by Spark."""
-    _dense_chain(spark, sf_dir)
-    deltas = _dense(spark, sf_dir).deltas("median", DAMPING, T_DEFAULT)
+    deltas = _dense_chain(spark, sf_dir).deltas("median", DAMPING, T_DEFAULT)
     return spark.createDataFrame(
         [(t, float(x)) for t, x in enumerate(deltas, 1)],
         "iter int, max_delta_r double",

@@ -23,15 +23,19 @@ reduce — with the matrix stored as row blocks:
   per-block partials (rows sorted by i → deterministic numpy pairwise
   sums) combined in block order — the classic MR column job.  The block
   cut fixes that summation order, and so the output bits;
-* ``DenseAP.chain`` runs the whole query in ONE single-task job over the
-  embeddings broadcast (``_one_task_chain``): the task folds S, takes
-  both preference scalars, runs the bootstrap and all T iterations block
-  by block, labels every point by ``assign``'s rule and emits the final
-  state once; labels, preferences, exemplar set and the convergence
-  deltas max|r_t − r_{t−1}| ride an accumulator, so ``ap.q_ap_assign``
-  and ``ap.cluster`` are that job plus their own action.  With a
-  ``convergence_iter`` the task stops at Frey & Dueck's rule instead of
-  at T (``ap.cluster_converged``).
+* the whole query is ONE single-task job over the embeddings broadcast
+  (``_one_task_chain``): the task folds S, takes both preference
+  scalars, runs all T iterations with the blocks spread over the
+  host's cores (``_chain_blocks``) and labels every
+  point by ``assign``'s rule; labels, preferences, exemplar set, the
+  exemplar count and the convergence delta max|r_t − r_{t−1}| of each
+  iteration ride an accumulator.  ``DenseAP.record`` runs that job for
+  the records alone, so ``ap.q_ap_assign`` and ``ap.cluster`` are that
+  job plus their own action and nothing N² leaves the task;
+  ``DenseAP.chain`` also emits the final state and checkpoints it, for
+  the one reader of a state (the T=1 coordinate view) and tests.  With
+  a ``convergence_iter`` the task stops at Frey & Dueck's rule instead
+  of at T (``ap.cluster_converged``).
 
 Float parity: s is computed by one fold (``_fold_s``) with the same
 sequential per-dimension accumulation as ``ap.similarity_off_diagonal``
@@ -43,15 +47,13 @@ module docstring).  The median preference is ``ap._interp_median``,
 bitwise-equal to ``percentile(s, 0.5)``.
 
 Scale gate: ``BLOCKED_MAX_N`` bounds the dense N² regime.  Below it
-every dense AP query iterates with ``DenseAP.chain``.  The gate is NOT
+every dense AP query iterates in the one-task chain.  The gate is NOT
 driver-memory-bound — the N² matrix lives in one task, and the driver
 only sees O(N) labels and deltas.  The binding costs are the N² kernel
-work per iteration and the task's resident N² arrays (s, r, a and the
-next r: 8.0–8.1 GB peak RSS of the process tree for ``q_ap_assign`` at
-N=10,000, d=32, 4 GB driver heap).  Above
-the gate the dense queries, ``ap.cluster`` and ``ap.cluster_converged``
-are refused (``ap._dense`` raises): ``ap.cluster_sparse`` is the scale
-path.
+work per iteration and the task's resident N² arrays (s, r and a;
+measured at ``BLOCKED_MAX_N``).  Above the gate the dense
+queries, ``ap.cluster`` and ``ap.cluster_converged`` are refused
+(``ap._dense`` raises): ``ap.cluster_sparse`` is the scale path.
 """
 
 from __future__ import annotations
@@ -68,7 +70,23 @@ from ..sources.tables import parquet_data_files
 from .ap import _ckpt, _interp_median
 
 DAMPING = 0.5
-BLOCKED_MAX_N = 10_000  # N² kernel work + the task's resident N² arrays bound this
+# The dense gate: N² kernel work and the chain task's resident N² arrays
+# (s, r, a: 3·N²·8 B, 2.4 GB at N=10,000) bound it.  Warm
+# q_ap_assign().count() and peak RSS of the process tree
+# (perfbench/spans.Poller, over a cold and a warm op), generated corpora
+# (perfbench gen.write_embeddings: seed 7, 16 centres, spread 1.0,
+# d=32), T=5, 4-core host, 4 GB driver heap, 3 alternating fresh
+# processes per side, labels md5-equal at every N.  "state emitted" is
+# the earlier chain, which shipped and localCheckpointed its final
+# state, kept the next r resident and ran its blocks on one core;
+# "records only" is this one:
+#   N       warm op: state emitted / records only   peak RSS: emitted / records only
+#   3,000   3.33–4.38 s / 1.43–1.67 s                1.44–1.48 GB / 1.05–1.07 GB
+#   7,500   18.5–20.4 s / 6.57–7.75 s                4.31–5.21 GB / 2.56–2.70 GB
+#   10,000  39.1–39.7 s / 11.9–12.7 s                6.95–7.39 GB / 4.08–4.16 GB
+# The value stays at 10,000: perfbench's ap_sparse workload (N=10,500)
+# must lie above it, so moving it waits for a change to the benchmark.
+BLOCKED_MAX_N = 10_000
 # ap.cluster_sparse's one gate.  At or below it the sparse ragged state
 # (~n·k·24 B, ~3 MB at 4k points, k=32) fits ONE task: build + T
 # iterations + assignment run as a single job (cluster_sparse_blocked);
@@ -292,55 +310,142 @@ def _r_block(s: np.ndarray, r: np.ndarray, a: np.ndarray, lam: float) -> np.ndar
     tests), but the partition materializes a full sorted-split copy of
     the block per call — measured 1.7 s vs 0.04 s on a 2000² block
     (guide §1.2 "per-task work"; ``asv`` is local, so the in-place
-    blanking is safe)."""
+    blanking is safe).  s − excl is the broadcast s − m1 written over
+    ``asv`` with the argmax slots then set to s − m2, and the damping
+    runs in place: the same elementwise operations, so the same bits,
+    with one block-sized temporary besides the result."""
     asv = a + s
     arg1 = asv.argmax(1)
     rows = np.arange(s.shape[0])
-    m1 = asv[rows, arg1].copy()
+    m1 = asv[rows, arg1]
     asv[rows, arg1] = -np.inf
     m2 = asv.max(1)  # 2nd largest incl dups (max is blanked at ONE slot)
-    excl = np.repeat(m1[:, None], s.shape[1], axis=1)
-    excl[rows, arg1] = m2
-    return lam * r + (1 - lam) * (s - excl)
+    d = np.subtract(s, m1[:, None], out=asv)
+    d[rows, arg1] = s[rows, arg1] - m2
+    out = np.multiply(r, lam)
+    out += np.multiply(d, 1 - lam, out=d)
+    return out
 
 
-def _stats_partial(s, r, a, rows, di, lam: float):
-    """A block's column-stats partial of the NEXT responsibilities
-    r_new = ``_r_block(s, r, a)``: (clipped column sum Σ_i max(0, r_new)
-    with the diagonal excluded — pairwise over the id-sorted rows — the
-    diagonal r_new, and r_new itself).  The chain's bootstrap and every
-    iteration take their stats here, and reuse r_new as the next
-    iteration's responsibilities."""
+def _r_pass(s, r, a, rows, di, iv, lam: float):
+    """A block's responsibility pass of one damped iteration: r_new =
+    ``_r_block(s, r, a)`` → (r_new, partial).  ``partial`` is the
+    block's ``_combine_partials`` entry: the clipped column sum Σ_i
+    max(0, r_new) with the diagonal excluded (pairwise over the
+    id-sorted rows), the block's ids, its diagonal r_new and max|r_new −
+    r| (a max is exact and order-free, so the combined delta is bitwise
+    the coordinate join's).  The delta is written over the clipped
+    copy once its sum is taken."""
     r_new = _r_block(s, r, a, lam)
-    diag_r = r_new[rows, di].copy()
     rp = np.maximum(r_new, 0.0)
     rp[rows, di] = 0.0
-    return rp.sum(0), diag_r, r_new
+    colsum = rp.sum(0)
+    dr = np.subtract(r_new, r, out=rp)
+    return r_new, (colsum, iv, r_new[rows, di], float(np.abs(dr, out=dr).max()))
 
 
-def _block_iteration(s, r, a, r_new, rows, di, iv, colsum, rkk, lam: float):
-    """One damped iteration of an id-sorted block (s diagonal patched)
-    given r_new = ``_r_block(s, r, a)`` and the combined column stats
-    (colsum, rkk) of r_new → (a_new, r_next, partial).  ``partial`` is
-    the block's ``_combine_partials`` entry: the NEXT iteration's column
-    stats, the exemplar candidates of the state (s, r_new, a_new) and
-    max|r_new − r| (a max is exact and order-free, so the combined delta
-    is bitwise the coordinate join's); r_next is the next iteration's
-    r_new."""
-    rp = np.maximum(r_new, 0.0)
+def _a_pass(r, a, rows, di, colsum, rkk, lam: float) -> np.ndarray:
+    """A block's availability pass of one damped iteration, given its
+    responsibilities r and their combined column stats (colsum, rkk) →
+    a_new = λ·a + (1 − λ)·a_hat, with a_hat(i, k) = min(0, r(k, k) +
+    Σ_{i'≠k} max(0, r(i', k)) − max(0, r(i, k))) off the diagonal and
+    Σ_{i'≠k} max(0, r(i', k)) on it.
+
+    The clipped r is recomputed here rather than kept from ``_r_pass``,
+    and a_hat and its damping are written over it.  Keeping it would
+    hold one more N² array for no time won: measured at N=7,500 (d=32,
+    T=5, 4 threads), kept cost 0.6 GB more peak RSS and the loop was no
+    faster (3.4–3.9 s kept, 3.1–3.2 s recomputed)."""
+    rp = np.maximum(r, 0.0)
     rp[rows, di] = 0.0
-    a_hat = np.minimum(0.0, rkk[None, :] + colsum[None, :] - rp)
+    a_hat = np.subtract(rkk + colsum, rp, out=rp)
+    np.minimum(0.0, a_hat, out=a_hat)
     a_hat[rows, di] = colsum[di]
-    a_new = lam * a + (1 - lam) * a_hat
-    colsum_n, diag_rn, r_next = _stats_partial(s, r_new, a_new, rows, di, lam)
-    ex_ids = iv[(a_new[rows, di] + r_new[rows, di]) > 0]
-    delta = float(np.abs(r_new - r).max())
-    return a_new, r_next, (colsum_n, iv, diag_rn, ex_ids, delta)
+    a_new = np.multiply(a, lam)
+    a_new += np.multiply(a_hat, 1 - lam, out=a_hat)
+    return a_new
+
+
+def _chain_blocks(
+    s: np.ndarray,
+    ids: np.ndarray,
+    nb: int,
+    p: float,
+    lam: float,
+    iterations: int,
+    convergence_iter: int | None = None,
+    workers: int = 1,
+):
+    """The chain task's loop over the full RAW-diagonal s (rows and
+    columns in ``ids`` order): patch the diagonal to the preference
+    ``p``, cut the rows into ``nb`` blocks (``_block_bounds``), run the
+    damped iterations from r = a = 0 and label the final state by
+    ``assign``'s rule → (final state blocks ``[(iv, s, r, a)]``,
+    exemplar ids, deltas, exemplar count per iteration, labels — one per
+    point in ids order, none when no exemplar was elected).
+
+    An iteration is the MR-AP pair of passes: ``_r_pass`` on every
+    block, the column stats combined by ``_combine_partials`` in block
+    order, then ``_a_pass`` on every block and its exemplar candidates
+    a(k,k) + r(k,k) > 0.  Each pass maps the blocks over ``workers``
+    threads (numpy releases the GIL); a block's pass touches only its
+    own rows, arrays and list, so no bit depends on ``workers``.  A
+    block's old r or a is dropped as soon as its pass ends, so the
+    resident N² arrays are s, r and a (fold plus this loop alone in one
+    process at N=7,500, d=32, T=5, 4 threads: 1.8–1.9 GB peak RSS).
+    With ``convergence_iter`` the loop stops early by Frey & Dueck's
+    rule: once the exemplar set has been non-empty and equal to the
+    previous iteration's for ``convergence_iter`` consecutive
+    iterations; ``iterations`` is then the cap.  One delta and one count
+    are recorded per iteration run."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    bounds = _block_bounds(len(ids), nb)
+    blocks = []  # [iv, s, r, a, rows, diagonal columns] per block
+    for lo, hi in zip(bounds[:-1], bounds[1:]):
+        if lo < hi:
+            biv, sb = ids[lo:hi], s[lo:hi]
+            rows = np.arange(hi - lo)
+            di = np.searchsorted(ids, biv)
+            sb[rows, di] = p
+            z = np.zeros(sb.shape)
+            blocks.append([biv, sb, z, z, rows, di])
+
+    def r_step(blk):
+        biv, sb, r, a, rows, di = blk
+        blk[2], part = _r_pass(sb, r, a, rows, di, biv, lam)
+        return part
+
+    def a_step(blk):
+        biv, _, r, a, rows, di = blk
+        blk[3] = _a_pass(r, a, rows, di, colsum, rkk, lam)
+        return biv[(blk[3][rows, di] + r[rows, di]) > 0]
+
+    deltas, counts, prev, stable = [], [], None, 0
+    with ThreadPoolExecutor(workers) as pool:
+        for _ in range(iterations):
+            parts = {int(part[1][0]): part for part in pool.map(r_step, blocks)}
+            colsum, rkk = _combine_partials(parts, ids)
+            deltas.append(max(part[3] for part in parts.values()))
+            ex = np.sort(np.concatenate(list(pool.map(a_step, blocks))))
+            counts.append(ex.size)
+            if convergence_iter is None:
+                continue
+            if prev is not None and ex.size and np.array_equal(ex, prev):
+                stable += 1
+                if stable >= convergence_iter:
+                    break
+            else:
+                stable = 0
+            prev = ex
+    lab = _assign_rows(ids, s, ids, ex) if ex.size else ex
+    final = [tuple(blk[:4]) for blk in blocks]
+    return final, ex, np.array(deltas, dtype="f8"), np.array(counts, dtype="i8"), lab
 
 
 class _PartialsAcc(AccumulatorParam):
-    """The chain task's result (exemplar set, deltas, preferences,
-    labels) under key 0.  Merge is key-OVERWRITE: the task is
+    """The chain task's result (exemplar set, deltas, exemplar counts,
+    labels, preferences) under key 0.  Merge is key-OVERWRITE: the task is
     deterministic, so a retried or speculative attempt re-adds the
     identical value under the same key — the accumulator stays correct
     without relying on Spark's exactly-once-per-result-task
@@ -355,8 +460,9 @@ class _PartialsAcc(AccumulatorParam):
 
 
 def _combine_partials(parts: dict, ids: np.ndarray):
-    """Combine the per-block partials in deterministic (min_i-sorted)
-    block order → (colsum, rkk, exemplar_ids).
+    """Combine the per-block column-stats partials (colsum, diag_i,
+    diag_r, ...) in deterministic (min_i-sorted) block order → (colsum,
+    rkk).
 
     Completeness invariant: the diag_i ids across all partials must cover
     every id exactly once.  A partial that was silently dropped (a future
@@ -368,14 +474,11 @@ def _combine_partials(parts: dict, ids: np.ndarray):
         np.stack([np.asarray(parts[k][0], dtype="f8") for k in keys]), axis=0
     )
     rkk = np.zeros(len(ids), dtype="f8")
-    ex: list[np.ndarray] = []
     cover: list[np.ndarray] = []
     for k in keys:
-        diag_i, diag_r, ex_ids = parts[k][1:4]  # [4]: the fused delta
-        di = np.asarray(diag_i, dtype="i8")
+        di = np.asarray(parts[k][1], dtype="i8")
         cover.append(di)
-        rkk[np.searchsorted(ids, di)] = np.asarray(diag_r, dtype="f8")
-        ex.append(np.asarray(ex_ids, dtype="i8"))
+        rkk[np.searchsorted(ids, di)] = np.asarray(parts[k][2], dtype="f8")
     got = np.sort(np.concatenate(cover)) if cover else np.empty(0, dtype="i8")
     if not np.array_equal(got, ids):
         raise RuntimeError(
@@ -383,8 +486,7 @@ def _combine_partials(parts: dict, ids: np.ndarray):
             f"{len(keys)} blocks, expected {len(ids)} distinct points — "
             "a partition's partial was dropped or duplicated"
         )
-    ex_all = np.sort(np.concatenate(ex)) if ex else np.array([], dtype="i8")
-    return colsum, rkk, ex_all
+    return colsum, rkk
 
 
 class DenseAP:
@@ -413,10 +515,9 @@ class DenseAP:
         self._prefs: dict[str, float] = {}
         # per chain run, keyed (pref, lam, T, convergence_iter): the final
         # state's exemplar set, the convergence deltas max|r_t − r_{t−1}|
-        # of the iterations it ran and the final state's labels
-        self._ex_hint: dict[tuple, np.ndarray] = {}
-        self._deltas: dict[tuple, np.ndarray] = {}
-        self._labels: dict[tuple, np.ndarray] = {}
+        # and exemplar count of each iteration it ran, and the final
+        # state's labels
+        self._runs: dict[tuple, tuple[np.ndarray, ...]] = {}
 
     def destroy(self) -> None:
         """Release executor-side state when this instance is evicted from
@@ -513,26 +614,28 @@ class DenseAP:
     # -- iteration -----------------------------------------------------
 
     def _one_task_chain(
-        self, iterations: int, pref: str, lam: float, convergence_iter: int | None
-    ):
+        self,
+        iterations: int,
+        pref: str,
+        lam: float,
+        convergence_iter: int | None,
+        emit: bool,
+    ) -> DataFrame | None:
         """The whole dense query in ONE single-task job over the
-        embeddings broadcast → (final state, exemplar ids, deltas,
-        {"min", "median"} preferences, labels).  The task folds S with
-        ``_fold_s`` on the host's cores (state0's rows, bitwise), takes
-        both preference scalars from its off-diagonal as ``pref_value``
-        does, patches the diagonal to ``pref``'s, cuts the rows into ``nb`` blocks
-        (``_block_bounds``), runs ``_stats_partial``/``_block_iteration``
-        per block and combines the partials with ``_combine_partials`` in
-        block order.  The labels are ``assign``'s of the final state, one
-        per point in ids order (none when no exemplar was elected).  The
-        final state is emitted once, one Arrow batch per block;
-        everything else rides an accumulator.
+        embeddings broadcast.  The task folds S with ``_fold_s`` on the
+        host's cores (state0's rows, bitwise), takes both preference
+        scalars from its off-diagonal as ``pref_value`` does, and runs
+        ``_chain_blocks`` on as many threads (the iterations, the stop
+        rule of ``convergence_iter`` and labels).  The run's
+        exemplar set, deltas, exemplar counts, labels and both
+        preferences ride an accumulator and are recorded here under
+        (pref, lam, T, convergence_iter).
 
-        With ``convergence_iter`` the loop stops early by Frey & Dueck's
-        rule: once the exemplar set has been non-empty and equal to the
-        previous iteration's for ``convergence_iter`` consecutive
-        iterations; ``iterations`` is then the cap.  One delta is
-        recorded per iteration run."""
+        With ``emit`` the task also yields the final state, one Arrow
+        batch per block, and the job is its checkpoint → that state.
+        Without it the job is a collect of an empty result → None: no N²
+        byte crosses into the JVM and nothing is persisted.  Only the
+        T=1 coordinate view reads a state."""
         bc = self.bc
         nb = self.nb
         acc = self.spark.sparkContext.accumulator({}, _PartialsAcc())
@@ -541,54 +644,27 @@ class DenseAP:
             for _ in batches:  # the one driving row of spark.range
                 pass
             ids_b, m_b = bc.value
-            s = _fold_s(m_b, m_b, os.cpu_count() or 1)
+            workers = os.cpu_count() or 1
+            s = _fold_s(m_b, m_b, workers)
             prefs = _pref_scalars(s)
-            p = prefs[pref]
-            blocks, parts = [], {}
-            bounds = _block_bounds(len(ids_b), nb)
-            for lo, hi in zip(bounds[:-1], bounds[1:]):
-                if lo >= hi:
-                    continue
-                biv, sb = ids_b[lo:hi], s[lo:hi]
-                rows = np.arange(hi - lo)
-                di = np.searchsorted(ids_b, biv)
-                sb[rows, di] = p
-                z = np.zeros_like(sb)
-                colsum, diag_r, r_new = _stats_partial(sb, z, z, rows, di, lam)
-                parts[int(biv[0])] = (colsum, biv, diag_r, [])
-                blocks.append((biv, sb, z, z, r_new, rows, di))
-            colsum, rkk, _ = _combine_partials(parts, ids_b)
-            deltas, prev, stable = [], None, 0
-            for _ in range(iterations):
-                parts = {}
-                for j, (biv, sb, r, a, r_new, rows, di) in enumerate(blocks):
-                    a_new, r_next, parts[int(biv[0])] = _block_iteration(
-                        sb, r, a, r_new, rows, di, biv, colsum, rkk, lam
-                    )
-                    blocks[j] = (biv, sb, r_new, a_new, r_next, rows, di)
-                colsum, rkk, ex = _combine_partials(parts, ids_b)
-                deltas.append(max(part[4] for part in parts.values()))
-                if convergence_iter is None:
-                    continue
-                if prev is not None and ex.size and np.array_equal(ex, prev):
-                    stable += 1
-                    if stable >= convergence_iter:
-                        break
-                else:
-                    stable = 0
-                prev = ex
-            lab = _assign_rows(ids_b, s, ids_b, ex) if ex.size else ex
-            acc.add({0: (ex, np.array(deltas, dtype="f8"), prefs, lab)})
-            for biv, sb, r, a, *_ in blocks:
-                yield _encode_state(biv, sb, r, a)
+            blocks, *run = _chain_blocks(
+                s, ids_b, nb, prefs[pref], lam, iterations, convergence_iter, workers
+            )
+            acc.add({0: (tuple(run), prefs)})
+            if emit:
+                for blk in blocks:
+                    yield _encode_state(*blk)
 
-        state = _ckpt(
-            self.spark.range(0, 1, 1, 1).mapInArrow(
-                loop_kernel, schema=_STATE_SCHEMA
-            ),
-            eager=True,
-        )
-        return (state, *acc.value[0])
+        job = self.spark.range(0, 1, 1, 1).mapInArrow(loop_kernel, schema=_STATE_SCHEMA)
+        if emit:
+            state = _ckpt(job, eager=True)
+        else:
+            job.collect()  # empty: the run's records ride the accumulator
+            state = None
+        run, prefs = acc.value[0]
+        self._runs[(pref, lam, iterations, convergence_iter)] = run
+        self._prefs.update(prefs)
+        return state
 
     def chain(
         self,
@@ -599,30 +675,45 @@ class DenseAP:
         convergence_iter: int | None = None,
     ) -> list[DataFrame]:
         """States after iterations 1..T, each from one ``_one_task_chain``
-        job that also records that run's exemplar set, convergence deltas,
-        labels (``ex_hint``/``deltas``/``labels``, keyed by the stop rule
-        too) and both preferences, so no consumer scans a state for them.
+        job that emits its final state and records that run (see
+        ``record``).
 
         ``retain=False`` runs the T-iteration job once and returns only
         its final state.  ``retain=True`` runs one job per t = 1..T and
         returns all T states (bitwise the states after t iterations of
         the T-run; only tests read them).  ``convergence_iter`` turns T
-        into a cap (see ``_one_task_chain``).  Raises ValueError for
+        into a cap (see ``_chain_blocks``).  Raises ValueError for
         T < 1: there is no state to return."""
         if iterations < 1:
             raise ValueError(f"chain needs T >= 1 iterations, got {iterations}")
-        states: list[DataFrame] = []
-        for t in range(1 if retain else iterations, iterations + 1):
-            key = (pref, lam, t, convergence_iter)
-            state, self._ex_hint[key], self._deltas[key], prefs, lab = (
-                self._one_task_chain(t, pref, lam, convergence_iter)
-            )
-            self._prefs.update(prefs)
-            self._labels[key] = lab
-            states.append(state)
-        return states
+        return [
+            self._one_task_chain(t, pref, lam, convergence_iter, emit=True)
+            for t in range(1 if retain else iterations, iterations + 1)
+        ]
+
+    def record(
+        self,
+        iterations: int,
+        lam: float = DAMPING,
+        pref: str = "median",
+        convergence_iter: int | None = None,
+    ) -> None:
+        """Run the chain for its records alone, unless that run is
+        recorded already: its exemplar set, convergence deltas, exemplar
+        counts and labels (``ex_hint``/``deltas``/``exemplar_counts``/
+        ``labels``, keyed by the stop rule too) and both preferences.
+        One single-task job that emits no state — what every dense query
+        but the T=1 coordinate view reads.  Raises ValueError for T < 1."""
+        if iterations < 1:
+            raise ValueError(f"chain needs T >= 1 iterations, got {iterations}")
+        if (pref, lam, iterations, convergence_iter) not in self._runs:
+            self._one_task_chain(iterations, pref, lam, convergence_iter, emit=False)
 
     # -- consumers -----------------------------------------------------
+
+    def _run_field(self, j: int, pref, lam, T, convergence_iter):
+        run = self._runs.get((pref, lam, T, convergence_iter))
+        return None if run is None else run[j]
 
     def ex_hint(
         self, pref: str = "median", lam: float = DAMPING, T: int | None = None,
@@ -631,7 +722,7 @@ class DenseAP:
         """Exemplar set {k : a(k,k) + r(k,k) > 0} of the final state of
         the chain run with (pref, lam, T, convergence_iter), sorted; None
         if none ran."""
-        return self._ex_hint.get((pref, lam, T, convergence_iter))
+        return self._run_field(0, pref, lam, T, convergence_iter)
 
     def deltas(
         self, pref: str = "median", lam: float = DAMPING, T: int | None = None,
@@ -640,7 +731,15 @@ class DenseAP:
         """max|r_t − r_{t−1}| over all (i, k) for each iteration t that
         chain run ran (unrounded; T of them unless the stop rule ended it
         early); None if none ran."""
-        return self._deltas.get((pref, lam, T, convergence_iter))
+        return self._run_field(1, pref, lam, T, convergence_iter)
+
+    def exemplar_counts(
+        self, pref: str = "median", lam: float = DAMPING, T: int | None = None,
+        convergence_iter: int | None = None,
+    ) -> np.ndarray | None:
+        """|{k : a(k,k) + r(k,k) > 0}| after each iteration t that chain
+        run ran, one per delta; None if none ran."""
+        return self._run_field(2, pref, lam, T, convergence_iter)
 
     def labels(
         self, pref: str = "median", lam: float = DAMPING, T: int | None = None,
@@ -650,7 +749,7 @@ class DenseAP:
         (pref, lam, T, convergence_iter): the exemplar of each point in
         ``ids`` order, empty when no exemplar was elected; None if none
         ran."""
-        return self._labels.get((pref, lam, T, convergence_iter))
+        return self._run_field(3, pref, lam, T, convergence_iter)
 
     def assign(self, state: DataFrame, ex: np.ndarray) -> DataFrame:
         """label(i) = argmax over exemplars k of s(i,k), ties to lowest k,

@@ -1,9 +1,10 @@
 """The one dense AP iteration loop: the chain's recorded convergence
 deltas and exemplar sets against the coordinate passes, its outputs
-against bits pinned from the per-iteration loop it replaced, its
-recorded labels and preferences, its stop rule and the job counts of
-``cluster_converged`` and ``entry()``, both sides of the sparse gate,
-and the one similarity fold."""
+against bits pinned from the per-iteration loop it replaced (in the
+task and in the driver on 1 and 3 threads), its recorded labels,
+preferences and exemplar counts, its stop rule, the job counts and
+persisted RDDs of the dense entry points, the T=1 state's DuckDB
+parity, both sides of the sparse gate, and the one similarity fold."""
 
 from __future__ import annotations
 
@@ -141,6 +142,34 @@ def test_chain_outputs_equal_pinned_bits(spark, monkeypatch):
         d.destroy()
 
 
+def test_chain_blocks_threads_equal_pinned_bits():
+    """``_chain_blocks`` run in the driver over the same 6 blocks, on 1
+    thread and on 3, gives the pinned labels, exemplar set, deltas and
+    final (i, s, r, a) arrays bit for bit: a thread touches only its
+    blocks' rows, and the partials are combined in block order."""
+    from affinity_propagation_mapreduce_spark.operators import ap, ap_dense
+
+    ids, m = ap_dense._load_embeddings_arrow(SF_T2)
+    T = ap.T_DEFAULT
+    for workers in (1, 3):
+        s = ap_dense._fold_s(m, m, workers)
+        prefs = ap_dense._pref_scalars(s)
+        blocks, ex, deltas, counts, lab = ap_dense._chain_blocks(
+            s, ids, 6, prefs["median"], ap_dense.DAMPING, T, workers=workers
+        )
+        assert len(blocks) == 6 and counts.tolist()[-1] == ex.size > 0
+        arrays = [np.concatenate([blk[j] for blk in blocks]) for j in range(4)]
+        got = {
+            "labels": _md5(np.stack([ids, lab], 1).astype("i8").tobytes()),
+            "ex_hint": _md5(ex.astype("i8").tobytes()),
+            "deltas": _md5(deltas.tobytes()),
+            "state": _md5(b"".join(a.tobytes() for a in arrays)),
+            "median": prefs["median"].hex(),
+            "min": prefs["min"].hex(),
+        }
+        assert got == CHAIN_PINS, workers
+
+
 def test_chain_records_equal_assign_and_coordinate_prefs(spark, monkeypatch):
     """The chain's recorded labels are ``assign``'s over its final state,
     row for row, and its recorded preferences are bitwise the coordinate
@@ -213,8 +242,6 @@ def test_q_ap_assign_above_old_gate_in_two_jobs(spark, tmp_path, monkeypatch):
         rows = sorted(tuple(r) for r in ap.q_ap_assign(spark, data).collect())
         assert _md5(np.array(rows, dtype="i8").tobytes()) == N5200_LABELS
     finally:
-        # the 650 MB state: its localCheckpoint RDD is the analyzed plan's
-        ap._dense_chain(spark, data)._jdf.queryExecution().analyzed().rdd().unpersist(False)
         ap._dense(spark, data).destroy()
         ap.clear_cache()
 
@@ -256,6 +283,57 @@ def test_cluster_converged_in_one_chain_job(spark):
     d = ap._dense(spark, SF_SMALL)
     assert d.deltas("median", ap.DAMPING, 60, 5).size == iters
     assert d.deltas("median", ap.DAMPING, 60) is None
+
+
+def test_exemplar_counts_per_iteration(spark):
+    """The chain records the exemplar count of every iteration it ran:
+    the last is the final exemplar set's size, and a converged run has
+    one count per delta."""
+    from affinity_propagation_mapreduce_spark.operators import ap
+
+    ap.clear_cache()
+    d = ap._dense_chain(spark, SF_SMALL)
+    counts = d.exemplar_counts("median", ap.DAMPING, ap.T_DEFAULT)
+    assert counts.shape == (ap.T_DEFAULT,)
+    assert counts[-1] == d.ex_hint("median", ap.DAMPING, ap.T_DEFAULT).size > 0
+    _, iters = ap.cluster_converged(spark, SF_SMALL, max_iter=60, convergence_iter=5)
+    counts = d.exemplar_counts("median", ap.DAMPING, 60, 5)
+    assert counts.size == d.deltas("median", ap.DAMPING, 60, 5).size == iters
+    assert counts[-1] == d.ex_hint("median", ap.DAMPING, 60, 5).size
+
+
+def test_dense_entry_points_persist_nothing(spark):
+    """``q_ap_assign(...).count()`` and ``cluster(...).collect()`` run the
+    chain for its records alone: each is at most 2 jobs and leaves no
+    more persisted RDDs than there were before the call."""
+    from affinity_propagation_mapreduce_spark.operators import ap
+
+    sc = spark.sparkContext
+    for name, fn in (
+        ("ap-assign-persist", lambda: ap.q_ap_assign(spark, SF_SMALL).count()),
+        ("ap-cluster-persist", lambda: len(ap.cluster(spark, SF_SMALL).collect())),
+    ):
+        ap.clear_cache()
+        before = len(sc._jsc.getPersistentRDDs())
+        got, jobs = _jobs_of(spark, name, fn)
+        assert got == 500
+        assert jobs <= 2, f"{name}: expected <= 2 jobs, got {jobs}"
+        assert len(sc._jsc.getPersistentRDDs()) <= before, name
+
+
+@pytest.mark.parametrize("name", ["ap_availability", "ap_iterate_once"])
+def test_one_iteration_view_matches_duckdb(spark, name):
+    """The T=1 coordinate view, the one reader of an emitted chain
+    state, still hashes equal to its DuckDB oracle (at sf0.001)."""
+    from affinity_propagation_mapreduce_spark import registry
+    from affinity_propagation_mapreduce_spark.operators import ap
+    from affinity_propagation_mapreduce_spark.plans.verify import compare
+
+    ap.clear_cache()
+    rep = compare(
+        name, registry.queries()[name](spark, SF_SMALL), registry.oracle_sql()[name], SF_SMALL
+    )
+    assert rep.ok, f"{name}: {rep.detail} {rep.mismatches[:2]}"
 
 
 def test_entry_job_budget(spark):

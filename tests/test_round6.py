@@ -193,7 +193,7 @@ def test_fused_loop_is_run_deterministic(spark):
     def final_view():
         ap.clear_cache()
         d = ap._dense(spark, SF_SMALL)
-        st = ap._dense_chain(spark, SF_SMALL)
+        st = d.chain(ap.T_DEFAULT, retain=False)[-1]
         return d.coordinate_view(st).localCheckpoint(eager=True)
 
     v1, v2 = final_view(), final_view()

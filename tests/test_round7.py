@@ -34,7 +34,7 @@ def test_combine_partials_accepts_full_cover():
 
     ids = np.arange(10, dtype="i8")
     parts = {0: _mk_partial(ids[:6]), 6: _mk_partial(ids[6:])}
-    colsum, rkk, ex = _combine_partials(parts, ids)
+    colsum, rkk = _combine_partials(parts, ids)
     assert colsum.shape == (10,) and rkk.shape == (10,)
 
 
@@ -170,7 +170,8 @@ def test_ap_parity_values_clear_of_knife_edges(spark):
 
     first = ap._one_iteration_state(spark, SF_T2)
     # election margin: diagonal a+r on the final state
-    final = ap._dense(spark, SF_T2).coordinate_view(ap._dense_chain(spark, SF_T2))
+    d = ap._dense(spark, SF_T2)
+    final = d.coordinate_view(d.chain(ap.T_DEFAULT, retain=False)[-1])
     elect = (
         final.where(F.col("i") == F.col("k"))
         .select(F.min(F.abs(F.col("a") + F.col("r"))).alias("m"))
