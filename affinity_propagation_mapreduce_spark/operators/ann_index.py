@@ -905,10 +905,22 @@ def _adc_scan(
     pruned serving path never holds the full |Q|×M×KSUB table (~327 MB
     float64 at |Q|=10k — review r9 #4; the flat scan still converges to
     the full table, inherently, because every query probes every cell).
-    Per batch, rows group by cell and only the queries probing that
-    cell score it; emission is the per-(batch, cell, query)
-    top-``shortlist`` — survivor-safe for the global
-    (pq_cosine DESC, neighbor_id ASC) shortlist window.
+    Per Arrow batch, rows group by (batch dir, cell) — one group per
+    layout fragment — and only the queries probing that cell score it;
+    emission is the per-(batch dir, cell, query) top-``shortlist`` —
+    survivor-safe for the global (pq_cosine DESC, neighbor_id ASC)
+    shortlist window.
+
+    ONE WAVE: the scan is coalesced (narrow, no exchange) to the
+    session's ``defaultParallelism`` before the ``mapInArrow``, so the
+    kernel runs one Python task per core however many batch dirs the
+    union holds (``_batch_scan`` unions one relation per dir, and each
+    relation splits into its own ~cores splits: 16-17 Python tasks at
+    4 batch dirs on 4 cores, each paying the worker's fixed per-task
+    floor).  A coalesced partition, and so one Arrow batch, can hold
+    one cell's rows from two batch dirs; grouping by the dir keeps the
+    truncation per fragment, which ``_per_cell_cap``'s ``n_fragments``
+    scaling assumes.
 
     WIDE-d BULK ESCAPE HATCH (measured this round): at d=768 the full
     LUT working set for a 10k-query batch is ~8 GB (40 blocks × 200 MB)
@@ -952,7 +964,7 @@ def _adc_scan(
     lut_budget = _LUT_CACHE_BYTES  # snapshot: ships inside the closure
     counters = _BRANCH_COUNTERS  # snapshot: (lut, direct) accs or None
     exact = k is not None
-    in_cols = ["vec_id", "cell", "code", "nrm"]
+    in_cols = ["vec_id", "cell", "batch", "code", "nrm"]
     out_names = ["query_id", "neighbor_id", "pq_cosine"]
     if exact:
         in_cols.append("emb")
@@ -961,6 +973,7 @@ def _adc_scan(
 
     def kernel(batches):
         import pyarrow as pa
+        import pyarrow.compute as pc
 
         bks, qi_, qm_, qn_, c2q = bc.value
         qmT = np.ascontiguousarray(qm_.T)  # per-dimension query columns
@@ -997,14 +1010,19 @@ def _adc_scan(
                 continue
             ids = b.column(0).to_numpy(zero_copy_only=False).astype("i8")
             home = b.column(1).to_numpy(zero_copy_only=False).astype("i8")
-            codes = _fixed_width_bytes(b.column(2), m_)
-            nrm = b.column(3).to_numpy(zero_copy_only=False).astype("f8")
+            tags = pc.dictionary_encode(b.column(2))
+            n_frag = len(tags.dictionary)
+            frag = tags.indices.to_numpy(zero_copy_only=False).astype("i8")
+            codes = _fixed_width_bytes(b.column(3), m_)
+            nrm = b.column(4).to_numpy(zero_copy_only=False).astype("f8")
             out_p, out_r, out_s = [], [], []
-            for c in np.unique(home):
-                probing = c2q.get(int(c))
+            # one group per (cell, batch dir), cells ascending
+            group = home * n_frag + frag
+            for g in np.unique(group):
+                probing = c2q.get(int(g // n_frag))
                 if probing is None or not len(probing):
                     continue
-                c_rows = np.flatnonzero(home == c)
+                c_rows = np.flatnonzero(group == g)
                 c_ids, c_codes, c_nrm = ids[c_rows], codes[c_rows], nrm[c_rows]
                 # adc[p, j] = sum_m lut[p, m, codes[j, m]] — chunk the
                 # probing queries so the score matrix stays ~MBs.
@@ -1055,7 +1073,7 @@ def _adc_scan(
                 # at a time (sequential, as the JVM fold).  The stored
                 # nrm is numpy's pairwise sum, so the neighbor norm is
                 # re-folded from the raw vector as the JVM rerank does.
-                flat = b.column(4).flatten().to_numpy(zero_copy_only=False)
+                flat = b.column(5).flatten().to_numpy(zero_copy_only=False)
                 embT = np.ascontiguousarray(
                     flat.astype("f8").reshape(nb, len(qmT)).T
                 )
@@ -1069,10 +1087,14 @@ def _adc_scan(
                 [pa.array(c) for c in cols], names=out_names
             )
 
-    scored = codes_df.select(*in_cols).mapInArrow(
-        kernel,
-        "query_id long, neighbor_id long, "
-        + ", ".join(f"{c} double" for c in out_names[2:]),
+    scored = (
+        codes_df.select(*in_cols)
+        .coalesce(spark.sparkContext.defaultParallelism)
+        .mapInArrow(
+            kernel,
+            "query_id long, neighbor_id long, "
+            + ", ".join(f"{c} double" for c in out_names[2:]),
+        )
     )
     w_adc = Window.partitionBy("query_id").orderBy(
         F.desc("pq_cosine"), F.asc("neighbor_id")
@@ -1222,17 +1244,21 @@ def choose_search_mode(nlist: int, n_probe: int) -> str:
 
 
 # Per-process scan-relation memo, one entry per COMMITTED BATCH DIR:
-# creating a scan DataFrame is DRIVER work — Spark's file listing (a
-# parallel listing job once a dir holds more than 32 children) plus a
-# parquet schema-inference job — and keying it on the probed-dir set,
-# which changes with every query batch, paid ~1.1-1.9 s of listing on
-# every perfbench ``ann_serve`` serve (4-core host, 6-8k × d=32).  A batch dir is IMMUTABLE once
-# renamed into place (appends add new dirs, every fold/migration writes
-# a new generation root), so its relation is built once per
-# (application, batch dir) and every serve takes the union of the
-# current generation's relations, pruned by ``cell IN (probed)``: a warm
-# serve lists nothing, a serve after an append lists only the new
-# batch.  ``batch`` is the dir's tag as a string literal — never an
+# creating a scan DataFrame is DRIVER work — Spark's file listing, run
+# as a job once a dir holds more than 32 children — and keying it on
+# the probed-dir set, which changes with every query batch, paid
+# ~1.1-1.9 s of listing on every perfbench ``ann_serve`` serve (4-core
+# host, 6-8k × d=32).  That job runs one task per core
+# (session.get_spark sets the discovery parallelism; Spark's default of
+# 10,000 made one task per cell dir: ~180 tasks and 1.0-1.3 s for one
+# perfbench batch dir), and the schema comes from one data file's
+# footer (_footer_schema), so no schema-inference job runs.  A batch
+# dir is IMMUTABLE once renamed into place (appends add new dirs, every
+# fold/migration writes a new generation root), so its relation is
+# built once per (application, batch dir) and every serve takes the
+# union of the current generation's relations, pruned by
+# ``cell IN (probed)``: a warm serve lists nothing, a serve after an
+# append lists only the new batch.  ``batch`` is the dir's tag as a string literal — never an
 # inferred partition value: inferred from one batch alone, tag "007"
 # reads as the integer 7 and misses its tombstones.  Each entry carries the dir's (inode, mtime) stamp so
 # a layout removed and rebuilt at the same path is never served from a
@@ -1263,6 +1289,19 @@ def _codes_scan(spark, croot: str, dirs: list[str]) -> DataFrame:
         _tree_memo.pop(next(iter(_tree_memo)))
     _tree_memo[key] = df
     return df
+
+
+def _footer_schema(bdir: str):
+    """The read schema of batch dir ``bdir``: one data file's parquet
+    footer (every file of a batch is one write's) plus the ``cell``
+    partition column — what Spark's schema inference returns, without
+    its one-task job."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+    from pyspark.sql.types import IntegerType
+
+    schema = from_arrow_schema(pq.read_schema(parquet_data_files(bdir)[0]))
+    return schema.add("cell", IntegerType())
 
 
 def _batch_scan(spark, croot: str, cells) -> DataFrame | None:
@@ -1296,8 +1335,10 @@ def _batch_scan(spark, croot: str, cells) -> DataFrame | None:
             # an empty append lands a _SUCCESS-only dir, which has no
             # schema to infer and no rows to serve
             if any(n.startswith("cell=") for n in os.listdir(bdir)):
-                df = spark.read.parquet(bdir).withColumn(
-                    "batch", F.lit(name.split("=", 1)[1])
+                df = (
+                    spark.read.schema(_footer_schema(bdir))
+                    .parquet(bdir)
+                    .withColumn("batch", F.lit(name.split("=", 1)[1]))
                 )
             others = [
                 k for k in _scan_memo if os.path.dirname(k[1]) != croot
@@ -1349,8 +1390,7 @@ def search_ann_index(
     the listing is paid once per (process, batch dir), not per serve.
     Reading the layout ROOT instead would re-list every batch and all
     its nlist cell dirs through one parallel partition discovery (~9k
-    listing tasks at N=10M) — and, memoized, go stale on the next
-    append.
+    dirs at N=10M) — and, memoized, go stale on the next append.
 
     ``model`` (the ``load_ann_model`` triple) and ``cell_to_q`` (the
     driver-side probe map) let a caller that already resolved them —

@@ -37,6 +37,11 @@ def get_spark(app_name: str = "affinity-propagation-mapreduce-spark") -> SparkSe
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", cpus)
+        # a listing past the 32-path threshold runs as a Spark job; the
+        # default parallelism (10,000) makes one task per listed dir, so
+        # a new batch dir's ~180 cell dirs cost ~180 tasks and ~1 s of
+        # wall on 4 cores.  One task per core lists them in one wave.
+        .config("spark.sql.sources.parallelPartitionDiscovery.parallelism", cpus)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
         # quantizer-training samples are legitimately driver-sized
         # O(nlist·d) data — ~440 MB at 10M×768 — and the sampling

@@ -8,6 +8,7 @@ probed scan actually prunes partitions (the physical IVF claim)."""
 
 from __future__ import annotations
 
+import hashlib
 import os
 
 import numpy as np
@@ -534,7 +535,8 @@ def test_warm_raw_serve_job_budget(spark, raw_layout, tmp_path):
     """A warm raw IVF serve runs the one scan: the exchange's map stage
     and the result — no listing, schema, query-frame, broadcast or
     second-scan job.  The first serve after an append pays the new
-    batch's listing and schema inference once."""
+    batch's listing once, and no schema inference (the schema comes
+    from a footer)."""
     path = _copy_layout(raw_layout, tmp_path)
     qids, qmat, qnrm = ai._query_rows(spark, SF_SMALL, n_queries=2 * N_QUERIES)
     first = (qids[:N_QUERIES], qmat[:N_QUERIES], qnrm[:N_QUERIES])
@@ -546,7 +548,7 @@ def test_warm_raw_serve_job_budget(spark, raw_layout, tmp_path):
     b1 = _near_copies(spark, first[1], 10_000, seed=1)
     assert ai.append_ann_index(spark, path, b1, "b1") == N_QUERIES
     after = _serve_jobs(spark, path, *first, "raw-serve-append")
-    assert after <= 4, f"expected <= 4 jobs, got {after}"
+    assert after <= 3, f"expected <= 3 jobs, got {after}"
 
 
 def test_batch_scan_relists_a_layout_rebuilt_in_place(
@@ -565,6 +567,125 @@ def test_batch_scan_relists_a_layout_rebuilt_in_place(
     assert ai.codes_root(path) == croot
     got = ai._batch_scan(spark, croot, cells).select("vec_id").collect()
     assert sorted(r.vec_id for r in got) == list(range(500))
+
+
+def test_listing_runs_one_task_per_core(spark):
+    """A listing past Spark's 32-path threshold runs one task per core
+    (the shuffle partition count), not one task per listed dir."""
+    get = spark.conf.get
+    assert get("spark.sql.sources.parallelPartitionDiscovery.parallelism") == get(
+        "spark.sql.shuffle.partitions"
+    )
+
+
+def _wide_batch(spark, first_id: int, shift: int):
+    """A perturbed copy of the whole SF_SMALL corpus, ids from
+    ``first_id``: its rows land in most of the layout's cells, so its
+    batch dir holds more than 32 cell dirs and is listed by a job."""
+    from pyspark.sql import functions as F
+
+    from affinity_propagation_mapreduce_spark.sources import table
+
+    return table(spark, SF_SMALL, "embeddings").select(
+        (F.col("vec_id") + first_id).alias("vec_id"),
+        F.expr(
+            "transform(embedding, (x, i) -> cast(x + cast(((vec_id + i + "
+            f"{shift}) % 5 - 2) as float) * 0.01 as float))"
+        ).alias("embedding"),
+    )
+
+
+def _md5_served(rows) -> str:
+    key = sorted((r.query_id, r.neighbor_id, r.cosine.hex(), r.rn) for r in rows)
+    return hashlib.md5(repr(key).encode()).hexdigest()
+
+
+def _stage_tasks(spark, jobs):
+    """(name, task count) of every stage the jobs ran."""
+    st = spark.sparkContext.statusTracker()
+    infos = [st.getStageInfo(s) for j in jobs for s in st.getJobInfo(j).stageIds]
+    return [(i.name, i.numTasks) for i in infos if i is not None]
+
+
+# md5 of the served (query_id, neighbor_id, cosine.hex(), rn) at 1, 2 and
+# 3 batch dirs, recorded before the ADC scan was coalesced to one wave:
+# as served, and with the emission cap engaged below the shortlist; and
+# of the sorted (query_id, neighbor_id) shortlist with that cap, recorded
+# from search_ann_index then, when each scan partition held one batch dir
+WIDE_SERVE_PINS = {
+    1: "141d804516885e53db9c1e411008ca6b",
+    "1-capped": "10baa1ba0f69f1282aaa6dd438b3da6d",
+    "1-shortlist": "622541a1d44d4d5250f0f7fcd9fc8436",
+    2: "1273a8a2583c77ff045cc216e7f8e88b",
+    "2-capped": "fd64649d89a077e57324c9ca95959039",
+    "2-shortlist": "8339669091f271731aa710d9f5eef743",
+    3: "702e1b80e4ed8c442ea60a48c1774603",
+    "3-capped": "702e1b80e4ed8c442ea60a48c1774603",
+    "3-shortlist": "aee2f29b7ba4f625d15efd2ad316e17c",
+}
+
+
+def test_wide_batch_serves_run_one_wave(spark, raw_layout, tmp_path, monkeypatch):
+    """Serves over batch dirs of more than 32 cell dirs each run every
+    layer in one wave of tasks.  The first serve after an append runs 3
+    jobs: one listing job of at most one task per core (no
+    schema-inference job), the ADC map stage and the result.  With 3
+    batch dirs, whose union splits into more partitions than cores, the
+    ADC stage still runs at most one task per core.  The served rows
+    equal the pins at every batch-dir count, also with the emission cap
+    engaged and below the shortlist (both patched down, so that the cap
+    truncates cells of this corpus).  With that cap, the ADC scan over
+    ONE partition — every probed cell's rows from every batch dir in one
+    Arrow batch — keeps the shortlist of per-batch-dir truncation."""
+    path = _copy_layout(raw_layout, tmp_path)
+    qids, qmat, qnrm = ai._query_rows(spark, SF_SMALL)
+    dp = spark.sparkContext.defaultParallelism
+
+    def serve():
+        return ai.serve_topk(spark, path, qids, qmat, qnrm, n_probe=RAW_PROBE)
+
+    got = {}
+    for n_dirs in (1, 2, 3):
+        if n_dirs > 1:
+            tag = f"w{n_dirs}"
+            wide = _wide_batch(spark, 10_000 * n_dirs, n_dirs)
+            assert ai.append_ann_index(spark, path, wide, tag) == 500
+            bdir = os.path.join(ai.codes_root(path), f"batch={tag}")
+            assert sum(n.startswith("cell=") for n in os.listdir(bdir)) > 32
+        rows, jobs = _jobs_in_group(
+            spark, f"wide-serve-{n_dirs}", lambda: serve().collect()
+        )
+        assert len(rows) == len(qids) * TOP_K
+        got[n_dirs] = _md5_served(rows)
+        stages = _stage_tasks(spark, jobs)
+        assert max(t for _n, t in stages) <= dp, stages
+        if n_dirs == 2:
+            assert len(jobs) <= 3, stages
+            # the listing job reads at the parquet call site; a schema
+            # job would be a second one
+            reads = [t for n, t in stages if n.startswith("parquet at")]
+            assert len(reads) == 1, stages
+        meta, cent, books = ai.load_ann_model(spark, path)
+        cells = ai._probe_map(cent, qmat, RAW_PROBE)
+        scan = ai._batch_scan(spark, ai.codes_root(path), cells)
+        if n_dirs == 3:
+            assert scan.rdd.getNumPartitions() > dp
+        with monkeypatch.context() as mp:
+            mp.setattr(ai, "_CAP_ENGAGE_ROWS", 0)
+            mp.setattr(ai, "PQ_SHORTLIST", 2)
+            mp.setattr(ai, "PQ_SHORTLIST_FRAC", 50)
+            shortlist = meta["n"] // 50
+            cap = ai._per_cell_cap(len(qids), RAW_PROBE, shortlist, n_dirs)
+            assert cap is not None and cap < shortlist
+            got[f"{n_dirs}-capped"] = _md5_served(serve().collect())
+            short = ai._adc_scan(
+                spark, scan.coalesce(1), meta, books, qids, qmat, qnrm,
+                shortlist, cells, per_cell_cap=cap,
+            ).collect()
+            got[f"{n_dirs}-shortlist"] = hashlib.md5(
+                repr(sorted(tuple(r) for r in short)).encode()
+            ).hexdigest()
+    assert got == WIDE_SERVE_PINS
 
 
 # --- build: one sample, driver-written model tables, Arrow encode -----------
