@@ -1308,7 +1308,8 @@ def _batch_scan(spark, croot: str, cells) -> DataFrame | None:
     """The codes rows of ``cells`` across every committed batch dir of
     generation root ``croot``: the union of the memoized per-batch
     relations (see _scan_memo) with ``cell IN (cells)`` pushed into
-    each scan as a PartitionFilter.  None when no batch holds any row."""
+    each scan as a PartitionFilter.  None when no batch holds any row
+    or ``cells`` is empty."""
     import functools
 
     app = spark.sparkContext.applicationId
@@ -1348,11 +1349,17 @@ def _batch_scan(spark, croot: str, cells) -> DataFrame | None:
             hit = _scan_memo[key] = ((st.st_ino, st.st_mtime_ns), df)
         if hit[1] is not None:
             rels.append(hit[1])
-    if not rels:
+    if not rels or not cells:
         return None
-    return functools.reduce(DataFrame.unionByName, rels).where(
-        F.col("cell").isin([int(c) for c in cells])
-    )
+    return functools.reduce(DataFrame.unionByName, rels).where(_cell_in(cells))
+
+
+def _cell_in(cells):
+    """``cell IN (cells)`` as one parsed expression: ``F.col.isin`` makes
+    one py4j ``lit`` call per cell, 63–79 ms of driver time for 128
+    probed cells against 0.59–0.66 ms; both optimize to the same
+    ``INSET`` partition filter.  ``cells`` is not empty."""
+    return F.expr(f"cell IN ({','.join(str(int(c)) for c in cells)})")
 
 
 def _apply_id_filter(codes, filter_ids, filter_count: int | None):
@@ -2758,7 +2765,7 @@ def compact_ann_index(
                     for c in sorted(folded)
                     if os.path.isdir(d := os.path.join(old_root, b, f"cell={c}"))
                 ])
-                .where(F.col("cell").isin(sorted(folded)))
+                .where(_cell_in(sorted(folded)))
             )
         # keep `batch` through the tombstone anti-join (suppression keys
         # on (vec_id, batch)); the fold itself then drops it.  A raw

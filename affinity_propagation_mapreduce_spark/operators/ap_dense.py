@@ -257,37 +257,55 @@ def _fold_s(av: np.ndarray, m: np.ndarray, workers: int = 1) -> np.ndarray:
     at N=7,500, d=32 the one-core fold took 12.8 s of the chain task,
     and 4 threads fold the same rows ~4× faster.  ``m`` is transposed
     once so each pass reads dimension d contiguously, not as a
-    row-strided column."""
+    row-strided column.
+
+    The square matrix (``av is m``) is bitwise symmetric, since
+    (x − y)² = (y − x)² exactly: each strip folds only the columns at
+    or after its first row, and a second pass copies the transposed
+    upper blocks into the lower triangle (N=7,500, d=32, 4 threads:
+    1.43 → 0.97 s).  A row block of state0 keeps the full fold."""
     from concurrent.futures import ThreadPoolExecutor
 
     out = np.empty((len(av), len(m)))
     mT = np.ascontiguousarray(m.T)
+    square = av is m
 
     def strip(lo):
-        acc = out[lo : lo + _FOLD_STRIP]
+        c0 = lo if square else 0
+        acc = out[lo : lo + _FOLD_STRIP, c0:]
         dv = np.empty_like(acc)
         acc.fill(0.0)
         for d in range(len(mT)):
-            np.subtract(av[lo : lo + len(acc), d, None], mT[d][None, :], out=dv)
+            np.subtract(av[lo : lo + len(acc), d, None], mT[d][None, c0:], out=dv)
             np.multiply(dv, dv, out=dv)
             np.add(acc, dv, out=acc)
         np.negative(acc, out=acc)
 
+    def mirror(lo):
+        out[lo : lo + _FOLD_STRIP, :lo] = out[:lo, lo : lo + _FOLD_STRIP].T
+
     with ThreadPoolExecutor(workers) as pool:
-        list(pool.map(strip, range(0, len(av), _FOLD_STRIP)))
+        strips = range(0, len(av), _FOLD_STRIP)
+        list(pool.map(strip, strips))
+        if square:
+            list(pool.map(mirror, strips))
     return out
 
 
 def _pref_scalars(s: np.ndarray) -> dict[str, float]:
-    """Both preference scalars of a full RAW-diagonal, C-contiguous s:
-    the exact min and the interpolated median (bitwise ``percentile(s,
-    0.5)``) of its N²−N off-diagonal values.  After the first element the
-    diagonal ends every (N+1)-run of the flat matrix, so the view below
-    is the off-diagonal in row order; ``ravel`` copies it once and the
-    median partitions that copy in place."""
+    """Both preference scalars of a full RAW-diagonal s that is bitwise
+    symmetric, as ``_fold_s`` makes it: the exact min and the
+    interpolated median (bitwise ``percentile(s, 0.5)``) of its N²−N
+    off-diagonal values, taken over the N(N−1)/2 values of the strict
+    upper triangle (one concatenation of the row tails, which the
+    median partitions in place).  Every off-diagonal value appears
+    exactly twice in the full list, so its two middle order statistics
+    are the upper list's middle pair (even count) or its middle value
+    twice (odd count), and ``_interp_median`` returns the same double
+    for both."""
     n = len(s)
-    off = s.ravel()[1:].reshape(n - 1, n + 1)[:, :-1].ravel()
-    return {"min": float(off.min()), "median": _interp_median(off)}
+    upper = np.concatenate([s[i, i + 1 :] for i in range(n - 1)])
+    return {"min": float(upper.min()), "median": _interp_median(upper)}
 
 
 def _assign_rows(iv: np.ndarray, s: np.ndarray, ids: np.ndarray, ex: np.ndarray):

@@ -36,6 +36,12 @@ def get_spark(app_name: str = "affinity-propagation-mapreduce-spark") -> SparkSe
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
+        # every Python task calls importlib.invalidate_caches(), which on
+        # Python 3.11 re-reads all 16 zip importers' archives on the
+        # worker's path (pyspark.zip, py4j, the spark-core jar): 0.12-0.23 s
+        # per task on a 4-core host, against 0.17-0.28 ms from this daemon,
+        # which re-reads an archive only when its stat changed.
+        .config("spark.python.daemon.module", "affinity_propagation_mapreduce_spark.worker_daemon")
         .config("spark.sql.shuffle.partitions", cpus)
         # a listing past the 32-path threshold runs as a Spark job; the
         # default parallelism (10,000) makes one task per listed dir, so

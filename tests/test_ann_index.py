@@ -98,6 +98,32 @@ def test_served_scan_is_partition_pruned(spark):
     assert len(cell_to_q) <= N_QUERIES * ai.IVFPQ_QUERY_PROBE
 
 
+def test_batch_scan_cell_filter_prunes_cell_dirs(spark):
+    """``_batch_scan``'s one-expression ``cell IN (…)`` filter is an
+    INSET partition filter of the executed scan, which reads exactly
+    the probed cells' dirs."""
+    path = ai.build_ann_index(spark, SF_T2)
+    qids, qmat, qnrm = ai._query_rows(spark, SF_T2)
+    meta, cent_mat, _books = ai.load_ann_model(spark, path)
+    cell_to_q = ai._probe_map(cent_mat, qmat, ai.IVFPQ_QUERY_PROBE)
+    croot = ai._codes_root_gen(path, ai._gen_of(meta))
+    codes = ai._batch_scan(spark, croot, cell_to_q)
+    rows = codes.select("cell").collect()
+    scan = codes._jdf.queryExecution().executedPlan().collectLeaves().head()
+    assert "PartitionFilters: [cell#" in scan.toString()
+    assert " INSET " in scan.toString().split("PartitionFilters")[1]
+    occupied = {
+        int(n.split("=", 1)[1])
+        for b in os.listdir(croot) if b.startswith("batch=")
+        for n in os.listdir(os.path.join(croot, b)) if n.startswith("cell=")
+    }
+    probed = occupied & set(cell_to_q)
+    assert 0 < len(probed) < len(occupied)
+    assert scan.selectedPartitions().partitionCount() == len(probed)
+    assert {r.cell for r in rows} == probed
+    assert ai._batch_scan(spark, croot, {}) is None
+
+
 def test_incremental_append_roundtrip(spark):
     """Build-on-base + append-delta must hold every corpus vector
     exactly once, be idempotent per batch tag, and clear the recall

@@ -372,3 +372,23 @@ def test_fold_strips_equal_untiled_fold():
             got = ap_dense._fold_s(av, m, workers)
             assert got.shape == (len(av), n)
             assert got.tobytes() == untiled(av).tobytes()
+
+
+def test_pref_scalars_equal_full_off_diagonal():
+    """``_pref_scalars`` over the strict upper triangle is bitwise the
+    min and ``_interp_median`` of the full N²−N off-diagonal (the
+    strided row-order view it replaced), at N = 2..5 (upper counts 1,
+    3, 6, 10: odd and even) and on a corpus with tied distances and
+    duplicate points."""
+    from affinity_propagation_mapreduce_spark.operators import ap, ap_dense
+
+    rng = np.random.default_rng(11)
+    tied = rng.integers(0, 3, size=(40, 2)).astype("f8")
+    corpora = [rng.normal(size=(n, 3)) for n in (2, 3, 4, 5)] + [tied]
+    for m in corpora:
+        n = len(m)
+        s = ap_dense._fold_s(m, m, 2)
+        off = s.ravel()[1:].reshape(n - 1, n + 1)[:, :-1].ravel()
+        got = ap_dense._pref_scalars(s)
+        assert got["min"].hex() == float(off.min()).hex(), n
+        assert got["median"].hex() == ap._interp_median(off).hex(), n
