@@ -41,9 +41,8 @@ as a reusable on-disk layout and adds a search-only serving path:
   against the full-precision corpus.  No training, no corpus encode, no
   O(N) full scan.
 
-* ``search_flat_pq`` — same persisted codes, NO cell pruning: the flat
-  ADC scan for the large-|Q| crossover measurement (r8 verdict
-  "What's missing" #2; numbers in BASELINE.md §ann-serving).
+* Flat mode is ``search_ann_index`` at probe width ``nlist``: every
+  cell probed by every query, through the same per-batch scan.
 
 * ``search_auto`` — the measured selection rule AS CODE (r9 verdict
   #4): resolves the probe width from the index geometry
@@ -1118,14 +1117,17 @@ def _adc_scan(
 
 
 def _probe_map(cent_mat, qmat, n_probe):
-    """Per-query probe cells (L2, stable ties) → {cell: [query rows]}."""
+    """Per-query probe cells (L2, stable ties) → {cell: [query rows]}.
+    At full width every cell maps to every query row, without ranking."""
+    if n_probe >= cent_mat.shape[0]:
+        all_q = list(range(len(qmat)))
+        return {c: all_q for c in range(cent_mat.shape[0])}
     d2 = (
         (qmat * qmat).sum(axis=1, keepdims=True)
         - 2.0 * qmat @ cent_mat.T
         + (cent_mat * cent_mat).sum(axis=1)[None, :]
     )
-    p = min(n_probe, cent_mat.shape[0])
-    order = np.argsort(d2, axis=1, kind="stable")[:, :p]
+    order = np.argsort(d2, axis=1, kind="stable")[:, :n_probe]
     cell_to_q: dict[int, list[int]] = {}
     for qrow in range(len(qmat)):
         for c in order[qrow]:
@@ -1270,26 +1272,6 @@ def choose_search_mode(nlist: int, n_probe: int) -> str:
 _scan_memo: dict[tuple, tuple] = {}
 _SCAN_MEMO_MAX = 64
 
-# The whole-tree read (search_flat_pq, the selectivity fallback), keyed
-# on (application, croot, (croot,)).  Known stale: append_ann_index adds
-# a batch dir without changing the key, so a flat serve in a process
-# that appended misses the new batch (ROADMAP carry-over).
-_tree_memo: dict[tuple, DataFrame] = {}
-
-
-def _codes_scan(spark, croot: str, dirs: list[str]) -> DataFrame:
-    """Memoized whole-tree `spark.read.option("basePath", croot)
-    .parquet(*dirs)` with dirs=[croot] (see _tree_memo)."""
-    key = (spark.sparkContext.applicationId, croot, tuple(sorted(dirs)))
-    hit = _tree_memo.get(key)
-    if hit is not None:
-        return hit
-    df = spark.read.option("basePath", croot).parquet(*dirs)
-    while len(_tree_memo) >= _SCAN_MEMO_MAX:
-        _tree_memo.pop(next(iter(_tree_memo)))
-    _tree_memo[key] = df
-    return df
-
 
 def _footer_schema(bdir: str):
     """The read schema of batch dir ``bdir``: one data file's parquet
@@ -1382,14 +1364,16 @@ def _apply_id_filter(codes, filter_ids, filter_count: int | None):
 def search_ann_index(
     spark, path: str, qids, qmat, qnrm, n_probe: int | None = None,
     model=None, cell_to_q=None, filter_ids=None, filter_count=None,
-    filter_expr: str | None = None,
+    filter_expr: str | None = None, k: int | None = None,
 ):
     """Search-only IVF-PQ over a persisted index: probe-cell pruning →
     broadcast-LUT ADC scan → per-query shortlist.  Returns the shortlist
     (query_id, neighbor_id) — callers exact-rerank against whatever
     full-precision store they serve from.  ``n_probe=None`` resolves to
     ``auto_n_probe(nlist)`` (the measured default; explicit values
-    override).
+    override); ``n_probe=nlist`` is the flat scan.  ``k`` (store_raw
+    layouts) fuses the exact rerank into the ADC pass (_adc_scan) and
+    returns the top-k (query_id, neighbor_id, cosine, rn) instead.
 
     The scan is the union of one memoized relation per committed batch
     dir (``_batch_scan``), pruned by ``cell IN (probed)`` as a
@@ -1397,7 +1381,7 @@ def search_ann_index(
     the listing is paid once per (process, batch dir), not per serve.
     Reading the layout ROOT instead would re-list every batch and all
     its nlist cell dirs through one parallel partition discovery (~9k
-    dirs at N=10M) — and, memoized, go stale on the next append.
+    dirs at N=10M).
 
     ``model`` (the ``load_ann_model`` triple) and ``cell_to_q`` (the
     driver-side probe map) let a caller that already resolved them —
@@ -1407,25 +1391,11 @@ def search_ann_index(
     resting on an invariant argument, not a mechanism)."""
     if model is None:
         model = load_ann_model(spark, path)
+    meta, cent_mat, books = model
     if n_probe is None:
-        n_probe = auto_n_probe(model[0]["nlist"])
+        n_probe = auto_n_probe(meta["nlist"])
     if cell_to_q is None:
-        cell_to_q = _probe_map(model[1], qmat, n_probe)
-    return _ivf_search(
-        spark, path, model, qids, qmat, qnrm, n_probe, cell_to_q,
-        filter_ids=filter_ids, filter_count=filter_count,
-        filter_expr=filter_expr,
-    )
-
-
-def _ivf_search(
-    spark, path, model, qids, qmat, qnrm, n_probe, cell_to_q,
-    filter_ids=None, filter_count=None, filter_expr=None, k=None,
-):
-    """search_ann_index's body; ``k`` fuses the exact rerank into the
-    ADC pass (_adc_scan) and returns the top-k instead of the
-    shortlist."""
-    meta, _cent, books = model
+        cell_to_q = _probe_map(cent_mat, qmat, n_probe)
     shortlist = max(PQ_SHORTLIST, meta["n"] // PQ_SHORTLIST_FRAC)
     # the whole serve resolves ONE meta snapshot: codes tree, tombstone
     # tree, and delete cover all come from the generation this load saw
@@ -1462,38 +1432,6 @@ def _ivf_search(
     )
 
 
-def search_flat_pq(
-    spark, path: str, qids, qmat, qnrm, model=None,
-    filter_ids=None, filter_count=None, filter_expr: str | None = None,
-):
-    """Flat ADC over the same persisted codes — NO cell pruning (every
-    query scores every code).  The |Q|-crossover counterpart of
-    search_ann_index: flat pays O(|Q|·N) ADC but no recall loss from
-    pruning; IVF pays O(|Q|·nprobe·N/nlist).  Measured curve in
-    BASELINE.md §ann-serving.  ``model`` threads a caller's one meta
-    snapshot (see search_ann_index)."""
-    if model is None:
-        model = load_ann_model(spark, path)
-    meta, _cent, books = model
-    shortlist = max(PQ_SHORTLIST, meta["n"] // PQ_SHORTLIST_FRAC)
-    croot = _codes_root_gen(path, _gen_of(meta))
-    if not os.path.isdir(croot):
-        raise FileNotFoundError(f"ANN layout has no codes tree: {croot}")
-    codes = _live_codes(spark, path, _codes_scan(spark, croot, [croot]), meta)
-    if filter_expr is not None:
-        codes = codes.where(F.expr(filter_expr))  # pushed parquet filter
-    if filter_ids is not None:
-        codes = _apply_id_filter(codes, filter_ids, filter_count)
-    all_q = list(range(len(qids)))
-    cell_to_q = {c: all_q for c in range(meta["nlist"])}
-    n_frag = sum(1 for b in os.listdir(croot) if b.startswith("batch="))
-    cap = _per_cell_cap(len(qids), int(meta["nlist"]), shortlist, n_frag)
-    return _adc_scan(
-        spark, codes, meta, books, qids, qmat, qnrm, shortlist, cell_to_q,
-        per_cell_cap=cap,
-    )
-
-
 def search_auto(
     spark, path: str, qids, qmat, qnrm,
     n_probe: int | None = None, mode: str = "auto",
@@ -1504,10 +1442,10 @@ def search_auto(
     (``plan_n_probe`` — ``mode="recall"`` pins the recall-first width,
     ``mode="throughput"`` waives the bulk recall floor, an explicit
     ``n_probe`` overrides everything), picks flat vs IVF-pruned via
-    ``choose_search_mode``, and returns ``(shortlist_df, mode)`` so
-    callers/gates can see which path served the batch.  The whole
-    search resolves ONE model snapshot (loaded here unless the caller
-    threads its own)."""
+    ``choose_search_mode`` (flat probes all ``nlist`` cells), and
+    returns ``(shortlist_df, mode)`` so callers/gates can see which
+    path served the batch.  The whole search resolves ONE model
+    snapshot (loaded here unless the caller threads its own)."""
     if model is None:
         model = load_ann_model(spark, path)
     meta = model[0]
@@ -1517,7 +1455,7 @@ def search_auto(
         )
     smode = choose_search_mode(meta["nlist"], n_probe)
     if smode == "flat":
-        return search_flat_pq(spark, path, qids, qmat, qnrm, model=model), smode
+        n_probe = meta["nlist"]
     return (
         search_ann_index(
             spark, path, qids, qmat, qnrm, n_probe=n_probe, model=model
@@ -1580,10 +1518,10 @@ def serve_topk(
     semantics) + exact rerank, top-``TOP_K`` per query as (query_id,
     neighbor_id, cosine, rn).
 
-    A ``store_raw`` layout served without ``norms_df`` in IVF mode,
-    inside the interactive band (|Q|·shortlist ≤
-    RERANK_BROADCAST_MAX_ROWS) and inside the measured crossing bound
-    (_ONE_PASS_MAX_VALUES), runs in ONE pass: the ADC kernel reads
+    A ``store_raw`` layout served without ``norms_df``, inside the
+    interactive band (|Q|·shortlist ≤ RERANK_BROADCAST_MAX_ROWS) and
+    inside the measured crossing bound (_ONE_PASS_MAX_VALUES), runs in
+    ONE pass, in flat mode as in IVF mode: the ADC kernel reads
     (vec_id, cell, code, nrm, emb) from the probed cells of the
     per-batch scan memo, emits the exact cosine beside each ADC score,
     and one ``query_id`` exchange applies the shortlist window and then
@@ -1620,31 +1558,27 @@ def serve_topk(
         n_probe = plan_n_probe(
             meta["nlist"], meta["n"], len(qids), mode, min_recall=min_recall
         )
+    if choose_search_mode(meta["nlist"], n_probe) == "flat":
+        n_probe = meta["nlist"]
     sl_rows = len(qids) * max(PQ_SHORTLIST, meta["n"] // PQ_SHORTLIST_FRAC)
-    smode = choose_search_mode(meta["nlist"], n_probe)
-    if smode == "flat":
-        shortlist = search_flat_pq(spark, path, qids, qmat, qnrm, model=model)
-        cells = list(range(meta["nlist"]))
-    else:
-        cell_to_q = _probe_map(cent_mat, qmat, n_probe)
-        values = (
-            sum(len(q) for q in cell_to_q.values()) * meta["n"]
-            * meta["m"] * meta["dsub"] / max(1, int(meta["nlist"]))
-        )
-        if (
-            norms_df is None
-            and meta.get("raw")
-            and sl_rows <= RERANK_BROADCAST_MAX_ROWS
-            and values <= _ONE_PASS_MAX_VALUES
-        ):
-            return _ivf_search(
-                spark, path, model, qids, qmat, qnrm, n_probe, cell_to_q,
-                k=TOP_K,
-            )
-        shortlist = _ivf_search(
-            spark, path, model, qids, qmat, qnrm, n_probe, cell_to_q
-        )
-        cells = list(cell_to_q)
+    cell_to_q = _probe_map(cent_mat, qmat, n_probe)
+    values = (
+        sum(len(q) for q in cell_to_q.values()) * meta["n"]
+        * meta["m"] * meta["dsub"] / max(1, int(meta["nlist"]))
+    )
+    one_pass = (
+        norms_df is None
+        and meta.get("raw")
+        and sl_rows <= RERANK_BROADCAST_MAX_ROWS
+        and values <= _ONE_PASS_MAX_VALUES
+    )
+    shortlist = search_ann_index(
+        spark, path, qids, qmat, qnrm, n_probe=n_probe, model=model,
+        cell_to_q=cell_to_q, k=TOP_K if one_pass else None,
+    )
+    if one_pass:  # the ADC pass folded the exact rerank: this is the top-k
+        return shortlist
+    cells = list(cell_to_q)
     # the in-place-vs-join economics price the store side by the rows
     # the rerank actually reads: a raw layout reranks against
     # raw_rerank_frame (the PROBED cells only), so its store estimate
@@ -1858,11 +1792,13 @@ def serve_topk_filtered(
                 # LIVE-row fallback over the codes tree's predicate
                 # columns; dead rows must not inflate the numerator
                 # while meta["n"] counts live only
-                croot0 = _codes_root_gen(path, _gen_of(meta))
+                scan = _batch_scan(
+                    spark, _codes_root_gen(path, _gen_of(meta)),
+                    range(meta["nlist"]),
+                )
                 selectivity = (
-                    _live_codes(
-                        spark, path, _codes_scan(spark, croot0, [croot0]), meta
-                    )
+                    0.0 if scan is None
+                    else _live_codes(spark, path, scan, meta)
                     .where(F.expr(filter_expr))
                     .count()
                     / max(1, meta["n"])
@@ -1924,17 +1860,14 @@ def serve_topk_filtered(
     # post: unfiltered serve overfetched to margin·k/selectivity, then
     # keep qualifying neighbors and re-rank to k
     k_over = max(k, int(np.ceil(FILTER_POST_OVERFETCH * k / selectivity)))
-    smode = choose_search_mode(meta["nlist"], base_w)
-    if smode == "flat":
-        shortlist = search_flat_pq(spark, path, qids, qmat, qnrm, model=model)
-        cells = list(range(meta["nlist"]))
-    else:
-        cell_to_q = _probe_map(cent_mat, qmat, base_w)
-        shortlist = search_ann_index(
-            spark, path, qids, qmat, qnrm, n_probe=base_w, model=model,
-            cell_to_q=cell_to_q,
-        )
-        cells = list(cell_to_q)
+    if choose_search_mode(meta["nlist"], base_w) == "flat":
+        base_w = meta["nlist"]
+    cell_to_q = _probe_map(cent_mat, qmat, base_w)
+    shortlist = search_ann_index(
+        spark, path, qids, qmat, qnrm, n_probe=base_w, model=model,
+        cell_to_q=cell_to_q,
+    )
+    cells = list(cell_to_q)
     store = norms_df
     store_est = meta["n"]
     if store is None and meta.get("raw"):

@@ -92,3 +92,15 @@ def spark():
     s = get_spark("tests")
     s.sparkContext.setLogLevel("ERROR")
     yield s
+
+
+@pytest.fixture(scope="session", autouse=True)
+def ann_index_base(tmp_path_factory):
+    """Each test session builds its own ANN layouts: the default base
+    outlives the process, and a layout there is keyed by its input data
+    and format version, not by the code that wrote it."""
+    from affinity_propagation_mapreduce_spark.operators import ann_index
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(ann_index, "_INDEX_BASE", str(tmp_path_factory.mktemp("ann")))
+        yield

@@ -67,7 +67,8 @@ def test_served_schema_and_recall(spark):
 def test_flat_pq_shares_artifact_and_beats_floor(spark):
     path = ai.build_ann_index(spark, SF_SMALL)
     qids, qmat, qnrm = ai._query_rows(spark, SF_SMALL)
-    shortlist = ai.search_flat_pq(spark, path, qids, qmat, qnrm)
+    nlist = ai._read_meta(path)["nlist"]
+    shortlist = ai.search_ann_index(spark, path, qids, qmat, qnrm, n_probe=nlist)
     res = ai._exact_rerank(
         spark, ai._norms(spark, SF_SMALL), shortlist, qids, qmat, qnrm
     ).collect()
@@ -431,40 +432,47 @@ def _served(df):
     )
 
 
-def _assert_one_pass_equals_two_pass(spark, path, store, qids, qmat, qnrm):
-    one = ai.serve_topk(spark, path, qids, qmat, qnrm, n_probe=RAW_PROBE)
+def _assert_one_pass_equals_two_pass(
+    spark, path, store, qids, qmat, qnrm, width=RAW_PROBE
+):
+    one = ai.serve_topk(spark, path, qids, qmat, qnrm, n_probe=width)
     # the raw serve ran the one-pass shape: no query frame, no rerank join
     assert "q_emb" not in one._jdf.queryExecution().executedPlan().toString()
     two = ai.serve_topk(
-        spark, path, qids, qmat, qnrm, n_probe=RAW_PROBE, norms_df=store
+        spark, path, qids, qmat, qnrm, n_probe=width, norms_df=store
     )
     got, want = _served(one), _served(two)
     assert got == want and len(got) == N_QUERIES * TOP_K
     return got
 
 
-def test_raw_serve_equals_two_pass_bitwise(spark, raw_layout, tmp_path):
+@pytest.mark.parametrize("mode", ["ivf", "flat"])
+def test_raw_serve_equals_two_pass_bitwise(spark, raw_layout, tmp_path, mode):
     """The one-pass raw serve (exact cosine inside the ADC kernel) must
     equal the two-pass serve over the same corpus bitwise on (query_id,
-    rn, neighbor_id, cosine): after the build, after an IVF-mode append
-    of near-copies (which must be served), and after a delete inside a
-    numeric-looking batch tag (deleted ids are never served)."""
+    rn, neighbor_id, cosine): after the build, after an append of
+    near-copies (which must be served), and after a delete inside a
+    numeric-looking batch tag (deleted ids are never served).  Flat mode
+    (every cell probed) is the same serve at width nlist, so it too runs
+    one pass and sees the appended batch."""
     from affinity_propagation_mapreduce_spark.sources import table
 
     path = _copy_layout(raw_layout, tmp_path)
     qids, qmat, qnrm = ai._query_rows(spark, SF_SMALL)
     corpus = table(spark, SF_SMALL, "embeddings").select("vec_id", "embedding")
-    assert ai.choose_search_mode(
-        ai._read_meta(path)["nlist"], RAW_PROBE
-    ) == "ivf"
-    _assert_one_pass_equals_two_pass(
-        spark, path, _store(corpus), qids, qmat, qnrm
-    )
+    nlist = ai._read_meta(path)["nlist"]
+    width = RAW_PROBE if mode == "ivf" else nlist
+    assert ai.choose_search_mode(nlist, width) == mode
 
+    def check(store):
+        return _assert_one_pass_equals_two_pass(
+            spark, path, store, qids, qmat, qnrm, width
+        )
+
+    check(_store(corpus))
     b1 = _near_copies(spark, qmat, 10_000, seed=1)
     assert ai.append_ann_index(spark, path, b1, "b1") == N_QUERIES
-    store = _store(corpus.unionByName(b1))
-    got = _assert_one_pass_equals_two_pass(spark, path, store, qids, qmat, qnrm)
+    got = check(_store(corpus.unionByName(b1)))
     assert {r[2] for r in got} >= set(range(10_000, 10_000 + N_QUERIES))
 
     # inferred as a partition value from this batch alone, tag "007"
@@ -476,11 +484,47 @@ def test_raw_serve_equals_two_pass_bitwise(spark, raw_layout, tmp_path):
         spark, path, spark.createDataFrame([(i,) for i in dead], "vec_id long"),
         "d-007",
     )
-    store = _store(corpus.unionByName(b1).unionByName(b7))
-    got = _assert_one_pass_equals_two_pass(spark, path, store, qids, qmat, qnrm)
+    got = check(_store(corpus.unionByName(b1).unionByName(b7)))
     served = {r[2] for r in got}
     assert not served & set(dead)
     assert served & set(range(20_001, 20_000 + N_QUERIES, 2))
+
+
+def test_selectivity_fallback_counts_an_appended_batch(spark, tmp_path):
+    """With the layout's selectivity sample gone, a filtered serve
+    estimates selectivity from the live rows of the codes tree.  Rows
+    appended since the last serve must count: once qualifying rows are
+    the majority, the planner turns from the pre-filter to the
+    post-filter plan."""
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    from affinity_propagation_mapreduce_spark.sources import table
+
+    path = str(tmp_path / "layout")
+    raw = table(spark, SF_SMALL, "embeddings").select(
+        "vec_id", "embedding", "label"
+    )
+    ai.build_ann_index(
+        spark, SF_SMALL, path=path, emb_raw=raw, store_raw=True,
+        meta_cols=("label",),
+    )
+    qids, qmat, qnrm = ai._query_rows(spark, SF_SMALL)
+
+    def filtered_serve_mode():
+        shutil.rmtree(os.path.join(path, "sample.parquet"))
+        return ai.serve_topk_filtered(
+            spark, path, qids, qmat, qnrm, filter_expr="label = 0"
+        )[1]
+
+    assert filtered_serve_mode() == "pre"
+    qualifying = raw.select(
+        (F.col("vec_id") + 10_000).alias("vec_id"), "embedding",
+        F.lit(0).cast(raw.schema["label"].dataType).alias("label"),
+    )
+    assert ai.append_ann_index(spark, path, qualifying, "q1") == 500
+    assert filtered_serve_mode() == "post"
 
 
 def test_raw_serves_agree_for_a_twice_live_id(

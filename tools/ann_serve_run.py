@@ -352,8 +352,11 @@ def main():
             )
             print(json.dumps(out), flush=True)
             return
-        else:
-            shortlist = ai.search_flat_pq(spark, path, qids, qmat, qnrm)
+        else:  # flat: every query probes every cell
+            shortlist = ai.search_ann_index(
+                spark, path, qids, qmat, qnrm,
+                n_probe=ai._read_meta(path)["nlist"],
+            )
         meta_sl = ai._read_meta(path)
         res = ai._exact_rerank(
             spark, ai._norms(spark, sf_dir), shortlist, qids, qmat, qnrm,
