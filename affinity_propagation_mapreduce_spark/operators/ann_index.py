@@ -36,10 +36,12 @@ as a reusable on-disk layout and adds a search-only serving path:
   driver-side (O(sqrt(N)·d) bytes), computes per-query probe cells and
   ADC lookup tables, scans the probed partitions with a broadcast-LUT
   Arrow kernel (per-batch per-cell per-query top-shortlist truncation —
-  survivor-safe under the global (score DESC, id ASC) window, the same
-  argument as vector.knn_cosine_ivfpq), and exact-reranks the shortlist
-  against the full-precision corpus.  No training, no corpus encode, no
-  O(N) full scan.
+  survivor-safe under the global (score DESC, id ASC) window), and
+  exact-reranks the shortlist against the full-precision corpus.  No
+  training, no corpus encode, no O(N) full scan.  The in-query
+  vector.knn_cosine_pq and knn_cosine_ivfpq run this module's encode
+  (``_encode_codes``) and scan (``_adc_scan``) over quantizers they
+  train themselves, with no layout on disk.
 
 * Flat mode is ``search_ann_index`` at probe width ``nlist``: every
   cell probed by every query, through the same per-batch scan.
@@ -326,7 +328,7 @@ def _list_array(mat: np.ndarray):
 
 def _encode_codes(
     spark, emb, cent_mat, sup_ch, books, with_raw: bool = False,
-    meta_cols: tuple = (),
+    meta_cols: tuple = (), cells=None,
 ):
     """Encode (vec_id, emb) rows against FIXED quantizers in one
     ``mapInArrow`` kernel: ``emb`` is decoded from the list column's
@@ -347,8 +349,14 @@ def _encode_codes(
     (r13 verdict "missing" #2): with the predicate columns resident in
     the codes layout, `serve_topk_filtered(filter_expr=...)` evaluates
     the predicate scan-side as a pushed parquet filter instead of
-    producing and semi-joining a qualifying-id relation per serve."""
+    producing and semi-joining a qualifying-id relation per serve.
+
+    ``cells`` (the cells some query probes) drops every row whose home
+    cell is not among them before PQ encoding: an in-query IVF-PQ search
+    (vector.knn_cosine_ivfpq) encodes only the rows it can score.  None
+    encodes every row, as a build, append or migration must."""
     m_, _ksub, dsub = books.shape
+    keep_cells = None if cells is None else np.asarray(cells, dtype="i8")
     meta_cols = tuple(meta_cols)
     meta_types = [
         (c, emb.schema[c].dataType.simpleString()) for c in meta_cols
@@ -365,12 +373,9 @@ def _encode_codes(
 
         c_mat, sc, bks = bc.value
         for b in batches:
-            nb = b.num_rows
-            if nb == 0:
+            if b.num_rows == 0:
                 continue
             x = _embedding_matrix(b.column(1), m_ * dsub)
-            ids = b.column(0).to_numpy(zero_copy_only=False).astype("i8")
-            nrm = np.sqrt((x * x).sum(axis=1))
             if sc is not None:
                 order, _d2, _ = two_level_cells(x, c_mat, sc[0], sc[1], 1)
                 home = order[:, 0]
@@ -381,6 +386,14 @@ def _encode_codes(
                     + (c_mat * c_mat).sum(axis=1)[None, :]
                 )
                 home = d2.argmin(axis=1)
+            if keep_cells is not None:
+                keep = np.isin(home, keep_cells)
+                if not keep.any():
+                    continue
+                b, x, home = b.filter(pa.array(keep)), x[keep], home[keep]
+            nb = b.num_rows
+            ids = b.column(0).to_numpy(zero_copy_only=False).astype("i8")
+            nrm = np.sqrt((x * x).sum(axis=1))
             xs = x.reshape(nb, m_, dsub)
             codes = np.empty((nb, m_), dtype="u1")
             for m in range(m_):

@@ -1437,9 +1437,10 @@ def q_ap_preference(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_ap_responsibility(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First damped responsibility pass from the zero state (bit-exact)."""
-    state = init_state(cached_smat(spark, sf_dir))
-    return responsibility_pass(state).select("i", "k", "r")
+    """First damped responsibility pass from the zero state (bit-exact):
+    the r of the T=1 chain state, which the first availability pass
+    carries through unchanged."""
+    return _one_iteration_state(spark, sf_dir).select("i", "k", "r")
 
 
 def q_ap_availability(spark: SparkSession, sf_dir: str) -> DataFrame:

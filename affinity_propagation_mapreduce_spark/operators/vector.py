@@ -591,6 +591,41 @@ def train_quantizers(emb, nlist: int, n: int | None = None):
     )
 
 
+def _pq_topk(spark, sf_dir, cent_mat, sup_ch, books, n_probe: int):
+    """Top-k of the fixed queries through the ANN index's own IVF-PQ
+    scan, with the quantizers trained in-query instead of loaded from a
+    layout: ``_encode_codes`` encodes the corpus (home cell, PQ byte
+    codes, true norm) and drops the rows whose home cell no query
+    probes, ``_adc_scan`` scores them against the probing queries and
+    keeps each query's ADC shortlist of max(PQ_SHORTLIST,
+    N/PQ_SHORTLIST_FRAC) survivors (sized to out-resolve ADC ties
+    inside dense clusters), and ``_exact_rerank`` re-ranks that
+    shortlist with the exact fold cosine."""
+    # runtime import: ann_index imports this module at load time
+    from .ann_index import (
+        _adc_scan,
+        _encode_codes,
+        _norms,
+        _probe_map,
+        _query_rows,
+    )
+    from .ivf import corpus_rows
+
+    shortlist = max(PQ_SHORTLIST, corpus_rows(spark, sf_dir) // PQ_SHORTLIST_FRAC)
+    qids, qmat, qnrm = _query_rows(spark, sf_dir)
+    cell_to_q = _probe_map(cent_mat, qmat, n_probe)
+    encoded, _bc = _encode_codes(
+        spark, _emb(spark, sf_dir), cent_mat, sup_ch, books, cells=list(cell_to_q)
+    )
+    m_, _ksub, dsub = books.shape
+    shortlist_df = _adc_scan(
+        spark, encoded.withColumn("batch", F.lit("corpus")),
+        {"m": m_, "dsub": dsub}, books, qids, qmat, qnrm, shortlist,
+        cell_to_q,
+    )
+    return _exact_rerank(spark, _norms(spark, sf_dir), shortlist_df, qids, qmat, qnrm)
+
+
 def knn_cosine_pq(spark, sf_dir):
     """PQ/ADC shortlist + exact re-rank top-k (the Jégou et al. 2011
     search recipe): every corpus vector is compressed to PQ_M
@@ -598,20 +633,17 @@ def knn_cosine_pq(spark, sf_dir):
     float64 — a ~21× memory cut), each query scores the WHOLE corpus
     through an (M × KSUB) lookup table of query-sub × codeword dot
     products (asymmetric distance computation — no decompression, no
-    candidate join), and only the per-query ADC shortlist
-    (max(PQ_SHORTLIST, N/PQ_SHORTLIST_FRAC) survivors — sized to
-    out-resolve ADC ties inside dense clusters) is re-ranked with the
-    exact fold cosine.
+    candidate join), and only the per-query ADC shortlist is re-ranked
+    with the exact fold cosine.
 
-    100 TB story: this is the path when even the IVF cells don't fit —
-    the compressed scan is embarrassingly parallel over code partitions,
-    the codebooks + 10-query LUTs broadcast (~40 KB), the kernel emits
-    only each partition's per-query shortlist (shuffle is
-    O(partitions · |Q| · shortlist) rows regardless of N), and the
-    exact re-rank touches |Q| · shortlist vectors — the full-precision
-    corpus is read only for the shortlist join.  Composable with the
-    IVF coarse stage (probe cells, then ADC within) — kept single-stage
-    here so the quality gate isolates the quantization error.
+    Flat PQ is the IVF-PQ scan (``_pq_topk``) over ONE all-zero coarse
+    centroid probed by every query: one cell, no pruning, so the quality
+    gate isolates the quantization error.  The compressed scan is
+    embarrassingly parallel over code partitions, the codebooks and
+    query LUTs broadcast (~40 KB), the kernel emits only each
+    partition's per-query shortlist (shuffle is O(partitions · |Q| ·
+    shortlist) rows regardless of N), and the full-precision corpus is
+    read only for the shortlist join.
 
     Rows-only by declaration (codebook training is iterative Lloyd, not
     SQL-expressible); encode+scan determinism and truncation-safety are
@@ -619,85 +651,9 @@ def knn_cosine_pq(spark, sf_dir):
     and ann_recall_gate."""
     import numpy as np
 
-    from .ivf import corpus_rows
-
-    shortlist = max(PQ_SHORTLIST, corpus_rows(spark, sf_dir) // PQ_SHORTLIST_FRAC)
     books = _pq_train_codebooks(spark, sf_dir)  # (M, k, dsub)
-    emb = _emb(spark, sf_dir)
-    norms = emb.select(
-        "vec_id",
-        "emb",
-        F.sqrt(_fold_sum(F.transform("emb", lambda x: x * x))).alias("nrm"),
-    )
-    qrows = (
-        norms.where(F.col("vec_id") < N_QUERIES)
-        .select("vec_id", "emb", "nrm")
-        .collect()
-    )
-    qrows.sort(key=lambda r: r.vec_id)
-    qids = np.array([r.vec_id for r in qrows], dtype="i8")
-    qmat = np.array([list(r.emb) for r in qrows], dtype="f8")
-    qnrm = np.array([r.nrm for r in qrows], dtype="f8")
-    m_, k_, dsub = books.shape
-    # per-query ADC lookup tables: lut[q, m, c] = <q_sub_m, codeword_mc>
-    lut = np.einsum("qmd,mcd->qmc", qmat.reshape(len(qids), m_, dsub), books)
-    schema = "query_id long, neighbor_id long, pq_cosine double"
-
-    def kernel(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            x = np.array([list(e) for e in pdf["emb"]], dtype="f8")
-            nrm = pdf["nrm"].to_numpy(dtype="f8")
-            ids = pdf["vec_id"].to_numpy(dtype="i8")
-            xs = x.reshape(len(x), m_, dsub)
-            # encode: nearest codeword per subspace (ties → lowest code)
-            codes = np.empty((len(x), m_), dtype="i8")
-            for m in range(m_):
-                d2 = (
-                    (xs[:, m] * xs[:, m]).sum(axis=1, keepdims=True)
-                    - 2.0 * xs[:, m] @ books[m].T
-                    + (books[m] * books[m]).sum(axis=1)[None, :]
-                )
-                codes[:, m] = d2.argmin(axis=1)
-            # ADC: approx dot = sum_m lut[q, m, codes[:, m]]
-            approx = np.zeros((len(qids), len(x)), dtype="f8")
-            for m in range(m_):  # fixed m-order: deterministic float sum
-                approx += lut[:, m, codes[:, m]]
-            cos = approx / (qnrm[:, None] * nrm[None, :])
-            out_q, out_n, out_s = [], [], []
-            for qi in range(len(qids)):
-                row = cos[qi]
-                mask = ids != qids[qi]
-                cand_ids, cand = ids[mask], row[mask]
-                # per-partition top-shortlist under the global
-                # (cos DESC, id ASC) order — the global window keeps
-                # exactly these survivors (same truncation-safety
-                # argument as ivf_candidate_pairs(per_point_topk))
-                order = np.lexsort((cand_ids, -cand))[:shortlist]
-                out_q.append(np.full(len(order), qids[qi], dtype="i8"))
-                out_n.append(cand_ids[order])
-                out_s.append(cand[order])
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "pq_cosine": np.concatenate(out_s),
-                }
-            )
-
-    scored = norms.select("vec_id", "emb", "nrm").mapInPandas(kernel, schema)
-    w_adc = Window.partitionBy("query_id").orderBy(
-        F.desc("pq_cosine"), F.asc("neighbor_id")
-    )
-    shortlist_df = (
-        scored.withColumn("prn", F.row_number().over(w_adc))
-        .where(F.col("prn") <= shortlist)
-        .select("query_id", "neighbor_id")
-    )
-    return _exact_rerank(spark, norms, shortlist_df, qids, qmat, qnrm)
+    cent = np.zeros((1, books.shape[0] * books.shape[2]))
+    return _pq_topk(spark, sf_dir, cent, None, books, 1)
 
 
 # pair-broadcast rerank band: above the shortlist-broadcast cap the old
@@ -937,28 +893,31 @@ def knn_cosine_ivfpq(spark, sf_dir):
     """IVF-PQ (the FAISS IVFPQ search shape): trained coarse cells
     prune WHICH vectors each query scores, PQ/ADC compresses HOW each
     surviving vector is scored, and the exact re-rank polishes the
-    shortlist.  Composition of this engine's two ANN quantizers:
+    shortlist.  Composition of this engine's two ANN quantizers, run
+    through the ANN index's scan (``_pq_topk``):
 
     * coarse stage — sampled-Lloyd centroids (ivf.train_centroids) with
       the cost-balanced nlist = sqrt(nprobe·N); each corpus vector gets
       its HOME cell via the two-level quantizer (O(sqrt(nlist)) per
-      point past 64 cells), each query probes its N_PROBE nearest
-      cells.  A vector is ADC-scored ONLY against the queries probing
-      its home cell — the scan work drops from |Q|·N (flat PQ) by the
-      probed fraction.
+      point past 64 cells), each query probes its IVFPQ_QUERY_PROBE
+      nearest cells (2x the corpus-side N_PROBE: query-side probing is
+      O(|Q|) driver work, and the wider probe buys back most of the
+      recall the home-cell pruning costs).  The encode drops every
+      vector whose home cell no query probes, and a vector is
+      ADC-scored ONLY against the queries probing its home cell — the
+      scan work drops from |Q|·N (flat PQ) by the probed fraction.
     * fine stage — the same PQ codebooks/LUT arithmetic as
-      knn_cosine_pq, computed batch-locally in ONE mapInPandas pass:
-      no corpus shuffle at all (the cell id never has to become a
-      shuffle key because per-batch per-query top-shortlist truncation
-      is survivor-safe under the global (score DESC, id ASC) window).
+      knn_cosine_pq, batch-locally in the encode's and the ADC
+      kernel's ``mapInArrow`` passes: no corpus shuffle at all (the
+      cell id never has to become a shuffle key because per-batch
+      per-cell per-query top-shortlist truncation is survivor-safe
+      under the global (score DESC, id ASC) window).
     * exact re-rank of the per-query shortlist (shared _exact_rerank).
 
     100 TB: one compressed corpus scan with O(partitions·|Q|·shortlist)
     emitted rows, centroid + codebook + LUT broadcasts of O(sqrt(N)·d)
     bytes.  Rows-only (both quantizers train iteratively); recall floor
     enforced in-query at verification scale."""
-    import numpy as np
-
     from .ivf import (
         TWO_LEVEL_MIN,
         build_two_level,
@@ -967,126 +926,16 @@ def knn_cosine_ivfpq(spark, sf_dir):
     )
 
     n_corpus = corpus_rows(spark, sf_dir)
-    shortlist = max(PQ_SHORTLIST, n_corpus // PQ_SHORTLIST_FRAC)
-    nlist = cost_balanced_nlist(n_corpus, N_PROBE)
     cent_mat, books = train_quantizers(
-        table(spark, sf_dir, "embeddings"), nlist, n_corpus
+        table(spark, sf_dir, "embeddings"),
+        cost_balanced_nlist(n_corpus, N_PROBE),
+        n_corpus,
     )
     sup_ch = build_two_level(cent_mat) if len(cent_mat) >= TWO_LEVEL_MIN else None
-    m_, k_, dsub = books.shape
-
-    emb = _emb(spark, sf_dir)
-    norms = emb.select(
-        "vec_id",
-        "emb",
-        F.sqrt(_fold_sum(F.transform("emb", lambda x: x * x))).alias("nrm"),
+    return _pq_topk(
+        spark, sf_dir, cent_mat, sup_ch, books,
+        min(IVFPQ_QUERY_PROBE, len(cent_mat)),
     )
-    qrows = (
-        norms.where(F.col("vec_id") < N_QUERIES)
-        .select("vec_id", "emb", "nrm")
-        .collect()
-    )
-    qrows.sort(key=lambda r: r.vec_id)
-    qids = np.array([r.vec_id for r in qrows], dtype="i8")
-    qmat = np.array([list(r.emb) for r in qrows], dtype="f8")
-    qnrm = np.array([r.nrm for r in qrows], dtype="f8")
-    lut = np.einsum("qmd,mcd->qmc", qmat.reshape(len(qids), m_, dsub), books)
-
-    # driver-side probe map (|Q| x nprobe — tiny): which queries probe
-    # each cell.  Same L2 geometry as the corpus home-cell assignment.
-    # Query-side probing is O(|Q|) driver work, so it widens cheaply:
-    # 2x the corpus-side N_PROBE buys back most of the recall the
-    # home-cell pruning costs (the FAISS nprobe knob).
-    d2q = (
-        (qmat * qmat).sum(axis=1, keepdims=True)
-        - 2.0 * qmat @ cent_mat.T
-        + (cent_mat * cent_mat).sum(axis=1)[None, :]
-    )
-    n_probe = min(IVFPQ_QUERY_PROBE, len(cent_mat))
-    probe_order = np.argsort(d2q, axis=1, kind="stable")[:, :n_probe]
-    cell_to_q: dict[int, list[int]] = {}
-    for qi in range(len(qids)):
-        for c in probe_order[qi]:
-            cell_to_q.setdefault(int(c), []).append(qi)
-    bc = spark.sparkContext.broadcast((cent_mat, sup_ch, books, lut, cell_to_q))
-    schema = "query_id long, neighbor_id long, pq_cosine double"
-
-    def kernel(batches):
-        import pandas as pd
-
-        c_mat, sc, bks, lut_, c2q = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            x = np.array([list(e) for e in pdf["emb"]], dtype="f8")
-            nrm = pdf["nrm"].to_numpy(dtype="f8")
-            ids = pdf["vec_id"].to_numpy(dtype="i8")
-            if sc is not None:
-                from .ivf import two_level_cells
-
-                order, _pd2, _ = two_level_cells(x, c_mat, sc[0], sc[1], 1)
-                home = order[:, 0]
-            else:
-                d2 = (
-                    (x * x).sum(axis=1, keepdims=True)
-                    - 2.0 * x @ c_mat.T
-                    + (c_mat * c_mat).sum(axis=1)[None, :]
-                )
-                home = d2.argmin(axis=1)
-            # encode ONLY the rows that live in a probed cell — the
-            # others can never be scored, and the probed fraction is
-            # ~nprobe·|Q|/nlist of the batch at scale
-            probed = np.isin(home, np.fromiter(c2q, dtype="i8"))
-            if not probed.any():
-                continue
-            x, nrm, ids, home = x[probed], nrm[probed], ids[probed], home[probed]
-            xs = x.reshape(len(x), m_, dsub)
-            codes = np.empty((len(x), m_), dtype="i8")
-            for m in range(m_):
-                d2c = (
-                    (xs[:, m] * xs[:, m]).sum(axis=1, keepdims=True)
-                    - 2.0 * xs[:, m] @ bks[m].T
-                    + (bks[m] * bks[m]).sum(axis=1)[None, :]
-                )
-                codes[:, m] = d2c.argmin(axis=1)
-            out_q, out_n, out_s = [], [], []
-            for c in np.unique(home):
-                probing = c2q.get(int(c))
-                if not probing:
-                    continue
-                sel = home == c
-                c_ids, c_codes, c_nrm = ids[sel], codes[sel], nrm[sel]
-                for qi in probing:
-                    adc = np.zeros(len(c_ids), dtype="f8")
-                    for m in range(m_):
-                        adc += lut_[qi, m, c_codes[:, m]]
-                    adc = adc / (qnrm[qi] * c_nrm)
-                    mask = c_ids != qids[qi]
-                    cand_ids, cand = c_ids[mask], adc[mask]
-                    keep = np.lexsort((cand_ids, -cand))[:shortlist]
-                    out_q.append(np.full(len(keep), qids[qi], dtype="i8"))
-                    out_n.append(cand_ids[keep])
-                    out_s.append(cand[keep])
-            if not out_q:
-                continue
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "pq_cosine": np.concatenate(out_s),
-                }
-            )
-
-    scored = norms.select("vec_id", "emb", "nrm").mapInPandas(kernel, schema)
-    w_adc = Window.partitionBy("query_id").orderBy(
-        F.desc("pq_cosine"), F.asc("neighbor_id")
-    )
-    shortlist_df = (
-        scored.withColumn("prn", F.row_number().over(w_adc))
-        .where(F.col("prn") <= shortlist)
-        .select("query_id", "neighbor_id")
-    )
-    return _exact_rerank(spark, norms, shortlist_df, qids, qmat, qnrm)
 
 
 def q_knn_cosine_ivfpq(spark, sf_dir):

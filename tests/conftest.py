@@ -23,7 +23,7 @@ def pytest_configure(config):
 # teardown, quiet 32-core run — regenerate with
 #   pytest -q --durations=0 | awk-aggregate >= 4.0 > tests/slow_tests.txt
 # ) are auto-marked `slow`; pytest.ini deselects them by default so the
-# driver's bare `pytest tests/ -x -q` finishes in ~7 min.  The builder
+# driver's bare `pytest tests/ -x -q` finishes in ~10 min.  The builder
 # runs the FULL tier with:  python -m pytest tests/ -m "slow or not slow"
 _SLOW_LIST = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                           "slow_tests.txt")

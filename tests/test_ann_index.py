@@ -929,6 +929,38 @@ def test_driver_written_model_tables_round_trip(spark, tmp_path, monkeypatch):
         assert got == spark.createDataFrame([], ddl).schema, name
 
 
+def test_encode_cells_filter_keeps_only_probed_rows(spark):
+    """``_encode_codes(..., cells=S)`` emits exactly the unfiltered
+    encode's rows whose home cell is in S, with the same code bytes,
+    norm and pass-through metadata."""
+    rng = np.random.default_rng(5)
+    n, d = 400, 8
+    pts = rng.normal(size=(n, d))
+    cent = rng.normal(size=(6, d))
+    books = rng.normal(size=(4, 16, 2))
+    emb = spark.createDataFrame(
+        [(i, [float(v) for v in pts[i]], f"t{i % 3}") for i in range(n)],
+        "vec_id long, emb array<double>, tenant string",
+    ).repartition(3)
+
+    def encode(cells):
+        enc, bc = ai._encode_codes(
+            spark, emb, cent, None, books, meta_cols=("tenant",), cells=cells
+        )
+        try:
+            return sorted(
+                (r.vec_id, r.cell, bytes(r.code), r.nrm, r.tenant)
+                for r in enc.collect()
+            )
+        finally:
+            bc.destroy(blocking=False)
+
+    full = encode(None)
+    assert len(full) == n and len({r[1] for r in full}) > 3
+    for cells in ([1, 4], [0], []):
+        assert encode(cells) == [r for r in full if r[1] in cells], cells
+
+
 def test_encode_rejects_ragged_or_null_embedding(spark):
     """The Arrow encode kernel reshapes the flat values buffer, so a
     ragged row — even one whose batch total still divides by d — or a

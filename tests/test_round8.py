@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from affinity_propagation_mapreduce_spark.operators import ap
 
-from .conftest import SF_SMALL
+from .conftest import SF_SMALL, SF_T2
 
 
 def _labels(df) -> dict[int, int]:
@@ -436,6 +436,33 @@ class TestPQ:
             "left_semi",
         ).count()
         assert n > 0 and hit / n >= 0.9  # measured 0.98
+
+
+# md5 of the sorted (query_id, neighbor_id, cosine.hex(), rn) rows of the
+# in-query PQ searches, recorded when each ran its own pandas kernel; the
+# rows must not move now that both run the ANN index's encode and scan
+PQ_ROW_PINS = {
+    ("knn_cosine_pq", SF_SMALL): "bacc8ff70da0c5ffce7e31c42d7220fc",
+    ("knn_cosine_pq", SF_T2): "1d784cb26f788c4161ab0c3343bc5707",
+    ("knn_cosine_ivfpq", SF_SMALL): "c75d5a5670c4b0861135fb924b342fe6",
+    ("knn_cosine_ivfpq", SF_T2): "aba60206de0842ee84041b585e9a1327",
+}
+
+
+@pytest.mark.parametrize(
+    "query,sf_dir", sorted(PQ_ROW_PINS), ids=lambda v: os.path.basename(v)
+)
+def test_pq_rows_equal_pinned_md5(spark, query, sf_dir):
+    import hashlib
+
+    from affinity_propagation_mapreduce_spark.operators import vector as V
+
+    rows = getattr(V, query)(spark, sf_dir).collect()
+    key = sorted((r.query_id, r.neighbor_id, r.cosine.hex(), r.rn) for r in rows)
+    assert len(key) == V.N_QUERIES * V.TOP_K
+    assert hashlib.md5(repr(key).encode()).hexdigest() == PQ_ROW_PINS[
+        (query, sf_dir)
+    ]
 
 
 class TestMergeAndBucketedJoin:

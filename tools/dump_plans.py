@@ -24,7 +24,7 @@ SHOWCASE = [
     ("join_broadcast_star", "broadcast dims, shuffle join only on the fact key"),
     ("join_asof", "partial_max_by below the exchange: 1 candidate/key/mapper"),
     ("join_skew_salted", "salted join keys (orderkey, salt) spreading hot keys"),
-    ("ap_responsibility", "AP pass: state scanned, never shuffled; top-2 via partial WindowGroupLimit"),
+    ("ap_responsibility", "AP first responsibility pass: the r column of the T=1 chain state's coordinate view, no N^2 relation built in Spark"),
     ("rollup_timeseries", "ROLLUP grouping sets expanded in one aggregation"),
     ("dedup_near_minhash", "banded-LSH equi-join candidates, no cross join"),
     ("ann_lsh_cosine", "hyperplane-LSH band-bucket equi-join, JVM-codegen fold dots"),
@@ -41,7 +41,7 @@ SHOWCASE = [
     ("bm25_topk", "posting-list-bounded BM25 scoring, TakeOrderedAndProject top-N"),
     ("merge_upsert", "CDC MERGE: WindowGroupLimit change compaction + one full outer join apply"),
     ("join_bucketed", "bucketed co-located join: shuffle-free SortMergeJoin, zero Exchange below the rollup"),
-    ("knn_cosine_pq", "PQ/ADC compressed scan: one mapInPandas over codes, shortlist-bounded shuffle, exact re-rank join"),
+    ("knn_cosine_pq", "flat PQ as the ANN index's IVF-PQ scan over one cell: mapInArrow encode, coalesced mapInArrow ADC scan, shortlist-bounded shuffle, exact re-rank join"),
     ("layout_compaction", "compacted-layout read-back rollup (the compaction itself is write-side)"),
     ("knn_cosine_served", "persisted-index serving: PartitionFilters prune unprobed cells, search-only"),
     ("win_ntile_pctrank", "range-partitioned exact global ranks: no SinglePartition sort, no Window"),
@@ -77,10 +77,11 @@ def main() -> None:
     # B19 showcase dumps the pre-checkpoint range stage for the same
     # reason (the scale claim lives in the rangepartitioning exchange)
     from affinity_propagation_mapreduce_spark.operators import ann_index
-    from affinity_propagation_mapreduce_spark.operators import relational
+    from affinity_propagation_mapreduce_spark.operators import relational, vector
 
     overrides = {
         "knn_cosine_served": ann_index.knn_cosine_served,
+        "knn_cosine_pq": vector.knn_cosine_pq,
         "win_ntile_pctrank": relational.ntile_ranked_parts,
     }
     for name, why in SHOWCASE:
