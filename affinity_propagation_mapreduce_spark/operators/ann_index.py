@@ -902,11 +902,72 @@ def _fixed_width_bytes(arr, width: int) -> np.ndarray:
     return data.reshape(len(arr), width)
 
 
+def _plan_cell_files(croot: str, cells, tasks: int) -> list[list[tuple]]:
+    """The file plan of a serve: the data files of every (committed
+    batch dir, probed cell) fragment of generation root ``croot``,
+    listed with ``parquet_data_files`` (hidden and ``_temporary`` files
+    stay out), as (batch tag, cell, files) groups spread over
+    min(``tasks``, groups) task lists balanced by bytes (largest group
+    to the lightest task).  Each task's groups run in (cell, tag)
+    order.  Empty when no probed cell holds a file."""
+    import heapq
+
+    want = {f"cell={int(c)}": int(c) for c in cells}
+    groups = []
+    for name in sorted(os.listdir(croot)):
+        if not name.startswith("batch="):
+            continue
+        bdir = os.path.join(croot, name)
+        for cdir in sorted(set(os.listdir(bdir)) & want.keys()):
+            files = parquet_data_files(os.path.join(bdir, cdir))
+            if files:
+                size = sum(os.path.getsize(f) for f in files)
+                groups.append((size, name.split("=", 1)[1], want[cdir], files))
+    n_tasks = min(tasks, len(groups))
+    plan: list[list[tuple]] = [[] for _ in range(n_tasks)]
+    loads = [(0, t) for t in range(n_tasks)]
+    largest_first = sorted(groups, key=lambda g: (-g[0], g[2], g[1]))
+    for size, tag, cell, files in largest_first:
+        load, t = heapq.heappop(loads)
+        plan[t].append((tag, cell, files))
+        heapq.heappush(loads, (load + size, t))
+    return [sorted(p, key=lambda g: (g[1], g[0])) for p in plan]
+
+
+def _read_fragments(groups, cols):
+    """One Arrow batch of columns ``cols`` per (batch tag, cell, files)
+    group, read with pyarrow: ``cell`` and ``batch`` are the values the
+    group's directories name, every other column is read from its
+    files."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    file_cols = [c for c in cols if c not in ("cell", "batch")]
+
+    def read(f):
+        with pq.ParquetFile(f) as pf:
+            return pf.read(columns=file_cols)
+
+    for tag, cell, files in groups:
+        tbl = pa.concat_tables([read(f) for f in files]).combine_chunks()
+        n = tbl.num_rows
+        if n == 0:
+            continue
+        named = {
+            "cell": pa.array(np.full(n, cell, dtype="i4")),
+            "batch": pa.array([tag] * n),
+        }
+        yield pa.RecordBatch.from_arrays(
+            [named[c] if c in named else tbl.column(c).chunk(0) for c in cols],
+            names=cols,
+        )
+
+
 def _adc_scan(
-    spark, codes_df, meta, books, qids, qmat, qnrm, shortlist, cell_to_q,
+    spark, codes, meta, books, qids, qmat, qnrm, shortlist, cell_to_q,
     per_cell_cap: int | None = None, k: int | None = None,
 ):
-    """Shared ADC kernel over a (possibly cell-pruned) codes scan: one
+    """Shared ADC kernel over the probed cells' codes: one
     ``mapInArrow`` pass whose ``code`` (and ``emb``) columns are decoded
     from the Arrow buffers, never boxed per row through pandas.
 
@@ -923,16 +984,23 @@ def _adc_scan(
     survivor-safe for the global (pq_cosine DESC, neighbor_id ASC)
     shortlist window.
 
-    ONE WAVE: the scan is coalesced (narrow, no exchange) to the
-    session's ``defaultParallelism`` before the ``mapInArrow``, so the
-    kernel runs one Python task per core however many batch dirs the
-    union holds (``_batch_scan`` unions one relation per dir, and each
-    relation splits into its own ~cores splits: 16-17 Python tasks at
-    4 batch dirs on 4 cores, each paying the worker's fixed per-task
-    floor).  A coalesced partition, and so one Arrow batch, can hold
-    one cell's rows from two batch dirs; grouping by the dir keeps the
-    truncation per fragment, which ``_per_cell_cap``'s ``n_fragments``
-    scaling assumes.
+    ONE WAVE, two inputs.  ``codes`` is either a file plan
+    (``_plan_cell_files``: one list of (batch tag, cell, files) groups
+    per task) or a DataFrame of the ``in_cols``.  A plan runs as
+    ``spark.range(0, T, 1, T).mapInArrow``: each of the T ≤ cores
+    tasks reads its groups with pyarrow (``_read_fragments``) and
+    scores each whole (batch dir, cell) fragment as one Arrow batch,
+    so no JVM scan, listing or schema job runs and the truncation is
+    per fragment, which ``_per_cell_cap``'s ``n_fragments`` scaling
+    assumes.  The plan ships in the kernel's broadcast.  The trade-off:
+    executors reach the files through pyarrow's filesystem layer, and
+    Spark's file-split locality is lost.  A DataFrame (a tombstoned or
+    filtered serve's ``_batch_scan``, ``vector._pq_topk``'s in-query
+    encode) is coalesced (narrow, no exchange) to the session's
+    ``defaultParallelism``, so it too runs one Python task per core
+    however many batch dirs its union holds; a coalesced partition can
+    hold one cell's rows from two batch dirs, and grouping by the dir
+    keeps the truncation per fragment.
 
     WIDE-d BULK ESCAPE HATCH (measured this round): at d=768 the full
     LUT working set for a 10k-query batch is ~8 GB (40 blocks × 200 MB)
@@ -981,13 +1049,16 @@ def _adc_scan(
     if exact:
         in_cols.append("emb")
         out_names.append("cosine")
-    bc = spark.sparkContext.broadcast((books, qids, qmat, qnrm, cell_to_q))
+    planned = not isinstance(codes, DataFrame)
+    bc = spark.sparkContext.broadcast(
+        (books, qids, qmat, qnrm, cell_to_q, codes if planned else None)
+    )
 
     def kernel(batches):
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        bks, qi_, qm_, qn_, c2q = bc.value
+        bks, qi_, qm_, qn_, c2q, _plan = bc.value
         qmT = np.ascontiguousarray(qm_.T)  # per-dimension query columns
         qm3 = qm_.reshape(len(qi_), m_, dsub)
         lut_chunks: dict[int, np.ndarray] = {}
@@ -1099,14 +1170,22 @@ def _adc_scan(
                 [pa.array(c) for c in cols], names=out_names
             )
 
-    scored = (
-        codes_df.select(*in_cols)
-        .coalesce(spark.sparkContext.defaultParallelism)
-        .mapInArrow(
-            kernel,
-            "query_id long, neighbor_id long, "
-            + ", ".join(f"{c} double" for c in out_names[2:]),
+    def read_and_score(tasks):
+        plan = bc.value[5]
+        for b in tasks:
+            for t in b.column(0).to_pylist():
+                yield from kernel(_read_fragments(plan[t], in_cols))
+
+    if planned:
+        src = spark.range(0, len(codes), 1, len(codes))
+    else:
+        src = codes.select(*in_cols).coalesce(
+            spark.sparkContext.defaultParallelism
         )
+    scored = src.mapInArrow(
+        read_and_score if planned else kernel,
+        "query_id long, neighbor_id long, "
+        + ", ".join(f"{c} double" for c in out_names[2:]),
     )
     w_adc = Window.partitionBy("query_id").orderBy(
         F.desc("pq_cosine"), F.asc("neighbor_id")
@@ -1258,30 +1337,31 @@ def choose_search_mode(nlist: int, n_probe: int) -> str:
     return "flat" if n_probe >= nlist * FLAT_MODE_PROBE_FRAC else "ivf"
 
 
-# Per-process scan-relation memo, one entry per COMMITTED BATCH DIR:
-# creating a scan DataFrame is DRIVER work — Spark's file listing, run
-# as a job once a dir holds more than 32 children — and keying it on
-# the probed-dir set, which changes with every query batch, paid
-# ~1.1-1.9 s of listing on every perfbench ``ann_serve`` serve (4-core
-# host, 6-8k × d=32).  That job runs one task per core
-# (session.get_spark sets the discovery parallelism; Spark's default of
-# 10,000 made one task per cell dir: ~180 tasks and 1.0-1.3 s for one
-# perfbench batch dir), and the schema comes from one data file's
-# footer (_footer_schema), so no schema-inference job runs.  A batch
-# dir is IMMUTABLE once renamed into place (appends add new dirs, every
-# fold/migration writes a new generation root), so its relation is
-# built once per (application, batch dir) and every serve takes the
+# Per-process scan-relation memo, one entry per COMMITTED BATCH DIR, for
+# the readers that need a Spark relation of the codes: a serve with
+# pending tombstones or a filter (search_ann_index), raw_rerank_frame,
+# the filtered post mode's qualifying scan and the selectivity
+# fallback (serve_topk_filtered).  A plain serve plans files instead
+# (_plan_cell_files) and never reads it.  Creating a scan DataFrame is
+# DRIVER work: Spark's file listing, run as a job once a dir holds more
+# than 32 children.  That job runs one task per core (session.get_spark
+# sets the discovery parallelism), and the schema comes from one data
+# file's footer (_footer_schema), so no schema-inference job runs.  A
+# batch dir is IMMUTABLE once renamed into place (appends add new dirs,
+# every fold/migration writes a new generation root), so its relation
+# is built once per (application, batch dir) and every reader takes the
 # union of the current generation's relations, pruned by
-# ``cell IN (probed)``: a warm serve lists nothing, a serve after an
-# append lists only the new batch.  ``batch`` is the dir's tag as a string literal — never an
-# inferred partition value: inferred from one batch alone, tag "007"
-# reads as the integer 7 and misses its tombstones.  Each entry carries the dir's (inode, mtime) stamp so
-# a layout removed and rebuilt at the same path is never served from a
+# ``cell IN (probed)``: a warm read lists nothing, a read after an
+# append lists only the new batch.  ``batch`` is the dir's tag as a
+# string literal — never an inferred partition value: inferred from one
+# batch alone, tag "007" reads as the integer 7 and misses its
+# tombstones.  Each entry carries the dir's (inode, mtime) stamp so a
+# layout removed and rebuilt at the same path is never served from a
 # stale listing.  Entries of a superseded generation root are evicted
 # when a newer root of the same layout is scanned; _SCAN_MEMO_MAX bounds
 # the entries of OTHER roots only, so a layout with more batch dirs
 # than the cap does not thrash.  This memoizes SCAN RELATIONS, not
-# results: tombstones, predicates and reranks apply per serve on top.
+# results: tombstones, predicates and reranks apply per read on top.
 _scan_memo: dict[tuple, tuple] = {}
 _SCAN_MEMO_MAX = 64
 
@@ -1388,13 +1468,16 @@ def search_ann_index(
     layouts) fuses the exact rerank into the ADC pass (_adc_scan) and
     returns the top-k (query_id, neighbor_id, cosine, rn) instead.
 
-    The scan is the union of one memoized relation per committed batch
-    dir (``_batch_scan``), pruned by ``cell IN (probed)`` as a
-    PartitionFilter per batch: unprobed cell dirs are never read, and
-    the listing is paid once per (process, batch dir), not per serve.
-    Reading the layout ROOT instead would re-list every batch and all
-    its nlist cell dirs through one parallel partition discovery (~9k
-    dirs at N=10M).
+    A serve with no pending tombstones and no filter reads no Spark
+    scan: the driver plans the data files of each (committed batch
+    dir, probed cell) (``_plan_cell_files``) and the ADC tasks read them
+    with pyarrow, so unprobed cell dirs are never read and no listing
+    or schema job runs, cold or warm.  A tombstoned or filtered serve
+    needs the anti-join or the predicate below the kernel, so it scans
+    the union of one memoized relation per committed batch dir
+    (``_batch_scan``), pruned by ``cell IN (probed)`` as a
+    PartitionFilter per batch; its listing is paid once per (process,
+    batch dir).
 
     ``model`` (the ``load_ann_model`` triple) and ``cell_to_q`` (the
     driver-side probe map) let a caller that already resolved them —
@@ -1415,14 +1498,24 @@ def search_ann_index(
     croot = _codes_root_gen(path, _gen_of(meta))
     if not os.path.isdir(croot):
         raise FileNotFoundError(f"ANN layout has no codes tree: {croot}")
-    codes = _batch_scan(spark, croot, cell_to_q)
-    if codes is None:  # no batch holds a row
+    planned = (
+        filter_expr is None and filter_ids is None
+        and not _tombstone_dirs(path, _gen_of(meta))
+    )
+    if planned:
+        codes = _plan_cell_files(
+            croot, cell_to_q, spark.sparkContext.defaultParallelism
+        ) or None
+    else:
+        codes = _batch_scan(spark, croot, cell_to_q)
+    if codes is None:  # no probed cell holds a row
         return spark.createDataFrame(
             [],
             "query_id long, neighbor_id long"
             + ("" if k is None else ", cosine double, rn long"),
         )
-    codes = _live_codes(spark, path, codes, meta)
+    if not planned:
+        codes = _live_codes(spark, path, codes, meta)
     if filter_expr is not None:
         # predicate pushdown: the metadata columns live IN the codes
         # layout (meta_cols builds), so the predicate evaluates
@@ -1534,18 +1627,20 @@ def serve_topk(
     A ``store_raw`` layout served without ``norms_df``, inside the
     interactive band (|Q|·shortlist ≤ RERANK_BROADCAST_MAX_ROWS) and
     inside the measured crossing bound (_ONE_PASS_MAX_VALUES), runs in
-    ONE pass, in flat mode as in IVF mode: the ADC kernel reads
-    (vec_id, cell, code, nrm, emb) from the probed cells of the
-    per-batch scan memo, emits the exact cosine beside each ADC score,
-    and one ``query_id`` exchange applies the shortlist window and then
-    the top-k window — partition-local refinement, one global merge.
-    A warm serve is one scan and two Spark jobs (the exchange's map
-    stage and the result): no listing, no schema inference, no query
-    frame, no second scan of the probed cells, no rerank join.  Every
-    other serve keeps the two passes: the shortlist, then
-    ``_exact_rerank`` against the probed partitions of the layout's raw
-    column (raw layouts) or against ``norms_df`` (vec_id, emb, nrm) —
-    the caller's full-precision store, required for non-raw layouts.
+    ONE pass, in flat mode as in IVF mode: the ADC tasks read
+    (vec_id, code, nrm, emb) of the probed cells' files with pyarrow
+    (with pending tombstones, from the per-batch scan memo), emit the
+    exact cosine beside each ADC score, and one ``query_id`` exchange
+    applies the shortlist window and then the top-k window —
+    partition-local refinement, one global merge.  Without pending
+    tombstones such a serve, cold or warm, is two Spark jobs (the
+    exchange's map stage and the result): no listing, no schema
+    inference, no query frame, no second scan of the probed cells, no
+    rerank join.  Every other serve keeps the two passes: the
+    shortlist, then ``_exact_rerank`` against the probed partitions of
+    the layout's raw column (raw layouts) or against ``norms_df``
+    (vec_id, emb, nrm) — the caller's full-precision store, required
+    for non-raw layouts.
     Both shapes return the same doubles: the one-pass cosine is the
     JVM fold's arithmetic.  An id live in two batch dirs (appends do not
     dedupe ids) is served once per live copy by both raw shapes: the

@@ -602,11 +602,11 @@ def _serve_jobs(spark, path, qids, qmat, qnrm, group):
 
 
 def test_warm_raw_serve_job_budget(spark, raw_layout, tmp_path):
-    """A warm raw IVF serve runs the one scan: the exchange's map stage
-    and the result — no listing, schema, query-frame, broadcast or
-    second-scan job.  The first serve after an append pays the new
-    batch's listing once, and no schema inference (the schema comes
-    from a footer)."""
+    """A warm raw IVF serve runs two jobs: the exchange's map stage and
+    the result — no listing, schema, query-frame, broadcast or
+    second-scan job.  So does the first serve after an append: the ADC
+    tasks read the new batch's planned files with pyarrow, so nothing
+    lists it."""
     path = _copy_layout(raw_layout, tmp_path)
     qids, qmat, qnrm = ai._query_rows(spark, SF_SMALL, n_queries=2 * N_QUERIES)
     first = (qids[:N_QUERIES], qmat[:N_QUERIES], qnrm[:N_QUERIES])
@@ -618,7 +618,7 @@ def test_warm_raw_serve_job_budget(spark, raw_layout, tmp_path):
     b1 = _near_copies(spark, first[1], 10_000, seed=1)
     assert ai.append_ann_index(spark, path, b1, "b1") == N_QUERIES
     after = _serve_jobs(spark, path, *first, "raw-serve-append")
-    assert after <= 3, f"expected <= 3 jobs, got {after}"
+    assert after <= 2, f"expected <= 2 jobs, got {after}"
 
 
 def test_batch_scan_relists_a_layout_rebuilt_in_place(
@@ -697,11 +697,11 @@ WIDE_SERVE_PINS = {
 
 def test_wide_batch_serves_run_one_wave(spark, raw_layout, tmp_path, monkeypatch):
     """Serves over batch dirs of more than 32 cell dirs each run every
-    layer in one wave of tasks.  The first serve after an append runs 3
-    jobs: one listing job of at most one task per core (no
-    schema-inference job), the ADC map stage and the result.  With 3
-    batch dirs, whose union splits into more partitions than cores, the
-    ADC stage still runs at most one task per core.  The served rows
+    layer in one wave of tasks.  Every serve, the first after an append
+    included, runs at most 2 jobs, the ADC map stage and the result,
+    and no Spark parquet read (no listing or schema job).  With 3 batch
+    dirs, whose union splits into more partitions than cores, the ADC
+    stage still runs at most one task per core.  The served rows
     equal the pins at every batch-dir count, also with the emission cap
     engaged and below the shortlist (both patched down, so that the cap
     truncates cells of this corpus).  With that cap, the ADC scan over
@@ -729,12 +729,9 @@ def test_wide_batch_serves_run_one_wave(spark, raw_layout, tmp_path, monkeypatch
         got[n_dirs] = _md5_served(rows)
         stages = _stage_tasks(spark, jobs)
         assert max(t for _n, t in stages) <= dp, stages
-        if n_dirs == 2:
-            assert len(jobs) <= 3, stages
-            # the listing job reads at the parquet call site; a schema
-            # job would be a second one
-            reads = [t for n, t in stages if n.startswith("parquet at")]
-            assert len(reads) == 1, stages
+        assert len(jobs) <= 2, stages
+        # a listing or schema job reads at the parquet call site
+        assert not [n for n, _t in stages if n.startswith("parquet at")], stages
         meta, cent, books = ai.load_ann_model(spark, path)
         cells = ai._probe_map(cent, qmat, RAW_PROBE)
         scan = ai._batch_scan(spark, ai.codes_root(path), cells)
@@ -756,6 +753,138 @@ def test_wide_batch_serves_run_one_wave(spark, raw_layout, tmp_path, monkeypatch
                 repr(sorted(tuple(r) for r in short)).encode()
             ).hexdigest()
     assert got == WIDE_SERVE_PINS
+
+
+def _md5_shortlist(rows) -> str:
+    return hashlib.md5(repr(sorted(tuple(r) for r in rows)).encode()).hexdigest()
+
+
+def test_file_plan_scores_as_the_batch_scan(spark, raw_layout, tmp_path):
+    """The ADC kernel over the driver's file plan returns what it
+    returns over the ``_batch_scan`` DataFrame of the same cells: the
+    served rows and the shortlist, at 1 to 4 batch dirs, as served and
+    with the emission cap below the shortlist.  The served rows are the
+    plan's."""
+    path = _copy_layout(raw_layout, tmp_path)
+    qids, qmat, qnrm = ai._query_rows(spark, SF_SMALL)
+    dp = spark.sparkContext.defaultParallelism
+    for n_dirs in (1, 2, 3, 4):
+        if n_dirs > 1:
+            wide = _wide_batch(spark, 10_000 * n_dirs, n_dirs)
+            assert ai.append_ann_index(spark, path, wide, f"e{n_dirs}") == 500
+        meta, cent, books = ai.load_ann_model(spark, path)
+        cells = ai._probe_map(cent, qmat, RAW_PROBE)
+        croot = ai.codes_root(path)
+        plan = ai._plan_cell_files(croot, cells, dp)
+        assert 0 < len(plan) <= dp
+        scan = ai._batch_scan(spark, croot, cells)
+        served_sl = max(ai.PQ_SHORTLIST, meta["n"] // ai.PQ_SHORTLIST_FRAC)
+        capped_sl = meta["n"] // 50
+        settings = {
+            "served": (
+                served_sl,
+                ai._per_cell_cap(len(qids), RAW_PROBE, served_sl, n_dirs),
+            ),
+            "capped": (capped_sl, max(2, -(-2 * capped_sl // RAW_PROBE))),
+        }
+        assert settings["served"][1] is None
+        assert settings["capped"][1] < capped_sl
+        for name, (sl, cap) in settings.items():
+            for k in (TOP_K, None):
+                md5 = _md5_served if k else _md5_shortlist
+                by_plan, by_scan = (
+                    md5(ai._adc_scan(
+                        spark, codes, meta, books, qids, qmat, qnrm, sl,
+                        cells, per_cell_cap=cap, k=k,
+                    ).collect())
+                    for codes in (plan, scan)
+                )
+                assert by_plan == by_scan, (n_dirs, name, k)
+                if name == "served" and k:
+                    served = ai.serve_topk(
+                        spark, path, qids, qmat, qnrm, n_probe=RAW_PROBE
+                    ).collect()
+                    assert _md5_served(served) == by_plan, n_dirs
+
+
+def test_file_plan_skips_stray_files_and_unprobed_cells(spark, raw_layout, tmp_path):
+    """A dot-prefixed part file and a ``_temporary/`` attempt dir inside
+    a probed cell dir, a ``_SUCCESS``-only batch dir and every unprobed
+    cell stay out of the file plan, so the served rows do not change.
+    A serve that probes no file returns the empty frame of its
+    schema."""
+    import shutil
+
+    path = _copy_layout(raw_layout, tmp_path)
+    qids, qmat, qnrm = ai._query_rows(spark, SF_SMALL)
+    _meta, cent, _books = ai.load_ann_model(spark, path)
+    cells = ai._probe_map(cent, qmat, RAW_PROBE)
+    croot = ai.codes_root(path)
+    base = os.path.join(croot, "batch=base")
+
+    def serve():
+        return _md5_served(
+            ai.serve_topk(spark, path, qids, qmat, qnrm, n_probe=RAW_PROBE).collect()
+        )
+
+    before = serve()
+    occupied = {
+        int(n.split("=", 1)[1]) for n in os.listdir(base) if n.startswith("cell=")
+    }
+    probed = sorted(occupied & set(cells))
+    assert probed and occupied - set(cells)
+    cdir = os.path.join(base, f"cell={probed[0]}")
+    part = parquet_data_files(cdir)[0]
+    shutil.copy(part, os.path.join(cdir, ".part-hidden.parquet"))
+    os.makedirs(os.path.join(cdir, "_temporary", "0"))
+    shutil.copy(part, os.path.join(cdir, "_temporary", "0", "part-0.parquet"))
+    empty = os.path.join(croot, "batch=empty")
+    os.makedirs(empty)
+    open(os.path.join(empty, "_SUCCESS"), "w").close()
+
+    plan = ai._plan_cell_files(croot, cells, spark.sparkContext.defaultParallelism)
+    groups = [g for task in plan for g in task]
+    assert sorted((tag, cell) for tag, cell, _f in groups) == [
+        ("base", c) for c in probed
+    ]
+    for _tag, cell, files in groups:
+        assert files == parquet_data_files(os.path.join(base, f"cell={cell}"))
+        assert all("/." not in f and "_temporary" not in f for f in files)
+    assert serve() == before
+
+    assert ai._plan_cell_files(croot, {}, 4) == []
+    unprobed = {max(occupied) + 1: [0]}
+    for k, schema in (
+        (None, "query_id long, neighbor_id long"),
+        (TOP_K, "query_id long, neighbor_id long, cosine double, rn long"),
+    ):
+        got = ai.search_ann_index(
+            spark, path, qids, qmat, qnrm, n_probe=RAW_PROBE, cell_to_q=unprobed, k=k
+        )
+        assert got.schema == spark.createDataFrame([], schema).schema
+        assert got.count() == 0
+
+
+def test_cold_serve_over_three_batch_dirs_runs_two_jobs(spark, raw_layout, tmp_path):
+    """With the scan memo empty, a serve over 3 batch dirs runs 2 jobs
+    (the ADC map stage and the result): no listing or schema job."""
+    path = _copy_layout(raw_layout, tmp_path)
+    qids, qmat, qnrm = ai._query_rows(spark, SF_SMALL)
+    for i, tag in enumerate(("c1", "c2")):
+        batch = _near_copies(spark, qmat, 30_000 + 1_000 * i, seed=3 + i)
+        assert ai.append_ann_index(spark, path, batch, tag) == len(qids)
+    assert sum(b.startswith("batch=") for b in os.listdir(ai.codes_root(path))) == 3
+    ai._scan_memo.clear()
+    rows, jobs = _jobs_in_group(
+        spark, "cold-serve-3",
+        lambda: ai.serve_topk(
+            spark, path, qids, qmat, qnrm, n_probe=RAW_PROBE
+        ).collect(),
+    )
+    assert len(rows) == len(qids) * TOP_K
+    stages = _stage_tasks(spark, jobs)
+    assert len(jobs) == 2, stages
+    assert not [n for n, _t in stages if n.startswith("parquet at")], stages
 
 
 # --- build: one sample, driver-written model tables, Arrow encode -----------

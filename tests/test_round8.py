@@ -240,7 +240,6 @@ with open(os.path.join(path, "payload")) as fh:
         assert len(orphans) <= 1  # the SIGKILLed victim's, reaped at age
 
 
-@pytest.mark.slow
 class TestAboveGate:
     """A REAL above-gate execution (N > BLOCKED_MAX_N): the coordinate
     sparse loop — not the monkeypatched-gate small-N cliff tests.  Wall

@@ -2,7 +2,8 @@
 representative query per family, so the plan properties PLANS.md claims
 are inspectable without running Spark.
 
-Usage: python tools/dump_plans.py   (writes EXPLAINS.md at repo root)
+Usage: python tools/dump_plans.py          (writes EXPLAINS.md at repo root)
+       python tools/dump_plans.py NAME ...  (rewrites only those sections)
 """
 
 from __future__ import annotations
@@ -43,7 +44,7 @@ SHOWCASE = [
     ("join_bucketed", "bucketed co-located join: shuffle-free SortMergeJoin, zero Exchange below the rollup"),
     ("knn_cosine_pq", "flat PQ as the ANN index's IVF-PQ scan over one cell: mapInArrow encode, coalesced mapInArrow ADC scan, shortlist-bounded shuffle, exact re-rank join"),
     ("layout_compaction", "compacted-layout read-back rollup (the compaction itself is write-side)"),
-    ("knn_cosine_served", "persisted-index serving: PartitionFilters prune unprobed cells, search-only"),
+    ("knn_cosine_served", "persisted-index serving: the driver plans the probed cells' files, the ADC tasks read them with pyarrow (no Spark scan), search-only + exact re-rank join"),
     ("win_ntile_pctrank", "range-partitioned exact global ranks: no SinglePartition sort, no Window"),
     ("merge_upsert_chain", "3 sequential MERGE applications, all shuffles on the merge key"),
     ("media_phash_neardup", "map-side decode + block-mean perceptual hash; only (id, 64-bit hash) shuffles to the group stage"),
@@ -60,18 +61,20 @@ SHOWCASE = [
 ]
 
 
-def main() -> None:
+def _section(spark, qs, overrides, name: str, why: str) -> list[str]:
+    df = overrides.get(name, qs[name])(spark, SF_DIR)
+    plan = df._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+            "formatted"
+        )
+    )
+    return [f"## {name}", f"*{why}*", "", "```", plan.strip(), "```", ""]
+
+
+def main(names: list[str]) -> None:
     spark = get_spark("dump-plans")
     spark.sparkContext.setLogLevel("ERROR")
     qs = registry.queries()
-    out = [
-        "# EXPLAINS — formatted physical plans (generated by tools/dump_plans.py)",
-        "",
-        f"Scale factor dir: `{SF_DIR}`.  One representative query per family;",
-        "the property each plan demonstrates is asserted in tests/test_plans.py",
-        "or tests/test_round4.py where marked in PLANS.md.",
-        "",
-    ]
     # gated wrappers localCheckpoint their result (the dumped plan would
     # be a bare ExistingRDD scan) — dump the inner pipeline instead; the
     # B19 showcase dumps the pre-checkpoint range stage for the same
@@ -84,25 +87,36 @@ def main() -> None:
         "knn_cosine_pq": vector.knn_cosine_pq,
         "win_ntile_pctrank": relational.ntile_ranked_parts,
     }
-    for name, why in SHOWCASE:
-        df = overrides.get(name, qs[name])(spark, SF_DIR)
-        plan = df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
-        out.append(f"## {name}")
-        out.append(f"*{why}*")
-        out.append("")
-        out.append("```")
-        out.append(plan.strip())
-        out.append("```")
-        out.append("")
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    with open(os.path.join(root, "EXPLAINS.md"), "w") as fh:
+    dest = os.path.join(root, "EXPLAINS.md")
+    if names:
+        # splice: each named section runs from its heading to the next
+        with open(dest) as fh:
+            out = fh.read().split("\n")
+        for name, why in SHOWCASE:
+            if name not in names:
+                continue
+            lo = out.index(f"## {name}")
+            hi = next(
+                (i for i in range(lo + 1, len(out)) if out[i].startswith("## ")),
+                len(out),
+            )
+            out[lo : hi - 1] = _section(spark, qs, overrides, name, why)[:-1]
+    else:
+        out = [
+            "# EXPLAINS — formatted physical plans (generated by tools/dump_plans.py)",
+            "",
+            f"Scale factor dir: `{SF_DIR}`.  One representative query per family;",
+            "the property each plan demonstrates is asserted in tests/test_plans.py",
+            "or tests/test_round4.py where marked in PLANS.md.",
+            "",
+        ]
+        for name, why in SHOWCASE:
+            out += _section(spark, qs, overrides, name, why)
+    with open(dest, "w") as fh:
         fh.write("\n".join(out))
-    print(f"wrote EXPLAINS.md ({len(SHOWCASE)} plans)")
+    print(f"wrote EXPLAINS.md ({len(names) or len(SHOWCASE)} plans)")
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])
