@@ -963,6 +963,42 @@ def _read_fragments(groups, cols):
         )
 
 
+def _top_rows(qid, score, nid, n: int):
+    """The indices of each query's top ``n`` rows and their 1-based
+    ranks, in (query, rank) order, ranked as Spark's ``row_number``
+    over (score DESC, neighbor_id ASC) ranks them: NaN above every
+    number, -0.0 equal to 0.0."""
+    order = np.lexsort((nid, -score, ~np.isnan(score), qid))
+    q = qid[order]
+    first = np.ones(len(q), dtype=bool)
+    first[1:] = q[1:] != q[:-1]
+    pos = np.arange(len(q))
+    rank = pos - np.maximum.accumulate(np.where(first, pos, 0)) + 1
+    keep = rank <= n
+    return order[keep], rank[keep]
+
+
+def _merge_topk(tbl, shortlist: int, k: int):
+    """The driver's global merge of the one-pass serve: over the ADC
+    tasks' (query_id, neighbor_id, pq_cosine, cosine) rows, the
+    shortlist by (pq_cosine DESC, neighbor_id ASC) and then its top
+    ``k`` by (cosine DESC, neighbor_id ASC), as (query_id, neighbor_id,
+    cosine, rn) — the rows of Spark's two ``row_number`` windows."""
+    import pyarrow as pa
+
+    q, nid, pq_cos, cos = (
+        tbl.column(c).to_numpy()
+        for c in ("query_id", "neighbor_id", "pq_cosine", "cosine")
+    )
+    sl, _rank = _top_rows(q, pq_cos, nid, shortlist)
+    q, nid, cos = q[sl], nid[sl], cos[sl]
+    top, rn = _top_rows(q, cos, nid, k)
+    return pa.table({
+        "query_id": q[top], "neighbor_id": nid[top], "cosine": cos[top],
+        "rn": rn.astype("i8"),
+    })
+
+
 def _adc_scan(
     spark, codes, meta, books, qids, qmat, qnrm, shortlist, cell_to_q,
     per_cell_cap: int | None = None, k: int | None = None,
@@ -982,7 +1018,7 @@ def _adc_scan(
     layout fragment — and only the queries probing that cell score it;
     emission is the per-(batch dir, cell, query) top-``shortlist`` —
     survivor-safe for the global (pq_cosine DESC, neighbor_id ASC)
-    shortlist window.
+    shortlist.
 
     ONE WAVE, two inputs.  ``codes`` is either a file plan
     (``_plan_cell_files``: one list of (batch tag, cell, files) groups
@@ -1000,7 +1036,8 @@ def _adc_scan(
     ``defaultParallelism``, so it too runs one Python task per core
     however many batch dirs its union holds; a coalesced partition can
     hold one cell's rows from two batch dirs, and grouping by the dir
-    keeps the truncation per fragment.
+    keeps the truncation per fragment.  With ``k`` set this wave is the
+    whole serve: no exchange or result stage follows it.
 
     WIDE-d BULK ESCAPE HATCH (measured this round): at d=768 the full
     LUT working set for a 10k-query batch is ~8 GB (40 blocks × 200 MB)
@@ -1035,10 +1072,18 @@ def _adc_scan(
     cosine of every row it emits — per-dimension left folds from 0.0 in
     f8 over the raw f4 vector widened to f8, the order of the JVM
     ``_dot``/``_fold_sum`` the two-pass rerank runs, so the doubles are
-    bitwise equal — and ONE ``query_id`` exchange applies the shortlist
-    window and then the top-k window (cosine DESC, id ASC), returning
-    (query_id, neighbor_id, cosine, rn).  Without ``k`` it returns the
-    shortlist (query_id, neighbor_id)."""
+    bitwise equal.  Each task then keeps, per query, its top
+    ``shortlist`` rows over every fragment it scored (a superset of its
+    rows in the global shortlist), the driver collects them with
+    ``toArrow`` — one job, no exchange — and ``_merge_topk`` applies
+    the shortlist order and then the top-k order (cosine DESC, id ASC)
+    as Spark's ``row_number`` windows would.  The result, (query_id,
+    neighbor_id, cosine, rn), is a local relation: the call is eager,
+    and collecting the result runs no job.  The driver holds at most
+    T·|Q|·``shortlist`` rows, T the task count (≤ ``defaultParallelism``),
+    which is what ``serve_topk``'s one-pass band bounds.  Without ``k``
+    it returns the shortlist (query_id, neighbor_id), lazily, ranked by
+    a Spark window over a ``query_id`` exchange."""
     m_, dsub = meta["m"], meta["dsub"]
     emit_cap = int(per_cell_cap) if per_cell_cap else int(shortlist)
     lut_budget = _LUT_CACHE_BYTES  # snapshot: ships inside the closure
@@ -1176,35 +1221,45 @@ def _adc_scan(
             for t in b.column(0).to_pylist():
                 yield from kernel(_read_fragments(plan[t], in_cols))
 
+    def task_shortlist(batches):
+        # k mode: each query's top shortlist over every fragment this
+        # task scored — a superset of its rows in the global shortlist
+        import pyarrow as pa
+
+        parts = list(read_and_score(batches) if planned else kernel(batches))
+        if not parts:
+            return
+        tbl = pa.Table.from_batches(parts).combine_chunks()
+        cols = [tbl.column(c).to_numpy() for c in out_names]
+        keep, _rank = _top_rows(cols[0], cols[2], cols[1], shortlist)
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(c[keep]) for c in cols], names=out_names
+        )
+
     if planned:
         src = spark.range(0, len(codes), 1, len(codes))
     else:
         src = codes.select(*in_cols).coalesce(
             spark.sparkContext.defaultParallelism
         )
-    scored = src.mapInArrow(
-        read_and_score if planned else kernel,
-        "query_id long, neighbor_id long, "
-        + ", ".join(f"{c} double" for c in out_names[2:]),
+    out_schema = "query_id long, neighbor_id long, " + ", ".join(
+        f"{c} double" for c in out_names[2:]
     )
+    if exact:
+        merged = _merge_topk(
+            src.mapInArrow(task_shortlist, out_schema).toArrow(), shortlist, k
+        )
+        return spark.createDataFrame(
+            merged, "query_id long, neighbor_id long, cosine double, rn long"
+        )
+    scored = src.mapInArrow(read_and_score if planned else kernel, out_schema)
     w_adc = Window.partitionBy("query_id").orderBy(
         F.desc("pq_cosine"), F.asc("neighbor_id")
     )
-    short = scored.withColumn("prn", F.row_number().over(w_adc)).where(
-        F.col("prn") <= shortlist
-    )
-    if not exact:
-        return short.select("query_id", "neighbor_id")
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
     return (
-        short.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .select(
-            "query_id", "neighbor_id", "cosine",
-            F.col("rn").cast("long").alias("rn"),
-        )
+        scored.withColumn("prn", F.row_number().over(w_adc))
+        .where(F.col("prn") <= shortlist)
+        .select("query_id", "neighbor_id")
     )
 
 
@@ -1466,7 +1521,9 @@ def search_ann_index(
     ``auto_n_probe(nlist)`` (the measured default; explicit values
     override); ``n_probe=nlist`` is the flat scan.  ``k`` (store_raw
     layouts) fuses the exact rerank into the ADC pass (_adc_scan) and
-    returns the top-k (query_id, neighbor_id, cosine, rn) instead.
+    returns the top-k (query_id, neighbor_id, cosine, rn) instead, as a
+    local relation merged on the driver: the ADC job runs inside this
+    call.
 
     A serve with no pending tombstones and no filter reads no Spark
     scan: the driver plans the data files of each (committed batch
@@ -1625,18 +1682,23 @@ def serve_topk(
     neighbor_id, cosine, rn).
 
     A ``store_raw`` layout served without ``norms_df``, inside the
-    interactive band (|Q|·shortlist ≤ RERANK_BROADCAST_MAX_ROWS) and
-    inside the measured crossing bound (_ONE_PASS_MAX_VALUES), runs in
-    ONE pass, in flat mode as in IVF mode: the ADC tasks read
-    (vec_id, code, nrm, emb) of the probed cells' files with pyarrow
-    (with pending tombstones, from the per-batch scan memo), emit the
-    exact cosine beside each ADC score, and one ``query_id`` exchange
-    applies the shortlist window and then the top-k window —
-    partition-local refinement, one global merge.  Without pending
-    tombstones such a serve, cold or warm, is two Spark jobs (the
-    exchange's map stage and the result): no listing, no schema
-    inference, no query frame, no second scan of the probed cells, no
-    rerank join.  Every other serve keeps the two passes: the
+    interactive band (T·|Q|·shortlist ≤ RERANK_BROADCAST_MAX_ROWS, T =
+    ``defaultParallelism``) and inside the measured crossing bound
+    (_ONE_PASS_MAX_VALUES), runs in ONE pass, in flat mode as in IVF
+    mode: the ADC tasks read (vec_id, code, nrm, emb) of the probed
+    cells' files with pyarrow (with pending tombstones, from the
+    per-batch scan memo), emit the exact cosine beside each ADC score
+    and keep each query's top shortlist per task, and the driver
+    merges those rows into the shortlist and then the top-k —
+    partition-local refinement, one global merge.  The band counts T
+    because the driver holds up to T·|Q|·shortlist rows, one task
+    shortlist per query from each task.  Such a serve is EAGER: its
+    ADC job runs inside this call, and the returned frame is a local
+    relation whose ``collect`` runs no job.  Without pending tombstones
+    it is one Spark job, cold or warm: no listing, no schema
+    inference, no query frame, no exchange, no second scan of the
+    probed cells, no rerank join.  Every other serve keeps the two
+    passes, lazily: the
     shortlist, then ``_exact_rerank`` against the probed partitions of
     the layout's raw column (raw layouts) or against ``norms_df``
     (vec_id, emb, nrm) — the caller's full-precision store, required
@@ -1677,7 +1739,8 @@ def serve_topk(
     one_pass = (
         norms_df is None
         and meta.get("raw")
-        and sl_rows <= RERANK_BROADCAST_MAX_ROWS
+        and spark.sparkContext.defaultParallelism * sl_rows
+        <= RERANK_BROADCAST_MAX_ROWS
         and values <= _ONE_PASS_MAX_VALUES
     )
     shortlist = search_ann_index(

@@ -9,6 +9,7 @@ probed scan actually prunes partitions (the physical IVF claim)."""
 from __future__ import annotations
 
 import hashlib
+import itertools
 import os
 
 import numpy as np
@@ -432,12 +433,34 @@ def _served(df):
     )
 
 
+_GROUP_IDS = itertools.count()
+
+
+def _one_pass_serve(spark, path, qids, qmat, qnrm, width=RAW_PROBE, jobs=1):
+    """A serve that must run the one-pass shape.  Its result is a
+    driver-side relation, so collecting it runs no job.  The serve ran
+    ``jobs`` Spark jobs (any number when None), each of one stage, so
+    no exchange and no rerank join ran."""
+    one, ran = _jobs_in_group(
+        spark, f"one-pass-{next(_GROUP_IDS)}",
+        lambda: ai.serve_topk(spark, path, qids, qmat, qnrm, n_probe=width),
+    )
+    assert one._jdf.queryExecution().executedPlan().nodeName() == "LocalTableScan"
+    st = spark.sparkContext.statusTracker()
+    stages = [len(st.getJobInfo(j).stageIds) for j in ran]
+    assert stages == [1] * (len(ran) if jobs is None else jobs), stages
+    return one
+
+
 def _assert_one_pass_equals_two_pass(
     spark, path, store, qids, qmat, qnrm, width=RAW_PROBE
 ):
-    one = ai.serve_topk(spark, path, qids, qmat, qnrm, n_probe=width)
-    # the raw serve ran the one-pass shape: no query frame, no rerank join
-    assert "q_emb" not in one._jdf.queryExecution().executedPlan().toString()
+    # with pending tombstones the job count depends on the scan memo
+    # (test_tombstoned_serve_job_budget pins it)
+    one = _one_pass_serve(
+        spark, path, qids, qmat, qnrm, width,
+        jobs=None if ai._tombstone_dirs(path) else 1,
+    )
     two = ai.serve_topk(
         spark, path, qids, qmat, qnrm, n_probe=width, norms_df=store
     )
@@ -573,10 +596,30 @@ def test_one_pass_stays_inside_the_measured_crossing(
     def plan(bound):
         monkeypatch.setattr(ai, "_ONE_PASS_MAX_VALUES", bound)
         df = ai.serve_topk(spark, raw_layout, qids, qmat, qnrm, n_probe=RAW_PROBE)
-        return df._jdf.queryExecution().executedPlan().toString()
+        return df._jdf.queryExecution().executedPlan()
 
-    assert "q_emb" not in plan(int(values) + 1)
-    assert "q_emb" in plan(int(values) - 1)
+    assert plan(int(values) + 1).nodeName() == "LocalTableScan"
+    assert "q_emb" in plan(int(values) - 1).toString()
+
+
+def test_one_pass_band_counts_the_adc_tasks(spark, raw_layout, monkeypatch):
+    """The one-pass serve's driver holds up to one shortlist per query
+    from each ADC task: T·|Q|·shortlist rows, T = defaultParallelism.
+    At RERANK_BROADCAST_MAX_ROWS = T·|Q|·shortlist the serve runs as
+    one job; one row below, it runs the two passes.  Both serve the
+    same rows bitwise."""
+    qids, qmat, qnrm = ai._query_rows(spark, SF_SMALL)
+    n = ai.load_ann_model(spark, raw_layout)[0]["n"]
+    bound = (
+        spark.sparkContext.defaultParallelism * len(qids)
+        * max(ai.PQ_SHORTLIST, n // ai.PQ_SHORTLIST_FRAC)
+    )
+    monkeypatch.setattr(ai, "RERANK_BROADCAST_MAX_ROWS", bound)
+    one = _served(_one_pass_serve(spark, raw_layout, qids, qmat, qnrm))
+    monkeypatch.setattr(ai, "RERANK_BROADCAST_MAX_ROWS", bound - 1)
+    two = ai.serve_topk(spark, raw_layout, qids, qmat, qnrm, n_probe=RAW_PROBE)
+    assert "q_emb" in two._jdf.queryExecution().executedPlan().toString()
+    assert _served(two) == one and len(one) == len(qids) * TOP_K
 
 
 def _jobs_in_group(spark, group, fn):
@@ -602,11 +645,10 @@ def _serve_jobs(spark, path, qids, qmat, qnrm, group):
 
 
 def test_warm_raw_serve_job_budget(spark, raw_layout, tmp_path):
-    """A warm raw IVF serve runs two jobs: the exchange's map stage and
-    the result — no listing, schema, query-frame, broadcast or
-    second-scan job.  So does the first serve after an append: the ADC
-    tasks read the new batch's planned files with pyarrow, so nothing
-    lists it."""
+    """A warm raw IVF serve runs one job, the ADC tasks' — no listing,
+    schema, query-frame, broadcast, second-scan or result job.  So does
+    the first serve after an append: the ADC tasks read the new batch's
+    planned files with pyarrow, so nothing lists it."""
     path = _copy_layout(raw_layout, tmp_path)
     qids, qmat, qnrm = ai._query_rows(spark, SF_SMALL, n_queries=2 * N_QUERIES)
     first = (qids[:N_QUERIES], qmat[:N_QUERIES], qnrm[:N_QUERIES])
@@ -614,11 +656,11 @@ def test_warm_raw_serve_job_budget(spark, raw_layout, tmp_path):
     _serve_jobs(spark, path, *first, "raw-serve-cold")
     # a different query set probes a different cell set
     warm = _serve_jobs(spark, path, *second, "raw-serve-warm")
-    assert warm <= 2, f"expected <= 2 jobs, got {warm}"
+    assert warm <= 1, f"expected <= 1 job, got {warm}"
     b1 = _near_copies(spark, first[1], 10_000, seed=1)
     assert ai.append_ann_index(spark, path, b1, "b1") == N_QUERIES
     after = _serve_jobs(spark, path, *first, "raw-serve-append")
-    assert after <= 2, f"expected <= 2 jobs, got {after}"
+    assert after <= 1, f"expected <= 1 job, got {after}"
 
 
 def test_batch_scan_relists_a_layout_rebuilt_in_place(
@@ -698,8 +740,8 @@ WIDE_SERVE_PINS = {
 def test_wide_batch_serves_run_one_wave(spark, raw_layout, tmp_path, monkeypatch):
     """Serves over batch dirs of more than 32 cell dirs each run every
     layer in one wave of tasks.  Every serve, the first after an append
-    included, runs at most 2 jobs, the ADC map stage and the result,
-    and no Spark parquet read (no listing or schema job).  With 3 batch
+    included, runs at most one job of one stage, the ADC tasks', and no
+    Spark parquet read (no listing or schema job).  With 3 batch
     dirs, whose union splits into more partitions than cores, the ADC
     stage still runs at most one task per core.  The served rows
     equal the pins at every batch-dir count, also with the emission cap
@@ -729,7 +771,7 @@ def test_wide_batch_serves_run_one_wave(spark, raw_layout, tmp_path, monkeypatch
         got[n_dirs] = _md5_served(rows)
         stages = _stage_tasks(spark, jobs)
         assert max(t for _n, t in stages) <= dp, stages
-        assert len(jobs) <= 2, stages
+        assert len(jobs) <= 1 and len(stages) == 1, stages
         # a listing or schema job reads at the parquet call site
         assert not [n for n, _t in stages if n.startswith("parquet at")], stages
         meta, cent, books = ai.load_ann_model(spark, path)
@@ -764,7 +806,9 @@ def test_file_plan_scores_as_the_batch_scan(spark, raw_layout, tmp_path):
     returns over the ``_batch_scan`` DataFrame of the same cells: the
     served rows and the shortlist, at 1 to 4 batch dirs, as served and
     with the emission cap below the shortlist.  The served rows are the
-    plan's."""
+    plan's.  The plan run as one task returns what it returns as one
+    task per core: each task's per-query shortlist over the fragments
+    it scored keeps every row of the global shortlist."""
     path = _copy_layout(raw_layout, tmp_path)
     qids, qmat, qnrm = ai._query_rows(spark, SF_SMALL)
     dp = spark.sparkContext.defaultParallelism
@@ -777,6 +821,7 @@ def test_file_plan_scores_as_the_batch_scan(spark, raw_layout, tmp_path):
         croot = ai.codes_root(path)
         plan = ai._plan_cell_files(croot, cells, dp)
         assert 0 < len(plan) <= dp
+        one_task = ai._plan_cell_files(croot, cells, 1)
         scan = ai._batch_scan(spark, croot, cells)
         served_sl = max(ai.PQ_SHORTLIST, meta["n"] // ai.PQ_SHORTLIST_FRAC)
         capped_sl = meta["n"] // 50
@@ -792,14 +837,14 @@ def test_file_plan_scores_as_the_batch_scan(spark, raw_layout, tmp_path):
         for name, (sl, cap) in settings.items():
             for k in (TOP_K, None):
                 md5 = _md5_served if k else _md5_shortlist
-                by_plan, by_scan = (
+                by_plan, by_one_task, by_scan = (
                     md5(ai._adc_scan(
                         spark, codes, meta, books, qids, qmat, qnrm, sl,
                         cells, per_cell_cap=cap, k=k,
                     ).collect())
-                    for codes in (plan, scan)
+                    for codes in (plan, one_task, scan)
                 )
-                assert by_plan == by_scan, (n_dirs, name, k)
+                assert by_plan == by_one_task == by_scan, (n_dirs, name, k)
                 if name == "served" and k:
                     served = ai.serve_topk(
                         spark, path, qids, qmat, qnrm, n_probe=RAW_PROBE
@@ -865,9 +910,10 @@ def test_file_plan_skips_stray_files_and_unprobed_cells(spark, raw_layout, tmp_p
         assert got.count() == 0
 
 
-def test_cold_serve_over_three_batch_dirs_runs_two_jobs(spark, raw_layout, tmp_path):
-    """With the scan memo empty, a serve over 3 batch dirs runs 2 jobs
-    (the ADC map stage and the result): no listing or schema job."""
+def test_cold_serve_over_three_batch_dirs_runs_one_job(spark, raw_layout, tmp_path):
+    """With the scan memo empty, a serve over 3 batch dirs runs 1 job of
+    1 stage, the ADC tasks': no listing, schema, exchange or result
+    job."""
     path = _copy_layout(raw_layout, tmp_path)
     qids, qmat, qnrm = ai._query_rows(spark, SF_SMALL)
     for i, tag in enumerate(("c1", "c2")):
@@ -883,8 +929,101 @@ def test_cold_serve_over_three_batch_dirs_runs_two_jobs(spark, raw_layout, tmp_p
     )
     assert len(rows) == len(qids) * TOP_K
     stages = _stage_tasks(spark, jobs)
-    assert len(jobs) == 2, stages
+    assert len(jobs) == 1 and len(stages) == 1, stages
     assert not [n for n, _t in stages if n.startswith("parquet at")], stages
+
+
+# Spark jobs of a one-pass serve over a layout with pending tombstones,
+# measured on a 4-core host: the tombstones' schema read, the two
+# broadcasts under the anti-join (the tombstone rows, then their join
+# with the cover pairs) and the ADC tasks, plus, with the scan memo
+# empty, the listing of the base batch dir's cell dirs
+TOMBSTONED_SERVE_JOBS = {"cold": 5, "warm": 4}
+
+
+def test_tombstoned_serve_job_budget(spark, raw_layout, tmp_path):
+    """A one-pass serve with pending tombstones scans the per-batch
+    relations under the anti-join; cold and warm it runs the pinned
+    number of jobs, each of one stage, and never serves a deleted id."""
+    path = _copy_layout(raw_layout, tmp_path)
+    qids, qmat, qnrm = ai._query_rows(spark, SF_SMALL)
+    dead = list(range(0, 500, 7))
+    ai.delete_ann_index(
+        spark, path, spark.createDataFrame([(i,) for i in dead], "vec_id long"),
+        "d1",
+    )
+    ai._scan_memo.clear()
+    for memo, jobs in TOMBSTONED_SERVE_JOBS.items():
+        rows = _one_pass_serve(spark, path, qids, qmat, qnrm, jobs=jobs).collect()
+        assert len(rows) == len(qids) * TOP_K, memo
+        assert not {r.neighbor_id for r in rows} & set(dead), memo
+
+
+def _spark_windows(spark, rows, shortlist: int, k: int):
+    """The two ``row_number`` windows the one-pass serve ran before its
+    merge moved to the driver, over hand-built ADC rows."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    df = spark.createDataFrame(
+        rows, "query_id long, neighbor_id long, pq_cosine double, cosine double"
+    )
+    w_adc = Window.partitionBy("query_id").orderBy(
+        F.desc("pq_cosine"), F.asc("neighbor_id")
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
+    return (
+        df.withColumn("prn", F.row_number().over(w_adc))
+        .where(F.col("prn") <= shortlist)
+        .withColumn("rn", F.row_number().over(w))
+        .where(F.col("rn") <= k)
+        .select("query_id", "neighbor_id", "cosine", F.col("rn").cast("long"))
+        .collect()
+    )
+
+
+def test_driver_merge_ranks_as_spark_windows(spark):
+    """``_merge_topk`` keeps and numbers the rows Spark's shortlist and
+    top-k windows keep, with bitwise-equal cosines: on tied scores, an
+    id present twice in a query (two batch dirs), NaN, ±inf and ±0.0
+    scores, queries with fewer rows than the shortlist or k, and no
+    rows at all."""
+    import pyarrow as pa
+
+    nan, inf = float("nan"), float("inf")
+    rng = np.random.default_rng(5)
+    rows = [
+        (q, 100 * q + i, float(rng.integers(0, 4)) / 4, float(rng.integers(0, 4)) / 4)
+        for q in range(3) for i in range(30)
+    ]
+    # one id twice: an exact copy, and the same vector under two codes
+    rows += [(3, 7, 0.5, 0.25), (3, 7, 0.5, 0.25), (3, 8, 0.75, 0.5), (3, 8, 0.1, 0.5)]
+    special = [nan, inf, -inf, 0.0, -0.0, 1.0, -1.0, nan, 0.0, -0.0]
+    rows += [
+        (4, i, s, special[(i + 3) % len(special)]) for i, s in enumerate(special)
+    ]
+    rows += [(5, 1, 0.1, 0.2)]  # fewer rows than k
+
+    def key(got):
+        return sorted((q, n, c.hex(), rn) for q, n, c, rn in got)
+
+    for data in (rows, []):
+        tbl = pa.table(
+            {
+                name: pa.array([r[i] for r in data], typ)
+                for i, (name, typ) in enumerate(
+                    (("query_id", pa.int64()), ("neighbor_id", pa.int64()),
+                     ("pq_cosine", pa.float64()), ("cosine", pa.float64()))
+                )
+            }
+        )
+        for shortlist, k in ((6, 4), (2, 5), (50, 50)):
+            out = ai._merge_topk(tbl, shortlist, k)
+            assert out.column_names == ["query_id", "neighbor_id", "cosine", "rn"]
+            got = key(zip(*(out.column(c).to_pylist() for c in out.column_names)))
+            want = key(tuple(r) for r in _spark_windows(spark, data, shortlist, k))
+            assert got == want, (shortlist, k)
+            assert bool(data) == bool(want)
 
 
 # --- build: one sample, driver-written model tables, Arrow encode -----------
