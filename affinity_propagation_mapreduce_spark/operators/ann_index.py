@@ -86,12 +86,10 @@ from ..sources import table
 from ..sources.tables import parquet_data_files
 from .events import _layout_write_once
 from .ivf import (
-    TWO_LEVEL_MIN,
     _dir_fingerprint,
-    build_two_level,
     corpus_rows,
     cost_balanced_nlist,
-    two_level_cells,
+    nearest_cells,
 )
 from .vector import (
     _PQ_GATE_MAX_N,
@@ -327,19 +325,20 @@ def _list_array(mat: np.ndarray):
 
 
 def _encode_codes(
-    spark, emb, cent_mat, sup_ch, books, with_raw: bool = False,
+    spark, emb, cent_mat, books, with_raw: bool = False,
     meta_cols: tuple = (), cells=None,
 ):
     """Encode (vec_id, emb) rows against FIXED quantizers in one
     ``mapInArrow`` kernel: ``emb`` is decoded from the list column's
     flat values buffer (``_embedding_matrix``; a null or ragged row
-    raises), then home cell via the (two-level) coarse assignment, PQ
-    byte codes per subspace, and the true norm in numpy.  ``with_raw``
-    carries the full-precision vector through as one more column —
-    parquet is columnar, so the ADC scan's column pruning never touches
-    those bytes, while the exact rerank can read them from the PROBED
-    partitions instead of rescanning the whole corpus (the d=768 warm
-    serve was corpus-scan-bound at 50 s; see serve_topk).  Returns
+    raises), then the home cell, the exact nearest centroid
+    (``ivf.nearest_cells``), PQ byte codes per subspace, and the true
+    norm in numpy.  ``with_raw`` carries the full-precision vector
+    through as one more column — parquet is columnar, so the ADC scan's
+    column pruning never touches those bytes, while the exact rerank
+    can read them from the PROBED partitions instead of rescanning the
+    whole corpus (the d=768 warm serve was corpus-scan-bound at 50 s;
+    see serve_topk).  Returns
     (encoded_df, broadcast); the caller destroys the broadcast after
     the consuming action.
 
@@ -366,26 +365,17 @@ def _encode_codes(
     if with_raw:
         out_names.append("emb")
     out_names += list(meta_cols)
-    bc = spark.sparkContext.broadcast((cent_mat, sup_ch, books))
+    bc = spark.sparkContext.broadcast((cent_mat, books))
 
     def encode(batches):
         import pyarrow as pa
 
-        c_mat, sc, bks = bc.value
+        c_mat, bks = bc.value
         for b in batches:
             if b.num_rows == 0:
                 continue
             x = _embedding_matrix(b.column(1), m_ * dsub)
-            if sc is not None:
-                order, _d2, _ = two_level_cells(x, c_mat, sc[0], sc[1], 1)
-                home = order[:, 0]
-            else:
-                d2 = (
-                    (x * x).sum(axis=1, keepdims=True)
-                    - 2.0 * x @ c_mat.T
-                    + (c_mat * c_mat).sum(axis=1)[None, :]
-                )
-                home = d2.argmin(axis=1)
+            home = nearest_cells(x, c_mat)[1]
             if keep_cells is not None:
                 keep = np.isin(home, keep_cells)
                 if not keep.any():
@@ -525,16 +515,13 @@ def build_ann_index(
         raw = src.select("vec_id", "embedding", *meta_cols)
         nlist = cost_balanced_nlist(max(n, n_hint or 0), IVFPQ_QUERY_PROBE)
         cent_mat, books = train_quantizers(raw, nlist, n)  # books (m, ksub, dsub)
-        sup_ch = (
-            build_two_level(cent_mat) if len(cent_mat) >= TWO_LEVEL_MIN else None
-        )
         emb = raw.select(
             "vec_id",
             F.col("embedding").cast("array<double>").alias("emb"),
             *meta_cols,
         )
         encoded, bc = _encode_codes(
-            spark, emb, cent_mat, sup_ch, books, with_raw=store_raw,
+            spark, emb, cent_mat, books, with_raw=store_raw,
             meta_cols=meta_cols,
         )
         m_, ksub, _dsub = books.shape
@@ -2319,7 +2306,6 @@ def append_ann_index(spark, path: str, emb_raw, batch_tag: str) -> int:
         "batches", []
     ):
         return 0
-    sup_ch = build_two_level(cent_mat) if len(cent_mat) >= TWO_LEVEL_MIN else None
     mcols = tuple(meta.get("meta_cols", []))
     emb = emb_raw.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb"),
@@ -2333,7 +2319,7 @@ def append_ann_index(spark, path: str, emb_raw, batch_tag: str) -> int:
         if os.path.isdir(target) or tag in meta.get("batches", []):
             return 0  # re-check under the lock
         encoded, bc = _encode_codes(
-            spark, emb, cent_mat, sup_ch, books,
+            spark, emb, cent_mat, books,
             with_raw=bool(meta.get("raw")), meta_cols=mcols,
         )
         encoded = encoded.localCheckpoint(eager=True)  # one encode pass
@@ -2466,19 +2452,24 @@ def _suppression_frame(spark, path: str, meta: dict):
         for n in os.listdir(_codes_root_gen(path, gen))
         if n.startswith("batch=")
     ]
-    pairs = [
-        (os.path.basename(d).split("=", 1)[1], b)
-        for d in dirs
-        for b in cover.get(os.path.basename(d).split("=", 1)[1], all_batches)
-    ]
-    covered = spark.createDataFrame(pairs, "del string, batch string")
-    tomb = (
-        spark.read.option("basePath", _tomb_root_gen(path, gen))
+    tags = [os.path.basename(d).split("=", 1)[1] for d in dirs]
+    # each tag's covered batches as a literal map, so the pair set is
+    # one scan of the tombstones: no cover relation to build or
+    # broadcast, and the explicit schema runs no schema-inference job
+    cover_of = F.create_map(*[
+        e
+        for tag in tags
+        for e in (
+            F.lit(tag),
+            F.array(*[F.lit(b) for b in cover.get(tag, all_batches)])
+            .cast("array<string>"),
+        )
+    ])
+    supp = (
+        spark.read.schema("vec_id long, del string")
+        .option("basePath", _tomb_root_gen(path, gen))
         .parquet(*dirs)
-        .select("vec_id", F.col("del").cast("string").alias("del"))
-    )
-    supp = tomb.join(covered, "del").select(
-        "vec_id", F.col("batch").alias("_supp_batch")
+        .select("vec_id", F.explode(cover_of[F.col("del")]).alias("_supp_batch"))
     )
     rows = _tombstone_rows(dirs)
     expanded = sum(
@@ -3251,9 +3242,6 @@ def migrate_ann_index(
         n_live = source.count()
         nlist = cost_balanced_nlist(n_live, IVFPQ_QUERY_PROBE)
         cent_mat, books = train_quantizers(source, nlist, n_live)
-        sup_ch = (
-            build_two_level(cent_mat) if len(cent_mat) >= TWO_LEVEL_MIN else None
-        )
         m_, ksub, dsub = books.shape
         # batch-by-batch re-encode into the next generation's tree
         batch_dirs = sorted(
@@ -3289,7 +3277,7 @@ def migrate_ann_index(
             for name, sql in add_meta.items():
                 bsrc = bsrc.withColumn(name, F.expr(sql))  # the backfill
             encoded, bc = _encode_codes(
-                spark, bsrc, cent_mat, sup_ch, books, with_raw=is_raw,
+                spark, bsrc, cent_mat, books, with_raw=is_raw,
                 meta_cols=mcols_all,
             )
             bcs.append(bc)

@@ -524,30 +524,6 @@ def _sparse_nlist(n: int, nprobe: int = SPARSE_NPROBE) -> int:
     return cost_balanced_nlist(n, nprobe)
 
 
-def _coarse_probes(pts, c_mat, nprobe, sup_ch=None):
-    """Each point's ``nprobe`` nearest centroids (row positions into
-    ``c_mat``, unordered) and its home: the true argmin among them.
-    ``sup_ch`` switches to the two-level assignment (operators/ivf.py)."""
-    import numpy as np
-
-    if sup_ch is not None:
-        from .ivf import two_level_cells
-
-        order, probe_d2, _ = two_level_cells(
-            pts, c_mat, sup_ch[0], sup_ch[1], nprobe
-        )
-    else:
-        d2 = (
-            (pts * pts).sum(axis=1, keepdims=True)
-            - 2.0 * pts @ c_mat.T
-            + (c_mat * c_mat).sum(axis=1)[None, :]
-        )
-        order = np.argpartition(d2, nprobe - 1, axis=1)[:, :nprobe]
-        probe_d2 = np.take_along_axis(d2, order, axis=1)
-    home = order[np.arange(len(pts)), np.argmin(probe_d2, axis=1)]
-    return order, home
-
-
 def _cell_pairs(p_ids, p_mat, m_ids, m_mat):
     """One cell's candidate block: every probe × member pair as canonical
     (lo < hi, s = -squared distance), self-pairs dropped and the two
@@ -604,7 +580,8 @@ def ivf_candidate_pairs(
     ``trained=True`` swaps in the sampled-Lloyd quantizer from
     operators/ivf.py instead.  Standard IVF asymmetry: every point is
     INDEXED in exactly its home (nearest) cell, and PROBES its
-    SPARSE_NPROBE nearest cells — so pair (x, y) is considered when
+    SPARSE_NPROBE nearest cells, both exact under either quantizer
+    (``ivf.nearest_cells``) — so pair (x, y) is considered when
     either point's home cell is probed by the other.  Pairwise work is
     O(N · nprobe · cell_size); the cell id is the shuffle key, so no
     task ever sees the full corpus.
@@ -658,6 +635,8 @@ def ivf_candidate_pairs(
     import numpy as np
     import pandas as pd
 
+    from .ivf import nearest_cells, train_centroids
+
     if emb is None:
         emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
         n = _n_points(spark, sf_dir)
@@ -665,27 +644,21 @@ def ivf_candidate_pairs(
         subcell_cap = SUBCELL_CAP if n > _SUBCELL_MIN_N else None
     nlist = _sparse_nlist(n)
     if trained:
-        from .ivf import TWO_LEVEL_MIN, build_two_level, train_centroids
-
         cent_mat = train_centroids(emb, nlist, n=n)
         cent_ids = np.arange(len(cent_mat), dtype="i8")
-        # two-level assignment once the cell count justifies it:
-        # coarse work per point drops O(nlist) → O(sqrt(nlist))
-        sup_ch = build_two_level(cent_mat) if len(cent_mat) >= TWO_LEVEL_MIN else None
     else:
         cent_rows = emb.where(F.col("vec_id") < nlist).collect()
         cent_ids = np.array([r.vec_id for r in cent_rows], dtype="i8")
         cent_mat = np.array([r.embedding for r in cent_rows], dtype="f8")
-        sup_ch = None
-    bc = spark.sparkContext.broadcast((cent_ids, cent_mat, sup_ch))
+    bc = spark.sparkContext.broadcast((cent_ids, cent_mat))
     nprobe = min(SPARSE_NPROBE, len(cent_ids))
 
     def assign_cells(batches):
-        c_ids, c_mat, sc = bc.value
+        c_ids, c_mat = bc.value
         for pdf in batches:
             ids = pdf["vec_id"].to_numpy(dtype="i8")
             pts = np.stack(pdf["embedding"].to_numpy()).astype("f8")
-            order, home = _coarse_probes(pts, c_mat, nprobe, sc)
+            order, home = nearest_cells(pts, c_mat, nprobe)
             yield pd.DataFrame(
                 {
                     "cell": c_ids[order].ravel(),
@@ -816,6 +789,8 @@ def _knn_candidate_pairs_fused(
     import numpy as np
     import pandas as pd
 
+    from .ivf import nearest_cells
+
     nlist = _sparse_nlist(n)
     emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
 
@@ -832,7 +807,7 @@ def _knn_candidate_pairs_fused(
         if len(c_ids) == 0:
             return
         nprobe = min(SPARSE_NPROBE, len(c_ids))
-        order, home_col = _coarse_probes(pts, c_mat, nprobe)
+        order, home_col = nearest_cells(pts, c_mat, nprobe)
         out_i, out_k, out_s = [], [], []
         for c in np.unique(order):
             probe_rows = np.nonzero((order == c).any(axis=1))[0]

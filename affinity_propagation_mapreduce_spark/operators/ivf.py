@@ -15,12 +15,19 @@ and O(N^1.5 · sqrt(nprobe)) total work — sub-quadratic in N.  (The
 previous sizing, ``nlist = N/64``, made the *pair count* linear but the
 coarse-scoring step O(N²/64) — a constant-factor reduction, not an
 asymptotic one.  A fixed nlist has the dual flaw: cells grow O(N) and
-within-cell work is O(N²/nlist).)  Beyond ~10⁹ points the next step is
-a two-level quantizer (score sqrt(nlist) super-cells, then the cells
-under the best super-cells), which brings coarse scoring to O(N·N^0.25)
-— implemented below (build_two_level / two_level_cells) and used by the
-trained production paths once nlist crosses TWO_LEVEL_MIN; the
-single-level scan remains the oracle-mirrorable declared variant.
+within-cell work is O(N²/nlist).)
+
+Coarse assignment is exact: ``nearest_cells`` scores every point
+against every centroid, in row strips of at most ``D2_STRIP_VALUES``
+d2 values, so no rows × nlist matrix is ever held whole.  A two-level
+quantizer (score sqrt(nlist) super-cells, then only their children)
+is the next step only past a measured crossover: on one 10k-row batch
+with one BLAS thread (4-core x86 host) it was slower than the exact
+strips at every nlist measured at d=64 (up to 20,000) and at d=768 up
+to nlist 8,944 (10M vectors at this sizing), and faster, by 1.2–1.8×
+on the assignment step alone, only at d=768 from nlist 12,649 (20M
+vectors) on, while it filed 3.2–4.3% of the rows outside their
+nearest cell.
 
 The centroid *broadcast* is O(nlist · d) = O(sqrt(N)) bytes — e.g.
 10⁹ points × 64 dims ⇒ ~63k centroids ≈ 32 MB, within executor budget.
@@ -169,6 +176,45 @@ def lloyd_update(pts: np.ndarray, assign: np.ndarray, cent: np.ndarray) -> None:
     cent[live] = sums[live] / counts[live, None]
 
 
+# d2 values one strip of ``nearest_cells`` holds: 32 MB of float64.  A
+# 10k-row Arrow batch stays one strip up to nlist 419, and
+# train_centroids' 8·nlist-row sample up to nlist 724.
+D2_STRIP_VALUES = 1 << 22
+
+
+def nearest_cells(pts: np.ndarray, cent: np.ndarray, nprobe: int = 1):
+    """Each row's ``nprobe`` nearest centroids and its nearest one,
+    exactly: ``(order, home)``, ``order`` an (n, min(nprobe, nlist))
+    array of row positions into ``cent`` (unordered past one column)
+    and ``home`` each row's nearest cell.  Squared distances are
+    ``|x|² - 2x·c + |c|²`` over row strips of at most
+    ``D2_STRIP_VALUES`` values; a matrix within the budget is one
+    strip, the whole call, since BLAS results depend on the product's
+    shape.  Ties: with one probe, ``home`` is ``d2.argmin`` (the lowest
+    cell); with more, ``order`` is an ``argpartition`` and ``home`` the
+    first of its columns at the least d2."""
+    n, nlist = len(pts), len(cent)
+    k = min(nprobe, nlist)
+    step = max(1, D2_STRIP_VALUES // max(nlist, 1))
+    order = np.empty((n, k), dtype="i8")
+    home = np.empty(n, dtype="i8")
+    for s in range(0, n, step):
+        x = pts[s : s + step]
+        d2 = (
+            (x * x).sum(axis=1, keepdims=True)
+            - 2.0 * x @ cent.T
+            + (cent * cent).sum(axis=1)[None, :]
+        )
+        if k == 1:
+            home[s : s + step] = order[s : s + step, 0] = d2.argmin(axis=1)
+            continue
+        o = np.argpartition(d2, k - 1, axis=1)[:, :k]
+        near = np.take_along_axis(d2, o, axis=1).argmin(axis=1)
+        order[s : s + step] = o
+        home[s : s + step] = o[np.arange(len(x)), near]
+    return order, home
+
+
 def train_centroids(
     emb: DataFrame | None,
     nlist: int,
@@ -202,120 +248,5 @@ def train_centroids(
     nlist = min(nlist, len(pts))
     cent = pts[:nlist].copy()
     for _ in range(iters):
-        d2 = (
-            (pts * pts).sum(axis=1, keepdims=True)
-            - 2.0 * pts @ cent.T
-            + (cent * cent).sum(axis=1)[None, :]
-        )
-        lloyd_update(pts, d2.argmin(axis=1), cent)
+        lloyd_update(pts, nearest_cells(pts, cent)[1], cent)
     return cent
-
-
-# --- two-level coarse assignment --------------------------------------------
-
-SUPER_PROBE = 2  # super-cells probed per point
-TWO_LEVEL_MIN = 64  # below this many cells a flat scan is cheaper
-
-
-def build_two_level(cent_mat: np.ndarray, iters: int = 2):
-    """Cluster the centroids themselves into ~sqrt(nlist) super-cells
-    (deterministic Lloyd, init = first centroids).  Returns
-    (super_mat, children) where children[s] lists the centroid indices
-    under super-cell s.  Pure function of cent_mat — same broadcast
-    everywhere."""
-    nsup = max(4, int(round(math.sqrt(len(cent_mat)))))
-    nsup = min(nsup, len(cent_mat))
-    sup = cent_mat[:nsup].copy()
-    for _ in range(iters + 1):
-        d2 = (
-            (cent_mat * cent_mat).sum(axis=1, keepdims=True)
-            - 2.0 * cent_mat @ sup.T
-            + (sup * sup).sum(axis=1)[None, :]
-        )
-        assign = d2.argmin(axis=1)
-        if _ < iters:
-            lloyd_update(cent_mat, assign, sup)
-    children = [np.flatnonzero(assign == s) for s in range(nsup)]
-    return sup, children
-
-
-def two_level_cells(
-    pts: np.ndarray,
-    cent_mat: np.ndarray,
-    sup: np.ndarray,
-    children: list[np.ndarray],
-    nprobe: int,
-    super_probe: int = SUPER_PROBE,
-):
-    """Top-``nprobe`` cell indices per point, scanning only the centroids
-    under each point's ``super_probe`` nearest super-cells: per-point
-    work O(nsup + super_probe·nlist/nsup) = O(sqrt(nlist)) instead of
-    O(nlist) — in MEMORY too: candidates live as sparse
-    (row, cell, d2) triples, never an (n × nlist) matrix, so a 10k-row
-    Arrow batch against a 63k-cell quantizer holds ~MBs, not the ~5 GB
-    a dense inf-filled table would (review finding).  A point whose
-    probed supers hold fewer than ``nprobe`` children in total (skewed
-    child counts — hypothesis-found edge) falls back to a full scan for
-    that point alone, so every returned cell is always a genuinely
-    scored one.  Returns (order, probe_d2, scanned): the top-k cell
-    indices per point, their d2 values, and the number of
-    point×centroid evaluations (cost-model tests)."""
-    n, nlist = len(pts), len(cent_mat)
-    nsup = len(sup)
-    d2s = (
-        (pts * pts).sum(axis=1, keepdims=True)
-        - 2.0 * pts @ sup.T
-        + (sup * sup).sum(axis=1)[None, :]
-    )
-    sp = min(super_probe, nsup)
-    sup_top = np.argpartition(d2s, sp - 1, axis=1)[:, :sp]
-    scanned = n * nsup
-    rows_l, cells_l, vals_l = [], [], []
-    for s in range(nsup):
-        idx = children[s]
-        if not len(idx):
-            continue
-        mask = (sup_top == s).any(axis=1)
-        if not mask.any():
-            continue
-        sub = pts[mask]
-        c = cent_mat[idx]
-        d2 = (
-            (sub * sub).sum(axis=1, keepdims=True)
-            - 2.0 * sub @ c.T
-            + (c * c).sum(axis=1)[None, :]
-        )
-        r = np.flatnonzero(mask)
-        rows_l.append(np.repeat(r, len(idx)))
-        cells_l.append(np.tile(idx, len(r)))
-        vals_l.append(d2.ravel())
-        scanned += len(r) * len(idx)
-    k = min(nprobe, nlist)
-    order = np.zeros((n, k), dtype="i8")
-    probe_d2 = np.full((n, k), np.inf)
-    if rows_l:
-        rows = np.concatenate(rows_l)
-        cells = np.concatenate(cells_l)
-        vals = np.concatenate(vals_l)
-        # children partition the centroids, so (row, cell) pairs are
-        # unique; rank within row by d2 and keep the first k
-        o = np.lexsort((vals, rows))
-        rows, cells, vals = rows[o], cells[o], vals[o]
-        start = np.flatnonzero(np.r_[True, rows[1:] != rows[:-1]])
-        counts = np.diff(np.r_[start, len(rows)])
-        rank = np.arange(len(rows)) - np.repeat(start, counts)
-        keep = rank < k
-        order[rows[keep], rank[keep]] = cells[keep]
-        probe_d2[rows[keep], rank[keep]] = vals[keep]
-    bad = np.isinf(probe_d2).any(axis=1)
-    if bad.any():
-        sub = pts[bad]
-        d2b = (
-            (sub * sub).sum(axis=1, keepdims=True)
-            - 2.0 * sub @ cent_mat.T
-            + (cent_mat * cent_mat).sum(axis=1)[None, :]
-        )
-        order[bad] = np.argpartition(d2b, k - 1, axis=1)[:, :k]
-        probe_d2[bad] = np.take_along_axis(d2b, order[bad], axis=1)
-        scanned += int(bad.sum()) * nlist
-    return order, probe_d2, scanned

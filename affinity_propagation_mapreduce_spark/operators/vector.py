@@ -591,7 +591,7 @@ def train_quantizers(emb, nlist: int, n: int | None = None):
     )
 
 
-def _pq_topk(spark, sf_dir, cent_mat, sup_ch, books, n_probe: int):
+def _pq_topk(spark, sf_dir, cent_mat, books, n_probe: int):
     """Top-k of the fixed queries through the ANN index's own IVF-PQ
     scan, with the quantizers trained in-query instead of loaded from a
     layout: ``_encode_codes`` encodes the corpus (home cell, PQ byte
@@ -615,7 +615,7 @@ def _pq_topk(spark, sf_dir, cent_mat, sup_ch, books, n_probe: int):
     qids, qmat, qnrm = _query_rows(spark, sf_dir)
     cell_to_q = _probe_map(cent_mat, qmat, n_probe)
     encoded, _bc = _encode_codes(
-        spark, _emb(spark, sf_dir), cent_mat, sup_ch, books, cells=list(cell_to_q)
+        spark, _emb(spark, sf_dir), cent_mat, books, cells=list(cell_to_q)
     )
     m_, _ksub, dsub = books.shape
     shortlist_df = _adc_scan(
@@ -653,7 +653,7 @@ def knn_cosine_pq(spark, sf_dir):
 
     books = _pq_train_codebooks(spark, sf_dir)  # (M, k, dsub)
     cent = np.zeros((1, books.shape[0] * books.shape[2]))
-    return _pq_topk(spark, sf_dir, cent, None, books, 1)
+    return _pq_topk(spark, sf_dir, cent, books, 1)
 
 
 # pair-broadcast rerank band: above the shortlist-broadcast cap the old
@@ -898,11 +898,12 @@ def knn_cosine_ivfpq(spark, sf_dir):
 
     * coarse stage — sampled-Lloyd centroids (ivf.train_centroids) with
       the cost-balanced nlist = sqrt(nprobe·N); each corpus vector gets
-      its HOME cell via the two-level quantizer (O(sqrt(nlist)) per
-      point past 64 cells), each query probes its IVFPQ_QUERY_PROBE
-      nearest cells (2x the corpus-side N_PROBE: query-side probing is
-      O(|Q|) driver work, and the wider probe buys back most of the
-      recall the home-cell pruning costs).  The encode drops every
+      its HOME cell, the exact nearest centroid (ivf.nearest_cells,
+      O(nlist) per point in bounded row strips), each query probes its
+      IVFPQ_QUERY_PROBE nearest cells (2x the corpus-side N_PROBE:
+      query-side probing is O(|Q|) driver work, and the wider probe
+      buys back most of the recall the home-cell pruning costs).  The
+      encode drops every
       vector whose home cell no query probes, and a vector is
       ADC-scored ONLY against the queries probing its home cell — the
       scan work drops from |Q|·N (flat PQ) by the probed fraction.
@@ -918,12 +919,7 @@ def knn_cosine_ivfpq(spark, sf_dir):
     emitted rows, centroid + codebook + LUT broadcasts of O(sqrt(N)·d)
     bytes.  Rows-only (both quantizers train iteratively); recall floor
     enforced in-query at verification scale."""
-    from .ivf import (
-        TWO_LEVEL_MIN,
-        build_two_level,
-        corpus_rows,
-        cost_balanced_nlist,
-    )
+    from .ivf import corpus_rows, cost_balanced_nlist
 
     n_corpus = corpus_rows(spark, sf_dir)
     cent_mat, books = train_quantizers(
@@ -931,10 +927,8 @@ def knn_cosine_ivfpq(spark, sf_dir):
         cost_balanced_nlist(n_corpus, N_PROBE),
         n_corpus,
     )
-    sup_ch = build_two_level(cent_mat) if len(cent_mat) >= TWO_LEVEL_MIN else None
     return _pq_topk(
-        spark, sf_dir, cent_mat, sup_ch, books,
-        min(IVFPQ_QUERY_PROBE, len(cent_mat)),
+        spark, sf_dir, cent_mat, books, min(IVFPQ_QUERY_PROBE, len(cent_mat))
     )
 
 
@@ -1133,8 +1127,9 @@ def q_dedup_embed_cosine_ivf(spark, sf_dir):
     """Rows-only scale twin of ``dedup_embed_cosine``: same
     cosine >= tau semantics, but candidate pairs are restricted to
     IVF-co-resident ones — every point is indexed in its home (nearest)
-    cell and probes its DUP_NPROBE nearest cells, the exact cosine runs
-    per cell, and the cell id is the shuffle key.  With the
+    cell and probes its DUP_NPROBE nearest cells (both exact,
+    ``ivf.nearest_cells``), the exact cosine runs per cell, and the
+    cell id is the shuffle key.  With the
     cost-balanced nlist = sqrt(nprobe·N) (operators/ivf.py) both the
     coarse scoring and the within-cell work are O(N^1.5) — never the
     crossJoin's N²; no task ever sees the full corpus.  Centroids are
@@ -1147,47 +1142,27 @@ def q_dedup_embed_cosine_ivf(spark, sf_dir):
     import numpy as np
     import pandas as pd
 
-    from .ivf import TWO_LEVEL_MIN, build_two_level, train_centroids
-
-    from .ivf import corpus_rows
+    from .ivf import corpus_rows, nearest_cells, train_centroids
 
     emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     n = corpus_rows(spark, sf_dir)
     nlist = cost_balanced_nlist(n, DUP_NPROBE)
     cent_mat = train_centroids(emb, nlist, n=n)
     cent_ids = np.arange(len(cent_mat), dtype="i8")
-    sup_ch = build_two_level(cent_mat) if len(cent_mat) >= TWO_LEVEL_MIN else None
-    bc = spark.sparkContext.broadcast((cent_ids, cent_mat, sup_ch))
+    bc = spark.sparkContext.broadcast((cent_ids, cent_mat))
     nprobe = min(DUP_NPROBE, len(cent_ids))
 
     def assign_cells(batches):
-        c_ids, c_mat, sc = bc.value
+        c_ids, c_mat = bc.value
         for pdf in batches:
             ids = pdf["vec_id"].to_numpy(dtype="i8")
             pts = np.stack(pdf["embedding"].to_numpy()).astype("f8")
-            if sc is not None:
-                from .ivf import two_level_cells
-
-                order, probe_d2, _ = two_level_cells(
-                    pts, c_mat, sc[0], sc[1], nprobe
-                )
-            else:
-                d2 = (
-                    (pts * pts).sum(axis=1, keepdims=True)
-                    - 2.0 * pts @ c_mat.T
-                    + (c_mat * c_mat).sum(axis=1)[None, :]
-                )
-                order = np.argpartition(d2, nprobe - 1, axis=1)[:, :nprobe]
-                probe_d2 = np.take_along_axis(d2, order, axis=1)
-            home_pos = np.argmin(probe_d2, axis=1)
-            is_home = (
-                order == order[np.arange(len(ids)), home_pos][:, None]
-            ).ravel()
+            order, home = nearest_cells(pts, c_mat, nprobe)
             yield pd.DataFrame(
                 {
                     "cell": c_ids[order].ravel(),
                     "vec_id": np.repeat(ids, nprobe),
-                    "is_home": is_home,
+                    "is_home": (order == home[:, None]).ravel(),
                     "embedding": np.repeat(pdf["embedding"].to_numpy(), nprobe),
                 }
             )

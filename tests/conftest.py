@@ -9,6 +9,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_SMALL = "/root/testdata/sf0.001"
 SF_T2 = "/root/testdata/sf0.01"
+SF_T3 = os.path.join(os.path.dirname(SF_T2), "sf0.1")  # N=2,000
 
 
 @pytest.fixture(scope="session")

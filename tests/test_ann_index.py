@@ -23,7 +23,7 @@ from affinity_propagation_mapreduce_spark.operators.vector import (
 )
 from affinity_propagation_mapreduce_spark.sources.tables import parquet_data_files
 
-from .conftest import SF_SMALL, SF_T2
+from .conftest import SF_SMALL, SF_T2, SF_T3
 
 
 def _recall(exact_rows, approx_rows) -> float:
@@ -934,11 +934,11 @@ def test_cold_serve_over_three_batch_dirs_runs_one_job(spark, raw_layout, tmp_pa
 
 
 # Spark jobs of a one-pass serve over a layout with pending tombstones,
-# measured on a 4-core host: the tombstones' schema read, the two
-# broadcasts under the anti-join (the tombstone rows, then their join
-# with the cover pairs) and the ADC tasks, plus, with the scan memo
-# empty, the listing of the base batch dir's cell dirs
-TOMBSTONED_SERVE_JOBS = {"cold": 5, "warm": 4}
+# measured on a 4-core host: the broadcast of the (vec_id, batch) pairs
+# the tombstones suppress (one scan of their dirs) and the ADC tasks,
+# plus, with the scan memo empty, the listing of the base batch dir's
+# cell dirs
+TOMBSTONED_SERVE_JOBS = {"cold": 3, "warm": 2}
 
 
 def test_tombstoned_serve_job_budget(spark, raw_layout, tmp_path):
@@ -957,6 +957,23 @@ def test_tombstoned_serve_job_budget(spark, raw_layout, tmp_path):
         rows = _one_pass_serve(spark, path, qids, qmat, qnrm, jobs=jobs).collect()
         assert len(rows) == len(qids) * TOP_K, memo
         assert not {r.neighbor_id for r in rows} & set(dead), memo
+
+
+def test_numeric_delete_tag_suppresses(spark, raw_layout, tmp_path):
+    """A delete tag that reads as a number ("0070") still suppresses its
+    ids: the tombstone dirs are read as ``del string``, so the partition
+    value is not inferred as the integer 70 and then missed by the
+    cover's "0070"."""
+    path = _copy_layout(raw_layout, tmp_path)
+    qids, qmat, qnrm = ai._query_rows(spark, SF_SMALL)
+    dead = list(range(0, 500, 7))
+    ai.delete_ann_index(
+        spark, path, spark.createDataFrame([(i,) for i in dead], "vec_id long"),
+        "0070",
+    )
+    rows = _one_pass_serve(spark, path, qids, qmat, qnrm, jobs=None).collect()
+    assert len(rows) == len(qids) * TOP_K
+    assert not {r.neighbor_id for r in rows} & set(dead)
 
 
 def _spark_windows(spark, rows, shortlist: int, k: int):
@@ -1055,6 +1072,39 @@ def test_fresh_build_job_budget(spark, tmp_path):
         assert len(files) == 1, (c, files)
         ids = pq.read_table(files[0], columns=["vec_id"]).column(0).to_numpy()
         assert (np.diff(ids) > 0).all()
+
+
+def test_build_files_every_row_in_its_nearest_cell(spark, tmp_path):
+    """Every row of a fresh sf0.1 layout (N=2,000, nlist 126) lands in
+    the cell of its nearest centroid, read back with pyarrow from the
+    codes tree's (vec_id, cell) and the centroid table."""
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+
+    path = ai.build_ann_index(spark, SF_T3, path=str(tmp_path / "l"))
+    cent = np.stack(
+        pq.read_table(os.path.join(path, "centroids.parquet"))
+        .sort_by("cell").column("c_emb").to_pylist()
+    )
+    assert len(cent) == 126
+    codes = ds.dataset(
+        ai.codes_root(path), format="parquet", partitioning="hive"
+    ).to_table(columns=["vec_id", "cell"])
+    emb = pq.read_table(
+        os.path.join(SF_T3, "embeddings.parquet"), columns=["vec_id", "embedding"]
+    )
+    x = dict(zip(
+        emb.column("vec_id").to_pylist(),
+        np.asarray(emb.column("embedding").to_pylist(), dtype="f8"),
+    ))
+    ids = codes.column("vec_id").to_numpy()
+    cells = codes.column("cell").to_numpy()
+    assert sorted(ids) == sorted(x)
+    pts = np.stack([x[i] for i in ids])
+    d2 = ((pts[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
+    tol = 1e-9 * (1.0 + d2.max())
+    far = d2[np.arange(len(ids)), cells] > d2.min(axis=1) + tol
+    assert not far.any(), ids[far][:10]
 
 
 def test_append_job_budget(spark, raw_layout, tmp_path):
@@ -1213,7 +1263,7 @@ def test_encode_cells_filter_keeps_only_probed_rows(spark):
 
     def encode(cells):
         enc, bc = ai._encode_codes(
-            spark, emb, cent, None, books, meta_cols=("tenant",), cells=cells
+            spark, emb, cent, books, meta_cols=("tenant",), cells=cells
         )
         try:
             return sorted(
@@ -1251,7 +1301,7 @@ def test_encode_rejects_ragged_or_null_embedding(spark):
     rows = [(0, [0.0, 1.0, 2.0, 3.0]), (1, [0.0, 1.0, 2.0, 3.0, 4.0]),
             (2, [0.0, 1.0, 2.0])]
     emb = spark.createDataFrame(rows, "vec_id long, emb array<double>")
-    encoded, bc = ai._encode_codes(spark, emb, cent, None, books)
+    encoded, bc = ai._encode_codes(spark, emb, cent, books)
     try:
         with pytest.raises(PythonException, match="ragged embedding row"):
             encoded.collect()

@@ -4,7 +4,7 @@ from __future__ import annotations
 
 from affinity_propagation_mapreduce_spark.operators import textops, vector
 
-from .conftest import SF_T2
+from .conftest import SF_T2, SF_T3
 
 
 def test_ivf_recall_vs_exact(spark):
@@ -216,75 +216,37 @@ def test_sparse_ap_trained_quantizer_assigns_everyone(spark):
     assert sum(1 for v in labels.values() if v == -1) == 0
 
 
-def test_two_level_cells_cost_and_agreement():
-    """Two-level coarse assignment: ~4x fewer point-centroid evaluations
-    than the flat scan at this size (asymptotically O(sqrt(nlist)) per
-    point) while agreeing with the exhaustive assignment on clustered
-    data — the regime the quantizer targets."""
+def test_nearest_cells_memory_stays_within_strips():
+    """``ivf.nearest_cells`` holds a few d2 strips at a time, never the
+    rows × nlist matrix: 10k rows against 20,000 cells would be 1.6 GB
+    of float64 unstripped; the traced peak stays within 5 strips of
+    ``D2_STRIP_VALUES`` values, for the home cell and for 8 probes."""
+    import tracemalloc
+
     import numpy as np
 
-    from affinity_propagation_mapreduce_spark.operators.ivf import (
-        build_two_level,
-        cost_balanced_nlist,
-        two_level_cells,
-    )
+    from affinity_propagation_mapreduce_spark.operators import ivf
 
-    rng = np.random.default_rng(7)
-    k_true, per, d = 24, 500, 16
-    centers = rng.normal(size=(k_true, d))
-    pts = np.repeat(centers, per, axis=0) + 0.8 * rng.normal(
-        size=(k_true * per, d)
-    )
-    nlist = cost_balanced_nlist(len(pts), 4)
-    sample = pts[rng.permutation(len(pts))[: nlist * 8]]
-    cent = sample[:nlist].copy()
-    for _ in range(2):
-        d2 = (
-            (sample * sample).sum(axis=1, keepdims=True)
-            - 2.0 * sample @ cent.T
-            + (cent * cent).sum(axis=1)[None, :]
-        )
-        a = d2.argmin(axis=1)
-        for c in range(nlist):
-            m = sample[a == c]
-            if len(m):
-                cent[c] = m.mean(axis=0)
-    sup, ch = build_two_level(cent)
-    order, probe_d2, scanned = two_level_cells(pts, cent, sup, ch, 4)
-    flat = len(pts) * nlist
-    assert scanned <= 0.35 * flat, (scanned, flat)
-    d2t = (
-        (pts * pts).sum(axis=1, keepdims=True)
-        - 2.0 * pts @ cent.T
-        + (cent * cent).sum(axis=1)[None, :]
-    )
-    true_home = d2t.argmin(axis=1)
-    home = order[np.arange(len(pts)), probe_d2.argmin(axis=1)]
-    assert not np.isinf(probe_d2).any()
-    assert (home == true_home).mean() >= 0.85
-    topt = np.argpartition(d2t, 3, axis=1)[:, :4]
-    overlap = np.mean(
-        [len(set(order[i]) & set(topt[i])) / 4 for i in range(len(pts))]
-    )
-    assert overlap >= 0.8, overlap
+    rng = np.random.default_rng(3)
+    pts = rng.normal(size=(10_000, 8))
+    cent = rng.normal(size=(20_000, 8))
+    strip_bytes = ivf.D2_STRIP_VALUES * 8
+    for nprobe in (1, 8):
+        tracemalloc.start()
+        try:
+            order, home = ivf.nearest_cells(pts, cent, nprobe)
+            peak = tracemalloc.get_traced_memory()[1]
+        finally:
+            tracemalloc.stop()
+        assert order.shape == (len(pts), nprobe) and home.shape == (len(pts),)
+        assert peak <= 5 * strip_bytes, (nprobe, peak / strip_bytes)
 
 
-def test_dedup_ivf_two_level_active_at_sf01(spark):
-    """At sf0.1 the dedup quantizer crosses TWO_LEVEL_MIN: the two-level
-    path must produce well-formed, threshold-respecting pairs end to
-    end.  n comes from the real table, NOT a constant — a hardcoded n
-    would keep the premise green after a testdata regeneration even if
-    the pipeline silently fell back to the flat scan (review finding:
-    the first version assumed 5000 rows; the actual table has 2000)."""
-    from affinity_propagation_mapreduce_spark.operators.ivf import (
-        TWO_LEVEL_MIN,
-        cost_balanced_nlist,
-    )
-    from affinity_propagation_mapreduce_spark.sources import table
-
-    n = table(spark, "/root/testdata/sf0.1", "embeddings").count()
-    assert cost_balanced_nlist(n, vector.DUP_NPROBE) >= TWO_LEVEL_MIN
-    rows = vector.q_dedup_embed_cosine_ivf(spark, "/root/testdata/sf0.1").collect()
+def test_dedup_ivf_pairs_at_sf01(spark):
+    """At sf0.1 (nlist 126) the dedup path produces well-formed,
+    threshold-respecting pairs end to end."""
+    rows = vector.q_dedup_embed_cosine_ivf(spark, SF_T3).collect()
+    assert rows
     for r in rows:
         assert r.i < r.k
         assert r.cosine >= vector.COSINE_DUP_TAU

@@ -112,31 +112,40 @@ def test_split_is_partition_and_stable_prefix(spark):
 
 @given(
     seed=st.integers(0, 10_000),
-    n=st.integers(200, 800),
-    nlist=st.integers(64, 160),
+    n=st.integers(1, 200),
+    nlist=st.integers(1, 300),
+    nprobe=st.integers(1, 8),
+    budget=st.integers(1, 4_000),
+    dup=st.booleans(),
 )
-@settings(max_examples=15, deadline=None)
-def test_two_level_cells_properties(seed, n, nlist):
-    """Two-level coarse assignment, for arbitrary point/centroid sets:
-    deterministic; every selected cell was actually scanned (finite d2);
-    scanned work stays below the flat n*nlist scan."""
-    import numpy as np
+@settings(max_examples=40, deadline=None)
+def test_nearest_cells_properties(seed, n, nlist, nprobe, budget, dup):
+    """``ivf.nearest_cells`` over random points and centroids, with the
+    strip budget cut so several strips run: no cell outside a row's
+    ``order`` is nearer than one inside it, ``home`` is a nearest cell
+    and one of ``order``'s, up to rounding (duplicate centroids make
+    exact ties)."""
+    from unittest import mock
 
-    from affinity_propagation_mapreduce_spark.operators.ivf import (
-        build_two_level,
-        two_level_cells,
-    )
+    from affinity_propagation_mapreduce_spark.operators import ivf
 
     rng = np.random.default_rng(seed)
     cent = rng.normal(size=(nlist, 8))
+    if dup and nlist > 1:
+        cent[nlist // 2 :] = cent[: nlist - nlist // 2]
     pts = rng.normal(size=(n, 8))
-    sup, ch = build_two_level(cent)
-    assert sorted(np.concatenate(ch)) == list(range(nlist))  # partition
-    o1, d1, s1 = two_level_cells(pts, cent, sup, ch, 4)
-    o2, d2, s2 = two_level_cells(pts, cent, sup, ch, 4)
-    assert np.array_equal(o1, o2) and np.array_equal(d1, d2) and s1 == s2
-    assert np.isfinite(d1).all()  # every returned cell genuinely scored
-    # fallback rows may add full scans, but never exceed super scan + flat
-    # (+ k-1 slack per point: a fallback row costs nsup + c + nlist with c
-    # up to k-1 partial child scans on top of the full rescan)
-    assert s1 <= n * (len(sup) + nlist) + 4 * n
+    with mock.patch.object(ivf, "D2_STRIP_VALUES", budget):
+        order, home = ivf.nearest_cells(pts, cent, nprobe)
+    k = min(nprobe, nlist)
+    assert order.shape == (n, k) and home.shape == (n,)
+    d2 = ((pts[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
+    tol = 1e-9 * (1.0 + d2.max())
+    rows = np.arange(n)
+    inside = np.zeros_like(d2, dtype=bool)
+    inside[rows[:, None], order] = True
+    assert (inside.sum(axis=1) == k).all()  # k distinct cells per row
+    far_in = np.where(inside, d2, -np.inf).max(axis=1)
+    near_out = np.where(inside, np.inf, d2).min(axis=1)
+    assert (far_in <= near_out + tol).all()
+    assert (d2[rows, home] <= d2.min(axis=1) + tol).all()
+    assert inside[rows, home].all()
